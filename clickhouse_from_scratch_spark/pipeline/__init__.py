@@ -29,7 +29,7 @@ from .similarity import (
 from .dedup import passage_dedup, unit_dedup
 from .recipe import prepare_training_data
 from .split import split_column, stratified_split, take_split
-from .decontaminate import contamination, contamination_md5, decontaminate
+from .decontaminate import contamination, decontaminate
 from .dsir import dsir_score, dsir_select
 from .mix import domain_mix, keep_column
 from .pack import pack_sequences, pack_stats

@@ -10,10 +10,9 @@ shuffle is the per-document match count (map-side combined). Never
 all-pairs, never a driver collect; at 100 TB the cost is one pass over
 the corpus grams.
 
-``contamination`` uses the JVM xxhash64 shingle path shared with the
-dedup operators; ``contamination_md5`` is the deterministic twin on
-md5'd gram STRINGS, recomputable verbatim by the DuckDB oracle (same
-pattern as dedup's minhash_md5 twin).
+``contamination`` keys grams by the JVM xxhash64 shingle hashes shared
+with the dedup operators; ``hash="md5"`` keys them by md5'd gram
+STRINGS instead, which the DuckDB oracle recomputes verbatim.
 """
 
 from __future__ import annotations
@@ -46,30 +45,22 @@ def _gram_strings(text: Column, n: int) -> Column:
 
 def contamination(docs: DataFrame, bench: DataFrame, n: int = 3,
                   min_matches: int = 1, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+                  id_col: str = "doc_id",
+                  hash: str = "xxhash64") -> DataFrame:
     """(doc_id, n_matches) for every document sharing >= min_matches
-    distinct n-grams with the benchmark corpus."""
-    g_docs = docs.select(
-        F.col(id_col),
-        F.explode(shingles(text_col, n)).alias("__g"))
-    g_bench = (bench.select(
-        F.explode(shingles(text_col, n)).alias("__g")).distinct())
-    hits = (g_docs.join(F.broadcast(g_bench), "__g")
-            .groupBy(id_col)
-            .agg(F.count_distinct("__g").alias("n_matches")))
-    return hits.where(F.col("n_matches") >= min_matches)
-
-
-def contamination_md5(docs: DataFrame, bench: DataFrame, n: int = 3,
-                      min_matches: int = 1, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Deterministic md5-gram twin of :func:`contamination` — the
-    oracle recomputes identical md5 gram keys."""
-    g = _gram_strings(F.col(text_col), n)
-    g_docs = (docs.select(F.col(id_col), F.explode(g).alias("__raw"))
-              .select(id_col, F.md5("__raw").alias("__g")))
-    g_bench = (bench.select(F.explode(g).alias("__raw"))
-               .select(F.md5("__raw").alias("__g")).distinct())
+    distinct n-grams with the benchmark corpus. Gram key: the xxhash64
+    shingle hash, or md5 of the gram string (``hash="md5"``, the
+    oracle-recomputable twin)."""
+    if hash == "xxhash64":
+        grams, key = shingles(text_col, n), F.col
+    elif hash == "md5":
+        grams, key = _gram_strings(F.col(text_col), n), F.md5
+    else:
+        raise ValueError(f"contamination: unknown hash {hash!r}")
+    g_docs = (docs.select(F.col(id_col), F.explode(grams).alias("__g"))
+              .select(id_col, key("__g").alias("__g")))
+    g_bench = (bench.select(F.explode(grams).alias("__g"))
+               .select(key("__g").alias("__g")).distinct())
     hits = (g_docs.join(F.broadcast(g_bench), "__g")
             .groupBy(id_col)
             .agg(F.count_distinct("__g").alias("n_matches")))

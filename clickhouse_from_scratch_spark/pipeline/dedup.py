@@ -4,14 +4,21 @@ Scale notes (the whole point of these designs):
 - Exact dedup: hash-groupBy on a 64-bit content hash — one shuffle whose
   keys are uniform by construction (no skew), map-side combine applies.
 - MinHash+LSH: per-row signature computation is embarrassingly parallel
-  and stays JVM-side (xxhash64 + transform/array_min — no Python).
-  Candidate generation explodes b band-keys per doc and self-joins on the
-  band key: shuffle volume is b×docs instead of docs², and bucket sizes
-  are bounded by the hash space. This is the only all-pairs-avoiding
-  strategy that survives 100 TB.
-- SimHash: 64-bit signature via per-bit weighted majority over token
-  hashes; near-dup = identical signature (or banded prefix join for
-  hamming<k candidates).
+  (JVM expression or Arrow/numpy kernel). Candidate generation explodes
+  b band-keys per doc and groups on the band key: shuffle volume is
+  b×docs instead of docs², and bucket sizes are bounded by the hash
+  space. This is the only all-pairs-avoiding strategy that survives
+  100 TB.
+- SimHash: signature via per-bit weighted majority over token hashes;
+  near-dup = identical signature (or pigeonhole banding for hamming<=k
+  candidates).
+
+Every banding path — MinHash (JVM and Arrow), its md5 oracle twin,
+SimHash hamming and hyperplane LSH (``similarity.lsh_near_dup_pairs``)
+— shares ONE kernel, :func:`_banded_pairs_sql`: the caller supplies the
+select that explodes each document into (band, bucket) rows, the kernel
+drops NULL ids, rank-caps every bucket, collects the survivors and
+streams the in-bucket pairs.
 """
 
 from __future__ import annotations
@@ -150,119 +157,78 @@ def shingles(text: Column | str, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(wh_expr), from_wh), 1)
 
 
-def _bounded_buckets(banded: DataFrame, keys: Sequence[str], id_col: str,
-                     max_bucket_size: int) -> DataFrame:
-    """(keys..., ids) bucket rows with 2 <= size(ids) <= max_bucket_size,
-    built with BOUNDED per-task memory.
+def _banded_pairs_sql(banded_select: Sequence[str], id_col: str,
+                      max_bucket_size: int) -> str:
+    """The banding kernel as the WITH clause of ONE ``spark.sql`` over
+    the frame bound to ``{__docs}``; its last CTE ``__pairs`` holds the
+    distinct candidate pairs (id_a < id_b). Callers append the final
+    SELECT (:func:`_banded_pairs`) or extend the text with their verify
+    join (``similarity.lsh_near_dup_pairs``), so every build is one
+    parse + one analyzer pass: the chained DataFrame spelling re-ran
+    the analyzer's fixed point over the multi-KB banding lambda forest
+    at ~10 placements (~130 ms of driver time per minhash build;
+    guide §1.2).
 
-    collect_set-then-filter materializes the FULL id array of every
-    bucket before the size filter can drop it: a hot bucket (millions of
-    boilerplate-identical documents share every band hash in real LLM
-    corpora) accumulates an arbitrarily large array in one aggregation
-    buffer — executor OOM at 100 TB (guide §2.5/§5). Instead, rank ids
-    inside each bucket with a streaming ``row_number`` window (running
-    frame: O(1) state; the backing sort spills to disk) and drop rows
-    past ``max_bucket_size + 1`` BEFORE any array is built. Catalyst
-    turns the rank filter into a WindowGroupLimit with a PARTIAL pass
-    before the exchange, so a hot bucket also never ships more than
-    cap+1 rows per map task — the shuffle is bounded too.
+    ``banded_select`` is the caller's select list over ``{__docs}``: it
+    must yield ``id_col`` plus the bucket key columns ``band`` and
+    ``bucket``, at most one row per (band, bucket, id).
 
-    Output is exactly the old collect_set-then-filter result: under-cap
-    buckets keep every id; over-cap buckets keep cap+1 ids — enough for
-    the ``size <= cap`` filter to drop them, as before. The final
-    groupBy reuses the window's (keys) partitioning: still ONE exchange
-    (guide §2.4). Precondition (holds for every banding caller): banded
-    has at most one row per (keys, id) and ``id_col`` is non-null.
+    Buckets are built with BOUNDED per-task memory. collect_set-then-
+    filter would materialize the FULL id array of a hot bucket (millions
+    of boilerplate-identical documents share every band hash in real
+    corpora) before the size filter could drop it — executor OOM at
+    100 TB (guide §2.5/§5). Instead ids are ranked inside each bucket
+    by a streaming ``row_number`` window and rows past
+    ``max_bucket_size + 1`` are dropped BEFORE any array is built.
+    Catalyst turns the rank filter into a WindowGroupLimit with a
+    PARTIAL pass before the exchange, so a hot bucket never ships more
+    than cap+1 rows per map task either. Under-cap buckets keep every
+    id; over-cap buckets keep cap+1 ids, which the ``size <= cap``
+    filter drops. NULL ids are filtered before the window: collect_set
+    skips them, so letting them take rank slots (NULLs sort first)
+    would evict the largest real ids of a bucket at the cap. The
+    bucket groupBy reuses the window's partitioning: ONE exchange.
+
+    Pairs come from TWO chained generators: exploding the anchor index
+    first keeps every evaluated array O(bucket), where
+    ``inline(flatten(transform(...)))`` built the b²-struct pair array
+    of a bucket in one allocation (~50M structs at the 10k cap; guide
+    §5). The pair stream feeds the distinct's spillable hash aggregate
+    row by row; the ``if()`` guards singleton buckets, for which
+    ``sequence(1, size-1)`` would descend through 0.
     """
-    # ONE selectExpr + where: the Window-spec/withColumn composition
-    # costs ~6 extra py4j round trips and an extra analyzer pass per
-    # plan build (guide §1.2); the SQL window is the same expression
-    key_sql = ", ".join(_q(k) for k in keys)
-    capped = (banded
-              .selectExpr("*",
-                          f"row_number() OVER (PARTITION BY {key_sql} "
-                          f"ORDER BY {_q(id_col)}) AS __rn")
-              .where(f"__rn <= {max_bucket_size + 1}"))
-    return (capped.groupBy(*keys)
-            .agg(F.array_sort(F.collect_set(id_col)).alias("ids"))
-            .filter((F.size("ids") > 1)
-                    & (F.size("ids") <= max_bucket_size)))
-
-
-def _banded_pairs_one_sql(docs: DataFrame, banded_select: list[str],
-                          id_col: str, keys: Sequence[str],
-                          max_bucket_size: int) -> DataFrame:
-    """The full banding → bounded-buckets → pair-explode kernel as ONE
-    ``spark.sql`` over the prepared input frame.
-
-    The DataFrame spelling paid ~10 eagerly-analyzed placements, each
-    re-running the analyzer's fixed point over the growing tree — and
-    the banding expression is a multi-KB lambda forest, so every later
-    placement re-traversed it (~130 ms of driver time per build for the
-    minhash kernel, 90% of it py4j waits on JVM analysis; guide §1.2).
-    One SQL = one parse + one analyzer pass (~40 ms). The logical plan
-    is the same: rank-capped window (InferWindowGroupLimit still fires —
-    pinned), one bucket exchange, streaming two-generator pair explode,
-    distinct. Results byte-identical (probe + oracle)."""
-    key_sql = ", ".join(_q(k) for k in keys)
     qid = _q(id_col)
-    sql = f"""
+    return f"""
     WITH __banded AS (SELECT {", ".join(banded_select)} FROM {{__docs}}),
     __capped AS (
-      SELECT *, row_number() OVER (PARTITION BY {key_sql}
+      SELECT *, row_number() OVER (PARTITION BY band, bucket
                                    ORDER BY {qid}) AS __rn
-      FROM __banded),
+      FROM __banded WHERE {qid} IS NOT NULL),
     __buckets AS (
       SELECT ids FROM (
         SELECT array_sort(collect_set({qid})) AS ids
         FROM __capped WHERE __rn <= {max_bucket_size + 1}
-        GROUP BY {key_sql})
+        GROUP BY band, bucket)
       WHERE size(ids) > 1 AND size(ids) <= {max_bucket_size}),
     __pairs AS (
-      SELECT inline(transform(slice(ids, __i + 1, size(ids)),
-                    y -> named_struct('id_a', element_at(ids, __i),
-                                      'id_b', y)))
-      FROM (SELECT ids, explode(if(size(ids) >= 2,
-                                   sequence(1, size(ids) - 1),
-                                   array())) AS __i
-            FROM __buckets))
-    SELECT DISTINCT id_a, id_b FROM __pairs
+      SELECT DISTINCT id_a, id_b FROM (
+        SELECT inline(transform(slice(ids, __i + 1, size(ids)),
+                      y -> named_struct('id_a', element_at(ids, __i),
+                                        'id_b', y)))
+        FROM (SELECT ids, explode(if(size(ids) >= 2,
+                                     sequence(1, size(ids) - 1),
+                                     array())) AS __i
+              FROM __buckets)))
     """
-    return docs.sparkSession.sql(sql, __docs=docs)
 
 
-def pairs_from_buckets(buckets: DataFrame,
-                       ids_col: str = "ids") -> DataFrame:
-    """Distinct (id_a < id_b) pairs from bucketed id-arrays.
-
-    Shared tail of every banding strategy (MinHash-LSH, SimHash
-    pigeonhole, hyperplane-LSH): pair generation happens *inside* each
-    bucket with array combinatorics, so no second self-join / shuffle of
-    the corpus is needed — only the bucket rows explode.
-
-    TWO chained generators, not one: ``inline(flatten(transform(...)))``
-    evaluated the whole b²-struct pair array per bucket row before the
-    explode could stream it — ~50M structs (GBs) in one allocation for a
-    bucket at the 10k cap (guide §5). Exploding the anchor index first
-    keeps every evaluated array O(bucket): each generated row carries
-    one slice; the pair stream feeds the distinct's spillable hash
-    aggregate row by row. Same pair set (i = size(ids) contributed an
-    empty slice before; i stops at size-1 now).
-    """
-    q = _q(ids_col)
-    # the if() guards singleton/empty buckets (sequence(1, size-1)
-    # would DESCEND through 0 for them) without a separate filter
-    # placement (guide §1.2)
-    return (buckets
-            .selectExpr(q,
-                        f"explode(if(size({q}) >= 2, "
-                        f"sequence(1, size({q}) - 1), "
-                        f"array())) AS __i")
-            .selectExpr(
-                f"inline(transform(slice({q}, __i + 1, size({q})), "
-                f"y -> named_struct('id_a', element_at({q}, __i), "
-                f"'id_b', y)))")
-            .distinct())
+def _banded_pairs(docs: DataFrame, banded_select: Sequence[str],
+                  id_col: str, max_bucket_size: int) -> DataFrame:
+    """Distinct candidate pairs (id_a, id_b) of :func:`_banded_pairs_sql`
+    over ``docs``."""
+    return docs.sparkSession.sql(
+        _banded_pairs_sql(banded_select, id_col, max_bucket_size)
+        + "SELECT id_a, id_b FROM __pairs", __docs=docs)
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text",
@@ -293,11 +259,14 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
 _ARROW_INPUT_THRESHOLD = 4 * 1024 * 1024
 
 
-def _auto_arrow(docs: DataFrame) -> bool:
+def _auto_arrow(rel: DataFrame) -> bool:
     """use_arrow=None resolver: Arrow for inputs past the measured
-    crossover, JVM below it (or when the size is unknowable)."""
+    crossover, JVM below it (or when the size is unknowable). ``rel``
+    is the projection the kernel reads — (id, text), the relation the
+    crossover was measured on — so wide extra columns of a documents
+    table do not flip small inputs to the Arrow kernel."""
     try:
-        size = int(docs._jdf.queryExecution().optimizedPlan()
+        size = int(rel._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
     except Exception:
         return False
@@ -322,7 +291,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     ``_ARROW_INPUT_THRESHOLD``). Signatures are bit-equal either way.
     """
     if use_arrow is None:
-        use_arrow = _auto_arrow(docs)
+        use_arrow = _auto_arrow(docs.select(text_col))
     docs = _ensure_parallelism(docs)
     sh = shingles(text_col, shingle_n)
     docs = docs.withColumn("__shingles", sh)
@@ -406,50 +375,38 @@ def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
     degenerate buckets (boilerplate-identical shards) whose quadratic
     pair fan-out would dominate — standard LSH-dedup guard at 100 TB.
     """
+    docs = docs.select(id_col, text_col)
     if use_arrow is None:
         use_arrow = _auto_arrow(docs)
     r = num_hashes // bands
+
     # Band bucket = xxhash64 over the band index + the band's r signature
     # longs DIRECTLY (multi-arg xxhash64): casting every signature long
     # to string and concat_ws-joining them paid O(r) string allocations
     # per band per doc just to feed a hash (guide §1.2 per-task work).
     # ``inline`` explodes the band structs straight into (band, bucket)
-    # columns in the SAME select — explode-then-project placed the
-    # lambda tree into one extra Dataset per build (each placement
-    # re-runs the analyzer's fixed point, ~15-60 ms of driver time).
+    # columns inside the kernel's banded select.
+    def band_structs(s: str) -> str:
+        args = ", ".join(f"{s}[b*{r}+{i}]" for i in range(r))
+        return (f"transform(sequence(0, {bands - 1}), b -> named_struct("
+                f"'band', b, 'bucket', xxhash64(b, {args})))")
+
     if use_arrow:
-        sigs = minhash_signatures(docs.select(id_col, text_col), text_col,
-                                  num_hashes, shingle_n, use_arrow=True)
-        args = ", ".join(f"signature[b*{r}+{i}]" for i in range(r))
-        banded = sigs.selectExpr(
-            _q(id_col),
-            f"inline(transform(sequence(0, {bands - 1}), "
-            f"b -> named_struct('band', b, 'bucket', xxhash64(b, {args}))))")
+        docs = minhash_signatures(docs, text_col, num_hashes, shingle_n,
+                                  use_arrow=True)
+        bands_sql = band_structs("signature")
     else:
         # Pure-JVM kernel: shingles -> signature -> band structs FUSED
-        # into one placement. Chained withColumn/select steps re-ran the
-        # analyzer's fixed point over the lambda-heavy subtree at every
-        # step (~170 ms per plan build, measured); fused, the tree is
-        # analyzed once (~60 ms). The signature subexpression is
-        # let-bound (1-element transform) so it is still evaluated ONCE
-        # per row; candidate pairs verified identical.
+        # into one expression, analyzed once. The signature
+        # subexpression is let-bound (1-element transform) so it is
+        # evaluated ONCE per row.
+        docs = _ensure_parallelism(docs)
         sig_sql = _minhash_sql(_shingles_sql(_q(text_col), shingle_n),
                                num_hashes)
-        args = ", ".join(f"s[b*{r}+{i}]" for i in range(r))
-        banded_select = [
-            _q(id_col),
-            f"inline(element_at(transform(array({sig_sql}), "
-            f"s -> transform(sequence(0, {bands - 1}), "
-            f"b -> named_struct('band', b, "
-            f"'bucket', xxhash64(b, {args})))), 1))"]
-        # whole kernel as ONE spark.sql (single analyzer pass over the
-        # lambda forest instead of ~10 re-analyses; same plan, r14)
-        return _banded_pairs_one_sql(
-            _ensure_parallelism(docs.select(id_col, text_col)),
-            banded_select, id_col, ("band", "bucket"), max_bucket_size)
-    buckets = _bounded_buckets(banded, ("band", "bucket"), id_col,
-                               max_bucket_size)
-    return pairs_from_buckets(buckets)
+        bands_sql = (f"element_at(transform(array({sig_sql}), "
+                     f"s -> {band_structs('s')}), 1)")
+    return _banded_pairs(docs, [_q(id_col), f"inline({bands_sql})"],
+                         id_col, max_bucket_size)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
@@ -499,67 +456,69 @@ def ngram_jaccard_exact_pairs(docs: DataFrame, text_col: str = "text",
             .filter(F.col("jaccard") >= threshold))
 
 
+# SimHash token hash -> (per-token Spark hash, bit b of token hash h as
+# a 0/1 SQL expression, signature width). "md5" is the oracle twin: md5
+# exists in both engines, so DuckDB recomputes the exact signature; bit
+# b of a token is bit b%4 of hex digit b//4.
+_SIMHASH_TOKEN_BITS = {
+    "xxhash64": (F.xxhash64, "((h >> b) & 1L)", 64),
+    "md5": (F.md5,
+            "(shiftright(cast(conv(substring("
+            "h, cast(b div 4 as int) + 1, 1), 16, 10) as int), "
+            "cast(b % 4 as int)) & 1)", 32),
+}
+
+
 def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash over word hashes, fully JVM-side.
+                       id_col: str = "doc_id",
+                       hash: str = "xxhash64") -> DataFrame:
+    """SimHash over word hashes, fully JVM-side: 64-bit over xxhash64
+    token hashes, or the deterministic 32-bit md5 twin the DuckDB
+    oracle gate recomputes (``hash="md5"``).
 
     For each bit position, majority vote of token-hash bits:
     bit_b = 1 iff sum over tokens of (2*bit(h,b) - 1) > 0.
     Expressed as one aggregate over the token-hash array per bit, folded
     into the signature with shiftleft/bitwise-or — no Python, no explode.
     """
+    if hash not in _SIMHASH_TOKEN_BITS:
+        raise ValueError(f"simhash_signatures: unknown hash {hash!r}")
+    token_hash, bit, nbits = _SIMHASH_TOKEN_BITS[hash]
     docs = _ensure_parallelism(docs)
     words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
                      lambda w: w != "")
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-    docs = docs.withColumn("__h", hashes)
+    docs = docs.withColumn("__h",
+                           F.transform(words, lambda w: token_hash(w)))
 
-    # ONE aggregate pass building a 64-wide vote vector, then one fold
-    # packing sign bits — the previous per-bit spelling ran 64 separate
-    # aggregates (64 traversals of the token-hash array per row and a
-    # 64x bigger codegen tree). Exactly the same votes/bits (integer
-    # ops only); r13 optimization, guide §1.2 per-task work.
+    # ONE aggregate pass building an nbits-wide vote vector, then one
+    # fold packing sign bits — the previous per-bit spelling ran nbits
+    # separate aggregates (nbits traversals of the token-hash array per
+    # row and an nbits-times bigger codegen tree). Exactly the same
+    # votes/bits (integer ops only); r13 optimization, guide §1.2.
     sig = F.expr(
         "aggregate("
         "  zip_with("
-        "    aggregate(__h, array_repeat(0L, 64),"
-        "      (acc, h) -> zip_with(acc, sequence(0, 63),"
-        "        (a, b) -> a + ((h >> b) & 1L) * 2L - 1L),"
+        f"    aggregate(__h, array_repeat(0L, {nbits}),"
+        f"      (acc, h) -> zip_with(acc, sequence(0, {nbits - 1}),"
+        f"        (a, b) -> a + {bit} * 2L - 1L),"
         "      x -> x),"
-        "    sequence(0, 63),"
+        f"    sequence(0, {nbits - 1}),"
         "    (v, b) -> IF(v > 0L, shiftleft(1L, b), 0L)),"
         "  0L, (acc, x) -> acc | x, x -> x)")
     return docs.select(F.col(id_col), sig.alias("simhash"))
 
 
-def minhash_signatures_md5(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           num_hashes: int = 16) -> DataFrame:
-    """Deterministic MD5-seeded MinHash twin for the DuckDB oracle gate.
-
-    Token set = distinct whitespace words of lower(text); hash i of a
-    token = md5(token || ':i') hex; signature element i = lexicographic
-    MIN — both engines share the md5 domain byte-for-byte, so a DuckDB
-    oracle recomputes the exact signatures (the production path is
-    ``minhash_signatures``' K-permutation kernel; this twin pins the
-    band/bucket machinery end-to-end). Fully JVM-side.
-
-    The word and shingle arrays are LET-BOUND (1-element ``transform``)
-    inside one expression: spelled as chained ``withColumn`` aliases,
-    CollapseProject inlined the tokenizer into every one of the K
-    ``array_min`` branches — the optimized plan held 81 copies of
-    ``split()`` and the 500-doc twin ran 17-24 s (r13; values
-    byte-identical, now ~1 s)."""
-    docs = _ensure_parallelism(docs)
-    return docs.selectExpr(
-        _q(id_col),
-        f"{_md5_sig_sql(text_col, num_hashes)} AS sig_md5")
-
-
 def _md5_sig_sql(text_col: str, num_hashes: int) -> str:
-    """One let-bound SQL expression for the md5 MinHash signature:
-    words -> distinct 3-word string shingles -> K array_min lanes, each
-    subexpression evaluated once per row."""
+    """Deterministic md5-seeded MinHash signature for the DuckDB oracle
+    twin, as ONE let-bound SQL expression: words -> distinct 3-word
+    string shingles -> K lanes, lane i = lexicographic MIN of
+    md5(shingle || ':i') — both engines share the md5 domain
+    byte-for-byte, so DuckDB recomputes the exact signatures.
+
+    Every subexpression is evaluated once per row: spelled as chained
+    ``withColumn`` aliases, CollapseProject inlined the tokenizer into
+    every one of the K ``array_min`` branches (81 copies of ``split()``;
+    the 500-doc twin ran 17-24 s, r13)."""
     words = (f"filter(split(lower({_q(text_col)}), '\\\\s+'), "
              "w -> w != '')")
     # sequence(1, m) is DESCENDING for m < 1, so short docs need the
@@ -581,23 +540,21 @@ def minhash_md5_candidates(docs: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_hashes: int = 16,
                            bands: int = 4,
                            max_bucket_size: int = 10000) -> DataFrame:
-    """LSH banding over the md5 MinHash twin: the SAME one-shuffle
-    (band, bucket) → pairs shape as ``minhash_lsh_candidates`` (band
-    key = concatenated band rows; ``pairs_from_buckets`` tail), pinned
-    against a DuckDB recomputation in the catalog.
+    """LSH banding over the md5 MinHash twin (``_md5_sig_sql``; band
+    key = concatenated band rows) through the shared banding kernel,
+    pinned against a DuckDB recomputation in the catalog.
 
-    ``max_bucket_size`` (r14) bounds the per-bucket id collection like
-    the production kernel — degenerate buckets are dropped instead of
-    OOMing one task; no testdata bucket comes near the cap, so the
-    oracle-pinned output is unchanged."""
+    ``max_bucket_size`` bounds the per-bucket id collection like the
+    production kernel: degenerate buckets are dropped instead of OOMing
+    one task. The catalog oracle drops the same over-cap buckets."""
     r = num_hashes // bands
-    # ONE fused placement with the signature LET-BOUND (same device as
+    # ONE fused expression with the signature LET-BOUND (same device as
     # minhash_lsh_candidates): banding as a separate select let
     # CollapseProject inline the whole signature expression into the
     # band lambda (4× per row) and the not-null filter (1× more).
     # Docs with <3 words have no shingles (array_min → NULL): they emit
-    # an empty band array, so inline() drops them — exactly the old
-    # isNotNull filter, where the oracle produces no signature row.
+    # an empty band array, so inline() drops them — where the oracle
+    # produces no signature row.
     banded_select = [
         _q(id_col),
         f"inline(element_at(transform("
@@ -608,45 +565,8 @@ def minhash_md5_candidates(docs: DataFrame, text_col: str = "text",
         f"b -> named_struct('band', b, "
         f"'bucket', array_join(slice(sig, b*{r}+1, {r}), ''))) "
         f"END), 1))"]
-    return _banded_pairs_one_sql(
-        _ensure_parallelism(docs.select(id_col, text_col)),
-        banded_select, id_col, ("band", "bucket"), max_bucket_size)
-
-
-def simhash_signatures_md5(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           nbits: int = 32) -> DataFrame:
-    """Deterministic SimHash twin for the DuckDB oracle gate.
-
-    Same bit-vote construction as ``simhash_signatures`` but token-hash
-    bits come from md5 hex nibbles (bit b of a token = bit b%4 of hex
-    digit b//4) — md5 is available in both engines, so the oracle can
-    recompute the exact signature in SQL. Still fully JVM-side
-    (split/transform/aggregate HOFs, no Python)."""
-    docs = _ensure_parallelism(docs)
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
-                     lambda w: w != "")
-    hashes = F.transform(words, lambda w: F.md5(w))
-    docs = docs.withColumn("__h", hashes)
-
-    # ONE aggregate pass over the token hashes building the nbits-wide
-    # vote vector (was nbits separate aggregates — nbits traversals per
-    # row); bit b of a token = bit b%4 of hex digit b//4, exactly as
-    # before, so signatures (and the DuckDB oracle match) are unchanged.
-    sig = F.expr(
-        "aggregate("
-        "  zip_with("
-        f"    aggregate(__h, array_repeat(0L, {nbits}),"
-        f"      (acc, h) -> zip_with(acc, sequence(0, {nbits - 1}),"
-        "        (a, b) -> a + ("
-        "          (shiftright(cast(conv(substring("
-        "             h, cast(b div 4 as int) + 1, 1), 16, 10) as int),"
-        "            cast(b % 4 as int)) & 1) * 2L - 1L)),"
-        "      x -> x),"
-        f"    sequence(0, {nbits - 1}),"
-        "    (v, b) -> IF(v > 0L, shiftleft(1L, b), 0L)),"
-        "  0L, (acc, x) -> acc | x, x -> x)")
-    return docs.select(F.col(id_col), sig.alias("simhash"))
+    return _banded_pairs(_ensure_parallelism(docs.select(id_col, text_col)),
+                         banded_select, id_col, max_bucket_size)
 
 
 def simhash_hamming_pairs(sigs: DataFrame, k: int = 3,
@@ -656,30 +576,24 @@ def simhash_hamming_pairs(sigs: DataFrame, k: int = 3,
                           nbits: int = 64) -> DataFrame:
     """(id_a, id_b, hamming) pairs with hamming(sig_a, sig_b) <= k.
 
-    Pigeonhole banding: split 64 bits into k+1 chunks — any pair within
-    hamming k agrees exactly on at least one chunk, so grouping by
-    (chunk_idx, chunk_value) finds every true pair without an all-pairs
-    join. Candidates are generated inside buckets (one shuffle, bounded
-    by ``max_bucket_size``), then verified exactly with
-    bit_count(xor) <= k. Same shuffle shape as MinHash-LSH banding —
-    the only strategy that survives 100 TB.
+    Pigeonhole banding: split the ``nbits`` signature bits into k+1
+    chunks — any pair within hamming k agrees exactly on at least one
+    chunk, so bucketing by (chunk_idx, chunk_value) finds every true
+    pair without an all-pairs join. Candidates come from the shared
+    banding kernel (one shuffle, bounded by ``max_bucket_size``), then
+    are verified exactly with bit_count(xor) <= k.
     """
     bands = k + 1
     base, extra = divmod(nbits, bands)
     widths = [base + (1 if i < extra else 0) for i in range(bands)]
     starts = [sum(widths[:i]) for i in range(bands)]
-    chunks = F.array(*[
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftrightunsigned(F.col(sig_col), starts[i])
-             .bitwiseAND(F.lit((1 << widths[i]) - 1)).alias("val"))
-        for i in range(bands)])
-    banded = (sigs.select(id_col, F.explode(chunks).alias("bk"))
-              .select(id_col, F.col("bk.band").alias("band"),
-                      F.col("bk.val").alias("val")))
-    buckets = _bounded_buckets(banded, ("band", "val"), id_col,
-                               max_bucket_size)
-    cands = pairs_from_buckets(buckets)
+    chunks = ", ".join(
+        f"named_struct('band', {i}, 'bucket', "
+        f"shiftrightunsigned({_q(sig_col)}, {starts[i]}) "
+        f"& {(1 << widths[i]) - 1})"
+        for i in range(bands))
+    cands = _banded_pairs(sigs, [_q(id_col), f"inline(array({chunks}))"],
+                          id_col, max_bucket_size)
     a = sigs.select(F.col(id_col).alias("id_a"), F.col(sig_col).alias("__sa"))
     b = sigs.select(F.col(id_col).alias("id_b"), F.col(sig_col).alias("__sb"))
     ham = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))

@@ -20,7 +20,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _q
+from .dedup import _banded_pairs_sql, _q
 
 
 def _dot(a: Column | str, b: Column | str) -> Column:
@@ -298,21 +298,18 @@ def lsh_near_dup_pairs(df: DataFrame, threshold: float = 0.9,
     for lower thresholds.
 
     Shape at scale: ONE signature pass (per-row, no shuffle), ONE
-    (band, key) shuffle with in-bucket pair generation
-    (``pairs_from_buckets``), then a candidate-only verify join — the
-    same all-pairs-avoiding banding as MinHash-LSH; survives 100 TB where
-    ``cosine_near_dup_pairs`` cannot.
+    (band, key) shuffle with in-bucket pair generation (the shared
+    banding kernel, ``dedup._banded_pairs_sql``), then a candidate-only
+    verify join — the same all-pairs-avoiding banding as MinHash-LSH;
+    survives 100 TB where ``cosine_near_dup_pairs`` cannot.
     """
     planes = _hyperplanes(dim, bands * bits_per_band)
-    # ONE spark.sql for banding -> rank-capped buckets -> in-bucket pair
-    # explode -> exact-cosine verify join (r14, guide §1.2): the chained
-    # DataFrame spelling re-ran the analyzer over the multi-KB
-    # hyperplane-literal banding tree at every placement (~10 of them,
-    # 443 ms of driver time per build — the correctness gate pays this
-    # on every dedup_embedding_lsh* run). Same logical plan: the
-    # rank-capped window (InferWindowGroupLimit fires), one bucket
-    # exchange, streaming two-generator explode, distinct, and the same
-    # IEEE sim DAG (unrounded in the WHERE, rounded in the projection).
+    # The exact-cosine verify join EXTENDS the kernel's SQL text, so
+    # banding -> buckets -> pairs -> verify is ONE spark.sql (guide
+    # §1.2): the chained DataFrame spelling re-ran the analyzer over the
+    # multi-KB hyperplane-literal banding tree at every placement (~10
+    # of them, 443 ms of driver time per build). The IEEE sim DAG is
+    # unrounded in the WHERE and rounded in the projection.
     band_exprs = ", ".join(
         _sign_bits_sql(vec_col,
                        planes[j * bits_per_band:(j + 1) * bits_per_band])
@@ -323,42 +320,19 @@ def lsh_near_dup_pairs(df: DataFrame, threshold: float = 0.9,
     sim = ("aggregate(zip_with(a.__v, b.__v, "
            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
            "0.0D, (acc, v) -> acc + v) / (a.__n * b.__n)")
-    cap = max_bucket_size
-    sql = f"""
-    WITH __banded AS (
-      SELECT {qid}, t.band, t.val
-      FROM {{__df}}
-      LATERAL VIEW posexplode(array({band_exprs})) t AS band, val),
-    __capped AS (
-      SELECT *, row_number() OVER (PARTITION BY band, val
-                                   ORDER BY {qid}) AS __rn
-      FROM __banded),
-    __buckets AS (
-      SELECT ids FROM (
-        SELECT array_sort(collect_set({qid})) AS ids
-        FROM __capped WHERE __rn <= {cap + 1}
-        GROUP BY band, val)
-      WHERE size(ids) > 1 AND size(ids) <= {cap}),
-    __cands AS (
-      SELECT DISTINCT id_a, id_b FROM (
-        SELECT inline(transform(slice(ids, __i + 1, size(ids)),
-                      y -> named_struct('id_a', element_at(ids, __i),
-                                        'id_b', y)))
-        FROM (SELECT ids, explode(if(size(ids) >= 2,
-                                     sequence(1, size(ids) - 1),
-                                     array())) AS __i
-              FROM __buckets))),
+    banded_select = [qid, f"posexplode(array({band_exprs})) AS (band, bucket)"]
+    sql = _banded_pairs_sql(banded_select, id_col, max_bucket_size) + f""",
     __sides AS (
       SELECT {qid} AS __sid, {qv} AS __v,
              {norm.format(v=qv)} AS __n
-      FROM {{__df}})
+      FROM {{__docs}})
     SELECT c.id_a, c.id_b, round({sim}, {round_digits}) AS cos_sim
-    FROM __cands c
+    FROM __pairs c
     JOIN __sides a ON c.id_a = a.__sid
     JOIN __sides b ON c.id_b = b.__sid
     WHERE {sim} >= {_flit(threshold)}
     """
-    return df.sparkSession.sql(sql, __df=df)
+    return df.sparkSession.sql(sql, __docs=df)
 
 
 def lsh_bucketed_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,

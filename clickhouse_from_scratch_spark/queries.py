@@ -1349,11 +1349,11 @@ def dedup_simhash_md5_q(spark, sf_dir):
     """Deterministic SimHash twin (md5-nibble token bits, 32-bit) —
     pins the bit-vote construction of dedup_simhash against a full
     DuckDB recomputation of the signatures (pipeline/dedup.py
-    simhash_signatures_md5)."""
-    from .pipeline.dedup import simhash_signatures_md5
+    simhash_signatures with hash="md5")."""
+    from .pipeline.dedup import simhash_signatures
 
     docs = _t(spark, sf_dir, "documents")
-    sigs = simhash_signatures_md5(docs)
+    sigs = simhash_signatures(docs, hash="md5")
     return (sigs.groupBy("simhash")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.min("doc_id").alias("keep_id"))
@@ -1373,10 +1373,10 @@ def dedup_simhash_hamming_md5_q(spark, sf_dir):
     as dedup_simhash_hamming (k+1 chunks over the signature, in-bucket
     candidates, exact bit_count(xor) verify) pinned against DuckDB's
     exact all-pairs answer — proves the banding loses no pair."""
-    from .pipeline.dedup import simhash_hamming_pairs, simhash_signatures_md5
+    from .pipeline.dedup import simhash_hamming_pairs, simhash_signatures
 
     docs = _t(spark, sf_dir, "documents")
-    sigs = simhash_signatures_md5(docs)
+    sigs = simhash_signatures(docs, hash="md5")
     return (simhash_hamming_pairs(sigs, k=3, nbits=32)
             .orderBy("id_a", "id_b"))
 
@@ -1450,7 +1450,7 @@ def dedup_embedding_lsh_fullband_q(spark, sf_dir):
     of zero sign bits every row lands in a single bucket, so the
     candidate set is all pairs and recall is provably 1.0 — the output
     must equal dedup_embedding_cosine exactly, which lets the SQL
-    oracle verify pairs_from_buckets + the verify-join end to end
+    oracle verify the banding kernel + the verify-join end to end
     (the banded production config is dedup_embedding_lsh above;
     this config is verify-only, one bucket is NOT the scale path)."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -3223,16 +3223,22 @@ WITH ws AS (
 
 
 @query("dedup_minhash_md5", oracle=_MINHASH_MD5_SIG_SQL + """
+, capped AS (
+  SELECT * FROM band
+  QUALIFY COUNT(*) OVER (PARTITION BY b, k) <= 10000
+)
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM band a JOIN band b ON a.b = b.b AND a.k = b.k
-                        AND a.doc_id < b.doc_id
+FROM capped a JOIN capped b ON a.b = b.b AND a.k = b.k
+                            AND a.doc_id < b.doc_id
 ORDER BY id_a, id_b
 """)
 def dedup_minhash_md5_q(spark, sf_dir):
     """Deterministic MinHash-LSH twin: md5-seeded 16-hash signatures,
     4 bands of 4, the SAME (band, bucket) shuffle + in-bucket pair
     combinatorics as ``dedup_minhash_lsh`` — pinned against a full
-    DuckDB recomputation (pipeline/dedup.py minhash_md5_candidates)."""
+    DuckDB recomputation (pipeline/dedup.py minhash_md5_candidates).
+    The oracle drops band buckets of more than 10000 docs before the
+    self-join, as the kernel's default ``max_bucket_size`` does."""
     from .pipeline.dedup import minhash_md5_candidates
 
     docs = _t(spark, sf_dir, "documents")
@@ -3509,10 +3515,10 @@ def decontaminate_ngram_q(spark, sf_dir):
     side is one exploded-gram join + per-doc count — never all-pairs.
     The production path uses xxhash64 shingles; this md5 twin is
     recomputed verbatim by DuckDB."""
-    from .pipeline.decontaminate import contamination_md5
+    from .pipeline.decontaminate import contamination
     docs = _t(spark, sf_dir, "documents")
     bench = docs.where(F.col("doc_id") % 97 == 0)
-    return (contamination_md5(docs, bench, n=3, min_matches=2)
+    return (contamination(docs, bench, n=3, min_matches=2, hash="md5")
             .orderBy("doc_id"))
 
 

@@ -5,12 +5,16 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_from_scratch_spark.pipeline import (
-    brute_force_topk, exact_dedup, lsh_bucketed_topk,
+    brute_force_topk, exact_dedup, lsh_bucketed_topk, lsh_near_dup_pairs,
     minhash_lsh_candidates, minhash_signatures, ngram_jaccard_pairs,
-    simhash_signatures,
+    simhash_hamming_pairs, simhash_signatures,
+)
+from clickhouse_from_scratch_spark.pipeline.dedup import (
+    minhash_md5_candidates,
 )
 from clickhouse_from_scratch_spark.pipeline.multimodal import (
     attach_binary_payload, decode_image_batch, frame_sample,
@@ -96,50 +100,85 @@ def test_minhash_auto_kernel_switch(spark):
     df = minhash_lsh_candidates(_docs(spark), use_arrow=None)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # the choice sizes (id, text) only: a wide extra column pushes the
+    # whole relation past the crossover but must not flip the kernel
+    wide = spark.range(100_000).select(
+        F.col("id").alias("doc_id"), F.lit("a b c d").alias("text"),
+        F.lit(b"payload").alias("pad"))
+    assert _auto_arrow(wide)
+    assert not _auto_arrow(wide.select("doc_id", "text"))
+    df = minhash_lsh_candidates(wide, use_arrow=None)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_bounded_buckets_caps_hot_buckets(spark):
-    # r14: the bucket builder must (a) return exactly the ids of every
+    # the banding kernel must (a) return exactly the ids of every
     # under-cap bucket and (b) drop over-cap buckets — without ever
     # collecting an over-cap bucket's full id array (pinned by the plan
-    # test below). Synthetic banded frame: one hot bucket, one pair.
-    from clickhouse_from_scratch_spark.pipeline.dedup import (
-        _bounded_buckets, pairs_from_buckets)
+    # test below). Synthetic banded rows: one hot bucket, one pair, and
+    # a bucket of exactly cap real ids plus NULL-id rows, which must not
+    # take rank slots from the real ids.
+    from clickhouse_from_scratch_spark.pipeline.dedup import _banded_pairs
+    cap = 100
     rows = ([(0, 0, i) for i in range(150)]
-            + [(0, 1, 1000), (0, 1, 1001)])
+            + [(0, 1, 1000), (0, 1, 1001)]
+            + [(0, 2, 2000 + i) for i in range(cap)]
+            + [(0, 2, None)] * 5)
     banded = spark.createDataFrame(
         rows, "band int, bucket long, doc_id long")
 
-    capped = pairs_from_buckets(
-        _bounded_buckets(banded, ("band", "bucket"), "doc_id", 100))
-    assert sorted((r.id_a, r.id_b) for r in capped.collect()) == \
-        [(1000, 1001)]                      # hot bucket (150 > 100) dropped
+    def pairs(max_bucket_size):
+        out = _banded_pairs(banded, ["doc_id", "band", "bucket"], "doc_id",
+                            max_bucket_size)
+        return sorted((r.id_a, r.id_b) for r in out.collect())
 
-    full = pairs_from_buckets(
-        _bounded_buckets(banded, ("band", "bucket"), "doc_id", 10000))
-    got = sorted((r.id_a, r.id_b) for r in full.collect())
-    want = sorted([(a, b) for a in range(150) for b in range(a + 1, 150)]
-                  + [(1000, 1001)])
-    assert got == want                      # under-cap buckets untouched
+    def all_pairs(ids):
+        return [(a, b) for a in ids for b in ids if a < b]
+
+    full_cap_bucket = all_pairs(range(2000, 2000 + cap))
+    # hot bucket (150 > cap) dropped; the at-cap bucket keeps every id
+    assert pairs(cap) == sorted([(1000, 1001)] + full_cap_bucket)
+    # under-cap buckets untouched
+    assert pairs(10000) == sorted(all_pairs(range(150)) + [(1000, 1001)]
+                                  + full_cap_bucket)
 
 
-def test_bounded_buckets_plan_has_no_unbounded_collect(spark):
-    # r14 plan pin: a hot LSH bucket must never be materialized as one
+# every banding caller of the shared kernel, on the tiny fixtures
+_BANDING_CALLERS = {
+    "minhash_jvm": lambda spark: minhash_lsh_candidates(
+        _docs(spark), use_arrow=False),
+    "minhash_arrow": lambda spark: minhash_lsh_candidates(
+        _docs(spark), use_arrow=True),
+    "minhash_md5": lambda spark: minhash_md5_candidates(_docs(spark)),
+    "simhash_hamming": lambda spark: simhash_hamming_pairs(
+        simhash_signatures(_docs(spark))),
+    "embedding_lsh": lambda spark: lsh_near_dup_pairs(_emb(spark), dim=8),
+}
+
+
+@pytest.mark.parametrize("caller", sorted(_BANDING_CALLERS))
+def test_bounded_buckets_plan_has_no_unbounded_collect(spark, caller):
+    # plan pin: a hot LSH bucket must never be materialized as one
     # aggregation array before the size filter. The rank cap must sit
     # below the collect (row_number window), and InferWindowGroupLimit
-    # must fire with a PARTIAL group limit before the exchange so a hot
-    # bucket also never ships more than cap+1 rows per map task. The
+    # must fire with a PARTIAL group limit before the bucket exchange so
+    # a hot bucket never ships more than cap+1 rows per map task. The
     # pair explode must stream (two generators), not evaluate the b²
     # flatten() array per bucket row.
-    df = minhash_lsh_candidates(_docs(spark), use_arrow=False)
+    df = _BANDING_CALLERS[caller](spark)
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
         .fromString("formatted")
     plan = df._jdf.queryExecution().explainString(jmode)
     assert "row_number" in plan
-    assert plan.count("WindowGroupLimit") >= 2     # partial + final
-    # partial limit precedes the bucket exchange in the printed tree
-    tree = plan.split("\n\n")[0]
-    assert "WindowGroupLimit" in tree
+    # final limit, then (below it in the printed tree) the bucket
+    # exchange, then the partial limit
+    tree = [line.strip(" +-:") for line in plan.split("\n\n")[0].splitlines()]
+    limits = [i for i, op in enumerate(tree)
+              if op.startswith("WindowGroupLimit")]
+    assert len(limits) == 2, tree
+    between = tree[limits[0] + 1:limits[1]]
+    assert any(op.startswith("Exchange") for op in between), tree
     assert "flatten(" not in plan
     # collect_set still exists but only above the rank filter
     assert "collect_set" in plan
@@ -462,8 +501,6 @@ def test_minhash_md5_twin_catches_exact_dup_skips_distinct(spark):
     """The deterministic md5 twin (3-word string shingles, 16 hashes,
     4 bands) pairs identical docs, skips unrelated ones, and excludes
     <3-word docs instead of bucketing their NULL signatures."""
-    from clickhouse_from_scratch_spark.pipeline.dedup import (
-        minhash_md5_candidates)
     pairs = {(r.id_a, r.id_b)
              for r in minhash_md5_candidates(_docs(spark)).collect()}
     assert (0, 1) in pairs                 # exact duplicate text
@@ -472,6 +509,39 @@ def test_minhash_md5_twin_catches_exact_dup_skips_distinct(spark):
     tiny = spark.createDataFrame([Row(doc_id=10, text="one two"),
                                   Row(doc_id=11, text="one two")])
     assert minhash_md5_candidates(tiny).count() == 0
+
+
+def test_minhash_md5_twin_and_oracle_drop_over_cap_buckets(spark):
+    """Over-cap fixture: 10,001 identical docs fill every band bucket
+    past the 10,000-doc cap; one near-duplicate pair shares two of its
+    four bands. The Spark twin and its DuckDB oracle must both drop the
+    hot buckets and return only that pair."""
+    import duckdb
+
+    from clickhouse_from_scratch_spark.queries import ORACLES
+    hot = "the quick brown fox jumps over the lazy dog near the river bank"
+    near_a = ("spark sql engines compile columnar execution pipelines for "
+              "large analytics workloads across many machines every "
+              "single day")
+    near_b = near_a.replace("day", "night")
+    docs = (spark.range(10001)
+            .select(F.col("id").alias("doc_id"), F.lit(hot).alias("text"))
+            .union(spark.createDataFrame(
+                [(20000, near_a), (20001, near_b)],
+                "doc_id long, text string")))
+    got = [(r.id_a, r.id_b) for r in minhash_md5_candidates(docs).collect()]
+    assert got == [(20000, 20001)]
+
+    con = duckdb.connect()
+    try:
+        con.execute(f"""CREATE TABLE documents AS
+            SELECT range AS doc_id, '{hot}' AS text FROM range(10001)
+            UNION ALL SELECT 20000, '{near_a}'
+            UNION ALL SELECT 20001, '{near_b}'""")
+        assert con.execute(ORACLES["dedup_minhash_md5"]).fetchall() == \
+            [(20000, 20001)]
+    finally:
+        con.close()
 
 
 def test_stratified_split_deterministic(spark, sf_dir):

@@ -1,8 +1,10 @@
 #!/usr/bin/env python
-"""A/B-prove the r14 bounded-bucket kernel: the row_number-capped
-window + two-stage pair explode must produce byte-identical candidate
-pairs to the old collect_set-then-filter + inline(flatten()) spelling,
-for every banding caller, on real testdata.
+"""A/B-prove the shared banding kernel: the row_number-capped window +
+two-stage pair explode must produce byte-identical pairs to the pre-r14
+collect_set-then-filter + inline(flatten()) spelling (``old_buckets`` /
+``old_pairs`` below), for every public banding caller, on real testdata:
+MinHash (JVM and Arrow kernels), the md5 MinHash twin, SimHash hamming
+and hyperplane LSH over embeddings.
 
 Usage: python tools/probe_r14_buckets.py [sf_dir]
 """
@@ -52,8 +54,9 @@ def main() -> None:
     spark = get_spark("probe_r14_buckets")
 
     from clickhouse_from_scratch_spark.pipeline.dedup import (
-        _bounded_buckets, minhash_lsh_candidates, minhash_md5_candidates,
-        pairs_from_buckets, simhash_hamming_pairs, simhash_signatures_md5,
+        _ensure_parallelism, _md5_sig_sql, _minhash_sql, _shingles_sql,
+        minhash_lsh_candidates, minhash_md5_candidates,
+        simhash_hamming_pairs, simhash_signatures,
     )
     from clickhouse_from_scratch_spark.pipeline.similarity import (
         lsh_near_dup_pairs)
@@ -61,11 +64,9 @@ def main() -> None:
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
 
-    # --- caller 1: minhash_lsh_candidates (headline) ---------------------
-    # rebuild the banded frame exactly as the kernel does, then compare
-    # old vs new bucket+pair tails
-    from clickhouse_from_scratch_spark.pipeline.dedup import (
-        _ensure_parallelism, _minhash_sql, _shingles_sql)
+    # --- caller 1: minhash_lsh_candidates, both signature kernels -------
+    # rebuild the banded frame as the kernel does, then run the
+    # reference bucket + pair tail over it
     r, bands, nh = 4, 16, 64
     sig_sql = _minhash_sql(_shingles_sql("`text`", 3), nh)
     args = ", ".join(f"s[b*{r}+{i}]" for i in range(r))
@@ -76,26 +77,18 @@ def main() -> None:
             f"s -> transform(sequence(0, {bands - 1}), "
             f"b -> named_struct('band', b, "
             f"'bucket', xxhash64(b, {args})))), 1))")
-    t0 = time.perf_counter()
-    a = pairs_set(old_pairs(old_buckets(banded, ["band", "bucket"],
-                                        "doc_id", 10000)))
-    t_old = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    b = pairs_set(pairs_from_buckets(_bounded_buckets(
-        banded, ("band", "bucket"), "doc_id", 10000)))
-    t_new = time.perf_counter() - t0
-    assert a == b, f"minhash buckets differ: {len(a)} vs {len(b)}"
-    print(f"minhash banding tail: {len(a)} pairs identical "
-          f"(old {t_old:.2f}s, new {t_new:.2f}s)")
+    ref = pairs_set(old_pairs(old_buckets(banded, ["band", "bucket"],
+                                          "doc_id", 10000)))
+    for use_arrow in (False, True):
+        t0 = time.perf_counter()
+        got = pairs_set(minhash_lsh_candidates(docs, use_arrow=use_arrow))
+        dt = time.perf_counter() - t0
+        assert got == ref, (f"minhash (use_arrow={use_arrow}) differs: "
+                            f"{len(ref)} vs {len(got)}")
+        print(f"minhash_lsh_candidates(use_arrow={use_arrow}): "
+              f"{len(got)} pairs identical ({dt:.2f}s)")
 
-    # and the full declared query end to end
-    full = pairs_set(minhash_lsh_candidates(docs, use_arrow=False))
-    assert full == a, "full kernel drifted from banded-tail A/B"
-    print(f"minhash_lsh_candidates end-to-end: {len(full)} pairs ok")
-
-    # --- caller 2: md5 twin (oracle query; previously uncapped) ----------
-    md5_banded = None  # rebuilt inside the old spelling below
-    from clickhouse_from_scratch_spark.pipeline.dedup import _md5_sig_sql
+    # --- caller 2: md5 twin (oracle query) -------------------------------
     nh5, bands5 = 16, 4
     r5 = nh5 // bands5
     md5_banded = _ensure_parallelism(docs.select("doc_id", "text")) \
@@ -115,8 +108,8 @@ def main() -> None:
     assert a == b, f"md5 twin differs: {len(a)} vs {len(b)}"
     print(f"minhash_md5_candidates: {len(a)} pairs identical")
 
-    # --- caller 3: simhash pigeonhole banding ----------------------------
-    sigs = simhash_signatures_md5(docs)
+    # --- caller 3: simhash pigeonhole banding + hamming verify -----------
+    sigs = simhash_signatures(docs, hash="md5")
     k, nbits = 3, 32
     bands_h = k + 1
     base, extra = divmod(nbits, bands_h)
@@ -130,15 +123,21 @@ def main() -> None:
     sh_banded = (sigs.select("doc_id", F.explode(chunks).alias("bk"))
                  .select("doc_id", F.col("bk.band").alias("band"),
                          F.col("bk.val").alias("val")))
-    a = pairs_set(old_pairs(old_buckets(sh_banded, ["band", "val"],
-                                        "doc_id", 10000)))
-    b = pairs_set(pairs_from_buckets(_bounded_buckets(
-        sh_banded, ("band", "val"), "doc_id", 10000)))
-    assert a == b, f"simhash banding differs: {len(a)} vs {len(b)}"
-    # full declared query (includes the exact hamming verify join)
-    full = pairs_set(simhash_hamming_pairs(sigs, k=3, nbits=32))
-    print(f"simhash banding: {len(a)} candidate pairs identical; "
-          f"verify join returns {len(full)} rows")
+    cands = old_pairs(old_buckets(sh_banded, ["band", "val"],
+                                  "doc_id", 10000))
+    n_cands = cands.count()
+    sa = sigs.select(F.col("doc_id").alias("id_a"),
+                     F.col("simhash").alias("__sa"))
+    sb = sigs.select(F.col("doc_id").alias("id_b"),
+                     F.col("simhash").alias("__sb"))
+    ham = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))
+    a = pairs_set(cands.join(sa, "id_a").join(sb, "id_b")
+                  .select("id_a", "id_b", ham.alias("hamming"))
+                  .filter(F.col("hamming") <= k))
+    b = pairs_set(simhash_hamming_pairs(sigs, k=k, nbits=nbits))
+    assert a == b, f"simhash hamming differs: {len(a)} vs {len(b)}"
+    print(f"simhash_hamming_pairs: {n_cands} reference candidates; "
+          f"{len(b)} verified pairs identical")
 
     # --- caller 4: hyperplane LSH over embeddings -------------------------
     full_new = pairs_set(lsh_near_dup_pairs(emb, threshold=0.35, bands=16,

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Skew fixture for the r14 bounded-bucket kernel (VERDICT r13 item 1).
+"""Skew fixture for the bounded-bucket banding kernel.
 
 Fixture: one hot LSH bucket — N identical documents (every band hash
 collides) over a base of distinct documents. Measures, for the OLD
-unbounded collect_set spelling vs the NEW row_number-capped kernel:
+unbounded collect_set spelling vs ``minhash_lsh_candidates`` on the
+JVM kernel (row_number-capped buckets):
   - wall time of the candidate-pair count
   - per-stage max task duration vs median (straggler factor)
   - per-stage peak execution memory (the aggregation buffer the old
@@ -15,11 +16,12 @@ Usage: python tools/probe_r14_skew.py [n_hot] [n_base] [cap]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -74,8 +76,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from clickhouse_from_scratch_spark.pipeline.dedup import (
-        _bounded_buckets, _ensure_parallelism, _minhash_sql, _shingles_sql,
-        pairs_from_buckets)
+        _ensure_parallelism, _minhash_sql, _shingles_sql,
+        minhash_lsh_candidates)
     from tools.probe_r14_buckets import old_buckets, old_pairs
 
     # hot docs: identical boilerplate; base docs: unique tail keeps the
@@ -110,8 +112,8 @@ def main() -> None:
     for label, build in [
         ("old_unbounded", lambda: old_pairs(
             old_buckets(banded, ["band", "bucket"], "doc_id", cap))),
-        ("new_bounded", lambda: pairs_from_buckets(
-            _bounded_buckets(banded, ("band", "bucket"), "doc_id", cap))),
+        ("new_bounded", lambda: minhash_lsh_candidates(
+            docs, use_arrow=False, max_bucket_size=cap)),
     ]:
         tracker = spark.sparkContext.statusTracker()
         before_ids = set(tracker.getJobIdsForGroup() or [])
