@@ -22,9 +22,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ..functions import REGISTRY, ch
 from ..functions.aggregates import AGGREGATES, resolve_aggregate
+from ..functions.registry import typed_array_sum
 from ..functions.typemap import (
     CH_NUMERIC, arithmetic_result_type, ch_literal_type, ch_type_to_spark,
     least_supertype, negate_result_type, spark_type_to_ch_numeric,
@@ -1880,7 +1882,6 @@ def _hoist_nested_array_joins(q: SelectQuery, df: DataFrame,
     if not calls:
         return q, df, list(extra_preds)
     import copy
-    from pyspark.sql.types import MapType
     slots: dict[str, str] = {}
     for i, (key, node) in enumerate(calls.items()):
         slot = f"__ajn{i}"
@@ -3337,60 +3338,6 @@ def _empty_set_default(name: str, dtype) -> Column | None:
     return None
 
 
-def _array_default_fns(name: str, node, cols: list,
-                       df: DataFrame, ctx: Context) -> Column | None:
-    """Type-default semantics that need the element type (CH fills with
-    the TYPE's default, Spark with NULL): arrayShiftLeft/Right without
-    an explicit fill pad with 0/''/false/[]; arrayElement out of bounds
-    returns the default for non-Nullable elements (Spark containsNull
-    False) and NULL for Nullable ones — the CH Nullable default."""
-    from pyspark.sql.types import ArrayType, MapType
-    dt = _probe_dtype(node.args[0], cols[0], ctx, df)
-    if dt is None:
-        return None
-    if isinstance(dt, MapType) and name == "arrayElement" \
-            and len(node.args) == 2:
-        # m['missing'] returns the VALUE type's default in CH (0 / '' /
-        # false), NULL only for Nullable values — same rule as arrays
-        vt = dt.valueType.simpleString()
-        vdefault = {"string": F.lit("")}.get(vt)
-        if vt in ("tinyint", "smallint", "int", "bigint", "float",
-                  "double") or vt.startswith("decimal"):
-            vdefault = F.lit(0).cast(vt)
-        elif vt == "boolean":
-            vdefault = F.lit(False)
-        elif vt.startswith("array<"):
-            vdefault = F.array().cast(vt)
-        if vdefault is None or dt.valueContainsNull:
-            return None
-        return F.coalesce(F.try_element_at(cols[0], cols[1]), vdefault)
-    if not isinstance(dt, ArrayType):
-        return None
-    elem = dt.elementType.simpleString()
-    if elem in ("tinyint", "smallint", "int", "bigint", "float",
-                "double", "decimal"):
-        default = F.lit(0).cast(elem)
-    elif elem == "string":
-        default = F.lit("")
-    elif elem == "boolean":
-        default = F.lit(False)
-    elif elem.startswith("array<"):
-        default = F.array().cast(elem)
-    else:
-        return None
-    if name == "arrayElement" and len(node.args) == 2:
-        # index 0 is not an error in CH — it returns the default too
-        idx = cols[1] if isinstance(cols[1], Column) else F.lit(cols[1])
-        safe = F.when(idx != 0, F.try_element_at(cols[0],
-                                                 idx.cast("int")))
-        if dt.containsNull:
-            return safe                 # Nullable default IS NULL
-        return F.coalesce(safe, default)
-    if name.startswith("arrayShift") and len(node.args) == 2:
-        return REGISTRY[name](cols[0], cols[1], default)
-    return None
-
-
 _WIDEN_SUM_RX = _re_mod.compile(
     r"(?:sum(?:Array|Distinct|ForEach|If|OrNull|OrDefault)+"
     r"|groupArrayMovingSum)$")
@@ -3564,11 +3511,6 @@ def _post_expr(node, df: DataFrame, ctx: Context) -> Column:
 
 # --- projection (non-aggregate) ----------------------------------------------
 
-def _apply_projection(df: DataFrame, items, ctx: Context) -> DataFrame:
-    df, names = _apply_projection_keep(df, items, ctx)
-    return df.select(*[_name_col(n).alias(_out_name(n)) for n in names])
-
-
 def _apply_projection_keep(df: DataFrame, items,
                            ctx: Context) -> tuple[DataFrame, list[str]]:
     """Evaluate the select list but keep non-shadowed source columns in the
@@ -3607,8 +3549,6 @@ def _apply_projection_keep(df: DataFrame, items,
             # tuples keep their names). With an alias the outputs are
             # alias_field — CH writes `alias.field`, but dotted names
             # fight Spark's resolver (documented deviation).
-            from pyspark.sql.types import StructType
-
             c = _eval(expr.args[0], ctx, df)
             dt = df.select(c.alias("__ut")).schema[0].dataType
             if not isinstance(dt, StructType):
@@ -3863,10 +3803,10 @@ _TUPLE_ARITH_2 = {
     "tupleHammingDistance": None,
 }
 
-_POLYMORPHIC = {"length": ("arrayLength", "length"),
-                "empty": (None, "empty"),
-                "notEmpty": (None, "notEmpty"),
-                "reverse": ("arrayReverse", "reverse")}
+# polymorphic over strings and arrays: name -> the array kernel (None:
+# a size test)
+_POLYMORPHIC = {"length": "arrayLength", "reverse": "arrayReverse",
+                "empty": None, "notEmpty": None}
 
 
 # CH predicates return UInt8, freely usable as numbers
@@ -3914,6 +3854,24 @@ def _is_boolish(n, df: DataFrame | None = None) -> bool:
     return False
 
 
+# Function lowerings that need more than the registry's Column kernel:
+# the AST, a resolved argument type, the session context or a subquery.
+# Canonical CH name → handler(name, node, cols, ctx, df) returning a
+# Column, or None to fall through to _call_fn's generic registry call.
+# Each name keys exactly one handler.
+_LOWERINGS: dict = {}
+
+
+def _lowers(*names: str):
+    def deco(fn):
+        for n in names:
+            if n in _LOWERINGS:
+                raise ValueError(f"{n} is lowered twice")
+            _LOWERINGS[n] = fn
+        return fn
+    return deco
+
+
 # map-literal lookups stay in codegen up to this many entries; larger
 # dictionaries switch to an Arrow-batched pandas_udf closure (the dict
 # ships to workers once per task — the broadcast-hash-lookup shape)
@@ -3952,7 +3910,11 @@ def _dict_lookup(d: dict, key: Column, out_spark_t: str,
     return F.pandas_udf(look, out_spark_t)(key)
 
 
-def _dict_fn(name: str, node: FuncCall, cols: list, ctx: Context) -> Column:
+@_lowers("dictHas", "dictIsIn", "dictGetHierarchy", "dictGetChildren",
+         "dictGetDescendants", "dictGetOrNull",
+         *(f"dictGet{t}{d}" for t in ("",) + _DICT_TYPED_SUFFIXES
+           for d in ("", "OrDefault")))
+def _dict_fn(name, node, cols, ctx, df):
     """dictGet / dictGet<Type> / dictGetOrDefault / dictGetOrNull /
     dictHas over CREATE DICTIONARY lookups (public ClickHouse external-
     dictionary functions; dictionary DDL is commented out of the
@@ -4035,8 +3997,6 @@ def _dict_fn(name: str, node: FuncCall, cols: list, ctx: Context) -> Column:
     or_null = suffix == "OrNull"
     if or_null:
         suffix = ""
-    if suffix and suffix not in _DICT_TYPED_SUFFIXES:
-        raise BuildError(f"unsupported dictionary function: {name}")
     if not isinstance(node.args[1], Literal):
         raise BuildError(f"{name} requires a literal attribute name")
     attr = node.args[1].value
@@ -4055,843 +4015,25 @@ def _dict_fn(name: str, node: FuncCall, cols: list, ctx: Context) -> Column:
 
 def _call_fn(node: FuncCall, cols: list, ctx: Context,
              df: DataFrame | None) -> Column:
+    """One function call: a window, else the name's _LOWERINGS handler,
+    else (handler absent or declining) the generic registry call."""
     from ..functions.registry import CANONICAL
 
     name = CANONICAL.get(node.name, node.name)
-    if name in ("getSetting", "getSettingOrDefault"):  # + @@k sugar
-        if not (node.args and isinstance(node.args[0], Literal)):
-            raise BuildError("getSetting requires a literal name")
-        key = node.args[0].value
-        if key not in ctx.settings:
-            # fall back to the engine's honored defaults, then the full
-            # reference namespace (CH getSetting returns the DEFAULT of
-            # any known name); only unknown names raise
-            from ..ddl import _SETTING_DEFAULTS
-            from ..settings_namespace import REFERENCE_DEFAULTS
-            if key in _SETTING_DEFAULTS:
-                return F.lit(_SETTING_DEFAULTS[key])
-            if key in REFERENCE_DEFAULTS:
-                v = REFERENCE_DEFAULTS[key]
-                return F.lit(int(v) if str(v).lstrip("-").isdigit() else v)
-            if name == "getSettingOrDefault" and len(node.args) > 1:
-                return cols[1]
-            # CH raises UNKNOWN_SETTING rather than returning NULL
-            raise BuildError(f"unknown setting: {key} (UNKNOWN_SETTING; "
-                             f"use getSettingOrDefault)")
-        return F.lit(ctx.settings[key])
-    if name in ("timezone", "timeZone", "serverTimezone") and not node.args:
-        return F.lit(ctx.spark.conf.get("spark.sql.session.timeZone",
-                                        "UTC"))
-    if name in ("dictHas", "dictIsIn") or name.startswith("dictGet"):
-        return _dict_fn(name, node, cols, ctx)
-    # window functions
     if node.window is not None:
         return _window_call(node, cols, ctx, df)
-    # quantified-comparison marker: reduce the subquery's first column
-    # with min/max and inject the scalar (ANY/ALL rewrite §2.3)
-    if name == "__subqueryReduce":
-        sub = _build_query(node.args[0].query, ctx)
-        fn = node.args[1].value
-        first = sub.columns[0]
-        row = sub.agg(F.min(first) if fn == "min" else F.max(first)).collect()
-        return F.lit(row[0][0])
-    if name == "isNullable" and len(cols) == 1:
-        # type introspection: 1 when the argument's type is Nullable.
-        # toNullable() is a Spark no-op (literals stay non-nullable),
-        # so resolve the declared wrapper syntactically first.
-        a0 = node.args[0]
-        if isinstance(a0, FuncCall) and a0.name in ("toNullable",
-                                                    "nullIf"):
-            return F.lit(1).cast("tinyint")
-        if isinstance(a0, Literal):
-            return F.lit(1 if a0.value is None else 0).cast("tinyint")
-        if df is not None and not _refs_lambda_param(a0, ctx):
-            try:
-                return F.lit(
-                    1 if df.select(cols[0]).schema[0].nullable else 0) \
-                    .cast("tinyint")
-            except Exception:
-                pass
-        return F.lit(0).cast("tinyint")
-    if (name.startswith("to") and name[2:] in CH_NUMERIC
-            and len(node.args) == 1):
-        _ep = _declared_enum(node.args[0], ctx)
-        if _ep:
-            # toInt8(enum_col) etc.: the declared numeric value, never a
-            # string parse of the name
-            return _enum_to_number(cols[0], _ep).cast(
-                ch_type_to_spark(name[2:]))
-    if (name in _STRICT_PARSE_FNS and len(node.args) == 1
-            and df is not None
-            and not _refs_lambda_param(node.args[0], ctx)):
-        # CH's plain conversions THROW on an unparseable string —
-        # only the OrNull/OrZero spellings degrade (ref
-        # src/Functions/FunctionsConversion.h). Spark's non-ANSI cast
-        # nulls silently; guard string inputs with raise_error.
-        try:
-            dt = df.select(cols[0]).schema[0].dataType.simpleString()
-        except Exception:
-            dt = None
-        if dt == "string":
-            parsed = REGISTRY[name](cols[0])
-            return F.when(
-                cols[0].isNotNull() & parsed.isNull(),
-                F.raise_error(F.lit(
-                    f"Cannot parse {name[2:]} from string "
-                    f"(use {name}OrNull / {name}OrZero)"))
-            ).otherwise(parsed)
-    if (name == "neighbor" and df is not None and len(cols) == 2
-            and isinstance(node.args[1], Literal)):
-        # out-of-range rows get the TYPE DEFAULT, not NULL, when no
-        # explicit default is given (CH other-functions#neighbor)
-        from ..operators.joins import _type_default
-        if node.args[1].value is None:
-            raise BuildError("neighbor: the offset must be a constant "
-                             "integer, got NULL")
-        shifted = REGISTRY["neighbor"](cols[0], node.args[1].value)
-        try:
-            dt = df.select(cols[0]).schema[0].dataType
-            return F.coalesce(shifted, _type_default(dt))
-        except Exception:
-            return shifted
-    if name in ("arrayShiftLeft", "arrayShiftRight",
-                "arrayElement") and df is not None:
-        out = _array_default_fns(name, node, cols, df, ctx)
-        if out is not None:
-            return out
-    if name == "toJSONString" and len(node.args) == 1 and df is not None:
-        # complex types serialize via to_json; scalars per JSON rules
-        # (strings quoted+escaped, numbers/bools bare)
-        dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if dt_obj is None:
-            raise BuildError(
-                "toJSONString: argument type unresolvable in lambda "
-                "position — bind the value to a lambda parameter first")
-        dts = dt_obj.simpleString()
-        # a NULL value of any scalar type serializes as bare null
-        if dts.startswith(("array", "map", "struct")):
-            return F.to_json(cols[0])
-        if dts == "string":
-            esc = F.regexp_replace(
-                F.regexp_replace(cols[0], r"\\", r"\\\\"),
-                '"', '\\\\"')
-            return F.coalesce(F.concat(F.lit('"'), esc, F.lit('"')),
-                              F.lit("null"))
-        if dts == "boolean":
-            return F.when(cols[0], F.lit("true")) \
-                    .when(~cols[0], F.lit("false")).otherwise(F.lit("null"))
-        return F.coalesce(cols[0].cast("string"), F.lit("null"))
-    if name in ("date_trunc", "dateTrunc") and len(cols) == 2 \
-            and df is not None and isinstance(node.args[0], Literal):
-        # CH returns Date (not DateTime) for Date input with unit >= day
-        # (same contract as toStartOfMonth/Quarter/Year, which already
-        # cast); DateTime input keeps DateTime
-        unit = str(node.args[0].value).lower()
-        out = F.date_trunc(unit, cols[1])
-        dt_obj = _probe_dtype(node.args[1], cols[1], ctx, df)
-        if unit in ("day", "week", "month", "quarter", "year") and \
-                dt_obj is not None and \
-                dt_obj.simpleString() == "date":
-            out = out.cast("date")
-        return out
-    if name == "defaultValueOfArgumentType" and len(node.args) == 1 \
-            and df is not None:
-        dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if dt_obj is None:
-            raise BuildError(
-                "defaultValueOfArgumentType: argument type unresolvable "
-                "in lambda position — bind it to a lambda parameter")
-        d = _empty_set_default("", dt_obj)
-        return d if d is not None \
-            else F.lit(None).cast(dt_obj.simpleString())
-    if name == "hasColumnInTable":
-        vals = [a.value for a in node.args if isinstance(a, Literal)]
-        if len(vals) < 2:
-            raise BuildError("hasColumnInTable needs literal "
-                             "[db,] table, column arguments")
-        *tparts, colname = vals
-        tname = ".".join(tparts)
-        tdf = ctx.tables.get(tname)
-        return F.lit(bool(tdf is not None and colname in tdf.columns))
-    if name == "abs" and len(node.args) == 1:
-        # CH abs(IntN) returns UIntN — abs(toInt8(-128)) = 128, not the
-        # two's-complement wrap. Widen sub-64-bit signed ints to long
-        # before abs (Int64 min stays the §1.2 UInt64-as-long edge).
-        cht = _infer_ch_type(node.args[0], ctx, df)
-        info = CH_NUMERIC.get(cht) if cht else None
-        if info and info[0] == "i" and info[1] <= 4:
-            return F.abs(cols[0].cast("bigint"))
-        return F.abs(cols[0])
-    if name == "arrayJoin" and len(node.args) == 1:
-        from pyspark.sql.types import MapType
-        dtm = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if isinstance(dtm, MapType):
-            # CH: arrayJoin over a Map iterates its (key, value) tuples
-            return F.explode(F.map_entries(cols[0]))
-    if name == "tupleConcat" and node.args and df is not None:
-        from pyspark.sql.types import StructType
-        parts = []
-        for a, c in zip(node.args, cols):
-            dt = _probe_dtype(a, c, ctx, df)
-            if not isinstance(dt, StructType):
-                raise BuildError("tupleConcat: arguments must be Tuples")
-            parts.extend(c[f.name] for f in dt.fields)
-        return F.struct(*[pc.alias(f"_{i + 1}")
-                          for i, pc in enumerate(parts)])
-    if ((name == "arraySum" and len(node.args) == 1)
-            or (name == "arrayReduce" and len(node.args) == 2
-                and isinstance(node.args[0], Literal)
-                and str(node.args[0].value).strip().lower() == "sum")) \
-            and df is not None:
-        # CH arraySum / arrayReduce('sum') result type follows the
-        # element type (Int64 for ints, Decimal stays Decimal) — probe
-        # the element type and use the typed fold
-        from pyspark.sql.types import ArrayType
-        from ..functions.registry import typed_array_sum
-        arr_node = node.args[-1]
-        arr_col = cols[-1]
-        dt = _probe_dtype(arr_node, arr_col, ctx, df)
-        if isinstance(dt, ArrayType):
-            return typed_array_sum(arr_col,
-                                   dt.elementType.simpleString())
-    if name in ("tupleNames", "tupleToNameValuePairs") \
-            and len(node.args) == 1 and df is not None:
-        # tupleNames(t) -> Array(String) of element names ('1','2' for
-        # unnamed tuples); tupleToNameValuePairs(t) -> Array(Tuple(name,
-        # value)) — same-type elements required, like CH
-        from pyspark.sql.types import StructType
-        dt = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if not isinstance(dt, StructType):
-            raise BuildError(f"{name}: argument must be a Tuple")
-
-        def disp(n: str) -> str:
-            return n[1:] if n.startswith("_") and n[1:].isdigit() else n
-
-        if name == "tupleNames":
-            return F.array(*[F.lit(disp(f.name)) for f in dt.fields])
-        kinds = {f.dataType.simpleString() for f in dt.fields}
-        if len(kinds) > 1:
-            raise BuildError(
-                "tupleToNameValuePairs: tuple elements must share one "
-                f"type, got {sorted(kinds)}")
-        return F.array(*[
-            F.struct(F.lit(disp(f.name)).alias("_1"),
-                     cols[0][f.name].alias("_2"))
-            for f in dt.fields])
-    if name == "byteSize" and len(node.args) == 1:
-        # uncompressed in-memory size: fixed-width types report the
-        # DECLARED width (UInt32 -> 4, Float64 -> 8, Date -> 2,
-        # DateTime -> 4); String is length + 9 (8-byte size prefix +
-        # terminator, per the CH docs example)
-        cht = _infer_ch_type(node.args[0], ctx, df)
-        info = CH_NUMERIC.get(cht) if cht else None
-        if info is not None:
-            return F.lit(info[1]).cast("long")
-        dtp = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if dtp is not None:
-            w = {"tinyint": 1, "smallint": 2, "int": 4, "bigint": 8,
-                 "float": 4, "double": 8, "boolean": 1, "date": 2,
-                 "timestamp": 4, "timestamp_ntz": 4}.get(
-                     dtp.simpleString())
-            if w is not None:
-                return F.lit(w).cast("long")
-            if dtp.simpleString() == "string":
-                return (F.octet_length(cols[0]) + 9).cast("long")
-        return F.octet_length(cols[0].cast("string")).cast("long")
-    if name in ("hex", "bin") and len(node.args) == 1:
-        # CH pads to the DECLARED integer type's byte width — hex(1) =
-        # '01' (UInt8 literal), hex(256) = '0100' (UInt16),
-        # hex(toUInt32(1)) = '00000001'; negative values show the
-        # sign-extended pattern of that width (hex(toInt8(-1)) = 'FF').
-        # String arguments keep the byte-dump kernel.
-        cht = _infer_ch_type(node.args[0], ctx, df)
-        info = CH_NUMERIC.get(cht) if cht else None
-        width = info[1] if info and info[0] in ("u", "i") else None
-        if width is None:
-            dtp = _probe_dtype(node.args[0], cols[0], ctx, df)
-            if dtp is not None:
-                width = {"tinyint": 1, "smallint": 2, "int": 4,
-                         "bigint": 8}.get(dtp.simpleString())
-                if name == "bin" and dtp.simpleString() == "string":
-                    # bin(String) is the byte dump ('a' → '01100001');
-                    # F.bin is numeric-only, so chunk the hex dump into
-                    # per-byte 8-bit groups
-                    hx = F.hex(cols[0])
-                    return F.array_join(F.transform(
-                        F.sequence(F.lit(1),
-                                   (F.length(hx) / 2).cast("int")),
-                        lambda i: F.lpad(
-                            F.conv(F.substring(hx, (i - 1) * 2 + 1, 2),
-                                   16, 2), 8, "0")), "")
-        if width is not None:
-            base = F.hex(cols[0]) if name == "hex" else F.bin(cols[0])
-            n = width * (2 if name == "hex" else 8)
-            return F.when(F.length(base) >= n,
-                          F.substring(base, -n, n)) \
-                    .otherwise(F.lpad(base, n, "0"))
-    if name in ("formatRow", "formatRowNoNewline") and len(node.args) >= 2:
-        # per-row text-format rendering (CSV/TSV/JSONEachRow/Values):
-        # Arrow-batched over the argument columns, reusing the same
-        # cell renderers as the INTO OUTFILE/FORMAT writers
-        if not isinstance(node.args[0], Literal):
-            raise BuildError("formatRow needs a literal format name")
-        fmt = str(node.args[0].value)
-        vals = cols[1:]
-        names = [_auto_name(a) for a in node.args[1:]]
-        simples = []
-        for a, c in zip(node.args[1:], vals):
-            dtp = _probe_dtype(a, c, ctx, df)
-            simples.append(dtp.simpleString() if dtp is not None
-                           else "string")
-        newline = name == "formatRow"
-        from ..sources.formats import render_row
-        import pandas as pd
-
-        def frow(sdf):
-            # object dtype keeps NULLs as None (numeric pandas columns
-            # would coerce them to NaN and render 'nan' instead of \N)
-            sdf = sdf.astype(object).where(pd.notnull(sdf), None)
-            return pd.Series([
-                render_row(fmt,
-                           [v.tolist() if hasattr(v, "tolist") else v
-                            for v in row],
-                           simples, names, newline)
-                for row in sdf.itertuples(index=False, name=None)])
-
-        frow.__annotations__ = {"sdf": pd.DataFrame, "return": pd.Series}
-        return F.pandas_udf(frow, "string")(F.struct(
-            *[v.alias(f"c{i}") for i, v in enumerate(vals)]))
-    if name == "hasColumnInTable" and len(node.args) >= 3:
-        # (['host',] db, table, column) — literal args, catalog lookup
-        vals = [a.value for a in node.args if isinstance(a, Literal)]
-        if len(vals) != len(node.args):
-            raise BuildError("hasColumnInTable requires literal args")
-        if len(vals) > 3:
-            vals = vals[-3:]
-        dbn, tbl, coln = vals
-        t = ctx.tables.get(f"{dbn}.{tbl}") or ctx.tables.get(tbl)
-        if t is None:
-            raise BuildError(f"unknown table: {dbn}.{tbl}")
-        return F.lit(1 if coln in t.columns else 0).cast("tinyint")
-    if name in ("arrayFlatten", "flatten") and len(node.args) == 1:
-        # CH flattens ALL nesting levels (docs array-functions#flatten:
-        # [[[1]], [[2], [3]]] → [1, 2, 3]); F.flatten peels one level,
-        # so apply it (depth-1) times from the probed dtype
-        from pyspark.sql.types import ArrayType
-        dt = _probe_dtype(node.args[0], cols[0], ctx, df)
-        out = cols[0]
-        while isinstance(dt, ArrayType) \
-                and isinstance(dt.elementType, ArrayType):
-            out = F.flatten(out)
-            dt = dt.elementType
-        return out
-    if name in _TUPLE_ARITH_2 and len(node.args) == 2:
-        # element-wise tuple arithmetic (CH tuple-functions): field
-        # names come from positional pairing, output fields are _N
-        from pyspark.sql.types import StructType
-        da = _probe_dtype(node.args[0], cols[0], ctx, df)
-        db = _probe_dtype(node.args[1], cols[1], ctx, df)
-        if isinstance(da, StructType) and isinstance(db, StructType):
-            if len(da.fields) != len(db.fields):
-                raise BuildError(f"{name}: tuple sizes differ")
-            op = _TUPLE_ARITH_2[name]
-            fa = [cols[0][f.name] for f in da.fields]
-            fb = [cols[1][f.name] for f in db.fields]
-            if name == "tupleHammingDistance":
-                out = F.lit(0)
-                for a, b in zip(fa, fb):
-                    out = out + (~a.eqNullSafe(b)).cast("int")
-                return out
-            return F.struct(*[op(a, b).alias(f"_{i + 1}")
-                              for i, (a, b) in enumerate(zip(fa, fb))])
-    if name in ("tupleNegate", "tupleMultiplyByNumber",
-                "tupleDivideByNumber") and node.args:
-        from pyspark.sql.types import StructType
-        da = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if isinstance(da, StructType):
-            fa = [cols[0][f.name] for f in da.fields]
-            if name == "tupleNegate":
-                vals = [-a for a in fa]
-            elif name == "tupleMultiplyByNumber":
-                vals = [a * cols[1] for a in fa]
-            else:
-                vals = [a / cols[1] for a in fa]
-            return F.struct(*[v.alias(f"_{i + 1}")
-                              for i, v in enumerate(vals)])
-    if name == "tupleConcat" and len(node.args) >= 2:
-        from pyspark.sql.types import StructType
-        parts = []
-        for arg_node, col in zip(node.args, cols):
-            dt = _probe_dtype(arg_node, col, ctx, df)
-            if not isinstance(dt, StructType):
-                parts = None
-                break
-            parts.extend(col[f.name] for f in dt.fields)
-        if parts is not None:
-            return F.struct(*[p.alias(f"_{i + 1}")
-                              for i, p in enumerate(parts)])
-    if name in ("bitRotateLeft", "bitRotateRight") \
-            and len(node.args) == 2:
-        # rotation width = the DECLARED CH type's byte width (literal
-        # typing gives UInt8 for small literals); untyped → 8 bytes
-        cht = _infer_ch_type(node.args[0], ctx, df)
-        info = CH_NUMERIC.get(cht) if cht else None
-        width = info[1] if info and info[0] in ("u", "i") else 8
-        n = node.args[1].value if isinstance(node.args[1], Literal) else None
-        if n is None:
-            raise BuildError(f"{name} shift count must be a literal")
-        return REGISTRY[name](cols[0], n, width)
-    if name == "byteSwap" and len(node.args) == 1:
-        # width comes from the DECLARED CH type when inferable (DDL
-        # column, to<Type> cast, literal typing) — CH swaps per argument
-        # type, not per runtime value; untyped args fall back to
-        # value-width inside the registry kernel
-        cht = _infer_ch_type(node.args[0], ctx, df)
-        info = CH_NUMERIC.get(cht) if cht else None
-        width = info[1] if info and info[0] in ("u", "i") else None
-        out = REGISTRY["byteSwap"](cols[0], width)
-        if info and info[0] == "i" and width in (1, 2, 4):
-            # signed types keep their width: byteSwap(Int16 -2) is the
-            # 16-bit pattern 0xFFFE read back as Int16 (= -2), not 65534
-            out = out.cast({1: "tinyint", 2: "smallint",
-                            4: "int"}[width])
-        return out
-    if name in ("multiMatchAny", "multiMatchAnyIndex") \
-            and len(node.args) == 2:
-        # pattern set must be an array literal (CH compiles the set into
-        # one automaton; here each pattern is one JVM rlike)
-        pats = node.args[1]
-        if not (isinstance(pats, ArrayLiteral)
-                and all(isinstance(i, Literal) and isinstance(i.value, str)
-                        for i in pats.items)):
-            raise BuildError(f"{name} patterns must be string literals")
-        plist = [i.value for i in pats.items]
-        h = cols[0]
-        if name == "multiMatchAny":
-            out = F.lit(False)
-            for p in plist:
-                out = out | h.rlike(p)
-            return out.cast("int")
-        out = F.lit(0)
-        for i in range(len(plist) - 1, -1, -1):   # first match wins
-            out = F.when(h.rlike(plist[i]), F.lit(i + 1)).otherwise(out)
-        return out.cast("long")
-    if name == "emptyArrayToSingle" and len(node.args) == 1 \
-            and df is not None:
-        # empty → [type default] (CH IDataType::getDefault), else as-is
-        from pyspark.sql.types import ArrayType
-        dt = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if dt is None and _refs_lambda_param(node.args[0], ctx):
-            raise BuildError(
-                "emptyArrayToSingle: array type unresolvable in lambda "
-                "position — bind it to a lambda parameter")
-        if isinstance(dt, ArrayType):
-            elem = dt.elementType
-            d = _empty_set_default("", elem)
-            if d is None:
-                d = F.lit(None).cast(elem)
-            return F.when(F.size(cols[0]) == 0,
-                          F.array(d.cast(elem))).otherwise(cols[0])
-    if name == "isConstant" and len(node.args) == 1:
-        # constant ⇔ the argument references no column (CH evaluates
-        # constness at analysis time; literals/functions-of-literals → 1)
-        def _has_ident(n) -> bool:
-            if isinstance(n, Identifier):
-                return True
-            for v in getattr(n, "__dict__", {}).values():
-                if isinstance(n, FuncCall) and v is getattr(n, "name", None):
-                    continue
-                if isinstance(v, list):
-                    if any(_has_ident(i) for i in v):
-                        return True
-                elif hasattr(v, "__dict__") and _has_ident(v):
-                    return True
-            return False
-        return F.lit(0 if _has_ident(node.args[0]) else 1).cast("smallint")
-    if name == "toString" and len(node.args) == 1:
-        # CH's float formatter prints integral Float32/64 WITHOUT the
-        # trailing .0 (toString(1.0) = '1'); Java's Double.toString
-        # keeps it. Strip for plain-notation values — scientific-
-        # notation magnitudes (|x| >= 1e7) keep Java's form (documented
-        # partial fidelity; CH switches to shortest-repr there). In
-        # lambda position the static schema probe can't run, so the
-        # float check happens via typeof() (constant-folded per type).
-        out = cols[0].cast("string")
-        stripped = F.regexp_replace(out, r"^(-?\d+)\.0$", "$1")
-        dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
-        dts = dt_obj.simpleString() if dt_obj is not None else None
-        if dts is not None and dts.startswith(("array", "struct", "map")):
-            # composite values render as CH literals ('[1,2]',
-            # "(1,'a')", "{'k':1}"), not Spark's cast text
-            return _ch_literal_render(cols[0], dt_obj)
-        if dts is not None and dts.startswith("decimal"):
-            # CH trims trailing decimal zeros by default
-            # (output_format_decimal_trailing_zeros = false,
-            # reference Core/Settings.h:609 + SerializationDecimal.cpp:50)
-            return F.regexp_replace(
-                F.regexp_replace(out, r"(\.\d*?)0+$", "$1"),
-                r"\.$", "")
-        if dts in ("timestamp", "timestamp_ntz"):
-            # DateTime64(s) renders EXACTLY s fraction digits
-            # ('00:00:00.500', not Spark cast's trimmed '.5') — the
-            # declared scale survives through sub-second arithmetic
-            sc = _dt64_scale_of(node.args[0])
-            if sc:
-                return F.date_format(
-                    cols[0], f"yyyy-MM-dd HH:mm:ss.{'S' * sc}")
-        if dts is not None:
-            return stripped if dts in ("float", "double") else out
-        return F.when(F.typeof(cols[0]).isin("float", "double"),
-                      stripped).otherwise(out)
-    if name == "round" and node.args:
-        # CH round() is BANKER'S rounding for float types and
-        # away-from-zero for integer/Decimal types (public docs:
-        # round(2.5) = 2, round(toInt32(25), -1) = 30). Spark's round
-        # is away-from-zero, bround is banker's — pick by inferred type;
-        # unknown types behave as Float64 (the literal default).
-        n = 0
-        if len(node.args) > 1:
-            a1 = node.args[1]
-            n = a1.value if isinstance(a1, Literal) else 0
-        cht = _infer_ch_type(node.args[0], ctx, df)
-        info = CH_NUMERIC.get(cht) if cht else None
-        away = (info is not None and info[0] in ("u", "i")) or (
-            cht is not None and cht.startswith("Decimal"))
-        if not away and cht is None:
-            dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
-            if dt_obj is not None:
-                dts = dt_obj.simpleString()
-                away = dts.startswith("decimal") or dts in _INT_SPARK_TYPES
-        return (F.round(cols[0], int(n)) if away
-                else F.bround(cols[0], int(n)))
-    if (name in ("arraySum", "arrayCumSum", "arrayCumSumNonNegative")
-            and len(node.args) == 1):
-        # CH NumberTraits: summing integer arrays yields Int64 /
-        # Array(Int64); the kernels compute in double (exact below 2^53
-        # — the documented sum policy)
-        out = REGISTRY[name](cols[0])
-        dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if dt_obj is None:
-            return out
-        dts = dt_obj.simpleString()
-        elem = dts[6:-1] if dts.startswith("array<") else ""
-        if elem in _INT_SPARK_TYPES:
-            return out.cast("bigint" if name == "arraySum"
-                            else "array<bigint>")
-        return out
-    if name == "bitPositionsToArray" and len(node.args) == 1:
-        # same width rule as byteSwap: positions come from the DECLARED
-        # type's bit pattern (toInt8(-1) → [0..7], not 64 bits)
-        cht = _infer_ch_type(node.args[0], ctx, df)
-        info = CH_NUMERIC.get(cht) if cht else None
-        width = info[1] if info and info[0] in ("u", "i") else None
-        return REGISTRY["bitPositionsToArray"](cols[0], width)
-    if name == "toColumnTypeName" and len(node.args) == 1:
-        # internal column spelling ≙ the dialect type name here (the
-        # engine has no separate in-memory column representation)
-        name = "toTypeName"
-    if name == "toTypeName" and len(node.args) == 1:
-        # CH type introspection: literal typing first (FieldToDataType —
-        # toTypeName(1) = 'UInt8', toTypeName(NULL) = 'Nullable(Nothing)',
-        # array/tuple literals type their elements: [1,2] → Array(UInt8)),
-        # then the resolved Spark dtype mapped back to its CH name
-        arg = node.args[0]
-        if isinstance(arg, FuncCall) and arg.name == "toNullable" \
-                and len(arg.args) == 1:
-            # toNullable wraps the INNER type (CH: Nullable(UInt8));
-            # recurse on the unwrapped argument
-            inner = _eval(FuncCall("toTypeName", [arg.args[0]]), ctx, df)
-            return F.concat(F.lit("Nullable("), inner, F.lit(")"))
-        if isinstance(arg, FuncCall) and arg.name == "toLowCardinality" \
-                and len(arg.args) == 1:
-            # the dictionary-encoded wrapper survives in the type name
-            # (Spark has no LowCardinality column representation)
-            inner = _eval(FuncCall("toTypeName", [arg.args[0]]), ctx, df)
-            return F.concat(F.lit("LowCardinality("), inner, F.lit(")"))
-        if isinstance(arg, FuncCall) and arg.name == "assumeNotNull" \
-                and len(arg.args) == 1:
-            # assumeNotNull strips Nullable — unwrap a direct
-            # toNullable(...) argument to the innermost expression
-            inner_arg = arg.args[0]
-            if isinstance(inner_arg, FuncCall) \
-                    and inner_arg.name == "toNullable":
-                inner_arg = inner_arg.args[0]
-            return _eval(FuncCall("toTypeName", [inner_arg]), ctx, df)
-        if (isinstance(arg, FuncCall) and arg.name == "toDateTime64"
-                and len(arg.args) >= 2 and isinstance(arg.args[1], Literal)):
-            # the Spark timestamp carries no scale — keep the declared one
-            return F.lit(f"DateTime64({arg.args[1].value})")
-        if isinstance(arg, FuncCall) and arg.name == "now64":
-            # now64([scale]) is DateTime64(scale), default scale 3
-            p = (arg.args[0].value
-                 if arg.args and isinstance(arg.args[0], Literal) else 3)
-            return F.lit(f"DateTime64({p})")
-        if (isinstance(arg, FuncCall) and arg.name.startswith("toInterval")
-                and len(arg.name) > len("toInterval")):
-            # Spark renders 'interval day to second'; CH names the unit
-            return F.lit(f"Interval{arg.name[len('toInterval'):]}")
-        if isinstance(arg, Cast):
-            # types with no distinct Spark representation keep their
-            # DECLARED name (CAST('{}', 'JSON') is a JSON column even
-            # though it is carried as a string here)
-            t = arg.type_name.strip()
-            if t.upper() == "JSON" or t.lower().startswith("object("):
-                return F.lit("JSON")
-        t = _literal_render_type(arg) \
-            or _infer_ch_type(node.args[0], ctx, df)
-        if t is None:
-            dt_obj = _probe_dtype(arg, cols[0], ctx, df)
-            if dt_obj is not None:
-                t = _spark_to_ch_name(dt_obj.simpleString())
-        return F.lit(t or "Dynamic")
-    if name == "initializeAggregation" and len(node.args) >= 2 \
-            and isinstance(node.args[0], Literal):
-        # initializeAggregation('aggState', v...): the single-row state
-        # (functions/other#initializeaggregation). Our value-carrier
-        # states finalize to the value itself; sketch-free dispatch on
-        # the base name, named error otherwise.
-        agg = str(node.args[0].value).strip("'\"")
-        base = agg[:-5] if agg.endswith("State") else agg
-        vals = cols[1:]
-        if base in ("sum", "min", "max", "any", "anyLast", "avg",
-                    "median", "first", "last"):
-            return vals[0]
-        if base in ("count", "uniq", "uniqExact", "uniqHLL12",
-                    "uniqCombined"):
-            return F.lit(1).cast("long")
-        if base in ("groupArray", "groupUniqArray"):
-            return F.array(*vals)
-        if base == "uniqExactState":
-            return F.array(*vals)
-        raise BuildError(
-            f"initializeAggregation: unsupported aggregate {agg!r}")
-    if name == "finalizeAggregation" and len(cols) == 1:
-        # AggregateFunction state → finalized value (scalar, per row):
-        # binary HLL sketch states estimate; uniqExact array states count
-        # their distinct elements; SimpleAggregateFunction states already
-        # ARE the value
-        dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
-        dt = dt_obj.simpleString() if dt_obj is not None else ""
-        if dt == "binary":
-            return F.hll_sketch_estimate(cols[0])
-        if dt.startswith("array"):
-            return F.size(F.array_distinct(cols[0])).cast("long")
-        return cols[0]
-    # reinterpretAs(U)IntN over a NUMERIC argument keeps the bytes (the
-    # CH contract: reinterpret, not parse) — a plain wrap-cast to the
-    # target width; the registry's little-endian-bytes reading applies
-    # to string arguments only.
-    if (name.startswith(("reinterpretAsUInt", "reinterpretAsInt"))
-            and len(cols) == 1 and name[-1].isdigit()):
-        dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
-        dt = dt_obj.simpleString() if dt_obj is not None else ""
-        if dt in ("tinyint", "smallint", "int", "bigint", "float",
-                  "double", "boolean", "date", "timestamp"):
-            bits = int(name.rsplit("t", 1)[-1])
-            v = cols[0]
-            if dt in ("float", "double", "date", "timestamp", "boolean"):
-                v = v.cast("long")     # CH reinterprets the binary; the
-                # integral reading is the documented deviation (§1.2)
-            v = v.cast("long")
-            if bits >= 64:
-                return v
-            # arithmetic wrap (an overflowing narrowing CAST would raise
-            # under the driver's ANSI-on session)
-            if name.startswith("reinterpretAsUInt"):
-                return F.pmod(v, F.lit(1 << bits))
-            half = 1 << (bits - 1)
-            return F.pmod(v + half, F.lit(1 << bits)) - F.lit(half)
-    # CH length/empty/reverse are polymorphic over strings AND arrays —
-    # dispatch on the argument's resolved type (schema-only for frame
-    # columns; HOF-bound dtype for lambda parameters).
-    if name in _POLYMORPHIC and len(cols) == 1:
-        dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
-        dt = dt_obj.simpleString() if dt_obj is not None else ""
-        if dt.startswith(("array", "map")):
-            arr_name, _ = _POLYMORPHIC[name]
-            if arr_name:
-                return REGISTRY[arr_name](cols[0])
-            if name == "empty":
-                return F.size(cols[0]) == 0
-            if name == "notEmpty":
-                return F.size(cols[0]) > 0
-    # IN with literal tuple/array
-    if name in ("in", "notIn", "globalIn", "globalNotIn"):
-        target, rhs_node = node.args
-        lhs = cols[0]
-        if isinstance(rhs_node, (TupleLiteral, ArrayLiteral)):
-            if (isinstance(node.args[0], TupleLiteral)
-                    and all(isinstance(it, TupleLiteral)
-                            for it in rhs_node.items)):
-                # (a, b) IN ((1, 2), (3, 4)) → OR of per-row equality
-                # conjunctions (pushdown-friendly, no struct literals)
-                lhs_cols = [_eval(it, ctx, df)
-                            for it in node.args[0].items]
-                disj = F.lit(False)
-                for row in rhs_node.items:
-                    conj = F.lit(True)
-                    for lc, lit_item in zip(lhs_cols, row.items):
-                        conj = conj & (lc == _eval(lit_item, ctx, df))
-                    disj = disj | conj
-                col = disj
-            else:
-                # CH null processing (operators/in#null-processing,
-                # transform_null_in=0): NULL elements match nothing
-                vals = [a.value for a in rhs_node.items
-                        if a.value is not None]
-                col = lhs.isin(vals) if vals else F.lit(False)
-        elif isinstance(rhs_node, Subquery):
-            # last-resort path: IN-subquery inside a lambda body — the
-            # only position the marker-join lowering cannot reach (a join
-            # column cannot be referenced from a HOF lambda). Bounded
-            # collect with a hard guard — never an unbounded driver
-            # materialization. HAVING/WHERE/SELECT positions never get
-            # here: they are lowered to joins in _lower_in_subqueries.
-            sub = _build_query(rhs_node.query, ctx)
-            cap = 100_000
-            rows = sub.limit(cap + 1).collect()
-            if len(rows) > cap:
-                raise BuildError(
-                    "IN-subquery in this position would materialize more "
-                    f"than {cap} rows on the driver; rewrite as a WHERE "
-                    "conjunct or join")
-            col = lhs.isin([r[0] for r in rows if r[0] is not None])
-        else:
-            col = lhs.isin([cols[1]])
-        # CH: the result of IN involving NULL is always 0 (UInt8), never
-        # NULL — for BOTH IN and NOT IN (operators/in#null-processing,
-        # transform_null_in=0). Negate BEFORE coalescing so a NULL lhs
-        # yields 0 either way (coalesce-then-negate would make
-        # `NULL NOT IN (…)` true).
-        col = col.cast("boolean")
-        if "not" in name.lower():
-            col = ~col
-        return F.coalesce(col, F.lit(False))
-    if name in _DAY_WIDER_ADD_FNS and len(node.args) == 2 \
-            and df is not None:
-        # CH result-type rule: addDays/addMonths/… over a DATE stays
-        # Date; over DateTime it keeps the time-of-day (the registry's
-        # timestamp_add form)
-        out = REGISTRY[name](cols[0], cols[1])
-        dtp = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if dtp is not None and dtp.simpleString() == "date":
-            return out.cast("date")
-        return out
-    if (name in ("addTupleOfIntervals", "subtractTupleOfIntervals")
-            and len(node.args) == 2
-            and isinstance(node.args[1], TupleLiteral)):
-        # fold the tuple's intervals left-to-right through the plus/
-        # minus interval lowering below
-        op = "plus" if name == "addTupleOfIntervals" else "minus"
-        out_node = node.args[0]
-        for iv in node.args[1].items:
-            if not isinstance(iv, IntervalExpr):
-                raise BuildError(f"{name} expects a tuple of INTERVALs")
-            out_node = FuncCall(op, [out_node, iv])
-        return _eval(out_node, ctx, df)
-    if name in ("plus", "minus") and len(node.args) == 2 and isinstance(
-            node.args[1], IntervalExpr):
-        iv = node.args[1]
-        unit = iv.unit.lower()
-        if isinstance(iv.value, Literal):
-            expr = F.expr(f"interval {iv.value.value} {unit}")
-        else:
-            # INTERVAL <expr> DAY with a dynamic count: one-unit
-            # interval scaled by the (int-cast) count column
-            expr = F.expr(f"interval 1 {unit}") * _eval(
-                iv.value, ctx, df).cast("int")
-        res = cols[0] + expr if name == "plus" else cols[0] - expr
-        if unit in ("day", "week", "month", "quarter", "year") \
-                and df is not None:
-            try:
-                s0 = df.select(cols[0]).schema[0].dataType.simpleString()
-                if s0 == "date":
-                    return res.cast("date")
-            except Exception:
-                pass
-        return res
-    if (name in ("plus", "minus") and len(node.args) == 2
-            and isinstance(node.args[1], FuncCall)
-            and node.args[1].name.startswith("toInterval")
-            and df is not None):
-        # Date ± day-or-wider interval stays Date (CH: DateTime only for
-        # sub-day units); Spark promotes date+interval to timestamp
-        res = cols[0] + cols[1] if name == "plus" else cols[0] - cols[1]
-        unit = node.args[1].name[len("toInterval"):].lower()
-        if unit in ("day", "week", "month", "quarter", "year"):
-            try:
-                dt = df.select(cols[0]).schema[0].dataType.simpleString()
-                if dt == "date":
-                    return res.cast("date")
-            except Exception:
-                pass
-        return res
     # boolean-as-UInt8: CH predicates are numbers; cast them before any
     # arithmetic/bit op so Spark's bool-rejecting operators accept them
+    # (ahead of the lowering table, so abs/plus/… handlers see it too)
     if name in _NUM_CONTEXT_FNS:
         cols = [c.cast("tinyint")
                 if not isinstance(a, Lambda) and _is_boolish(a, df) else c
                 for a, c in zip(node.args, cols)]
-    # CH numeric promotion (NumberTraits): the result of int arithmetic is
-    # one size class wider than the operands (Int8+Int8 = Int16,
-    # UInt8+Int8 = Int16, Int32*Int32 = Int64), unlike Spark which keeps
-    # the wider operand type and can overflow. Cast operands to the CH
-    # result type up front so the op itself cannot overflow.
-    if name in ("plus", "minus", "multiply", "intDiv",
-                "modulo") and len(node.args) == 2:
-        ta = _infer_ch_type(node.args[0], ctx, df)
-        tb = _infer_ch_type(node.args[1], ctx, df)
-        if ta is not None and tb is not None:
-            rt = arithmetic_result_type(name, ta, tb)
-            if rt is not None:
-                spark_t = ch_type_to_spark(rt)
-                if name in ("plus", "minus", "multiply"):
-                    a, b = cols[0].cast(spark_t), cols[1].cast(spark_t)
-                    return (a + b if name == "plus"
-                            else a - b if name == "minus" else a * b)
-                # intDiv / modulo: CH computes at operand width then
-                # narrows the result type (ResultOfIntegerDivision /
-                # ResultOfModulo)
-                return REGISTRY[name](cols[0], cols[1]).cast(spark_t)
-        if name in ("plus", "minus") and df is not None \
-                and (ta is None or tb is None):
-            # temporal arithmetic (the numeric inference above left a
-            # side unresolved): Date ± N = Date shifted N days (Spark's
-            # date_add rejects BIGINT counts), DateTime ± N = N seconds,
-            # Date − Date = Int32 days, DateTime − DateTime = seconds
-            def _tkind(i):
-                dtp = _probe_dtype(node.args[i], cols[i], ctx, df)
-                s = dtp.simpleString() if dtp is not None else ""
-                return ("date" if s == "date"
-                        else "ts" if s.startswith("timestamp") else s)
-            k0 = _tkind(0) if ta is None else "num"
-            if k0 in ("date", "ts"):
-                k1 = _tkind(1) if tb is None else "num"
-                if name == "minus" and k0 == k1 == "date":
-                    return F.datediff(cols[0], cols[1]).cast("int")
-                if name == "minus" and k0 == k1 == "ts":
-                    return (F.unix_timestamp(cols[0])
-                            - F.unix_timestamp(cols[1])).cast("int")
-                if name == "minus" and {k0, k1} == {"date", "ts"}:
-                    # mixed DateTime − Date: the Date converts to
-                    # midnight DateTime, result Int32 seconds (CH
-                    # getLeastSupertype for the pair)
-                    return (F.unix_timestamp(cols[0].cast("timestamp"))
-                            - F.unix_timestamp(cols[1].cast("timestamp"))
-                            ).cast("int")
-                if k1 == "num" or k1.endswith("int"):
-                    n = cols[1].cast("int")
-                    if k0 == "date":
-                        return (F.date_add(cols[0], n) if name == "plus"
-                                else F.date_sub(cols[0], n))
-                    return F.timestamp_add(
-                        "SECOND",
-                        cols[1].cast("long") * (1 if name == "plus"
-                                                else -1), cols[0])
-            elif name == "plus" and ta is not None and tb is None \
-                    and _tkind(1) == "date":
-                # N + Date (commuted)
-                return F.date_add(cols[1], cols[0].cast("int"))
+    lower = _LOWERINGS.get(name)
+    if lower is not None:
+        out = lower(name, node, cols, ctx, df)
+        if out is not None:
+            return out
     # getLeastSupertype for conditional branches: CH unifies if/multiIf
     # value types by bit-width maximization (signed ∪ unsigned of one
     # width → next wider signed), not Spark's coercion rules
@@ -4913,90 +4055,23 @@ def _call_fn(node: FuncCall, cols: list, ctx: Context,
     # HOF with lambda args: bind lambda params
     if any(isinstance(a, Lambda) for a in node.args):
         return _hof_call(node, ctx, df)
-    if name in _TUPLE_ARITH and df is not None:
-        # element-wise tuple arithmetic needs the struct's field list,
-        # which only the analyzed schema knows — one plan analysis at
-        # build time, zero runtime cost
-        return _tuple_arith(name, node, cols, ctx, df)
     if name in _VEC_TUPLE_FNS and df is not None:
         # the distance/norm family accepts Tuples as well as Arrays in
         # CH — adapt struct args to arrays once at build time
         cols = [_struct_as_array(a, c, ctx, df)
                 for a, c in zip(node.args, cols)]
-        try:
-            return REGISTRY[name](*cols)
-        except TypeError as e:
-            raise BuildError(
-                f"wrong number of arguments for function {name}: "
-                f"{e}") from None
-    if (name == "tupleElement" and df is not None
-            and len(node.args) == 2 and isinstance(node.args[1], Literal)
-            and isinstance(node.args[1].value, int)):
-        # t.N works positionally on ANY tuple — including named ones
-        # like the statistical-test results (t_statistic, p_value) —
-        # per the CH Tuple contract, not just our _N convention
-        from pyspark.sql.types import StructType
-        dt = _probe_dtype(node.args[0], cols[0], ctx, df)
-        if dt is None and _refs_lambda_param(node.args[0], ctx):
-            # composite lambda expression whose struct type the HOF
-            # binding can't see: fall back to the `_N` literal-tuple
-            # field convention (every tuple this engine constructs)
-            return cols[0].getField(f"_{node.args[1].value}")
-        if not isinstance(dt, StructType):
-            got = dt.simpleString() if dt is not None \
-                else "an unresolvable expression"
-            raise BuildError(
-                f"tupleElement: positional .{node.args[1].value} access "
-                f"needs a Tuple, got {got}")
-        idx = node.args[1].value
-        if not 1 <= idx <= len(dt.fields):
-            raise BuildError(f"tupleElement: index {idx} out of "
-                             f"range for {len(dt.fields)}-tuple")
-        return cols[0][dt.fields[idx - 1].name]
-    if name in ("trimBothChars", "trimLeftChars", "trimRightChars"):
-        target, chars = cols
-        cl = node.args[1].value if isinstance(node.args[1], Literal) else ""
-        import re as _re
-        pat = _re.escape(cl)
-        if name != "trimRightChars":
-            target = F.regexp_replace(target, f"^[{pat}]*", "")
-        if name != "trimLeftChars":
-            target = F.regexp_replace(target, f"[{pat}]*$", "")
-        return target
-    if (name in ("splitByChar", "splitByString", "splitByRegexp")
-            and len(node.args) == 3
-            and isinstance(node.args[0], Literal)
-            and isinstance(node.args[2], Literal)):
-        # splitby_max_substrings_includes_remaining_string (default 0 at
-        # the emulated era): remainder discarded unless the setting is on
-        keep = str(ctx.settings.get(
-            "splitby_max_substrings_includes_remaining_string",
-            0)).strip("'\"").lower() in ("1", "true")
-        return REGISTRY[name](node.args[0].value, cols[1],
-                              node.args[2].value, keep)
-    if (name in ("splitByChar", "splitByString", "splitByRegexp")
-            and len(node.args) == 3
-            and str(ctx.settings.get(
-                "splitby_max_substrings_includes_remaining_string",
-                0)).strip("'\"").lower() in ("1", "true")):
-        # the remainder-keeping lowering needs the separator and count
-        # at plan time; never silently discard the remainder when the
-        # setting is on and the count is column-valued
-        raise BuildError(
-            f"{name} with a non-literal separator/max_substrings does "
-            f"not support "
-            f"splitby_max_substrings_includes_remaining_string=1")
     # literal-arg passthrough for registry fns wanting python values
     if name in REGISTRY:
+        wants_literal = name in _LITERAL_ARG_FNS
         py_args = []
         for i, (a, c) in enumerate(zip(node.args, cols)):
-            if isinstance(a, Literal) and _wants_literal(name):
+            if isinstance(a, Literal) and wants_literal:
                 py_args.append(a.value)
-            elif (isinstance(a, ArrayLiteral) and _wants_literal(name)
+            elif (isinstance(a, ArrayLiteral) and wants_literal
                     and all(isinstance(x, Literal) for x in a.items)):
                 # transform(x, [1,2], ['a','b'], d) wants python lists
                 py_args.append([x.value for x in a.items])
-            elif (isinstance(a, IntervalExpr) and _wants_literal(name)
+            elif (isinstance(a, IntervalExpr) and wants_literal
                     and isinstance(a.value, Literal)):
                 # toStartOfInterval(ts, INTERVAL 15 MINUTE) / tumble /
                 # hop want a duration string, not an interval Column
@@ -5018,10 +4093,8 @@ def _call_fn(node: FuncCall, cols: list, ctx: Context,
                 f"wrong number (or kind) of arguments for function "
                 f"{name}: {e}") from None
     if ctx.udfs and node.name in ctx.udfs:
-        # CREATE FUNCTION SQL lambda: substitute call args into the
-        # body AST and evaluate — pure macro expansion, so the UDF
-        # stays JVM-side whole-stage-codegen like any hand-written
-        # expression (never a Python UDF)
+        # CREATE FUNCTION SQL lambda: macro-expand the call args into
+        # the body AST, so the UDF stays JVM-side (never a Python UDF)
         lam = ctx.udfs[node.name]
         if isinstance(lam, Lambda):
             if len(lam.params) != len(node.args):
@@ -5034,6 +4107,967 @@ def _call_fn(node: FuncCall, cols: list, ctx: Context,
             raise BuildError(f"function {node.name} takes no arguments")
         return _eval(lam, ctx, df)
     raise BuildError(f"unknown function: {name}")
+
+
+def _probe_simple(arg, col: Column, ctx: Context,
+                  df: DataFrame | None) -> str:
+    """_probe_dtype's simpleString ('' when unresolvable)."""
+    dt = _probe_dtype(arg, col, ctx, df)
+    return dt.simpleString() if dt is not None else ""
+
+
+def _declared_numeric(node, ctx: Context,
+                      df: DataFrame | None) -> tuple | None:
+    """(kind, byte width) of the argument's DECLARED CH numeric type
+    (DDL column, to<Type> cast, literal typing): kind 'i' signed, 'u'
+    unsigned or Bool, 'f' float; None when not statically inferable."""
+    cht = _infer_ch_type(node, ctx, df)
+    return CH_NUMERIC.get(cht) if cht else None
+
+
+def _declared_int_width(node, ctx: Context,
+                        df: DataFrame | None) -> int | None:
+    info = _declared_numeric(node, ctx, df)
+    return info[1] if info and info[0] != "f" else None
+
+
+# byte width of the fixed-width Spark types, Date/DateTime at CH widths
+_SPARK_BYTE_WIDTH = {"tinyint": 1, "smallint": 2, "int": 4, "bigint": 8,
+                     "float": 4, "double": 8, "boolean": 1, "date": 2,
+                     "timestamp": 4, "timestamp_ntz": 4}
+_DAY_OR_WIDER = ("day", "week", "month", "quarter", "year")
+
+
+def _tuple_fields(name: str, arg, col: Column, ctx: Context,
+                  df: DataFrame | None) -> list:
+    """The field Columns of a Tuple argument, in position order."""
+    dt = _probe_dtype(arg, col, ctx, df)
+    if not isinstance(dt, StructType):
+        raise BuildError(f"{name}: arguments must be Tuples")
+    return [col[f.name] for f in dt.fields]
+
+
+def _date_stays_date(out: Column, arg, col: Column, ctx: Context,
+                     df: DataFrame | None) -> Column:
+    """CH result-type rule: a Date shifted by a day-or-wider unit stays
+    Date; Spark promotes date ± interval to timestamp."""
+    if _probe_simple(arg, col, ctx, df) == "date":
+        return out.cast("date")
+    return out
+
+
+@_lowers("getSetting", "getSettingOrDefault")     # + @@k sugar
+def _lower_get_setting(name, node, cols, ctx, df):
+    if not (node.args and isinstance(node.args[0], Literal)):
+        raise BuildError("getSetting requires a literal name")
+    key = node.args[0].value
+    if key in ctx.settings:
+        return F.lit(ctx.settings[key])
+    # else the engine's honored default, then the reference namespace
+    # default (CH knows every name); only unknown names raise
+    from ..ddl import _SETTING_DEFAULTS
+    from ..settings_namespace import REFERENCE_DEFAULTS
+    if key in _SETTING_DEFAULTS:
+        return F.lit(_SETTING_DEFAULTS[key])
+    if key in REFERENCE_DEFAULTS:
+        v = REFERENCE_DEFAULTS[key]
+        return F.lit(int(v) if str(v).lstrip("-").isdigit() else v)
+    if name == "getSettingOrDefault" and len(node.args) > 1:
+        return cols[1]
+    # CH raises UNKNOWN_SETTING rather than returning NULL
+    raise BuildError(f"unknown setting: {key} (UNKNOWN_SETTING; "
+                     f"use getSettingOrDefault)")
+
+
+@_lowers("timezone", "timeZone", "serverTimezone")
+def _lower_timezone(name, node, cols, ctx, df):
+    if node.args:
+        return None
+    return F.lit(ctx.spark.conf.get("spark.sql.session.timeZone", "UTC"))
+
+
+@_lowers("__subqueryReduce")
+def _lower_subquery_reduce(name, node, cols, ctx, df):
+    # quantified-comparison marker: reduce the subquery's first column
+    # with min/max and inject the scalar (ANY/ALL rewrite §2.3)
+    sub = _build_query(node.args[0].query, ctx)
+    first = sub.columns[0]
+    agg = F.min(first) if node.args[1].value == "min" else F.max(first)
+    return F.lit(sub.agg(agg).collect()[0][0])
+
+
+@_lowers("isNullable")
+def _lower_is_nullable(name, node, cols, ctx, df):
+    # 1 when the argument's type is Nullable; toNullable() is a Spark
+    # no-op, so the declared wrapper resolves syntactically first
+    if len(cols) != 1:
+        return None
+    a0 = node.args[0]
+    if isinstance(a0, FuncCall) and a0.name in ("toNullable", "nullIf"):
+        return F.lit(1).cast("tinyint")
+    if isinstance(a0, Literal):
+        return F.lit(1 if a0.value is None else 0).cast("tinyint")
+    if df is not None and not _refs_lambda_param(a0, ctx):
+        try:
+            return F.lit(
+                1 if df.select(cols[0]).schema[0].nullable else 0) \
+                .cast("tinyint")
+        except Exception:
+            pass
+    return F.lit(0).cast("tinyint")
+
+
+@_lowers(*(f"to{t}" for t in CH_NUMERIC), "toDate", "toDateTime")
+def _lower_conversion(name, node, cols, ctx, df):
+    if len(node.args) != 1:
+        return None
+    pairs = name[2:] in CH_NUMERIC and _declared_enum(node.args[0], ctx)
+    if pairs:
+        # toInt8(enum_col): the declared value, not a parse of the name
+        return _enum_to_number(cols[0], pairs).cast(
+            ch_type_to_spark(name[2:]))
+    # CH's plain conversions THROW on an unparseable string (only
+    # OrNull/OrZero degrade — FunctionsConversion.h); Spark's non-ANSI
+    # cast nulls silently, so string inputs get a raise_error guard
+    if name not in _STRICT_PARSE_FNS \
+            or _probe_simple(node.args[0], cols[0], ctx, df) != "string":
+        return None
+    parsed = REGISTRY[name](cols[0])
+    return F.when(
+        cols[0].isNotNull() & parsed.isNull(),
+        F.raise_error(F.lit(f"Cannot parse {name[2:]} from string "
+                            f"(use {name}OrNull / {name}OrZero)"))
+    ).otherwise(parsed)
+
+
+@_lowers("neighbor")
+def _lower_neighbor(name, node, cols, ctx, df):
+    # out-of-range rows get the TYPE DEFAULT, not NULL, when no explicit
+    # default is given (CH other-functions#neighbor)
+    if df is None or len(cols) != 2 or not isinstance(node.args[1],
+                                                       Literal):
+        return None
+    from ..operators.joins import _type_default
+    if node.args[1].value is None:
+        raise BuildError("neighbor: the offset must be a constant "
+                         "integer, got NULL")
+    shifted = REGISTRY["neighbor"](cols[0], node.args[1].value)
+    dt = _probe_dtype(node.args[0], cols[0], ctx, df)
+    return shifted if dt is None else F.coalesce(shifted, _type_default(dt))
+
+
+@_lowers("arrayShiftLeft", "arrayShiftRight", "arrayElement")
+def _lower_array_default(name, node, cols, ctx, df):
+    """Type-default semantics that need the element type (CH fills with
+    the TYPE's default, Spark with NULL): arrayShiftLeft/Right without
+    an explicit fill pad with 0/''/false/[]; arrayElement out of bounds
+    returns the default for non-Nullable elements (Spark containsNull
+    False) and NULL for Nullable ones — the CH Nullable default."""
+    dt = _probe_dtype(node.args[0], cols[0], ctx, df)
+    if dt is None:
+        return None
+    if isinstance(dt, MapType) and name == "arrayElement" \
+            and len(node.args) == 2:
+        # m['missing'] returns the VALUE type's default in CH (0 / '' /
+        # false), NULL only for Nullable values — same rule as arrays
+        vt = dt.valueType.simpleString()
+        vdefault = {"string": F.lit("")}.get(vt)
+        if vt in ("tinyint", "smallint", "int", "bigint", "float",
+                  "double") or vt.startswith("decimal"):
+            vdefault = F.lit(0).cast(vt)
+        elif vt == "boolean":
+            vdefault = F.lit(False)
+        elif vt.startswith("array<"):
+            vdefault = F.array().cast(vt)
+        if vdefault is None or dt.valueContainsNull:
+            return None
+        return F.coalesce(F.try_element_at(cols[0], cols[1]), vdefault)
+    if not isinstance(dt, ArrayType):
+        return None
+    elem = dt.elementType.simpleString()
+    if elem in ("tinyint", "smallint", "int", "bigint", "float",
+                "double", "decimal"):
+        default = F.lit(0).cast(elem)
+    elif elem == "string":
+        default = F.lit("")
+    elif elem == "boolean":
+        default = F.lit(False)
+    elif elem.startswith("array<"):
+        default = F.array().cast(elem)
+    else:
+        return None
+    if name == "arrayElement" and len(node.args) == 2:
+        # index 0 is not an error in CH — it returns the default too
+        idx = cols[1] if isinstance(cols[1], Column) else F.lit(cols[1])
+        safe = F.when(idx != 0, F.try_element_at(cols[0],
+                                                 idx.cast("int")))
+        if dt.containsNull:
+            return safe                 # Nullable default IS NULL
+        return F.coalesce(safe, default)
+    if name.startswith("arrayShift") and len(node.args) == 2:
+        return REGISTRY[name](cols[0], cols[1], default)
+    return None
+
+
+@_lowers("toJSONString")
+def _lower_to_json_string(name, node, cols, ctx, df):
+    # complex types serialize via to_json; scalars per JSON rules
+    # (strings quoted+escaped, numbers/bools bare)
+    if len(node.args) != 1 or df is None:
+        return None
+    dts = _probe_simple(node.args[0], cols[0], ctx, df)
+    if not dts:
+        raise BuildError(
+            "toJSONString: argument type unresolvable in lambda "
+            "position — bind the value to a lambda parameter first")
+    # a NULL value of any scalar type serializes as bare null
+    if dts.startswith(("array", "map", "struct")):
+        return F.to_json(cols[0])
+    if dts == "string":
+        esc = F.regexp_replace(
+            F.regexp_replace(cols[0], r"\\", r"\\\\"), '"', '\\\\"')
+        return F.coalesce(F.concat(F.lit('"'), esc, F.lit('"')),
+                          F.lit("null"))
+    if dts == "boolean":
+        return F.when(cols[0], F.lit("true")) \
+                .when(~cols[0], F.lit("false")).otherwise(F.lit("null"))
+    return F.coalesce(cols[0].cast("string"), F.lit("null"))
+
+
+@_lowers("date_trunc", "dateTrunc")
+def _lower_date_trunc(name, node, cols, ctx, df):
+    # Date input with a day-or-wider unit stays Date in CH (like
+    # toStartOfMonth); DateTime input keeps DateTime
+    if len(cols) != 2 or df is None or not isinstance(node.args[0],
+                                                      Literal):
+        return None
+    unit = str(node.args[0].value).lower()
+    out = F.date_trunc(unit, cols[1])
+    if unit in _DAY_OR_WIDER:
+        return _date_stays_date(out, node.args[1], cols[1], ctx, df)
+    return out
+
+
+@_lowers("defaultValueOfArgumentType")
+def _lower_default_value(name, node, cols, ctx, df):
+    if len(node.args) != 1 or df is None:
+        return None
+    dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
+    if dt_obj is None:
+        raise BuildError(
+            "defaultValueOfArgumentType: argument type unresolvable "
+            "in lambda position — bind it to a lambda parameter")
+    d = _empty_set_default("", dt_obj)
+    return d if d is not None else F.lit(None).cast(dt_obj.simpleString())
+
+
+@_lowers("hasColumnInTable")
+def _lower_has_column(name, node, cols, ctx, df):
+    # (['host',] ['db',] 'table', 'column'): the host is always this
+    # server; the table resolves as db.table, then as a bare name
+    vals = [a.value for a in node.args if isinstance(a, Literal)]
+    if len(vals) != len(node.args) or not 2 <= len(vals) <= 4:
+        raise BuildError("hasColumnInTable needs literal "
+                         "[[host,] db,] table, column arguments")
+    *db, tbl, colname = vals[-3:]
+    tdf = ctx.tables.get(f"{db[0]}.{tbl}") if db else None
+    if tdf is None:
+        tdf = ctx.tables.get(tbl)
+    return F.lit(tdf is not None and colname in tdf.columns)
+
+
+@_lowers("abs")
+def _lower_abs(name, node, cols, ctx, df):
+    # CH abs(IntN) returns UIntN (abs(toInt8(-128)) = 128): widen
+    # sub-64-bit signed ints first (Int64 min stays the §1.2 edge)
+    if len(node.args) != 1:
+        return None
+    info = _declared_numeric(node.args[0], ctx, df)
+    if info and info[0] == "i" and info[1] <= 4:
+        return F.abs(cols[0].cast("bigint"))
+    return F.abs(cols[0])
+
+
+@_lowers("arrayJoin")
+def _lower_array_join(name, node, cols, ctx, df):
+    # CH: arrayJoin over a Map iterates its (key, value) tuples
+    if len(node.args) == 1 and isinstance(
+            _probe_dtype(node.args[0], cols[0], ctx, df), MapType):
+        return F.explode(F.map_entries(cols[0]))
+    return None
+
+
+@_lowers("tupleConcat")
+def _lower_tuple_concat(name, node, cols, ctx, df):
+    if not node.args:
+        return None
+    parts = [p for a, c in zip(node.args, cols)
+             for p in _tuple_fields(name, a, c, ctx, df)]
+    return F.struct(*[p.alias(f"_{i + 1}") for i, p in enumerate(parts)])
+
+
+@_lowers("arraySum", "arrayCumSum", "arrayCumSumNonNegative")
+def _lower_array_sum(name, node, cols, ctx, df):
+    # CH NumberTraits: arraySum follows the element type (Int64 for
+    # ints, Decimal stays Decimal); the cumulative kernels compute in
+    # double (exact below 2^53) and integer arrays yield Array(Int64)
+    if len(node.args) != 1:
+        return None
+    dt = _probe_dtype(node.args[0], cols[0], ctx, df)
+    elem = dt.elementType.simpleString() if isinstance(dt, ArrayType) \
+        else None
+    if name == "arraySum" and elem is not None:
+        return typed_array_sum(cols[0], elem)
+    out = REGISTRY[name](cols[0])
+    if elem in _INT_SPARK_TYPES:
+        return out.cast("bigint" if name == "arraySum" else "array<bigint>")
+    return out
+
+
+@_lowers("arrayReduce")
+def _lower_array_reduce(name, node, cols, ctx, df):
+    # arrayReduce('sum', a) is typed like arraySum(a)
+    if not (len(node.args) == 2 and isinstance(node.args[0], Literal)
+            and str(node.args[0].value).strip().lower() == "sum"):
+        return None
+    dt = _probe_dtype(node.args[1], cols[1], ctx, df)
+    if isinstance(dt, ArrayType):
+        return typed_array_sum(cols[1], dt.elementType.simpleString())
+    return None
+
+
+@_lowers("tupleNames", "tupleToNameValuePairs")
+def _lower_tuple_names(name, node, cols, ctx, df):
+    # tupleNames(t) -> Array(String) of element names ('1','2' for
+    # unnamed tuples); tupleToNameValuePairs(t) -> Array(Tuple(name,
+    # value)) — same-type elements required, like CH
+    if len(node.args) != 1 or df is None:
+        return None
+    dt = _probe_dtype(node.args[0], cols[0], ctx, df)
+    if not isinstance(dt, StructType):
+        raise BuildError(f"{name}: argument must be a Tuple")
+
+    def disp(n: str) -> str:
+        return n[1:] if n.startswith("_") and n[1:].isdigit() else n
+
+    if name == "tupleNames":
+        return F.array(*[F.lit(disp(f.name)) for f in dt.fields])
+    kinds = {f.dataType.simpleString() for f in dt.fields}
+    if len(kinds) > 1:
+        raise BuildError(
+            "tupleToNameValuePairs: tuple elements must share one "
+            f"type, got {sorted(kinds)}")
+    return F.array(*[
+        F.struct(F.lit(disp(f.name)).alias("_1"),
+                 cols[0][f.name].alias("_2"))
+        for f in dt.fields])
+
+
+@_lowers("byteSize")
+def _lower_byte_size(name, node, cols, ctx, df):
+    # uncompressed size: fixed-width types report the DECLARED width
+    # (UInt32 -> 4, Date -> 2); String is length + 9 (size prefix +
+    # terminator, per the CH docs example)
+    if len(node.args) != 1:
+        return None
+    info = _declared_numeric(node.args[0], ctx, df)
+    if info is not None:
+        return F.lit(info[1]).cast("long")
+    dts = _probe_simple(node.args[0], cols[0], ctx, df)
+    if dts in _SPARK_BYTE_WIDTH:
+        return F.lit(_SPARK_BYTE_WIDTH[dts]).cast("long")
+    if dts == "string":
+        return (F.octet_length(cols[0]) + 9).cast("long")
+    return F.octet_length(cols[0].cast("string")).cast("long")
+
+
+@_lowers("hex", "bin")
+def _lower_hex_bin(name, node, cols, ctx, df):
+    # CH pads to the DECLARED integer type's byte width: hex(1) = '01',
+    # hex(256) = '0100', hex(toUInt32(1)) = '00000001', hex(toInt8(-1))
+    # = 'FF'. String arguments keep the byte-dump kernel.
+    if len(node.args) != 1:
+        return None
+    width = _declared_int_width(node.args[0], ctx, df)
+    if width is None:
+        dts = _probe_simple(node.args[0], cols[0], ctx, df)
+        if dts in ("tinyint", "smallint", "int", "bigint"):
+            width = _SPARK_BYTE_WIDTH[dts]
+        elif name == "bin" and dts == "string":
+            # bin(String) is the byte dump ('a' → '01100001'); F.bin is
+            # numeric-only, so chunk the hex dump into 8-bit groups
+            hx = F.hex(cols[0])
+            return F.array_join(F.transform(
+                F.sequence(F.lit(1), (F.length(hx) / 2).cast("int")),
+                lambda i: F.lpad(
+                    F.conv(F.substring(hx, (i - 1) * 2 + 1, 2), 16, 2),
+                    8, "0")), "")
+        else:
+            return None
+    base = F.hex(cols[0]) if name == "hex" else F.bin(cols[0])
+    n = width * (2 if name == "hex" else 8)
+    return F.when(F.length(base) >= n, F.substring(base, -n, n)) \
+            .otherwise(F.lpad(base, n, "0"))
+
+
+@_lowers("formatRow", "formatRowNoNewline")
+def _lower_format_row(name, node, cols, ctx, df):
+    # per-row CSV/TSV/JSONEachRow/Values text, Arrow-batched, with the
+    # cell renderers of the INTO OUTFILE/FORMAT writers
+    if len(node.args) < 2:
+        return None
+    if not isinstance(node.args[0], Literal):
+        raise BuildError("formatRow needs a literal format name")
+    fmt = str(node.args[0].value)
+    vals = cols[1:]
+    names = [_auto_name(a) for a in node.args[1:]]
+    simples = [_probe_simple(a, c, ctx, df) or "string"
+               for a, c in zip(node.args[1:], vals)]
+    newline = name == "formatRow"
+    from ..sources.formats import render_row
+    import pandas as pd
+
+    def frow(sdf):
+        # object dtype keeps NULLs as None (numeric pandas columns would
+        # coerce them to NaN and render 'nan' instead of \N)
+        sdf = sdf.astype(object).where(pd.notnull(sdf), None)
+        return pd.Series([
+            render_row(fmt,
+                       [v.tolist() if hasattr(v, "tolist") else v
+                        for v in row],
+                       simples, names, newline)
+            for row in sdf.itertuples(index=False, name=None)])
+
+    frow.__annotations__ = {"sdf": pd.DataFrame, "return": pd.Series}
+    return F.pandas_udf(frow, "string")(F.struct(
+        *[v.alias(f"c{i}") for i, v in enumerate(vals)]))
+
+
+@_lowers("arrayFlatten", "flatten")
+def _lower_flatten(name, node, cols, ctx, df):
+    # CH flattens ALL nesting levels ([[[1]], [[2], [3]]] → [1, 2, 3]);
+    # F.flatten peels one, so apply it depth-1 times
+    if len(node.args) != 1:
+        return None
+    dt = _probe_dtype(node.args[0], cols[0], ctx, df)
+    out = cols[0]
+    while isinstance(dt, ArrayType) and isinstance(dt.elementType,
+                                                   ArrayType):
+        out = F.flatten(out)
+        dt = dt.elementType
+    return out
+
+
+@_lowers(*_TUPLE_ARITH_2, "tupleNegate", "tupleMultiplyByNumber",
+         "tupleDivideByNumber")
+def _lower_tuple_elementwise(name, node, cols, ctx, df):
+    # element-wise tuple arithmetic (CH tuple-functions): fields pair by
+    # position, output fields are _N
+    if len(node.args) != (1 if name == "tupleNegate" else 2):
+        return None
+    fa = _tuple_fields(name, node.args[0], cols[0], ctx, df)
+    if name == "tupleNegate":
+        vals = [-a for a in fa]
+    elif name == "tupleMultiplyByNumber":
+        vals = [a * cols[1] for a in fa]
+    elif name == "tupleDivideByNumber":
+        vals = [a / cols[1] for a in fa]
+    else:
+        fb = _tuple_fields(name, node.args[1], cols[1], ctx, df)
+        if len(fa) != len(fb):
+            raise BuildError(f"{name}: tuple sizes differ")
+        if name == "tupleHammingDistance":
+            # differing positions; NULL-safe, so NULL only matches NULL
+            out = F.lit(0)
+            for a, b in zip(fa, fb):
+                out = out + (~a.eqNullSafe(b)).cast("int")
+            return out
+        vals = [_TUPLE_ARITH_2[name](a, b) for a, b in zip(fa, fb)]
+    return F.struct(*[v.alias(f"_{i + 1}") for i, v in enumerate(vals)])
+
+
+@_lowers("bitRotateLeft", "bitRotateRight")
+def _lower_bit_rotate(name, node, cols, ctx, df):
+    # rotation width = the DECLARED CH type's byte width (literal typing
+    # gives UInt8 for small literals); untyped → 8 bytes
+    if len(node.args) != 2:
+        return None
+    n = node.args[1].value if isinstance(node.args[1], Literal) else None
+    if n is None:
+        raise BuildError(f"{name} shift count must be a literal")
+    width = _declared_int_width(node.args[0], ctx, df) or 8
+    return REGISTRY[name](cols[0], n, width)
+
+
+@_lowers("byteSwap")
+def _lower_byte_swap(name, node, cols, ctx, df):
+    # CH swaps per DECLARED argument type, not per runtime value;
+    # untyped args fall back to value-width inside the registry kernel
+    if len(node.args) != 1:
+        return None
+    info = _declared_numeric(node.args[0], ctx, df)
+    width = info[1] if info and info[0] != "f" else None
+    out = REGISTRY["byteSwap"](cols[0], width)
+    if info and info[0] == "i" and width in (1, 2, 4):
+        # signed types keep their width: byteSwap(Int16 -2) is the
+        # 16-bit pattern 0xFFFE read back as Int16 (= -2), not 65534
+        out = out.cast({1: "tinyint", 2: "smallint", 4: "int"}[width])
+    return out
+
+
+@_lowers("bitPositionsToArray")
+def _lower_bit_positions(name, node, cols, ctx, df):
+    # same width rule as byteSwap: positions come from the DECLARED
+    # type's bit pattern (toInt8(-1) → [0..7], not 64 bits)
+    if len(node.args) != 1:
+        return None
+    return REGISTRY["bitPositionsToArray"](
+        cols[0], _declared_int_width(node.args[0], ctx, df))
+
+
+@_lowers("multiMatchAny", "multiMatchAnyIndex")
+def _lower_multi_match(name, node, cols, ctx, df):
+    # pattern set must be an array literal (CH compiles the set into one
+    # automaton; here each pattern is one JVM rlike)
+    if len(node.args) != 2:
+        return None
+    pats = node.args[1]
+    if not (isinstance(pats, ArrayLiteral)
+            and all(isinstance(i, Literal) and isinstance(i.value, str)
+                    for i in pats.items)):
+        raise BuildError(f"{name} patterns must be string literals")
+    plist = [i.value for i in pats.items]
+    h = cols[0]
+    if name == "multiMatchAny":
+        out = F.lit(False)
+        for p in plist:
+            out = out | h.rlike(p)
+        return out.cast("int")
+    out = F.lit(0)
+    for i in range(len(plist) - 1, -1, -1):   # first match wins
+        out = F.when(h.rlike(plist[i]), F.lit(i + 1)).otherwise(out)
+    return out.cast("long")
+
+
+@_lowers("emptyArrayToSingle")
+def _lower_empty_array_to_single(name, node, cols, ctx, df):
+    # empty → [type default] (CH IDataType::getDefault), else as-is
+    if len(node.args) != 1 or df is None:
+        return None
+    dt = _probe_dtype(node.args[0], cols[0], ctx, df)
+    if dt is None and _refs_lambda_param(node.args[0], ctx):
+        raise BuildError(
+            "emptyArrayToSingle: array type unresolvable in lambda "
+            "position — bind it to a lambda parameter")
+    if not isinstance(dt, ArrayType):
+        return None
+    elem = dt.elementType
+    d = _empty_set_default("", elem)
+    if d is None:
+        d = F.lit(None).cast(elem)
+    return F.when(F.size(cols[0]) == 0,
+                  F.array(d.cast(elem))).otherwise(cols[0])
+
+
+@_lowers("isConstant")
+def _lower_is_constant(name, node, cols, ctx, df):
+    # constant ⇔ the argument references no column (CH evaluates
+    # constness at analysis time; literals/functions-of-literals → 1)
+    if len(node.args) != 1:
+        return None
+
+    def _has_ident(n) -> bool:
+        if isinstance(n, Identifier):
+            return True
+        for v in getattr(n, "__dict__", {}).values():
+            if isinstance(n, FuncCall) and v is getattr(n, "name", None):
+                continue
+            if isinstance(v, list):
+                if any(_has_ident(i) for i in v):
+                    return True
+            elif hasattr(v, "__dict__") and _has_ident(v):
+                return True
+        return False
+    return F.lit(0 if _has_ident(node.args[0]) else 1).cast("smallint")
+
+
+@_lowers("toString")
+def _lower_to_string(name, node, cols, ctx, df):
+    # CH prints integral floats WITHOUT the trailing .0 (toString(1.0)
+    # = '1'); Java keeps it. Strip for plain-notation values (|x| >= 1e7
+    # keeps Java's form: documented partial fidelity); an unresolvable
+    # type gets the float test as a constant-folded typeof()
+    if len(node.args) != 1:
+        return None
+    out = cols[0].cast("string")
+    stripped = F.regexp_replace(out, r"^(-?\d+)\.0$", "$1")
+    dt_obj = _probe_dtype(node.args[0], cols[0], ctx, df)
+    if dt_obj is None:
+        return F.when(F.typeof(cols[0]).isin("float", "double"),
+                      stripped).otherwise(out)
+    dts = dt_obj.simpleString()
+    if dts.startswith(("array", "struct", "map")):
+        # composite values render as CH literals ('[1,2]', "(1,'a')",
+        # "{'k':1}"), not Spark's cast text
+        return _ch_literal_render(cols[0], dt_obj)
+    if dts.startswith("decimal"):
+        # CH trims trailing decimal zeros by default
+        # (output_format_decimal_trailing_zeros = false)
+        return F.regexp_replace(
+            F.regexp_replace(out, r"(\.\d*?)0+$", "$1"), r"\.$", "")
+    sc = dts.startswith("timestamp") and _dt64_scale_of(node.args[0])
+    if sc:
+        # DateTime64(s) renders EXACTLY s fraction digits
+        # ('00:00:00.500', not Spark cast's trimmed '.5')
+        return F.date_format(cols[0], f"yyyy-MM-dd HH:mm:ss.{'S' * sc}")
+    return stripped if dts in ("float", "double") else out
+
+
+@_lowers("round")
+def _lower_round(name, node, cols, ctx, df):
+    # CH round() is BANKER'S for floats (round(2.5) = 2) and
+    # away-from-zero for integers/Decimal (round(toInt32(25), -1) = 30):
+    # Spark's bround vs round; unknown types behave as Float64
+    if not node.args:
+        return None
+    n = 0
+    if len(node.args) > 1 and isinstance(node.args[1], Literal):
+        n = node.args[1].value
+    info = _declared_numeric(node.args[0], ctx, df)
+    if info is not None:
+        away = info[0] != "f"
+    else:
+        dts = _probe_simple(node.args[0], cols[0], ctx, df)
+        away = dts.startswith("decimal") or dts in _INT_SPARK_TYPES
+    return (F.round(cols[0], int(n)) if away
+            else F.bround(cols[0], int(n)))
+
+
+@_lowers("toTypeName", "toColumnTypeName")
+def _lower_to_type_name(name, node, cols, ctx, df):
+    # literal typing first (FieldToDataType: toTypeName(1) = 'UInt8',
+    # [1,2] → Array(UInt8)), then the resolved Spark dtype's CH name.
+    # toColumnTypeName is the same name: there is no separate column one.
+    if len(node.args) != 1:
+        return None
+    arg = node.args[0]
+    fn = arg.name if isinstance(arg, FuncCall) else None
+    inner = arg.args[0] if fn and len(arg.args) == 1 else None
+    if fn in ("toNullable", "toLowCardinality") and inner is not None:
+        # the wrapper survives around the INNER type (CH:
+        # Nullable(UInt8); Spark has no LowCardinality representation)
+        wrap = "Nullable" if fn == "toNullable" else "LowCardinality"
+        return F.concat(F.lit(f"{wrap}("),
+                        _eval(FuncCall("toTypeName", [inner]), ctx, df),
+                        F.lit(")"))
+    if fn == "assumeNotNull" and inner is not None:
+        # assumeNotNull strips Nullable — unwrap a direct toNullable(...)
+        if isinstance(inner, FuncCall) and inner.name == "toNullable":
+            inner = inner.args[0]
+        return _eval(FuncCall("toTypeName", [inner]), ctx, df)
+    if (fn == "toDateTime64" and len(arg.args) >= 2
+            and isinstance(arg.args[1], Literal)):
+        # the Spark timestamp carries no scale — keep the declared one
+        return F.lit(f"DateTime64({arg.args[1].value})")
+    if fn == "now64":
+        # now64([scale]) is DateTime64(scale), default scale 3
+        p = (arg.args[0].value
+             if arg.args and isinstance(arg.args[0], Literal) else 3)
+        return F.lit(f"DateTime64({p})")
+    if fn and fn.startswith("toInterval") and len(fn) > len("toInterval"):
+        # Spark renders 'interval day to second'; CH names the unit
+        return F.lit(f"Interval{fn[len('toInterval'):]}")
+    if isinstance(arg, Cast):
+        # no distinct Spark representation: keep the DECLARED name
+        t = arg.type_name.strip()
+        if t.upper() == "JSON" or t.lower().startswith("object("):
+            return F.lit("JSON")
+    t = _literal_render_type(arg) or _infer_ch_type(arg, ctx, df)
+    if t is None:
+        dts = _probe_simple(arg, cols[0], ctx, df)
+        t = _spark_to_ch_name(dts) if dts else None
+    return F.lit(t or "Dynamic")
+
+
+@_lowers("initializeAggregation")
+def _lower_initialize_aggregation(name, node, cols, ctx, df):
+    # initializeAggregation('aggState', v...): the single-row state;
+    # value-carrier states finalize to the value itself
+    if len(node.args) < 2 or not isinstance(node.args[0], Literal):
+        return None
+    agg = str(node.args[0].value).strip("'\"")
+    base = agg[:-5] if agg.endswith("State") else agg
+    vals = cols[1:]
+    if base in ("sum", "min", "max", "any", "anyLast", "avg", "median",
+                "first", "last"):
+        return vals[0]
+    if base in ("count", "uniq", "uniqExact", "uniqHLL12",
+                "uniqCombined"):
+        return F.lit(1).cast("long")
+    if base in ("groupArray", "groupUniqArray", "uniqExactState"):
+        return F.array(*vals)
+    raise BuildError(f"initializeAggregation: unsupported aggregate {agg!r}")
+
+
+@_lowers("finalizeAggregation")
+def _lower_finalize_aggregation(name, node, cols, ctx, df):
+    # per-row finalized value: HLL sketch states estimate, uniqExact
+    # array states count distinct elements, simple states ARE the value
+    if len(cols) != 1:
+        return None
+    dt = _probe_simple(node.args[0], cols[0], ctx, df)
+    if dt == "binary":
+        return F.hll_sketch_estimate(cols[0])
+    if dt.startswith("array"):
+        return F.size(F.array_distinct(cols[0])).cast("long")
+    return cols[0]
+
+
+@_lowers(*(f"reinterpretAs{s}Int{b}" for s in ("", "U")
+           for b in (8, 16, 32, 64, 128, 256)))
+def _lower_reinterpret_int(name, node, cols, ctx, df):
+    # over a NUMERIC argument: a wrap-cast to the target width (CH
+    # reinterprets, never parses); the registry's little-endian-bytes
+    # reading applies to strings only
+    if len(cols) != 1 or _probe_simple(node.args[0], cols[0], ctx, df) \
+            not in ("tinyint", "smallint", "int", "bigint", "float",
+                    "double", "boolean", "date", "timestamp"):
+        return None
+    bits = int(name.rsplit("t", 1)[-1])
+    # CH reinterprets the binary; the integral reading of floats, dates
+    # and bools is the documented deviation (§1.2)
+    v = cols[0].cast("long")
+    if bits >= 64:
+        return v
+    # arithmetic wrap (an overflowing narrowing CAST would raise under
+    # the driver's ANSI-on session)
+    if name.startswith("reinterpretAsUInt"):
+        return F.pmod(v, F.lit(1 << bits))
+    half = 1 << (bits - 1)
+    return F.pmod(v + half, F.lit(1 << bits)) - F.lit(half)
+
+
+@_lowers(*_POLYMORPHIC)
+def _lower_polymorphic(name, node, cols, ctx, df):
+    # CH length/empty/reverse take strings AND arrays: dispatch on the
+    # argument's resolved type
+    if len(cols) != 1 or not _probe_simple(
+            node.args[0], cols[0], ctx, df).startswith(("array", "map")):
+        return None
+    if _POLYMORPHIC[name]:
+        return REGISTRY[_POLYMORPHIC[name]](cols[0])
+    if name == "empty":
+        return F.size(cols[0]) == 0
+    return F.size(cols[0]) > 0              # notEmpty
+
+
+@_lowers("in", "notIn", "globalIn", "globalNotIn")
+def _lower_in(name, node, cols, ctx, df):
+    # IN with literal tuple/array
+    _, rhs_node = node.args
+    lhs = cols[0]
+    if isinstance(rhs_node, (TupleLiteral, ArrayLiteral)):
+        if (isinstance(node.args[0], TupleLiteral)
+                and all(isinstance(it, TupleLiteral)
+                        for it in rhs_node.items)):
+            # (a, b) IN ((1, 2), (3, 4)) → OR of per-row equality
+            # conjunctions (pushdown-friendly, no struct literals)
+            lhs_cols = [_eval(it, ctx, df) for it in node.args[0].items]
+            disj = F.lit(False)
+            for row in rhs_node.items:
+                conj = F.lit(True)
+                for lc, lit_item in zip(lhs_cols, row.items):
+                    conj = conj & (lc == _eval(lit_item, ctx, df))
+                disj = disj | conj
+            col = disj
+        else:
+            # CH null processing (operators/in#null-processing,
+            # transform_null_in=0): NULL elements match nothing
+            vals = [a.value for a in rhs_node.items if a.value is not None]
+            col = lhs.isin(vals) if vals else F.lit(False)
+    elif isinstance(rhs_node, Subquery):
+        # last resort for an IN-subquery inside a lambda body, which the
+        # marker-join lowering (_lower_in_subqueries) cannot reach: a
+        # bounded collect with a hard guard
+        sub = _build_query(rhs_node.query, ctx)
+        cap = 100_000
+        rows = sub.limit(cap + 1).collect()
+        if len(rows) > cap:
+            raise BuildError(
+                "IN-subquery in this position would materialize more "
+                f"than {cap} rows on the driver; rewrite as a WHERE "
+                "conjunct or join")
+        col = lhs.isin([r[0] for r in rows if r[0] is not None])
+    else:
+        col = lhs.isin([cols[1]])
+    # CH: IN involving NULL is 0, never NULL, for BOTH IN and NOT IN
+    # (transform_null_in=0): negate BEFORE coalescing, or `NULL NOT IN
+    # (…)` would be true
+    col = col.cast("boolean")
+    if "not" in name.lower():
+        col = ~col
+    return F.coalesce(col, F.lit(False))
+
+
+@_lowers(*_DAY_WIDER_ADD_FNS)
+def _lower_day_wider_add(name, node, cols, ctx, df):
+    # addDays/addMonths/… over a DATE stays Date; over DateTime it keeps
+    # the time-of-day (the registry's timestamp_add form)
+    if len(node.args) != 2 or df is None:
+        return None
+    return _date_stays_date(REGISTRY[name](cols[0], cols[1]),
+                            node.args[0], cols[0], ctx, df)
+
+
+@_lowers("addTupleOfIntervals", "subtractTupleOfIntervals")
+def _lower_tuple_of_intervals(name, node, cols, ctx, df):
+    # fold the tuple's intervals left-to-right through plus/minus
+    if len(node.args) != 2 or not isinstance(node.args[1], TupleLiteral):
+        return None
+    op = "plus" if name == "addTupleOfIntervals" else "minus"
+    out_node = node.args[0]
+    for iv in node.args[1].items:
+        if not isinstance(iv, IntervalExpr):
+            raise BuildError(f"{name} expects a tuple of INTERVALs")
+        out_node = FuncCall(op, [out_node, iv])
+    return _eval(out_node, ctx, df)
+
+
+@_lowers("plus", "minus", "multiply", "intDiv", "modulo")
+def _lower_arithmetic(name, node, cols, ctx, df):
+    if len(node.args) != 2:
+        return None
+    rhs = node.args[1]
+    if name in ("plus", "minus") and (
+            isinstance(rhs, IntervalExpr)
+            or isinstance(rhs, FuncCall) and rhs.name.startswith(
+                "toInterval")):
+        # Date ± day-or-wider interval stays Date (CH: DateTime only for
+        # sub-day units)
+        res = cols[0] + cols[1] if name == "plus" else cols[0] - cols[1]
+        unit = (rhs.unit if isinstance(rhs, IntervalExpr)
+                else rhs.name[len("toInterval"):]).lower()
+        if unit in _DAY_OR_WIDER:
+            return _date_stays_date(res, node.args[0], cols[0], ctx, df)
+        return res
+    # CH numeric promotion (NumberTraits): the result of int arithmetic
+    # is one size class wider than the operands (Int8+Int8 = Int16,
+    # UInt8+Int8 = Int16, Int32*Int32 = Int64), unlike Spark which keeps
+    # the wider operand type and can overflow. Cast operands to the CH
+    # result type up front so the op itself cannot overflow.
+    ta = _infer_ch_type(node.args[0], ctx, df)
+    tb = _infer_ch_type(rhs, ctx, df)
+    if ta is not None and tb is not None:
+        rt = arithmetic_result_type(name, ta, tb)
+        if rt is None:
+            return None
+        spark_t = ch_type_to_spark(rt)
+        if name in ("plus", "minus", "multiply"):
+            a, b = cols[0].cast(spark_t), cols[1].cast(spark_t)
+            return (a + b if name == "plus"
+                    else a - b if name == "minus" else a * b)
+        # intDiv / modulo: CH computes at operand width then narrows
+        # the result type (ResultOfIntegerDivision / ResultOfModulo)
+        return REGISTRY[name](cols[0], cols[1]).cast(spark_t)
+    if name not in ("plus", "minus") or df is None:
+        return None
+
+    # temporal arithmetic: Date ± N = N days (Spark's date_add rejects
+    # BIGINT counts), DateTime ± N = N seconds, Date − Date = Int32 days,
+    # DateTime − DateTime = seconds
+    def _tkind(i):
+        s = _probe_simple(node.args[i], cols[i], ctx, df)
+        return ("date" if s == "date"
+                else "ts" if s.startswith("timestamp") else s)
+    k0 = _tkind(0) if ta is None else "num"
+    if k0 in ("date", "ts"):
+        k1 = _tkind(1) if tb is None else "num"
+        if name == "minus" and k0 == k1 == "date":
+            return F.datediff(cols[0], cols[1]).cast("int")
+        if name == "minus" and k0 == k1 == "ts":
+            return (F.unix_timestamp(cols[0])
+                    - F.unix_timestamp(cols[1])).cast("int")
+        if name == "minus" and {k0, k1} == {"date", "ts"}:
+            # mixed DateTime − Date: the Date converts to midnight
+            # DateTime, result Int32 seconds (CH getLeastSupertype)
+            return (F.unix_timestamp(cols[0].cast("timestamp"))
+                    - F.unix_timestamp(cols[1].cast("timestamp"))
+                    ).cast("int")
+        if k1 == "num" or k1.endswith("int"):
+            n = cols[1].cast("int")
+            if k0 == "date":
+                return (F.date_add(cols[0], n) if name == "plus"
+                        else F.date_sub(cols[0], n))
+            return F.timestamp_add(
+                "SECOND",
+                cols[1].cast("long") * (1 if name == "plus" else -1),
+                cols[0])
+    elif name == "plus" and ta is not None and _tkind(1) == "date":
+        # N + Date (commuted)
+        return F.date_add(cols[1], cols[0].cast("int"))
+    return None
+
+
+@_lowers("tupleElement")
+def _lower_tuple_element(name, node, cols, ctx, df):
+    # t.N is positional on ANY tuple, named ones too (t_statistic,
+    # p_value), not just our _N convention
+    if not (df is not None and len(node.args) == 2
+            and isinstance(node.args[1], Literal)
+            and isinstance(node.args[1].value, int)):
+        return None
+    idx = node.args[1].value
+    dt = _probe_dtype(node.args[0], cols[0], ctx, df)
+    if dt is None and _refs_lambda_param(node.args[0], ctx):
+        # composite lambda expression whose struct type the HOF binding
+        # can't see: fall back to the `_N` literal-tuple field
+        # convention (every tuple this engine constructs)
+        return cols[0].getField(f"_{idx}")
+    if not isinstance(dt, StructType):
+        got = dt.simpleString() if dt is not None \
+            else "an unresolvable expression"
+        raise BuildError(f"tupleElement: positional .{idx} access "
+                         f"needs a Tuple, got {got}")
+    if not 1 <= idx <= len(dt.fields):
+        raise BuildError(f"tupleElement: index {idx} out of "
+                         f"range for {len(dt.fields)}-tuple")
+    return cols[0][dt.fields[idx - 1].name]
+
+
+@_lowers("trimBothChars", "trimLeftChars", "trimRightChars")
+def _lower_trim_chars(name, node, cols, ctx, df):
+    target = cols[0]
+    cl = node.args[1].value if isinstance(node.args[1], Literal) else ""
+    pat = _re_mod.escape(cl)
+    if name != "trimRightChars":
+        target = F.regexp_replace(target, f"^[{pat}]*", "")
+    if name != "trimLeftChars":
+        target = F.regexp_replace(target, f"[{pat}]*$", "")
+    return target
+
+
+@_lowers("splitByChar", "splitByString", "splitByRegexp")
+def _lower_split_by(name, node, cols, ctx, df):
+    # splitby_max_substrings_includes_remaining_string (default 0 at the
+    # emulated era): remainder discarded unless the setting is on
+    if len(node.args) != 3:
+        return None
+    keep = str(ctx.settings.get(
+        "splitby_max_substrings_includes_remaining_string",
+        0)).strip("'\"").lower() in ("1", "true")
+    if isinstance(node.args[0], Literal) and isinstance(node.args[2],
+                                                        Literal):
+        return REGISTRY[name](node.args[0].value, cols[1],
+                              node.args[2].value, keep)
+    if keep:
+        # the remainder-keeping lowering needs the separator and count
+        # at plan time; never silently discard the remainder when the
+        # setting is on and the count is column-valued
+        raise BuildError(
+            f"{name} with a non-literal separator/max_substrings does "
+            f"not support "
+            f"splitby_max_substrings_includes_remaining_string=1")
+    return None
 
 
 def _substitute(n, mapping: dict):
@@ -5121,14 +5155,6 @@ _INTERVAL_UNITS = {"year", "quarter", "month", "week", "day", "hour",
                    "nanosecond"}
 
 
-def _wants_literal(name: str) -> bool:
-    return name in _LITERAL_ARG_FNS
-
-
-_TUPLE_ARITH = {"tuplePlus", "tupleMinus", "tupleMultiply", "tupleDivide",
-                "tupleNegate", "tupleMultiplyByNumber",
-                "tupleDivideByNumber", "tupleHammingDistance"}
-
 _VEC_TUPLE_FNS = {"L1Norm", "L2Norm", "LinfNorm", "L1Distance",
                   "L2Distance", "cosineDistance", "dotProduct",
                   "normalizeL1", "normalizeL2"}
@@ -5138,46 +5164,10 @@ def _struct_as_array(arg, c: Column, ctx: Context,
                      df: DataFrame) -> Column:
     """Tuple → Array adaptation for the vector-math family: CH's
     distance/norm functions take either; the kernels are array HOFs."""
-    from pyspark.sql.types import StructType
     dt = _probe_dtype(arg, c, ctx, df)
     if isinstance(dt, StructType):
         return F.array(*[c[f.name] for f in dt.fields])
     return c
-
-
-def _tuple_arith(name: str, node, cols: list, ctx: Context,
-                 df: DataFrame) -> Column:
-    """Element-wise tuple arithmetic (public CH tuple-math family):
-    resolve the struct's field names from the analyzed schema (or the
-    HOF lambda binding), apply the op per field, rebuild the struct
-    with the same field names."""
-    from pyspark.sql.types import StructType
-    dt = _probe_dtype(node.args[0], cols[0], ctx, df)
-    if not isinstance(dt, StructType):
-        raise BuildError(f"{name}: first argument must be a Tuple")
-    fields = [f.name for f in dt.fields]
-    a = cols[0]
-    if name == "tupleNegate":
-        return F.struct(*[(-a[f]).alias(f) for f in fields])
-    b = cols[1]
-    if name in ("tupleMultiplyByNumber", "tupleDivideByNumber"):
-        op = ((lambda x: x * b) if name == "tupleMultiplyByNumber"
-              else (lambda x: x / b))
-        return F.struct(*[op(a[f]).alias(f) for f in fields])
-    if name == "tupleHammingDistance":
-        # count of differing positions (docs: ((1,2,3),(3,2,1)) = 2);
-        # NULL-safe so a NULL element only matches another NULL
-        cnt = None
-        for f in fields:
-            d = (~a[f].eqNullSafe(b[f])).cast("int")
-            cnt = d if cnt is None else cnt + d
-        return cnt
-    ops = {"tuplePlus": lambda x, y: x + y,
-           "tupleMinus": lambda x, y: x - y,
-           "tupleMultiply": lambda x, y: x * y,
-           "tupleDivide": lambda x, y: x / y}
-    op = ops[name]
-    return F.struct(*[op(a[f], b[f]).alias(f) for f in fields])
 
 
 _DT64_UNIT_SCALE = {"addMilliseconds": 3, "subtractMilliseconds": 3,
@@ -5589,7 +5579,6 @@ def _hof_call(node: FuncCall, ctx: Context, df: DataFrame | None) -> Column:
     # the body can see it through _probe_dtype. Nested HOFs chain: the
     # array arg may itself be an outer lambda param whose type the
     # outer _hof_call bound.
-    from pyspark.sql.types import ArrayType, MapType
 
     def _elem(i: int):
         dt = _probe_dtype(arr_nodes[i], arrays[i], ctx, df)

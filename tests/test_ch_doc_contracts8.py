@@ -103,6 +103,13 @@ def test_tuple_arithmetic_family(spark):
     assert tuple(e) == (3, 2, 1) and tuple(f) == (0, 1, 1) and g == 2
     h, = one(spark, "SELECT tupleConcat((1, 2), tuple('a')) AS h")
     assert tuple(h) == (1, 2, 'a')
+    # a non-Tuple argument is a named error, never a Spark analysis leak
+    from clickhouse_from_scratch_spark.plans.builder import BuildError
+    for bad in ("tuplePlus(tuple(1, 2), 3)", "tupleMinus(3, (1, 2))",
+                "tupleHammingDistance((1, 2), 3)", "tupleNegate(5)",
+                "tupleMultiplyByNumber(2, 3)", "tupleConcat((1, 2), 3)"):
+        with pytest.raises(BuildError, match="must be Tuples"):
+            one(spark, f"SELECT {bad} AS x")
 
 
 def test_bit_rotate_width_aware(spark):

@@ -120,3 +120,14 @@ def test_empty_array_family():
     missing = [f"emptyArray{k}" for k in kinds
                if f"emptyArray{k}" not in REGISTRY]
     assert missing == [], missing
+
+
+def test_lowering_table_keys_are_canonical():
+    # _call_fn canonicalises the name before the table lookup, so a
+    # handler keyed by an alias would never run
+    from clickhouse_from_scratch_spark.functions.registry import CANONICAL
+    from clickhouse_from_scratch_spark.plans.builder import _LOWERINGS
+    assert _LOWERINGS
+    aliased = sorted(k for k in _LOWERINGS
+                     if k in CANONICAL and CANONICAL[k] != k)
+    assert aliased == [], f"lowerings keyed by alias names: {aliased}"
