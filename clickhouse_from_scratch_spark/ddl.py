@@ -20,13 +20,20 @@ queries automatically see each table's engine metadata.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
+from collections import ChainMap
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (StructType, TimestampType,
+                               _parse_datatype_string)
 
 from .functions.typemap import ch_type_to_spark
 from .operators import final as final_op
@@ -272,12 +279,7 @@ class ChSession:
             if isinstance(node, OutputClause):
                 return self._output(node)
             if isinstance(node, (SelectQuery, UnionQuery)):
-                return build(self.spark, node, self._tables(),
-                             self._engines(),
-                             params=params, settings=self.settings,
-                             udfs=self.udfs,
-                             dictionaries=self.dictionaries,
-                             views=self._param_views())
+                return self._build(node, params=params)
             return self._dispatch_node(node)
         except Exception:
             status = "ExceptionWhileProcessing"
@@ -367,241 +369,83 @@ class ChSession:
                              f".{table}")
         return meta
 
-    def _tables(self) -> dict[str, DataFrame]:
-        out = {}
-        # db-qualified keys for EVERY database so FROM otherdb.t resolves
-        # to the right table even when the current db has a same-named one
-        # (parameterized views can only build at call time — they resolve
-        # through the view-AST path, not here)
-        for db in self.databases:
-            for name, meta in self._db(db).items():
-                if meta.is_view and _ast_has_params(meta.view_query):
-                    continue
-                out[f"{db}.{name}"] = self._read(meta)
-        for name, meta in self._db().items():
-            if meta.is_view and _ast_has_params(meta.view_query):
-                continue
-            out[name] = self._read(meta)
-        out.update(self._system_tables())
-        return out
+    def _build(self, q, params: dict[str, object] | None = None,
+               overlay: dict[str, DataFrame] | None = None,
+               catalog: "_Catalog | None" = None) -> DataFrame:
+        """The one path from the catalog to the builder. Every query a
+        statement builds (SELECT, CTAS, INSERT … SELECT, EXPLAIN,
+        DESCRIBE, materialized-view triggers, view bodies) gets the same
+        session state: tables, engines, settings, UDFs, dictionaries and
+        parameterized views. ``overlay`` shadows catalog names (a
+        materialized view's inserted block). A view body passes its own
+        ``catalog`` scope and builds without the settings that slice a
+        final result: it is a subquery."""
+        settings = self.settings
+        if catalog is None:
+            catalog = _Catalog(self)
+        else:
+            settings = {k: v for k, v in settings.items()
+                        if k not in _RESULT_SETTINGS}
+        return build(self.spark, q,
+                     ChainMap(overlay, catalog) if overlay else catalog,
+                     self._engines(catalog.dbs), params=params,
+                     settings=settings, udfs=self.udfs,
+                     dictionaries=self.dictionaries,
+                     views=self._param_views(catalog.dbs))
 
-    def _param_views(self) -> dict[str, object]:
+    def _named(self, dbs: tuple[str, ...]):
+        """(name, meta) for every catalog entry: ``db.t`` for every
+        database, then a bare ``t`` from the first of ``dbs`` that has
+        it (the bare name wins where the spellings collide)."""
+        for db, metas in self.databases.items():
+            for name, meta in metas.items():
+                yield f"{db}.{name}", meta
+        seen: set[str] = set()
+        for db in dbs:
+            for name, meta in self.databases.get(db, {}).items():
+                if name not in seen:
+                    seen.add(name)
+                    yield name, meta
+
+    def _param_views(self, dbs: tuple[str, ...]) -> dict[str, object]:
         """name → view AST for PARAMETERIZED views (query parameters in
         the body) — the builder binds them at `v(p = x)` call sites."""
+        return {name: meta.view_query for name, meta in self._named(dbs)
+                if _is_param_view(meta)}
+
+    def _engines(self, dbs: tuple[str, ...]) -> dict[str, dict]:
         out = {}
-        for db in self.databases:
-            for name, meta in self._db(db).items():
-                if meta.is_view and _ast_has_params(meta.view_query):
-                    out[f"{db}.{name}"] = meta.view_query
-                    if db == self.current_db:
-                        out[name] = meta.view_query
+        for key, meta in self._named(dbs):
+            info: dict = {}
+            if meta.order_by:
+                info["order_by"] = meta.order_by
+                info["version"] = meta.settings.get(
+                    "version", meta.order_by[-1])
+                info["engine"] = meta.engine
+                if meta.settings.get("sign"):
+                    info["sign"] = meta.settings["sign"]
+                if meta.settings.get("sum_cols"):
+                    info["sum_cols"] = meta.settings["sum_cols"]
+            if meta.sample_by:
+                info["sample_by"] = meta.sample_by
+            if meta.columns:
+                # declared CH types feed the numeric-promotion layer
+                # (unsigned-ness is invisible in the Spark schema)
+                info["columns"] = dict(meta.columns)
+            hidden = [n for n, (k, _) in meta.defaults.items()
+                      if k in ("MATERIALIZED", "ALIAS")]
+            if hidden:
+                info["hidden"] = hidden
+            if info:
+                out[key] = info
         return out
 
-    def _system_tables(self) -> dict[str, DataFrame]:
-        """Catalog-backed system.* tables (db-qualified keys so they never
-        shadow user tables; builder resolves system.one/numbers/functions
-        itself). Cached on a catalog fingerprint — createDataFrame per
-        statement is measurable driver overhead."""
-        trows, crows = [], []
-        for db in sorted(self.databases):
-            for name, meta in sorted(self._db(db).items()):
-                trows.append((db, name, meta.engine,
-                              ", ".join(meta.order_by),
-                              meta.partition_by or ""))
-                for pos, (cn, ct) in enumerate(meta.columns, 1):
-                    crows.append((db, name, cn, ct, pos))
-        drows = [(d.database, d.name, d.layout, d.key, d.source_table,
-                  d.cache is not None)
-                 for d in self.dictionaries.values()]
-        prows = self._parts_rows()
-        fp = (tuple(trows), tuple(crows), tuple(drows), tuple(sorted(
-            (k, str(v)) for k, v in self.settings.items())),
-            len(self.query_log), tuple(prows), len(self.mutations),
-            tuple(sorted((k, tuple(sorted(v)))
-                         for k, v in self.detached_parts.items())))
-        if getattr(self, "_sys_fp", None) == fp:
-            return self._sys_cache
-        self._sys_fp, self._sys_cache = fp, {
-            "system.tables": self.spark.createDataFrame(
-                trows or [], "database string, name string, engine string,"
-                " sorting_key string, partition_key string"),
-            "system.columns": self.spark.createDataFrame(
-                crows or [], "database string, table string, name string,"
-                " type string, position int"),
-            "system.databases": self.spark.createDataFrame(
-                [(d,) for d in sorted(self.databases)], "name string"),
-            "system.settings": self.spark.createDataFrame(
-                [(k, str(v), int(k in self.settings)) for k, v in sorted(
-                    {**_reference_defaults(), **_SETTING_DEFAULTS,
-                     **self.settings}.items())],
-                "name string, value string, changed int"),
-            "system.dictionaries": self.spark.createDataFrame(
-                sorted(drows) or [], "database string, name string,"
-                " layout string, key string, source string,"
-                " loaded boolean"),
-            "system.query_log": self.spark.createDataFrame(
-                list(self.query_log) or [], "query string, type string,"
-                " query_duration_ms double, event_time timestamp"),
-            "system.parts": self.spark.createDataFrame(
-                prows or [], "database string, table string, name string,"
-                " rows bigint, bytes_on_disk bigint, active boolean"),
-            # one row per in-flight query: this session's current
-            # statement (the reference lists live queries; a local
-            # engine always has exactly the one)
-            "system.processes": self.spark.createDataFrame(
-                [("default", "")], "user string, query string"),
-            "system.formats": self.spark.createDataFrame(
-                sorted((n, 1, 1) for n in _format_names()),
-                "name string, is_input int, is_output int"),
-            "system.table_functions": self.spark.createDataFrame(
-                [(n,) for n in sorted(
-                    ("numbers", "numbers_mt", "view", "one", "zeros",
-                     "zeros_mt", "file", "url", "values", "format",
-                     "generateRandom", "merge", "input", "null",
-                     "dsirSelect", "packSequences", "domainMix"))],
-                "name string"),
-            "system.aggregate_function_combinators":
-                self.spark.createDataFrame(
-                    [(n,) for n in sorted(
-                        ("If", "Array", "ArrayIf", "Map", "SimpleState",
-                         "State", "Merge", "MergeState", "ForEach",
-                         "Distinct", "OrDefault", "OrNull", "Resample",
-                         "ArgMin", "ArgMax"))],
-                    "name string"),
-            # mutations apply synchronously here (each ALTER rewrite
-            # completes before execute() returns), so every row is done
-            "system.mutations": self.spark.createDataFrame(
-                list(getattr(self, "mutations", [])) or [],
-                "database string, table string, mutation_id string,"
-                " command string, is_done int"),
-            # no background merge pool — Spark rewrites are the merges
-            "system.merges": self.spark.createDataFrame(
-                [], "database string, table string, elapsed double,"
-                " progress double"),
-            "system.clusters": self.spark.createDataFrame(
-                [("default", 1, 1, 1, "localhost", "127.0.0.1", 9000, 1)],
-                "cluster string, shard_num int, shard_weight int,"
-                " replica_num int, host_name string, host_address string,"
-                " port int, is_local int"),
-            "system.disks": self.spark.createDataFrame(
-                [("default", self.warehouse,
-                  _disk_free(self.warehouse), _disk_total(self.warehouse),
-                  "Local")],
-                "name string, path string, free_space bigint,"
-                " total_space bigint, type string"),
-            "system.storage_policies": self.spark.createDataFrame(
-                [("default", "default", 0, ["default"])],
-                "policy_name string, volume_name string,"
-                " volume_priority int, disks array<string>"),
-            "system.macros": self.spark.createDataFrame(
-                [], "macro string, substitution string"),
-            "system.users": self.spark.createDataFrame(
-                [("default", "local_directory", "no_password")],
-                "name string, storage string, auth_type string"),
-            "system.roles": self.spark.createDataFrame(
-                [], "name string, id string, storage string"),
-            "system.grants": self.spark.createDataFrame(
-                [("default", None, "ALL", None, None, 0, 1)],
-                "user_name string, role_name string, access_type string,"
-                " database string, table string,"
-                " is_partial_revoke int, grant_option int"),
-            "system.events": self.spark.createDataFrame(
-                [("Query", len(self.query_log),
-                  "Number of queries started"),
-                 ("FailedQuery",
-                  sum(1 for q in self.query_log
-                      if q[1] == "ExceptionWhileProcessing"),
-                  "Number of failed queries")],
-                "event string, value bigint, description string"),
-            "system.metrics": self.spark.createDataFrame(
-                [("Query", 0, "Queries executing right now"),
-                 ("TCPConnection", 0, "TCP connections")],
-                "metric string, value bigint, description string"),
-            "system.asynchronous_metrics": self.spark.createDataFrame(
-                [("Uptime", 0.0), ("MemoryResident", 0.0)],
-                "metric string, value double"),
-            "system.replicas": self.spark.createDataFrame(
-                [], "database string, table string, is_leader int,"
-                " is_readonly int, absolute_delay bigint"),
-            "system.detached_parts": self.spark.createDataFrame(
-                [(db, tbl, part)
-                 for (db, tbl), parts in self.detached_parts.items()
-                 for part in parts] or [],
-                "database string, table string, partition_id string"),
-        }
-        return self._sys_cache
+    def _read(self, meta: TableMeta) -> DataFrame:
+        """A table's rows, or a view's query built over the catalog."""
+        return _Catalog(self).frame(meta)
 
-    def _engines(self) -> dict[str, dict]:
-        out = {}
-        for db in self.databases:
-            for name, meta in self._db(db).items():
-                info: dict = {}
-                if meta.order_by:
-                    info["order_by"] = meta.order_by
-                    info["version"] = meta.settings.get(
-                        "version", meta.order_by[-1])
-                    info["engine"] = meta.engine
-                    if meta.settings.get("sign"):
-                        info["sign"] = meta.settings["sign"]
-                    if meta.settings.get("sum_cols"):
-                        info["sum_cols"] = meta.settings["sum_cols"]
-                if meta.sample_by:
-                    info["sample_by"] = meta.sample_by
-                if meta.columns:
-                    # declared CH types feed the numeric-promotion layer
-                    # (unsigned-ness is invisible in the Spark schema)
-                    info["columns"] = dict(meta.columns)
-                hidden = [n for n, (k, _) in meta.defaults.items()
-                          if k in ("MATERIALIZED", "ALIAS")]
-                if hidden:
-                    info["hidden"] = hidden
-                if info:
-                    out[f"{db}.{name}"] = info
-                    if db == self.current_db:
-                        out[name] = info
-        return out
-
-    def _read(self, meta: TableMeta,
-              _resolving: frozenset = frozenset()) -> DataFrame:
-        if meta.is_view:
-            # Resolve ONLY the tables the view's query actually
-            # references (AST walk): eager whole-catalog materialization
-            # would re-build every sibling view per view — quadratic at
-            # best, infinitely recursive between any two views. The
-            # in-flight set turns genuine cycles into a named error.
-            key = (meta.database, meta.name)
-            if key in _resolving:
-                raise ValueError(
-                    f"circular view reference involving {meta.name}")
-            names, dynamic = _referenced_table_names(meta.view_query)
-            stack = _resolving | {key}
-            if dynamic:
-                # merge()-style dynamic references: fall back to the
-                # full catalog minus the in-flight views
-                tables = self._tables_except(meta.name, meta.database,
-                                             stack)
-            else:
-                tables = {}
-                for dbn, t in names:
-                    cand = ((dbn, t),)
-                    if dbn is None:
-                        cand = ((meta.database, t), ("default", t))
-                    for cdb, ct in cand:
-                        m2 = (self._db(cdb).get(ct)
-                              if cdb in self.databases else None)
-                        if m2 is None:
-                            continue
-                        if (m2.database, m2.name) in stack:
-                            raise ValueError(
-                                f"circular view reference involving "
-                                f"{meta.name}")
-                        k = ct if dbn is None else f"{dbn}.{ct}"
-                        tables[k] = self._read(m2, stack)
-                        break
-                if any(dbn == "system" for dbn, _t in names):
-                    tables.update(self._system_tables())
-            return build(self.spark, meta.view_query, tables,
-                         self._engines())
+    def _scan(self, meta: TableMeta) -> DataFrame:
+        """A stored table's rows: its Memory frame or its parquet data."""
         if meta.memory_df is not None:
             return meta.memory_df
         if meta.bucket_spec() is not None and meta.path:
@@ -611,7 +455,7 @@ class ChSession:
                 # equi-joins on the bucket column skip the shuffle
                 return self.spark.table(cat).select(
                     *[n for n, _ in meta.columns])
-            return self.spark.createDataFrame([], meta.spark_schema())
+            return self._frame([], meta.spark_schema())
         if meta.path and os.path.exists(meta.path):
             df = self.spark.read.schema(meta.spark_schema()).parquet(meta.path)
             declared = [n for n, _ in meta.columns]
@@ -619,14 +463,26 @@ class ChSession:
                 # hidden physical partition column (__part) stays physical
                 df = df.select(*declared)
             return df
-        return self.spark.createDataFrame([], meta.spark_schema())
+        return self._frame([], meta.spark_schema())
 
-    def _tables_except(self, skip: str, db: str | None = None,
-                       _resolving: frozenset = frozenset()
-                       ) -> dict[str, DataFrame]:
-        return {n: self._read(m, _resolving)
-                for n, m in self._db(db).items()
-                if n != skip and (m.database, m.name) not in _resolving}
+    def _frame(self, rows: list[tuple], schema: str | list[str]) -> DataFrame:
+        """A driver-side result (DDL outcome, SHOW/DESCRIBE rows, Memory
+        data, a system.* table) as a LocalRelation: the rows reach the
+        JVM as one Arrow table, so reading the frame runs no Python
+        worker, unlike a list given to createDataFrame (a LogicalRDD).
+        ``schema`` is a DDL string, or column names to infer types
+        from the rows. Timestamps convert as the list path does, so a
+        naive datetime reads back unchanged."""
+        struct = (_ddl_struct(schema) if isinstance(schema, str)
+                  else self.spark._inferSchemaFromList(rows, schema))
+        arrow = to_arrow_schema(struct)
+        cols = list(zip(*rows)) or [()] * len(struct.fields)
+        return self.spark.createDataFrame(pa.Table.from_arrays(
+            [pa.array([f.dataType.toInternal(v) for v in col]
+                      if isinstance(f.dataType, TimestampType) else col,
+                      type=t)
+             for col, f, t in zip(cols, struct.fields, arrow.types)],
+            schema=arrow), struct)
 
     # --- DDL --------------------------------------------------------------
 
@@ -680,8 +536,7 @@ class ChSession:
             meta.settings["sum_cols"] = list(node.engine_args)
         source: DataFrame | None = None
         if node.as_select is not None:
-            source = build(self.spark, node.as_select, self._tables(),
-                           self._engines())
+            source = self._build(node.as_select)
             if not meta.columns:
                 meta.columns = [(f.name,
                                  _spark_to_ch(f.dataType.simpleString()))
@@ -707,11 +562,11 @@ class ChSession:
         if node.engine == "Null":
             # Null engine: inserts are accepted and discarded, reads are
             # empty (public CH Null-engine contract — the /dev/null sink)
-            meta.memory_df = self.spark.createDataFrame(
+            meta.memory_df = self._frame(
                 [], meta.spark_schema())
         elif node.engine == "Memory" or node.temporary:
             meta.memory_df = (source if source is not None else
-                              self.spark.createDataFrame(
+                              self._frame(
                                   [], meta.spark_schema()))
         else:
             meta.path = os.path.join(self.warehouse, db, node.table)
@@ -733,8 +588,7 @@ class ChSession:
             # POPULATE additionally backfills the data present at
             # creation; without it the view starts EMPTY.
             from .plans.ast_nodes import Star, TableRef
-            df = build(self.spark, node.query, self._tables(),
-                       self._engines())
+            df = self._build(node.query)
             if node.to_table:
                 # TO target: rows land in an existing table; the view
                 # name reads from it
@@ -744,8 +598,8 @@ class ChSession:
                     is_view=True,
                     view_query=SelectQuery(
                         select=[Star()],
-                        # bare name: view reads resolve through
-                        # _tables_except, which keys unqualified
+                        # bare name: resolves in the view's
+                        # database, then default
                         from_=TableRef(None, tmeta.name)))
                 target_db, target_table = tmeta.database, tmeta.name
             else:
@@ -769,8 +623,6 @@ class ChSession:
             src = node.query.from_ if isinstance(node.query,
                                                  SelectQuery) else None
             if isinstance(src, TableRef):
-                if not hasattr(self, "mat_views"):
-                    self.mat_views = []
                 self.mat_views.append({
                     "name": node.name,
                     "src_db": src.database or self.current_db,
@@ -1163,8 +1015,8 @@ class ChSession:
                         f"cannot CLEAR key column {act.name}")
                 from .operators.joins import _type_default
                 t = ch_type_to_spark(types[act.name])
-                dflt = _type_default(self.spark.createDataFrame(
-                    [], f"x {t}").schema[0].dataType).cast(t)
+                dflt = _type_default(
+                    _ddl_struct(f"x {t}")[0].dataType).cast(t)
                 in_part = self._partition_match(meta, act.partition,
                                                 ctx, df, _beval)
                 newc = (dflt if in_part is None else
@@ -1446,7 +1298,7 @@ class ChSession:
                 return self._ok()
         meta = self._resolve(node.database, node.table)
         if meta.memory_df is not None:
-            meta.memory_df = self.spark.createDataFrame(
+            meta.memory_df = self._frame(
                 [], meta.spark_schema())
         elif meta.bucket_spec() is not None and meta.path:
             self.spark.sql(
@@ -1529,12 +1381,15 @@ class ChSession:
 
             schema = ", ".join(f"`{c}` {ingest_type(types[c])}" for c in cols)
             try:
-                source = self.spark.createDataFrame(
+                source = self._frame(
                     [tuple(_literal_py(v) for v in row)
                      for row in node.values], schema)
-            except ValueError:
-                # VALUES with expressions (CH evaluates them): lower each
-                # row to a FROM-less SELECT and union — stays JVM-side
+            except (ValueError, TypeError, OverflowError):
+                # VALUES with expressions (CH evaluates them), or a
+                # literal of another type than its column (10 for a
+                # Float64): lower each row to a FROM-less SELECT and
+                # union, whose projection casts to the column type —
+                # stays JVM-side
                 from .plans.ast_nodes import Alias as _Alias
                 from .plans.ast_nodes import SelectQuery as _SQ
                 from .plans.ast_nodes import UnionQuery as _UQ
@@ -1543,9 +1398,7 @@ class ChSession:
                         for row in node.values]
                 ast = (sels[0] if len(sels) == 1
                        else _UQ(sels, ["all"] * (len(sels) - 1)))
-                source = build(self.spark, ast, self._tables(),
-                               self._engines(), settings=self.settings,
-                               udfs=self.udfs)
+                source = self._build(ast)
         elif node.infile is not None or node.format_data is not None:
             from .sources import read_format
 
@@ -1617,9 +1470,7 @@ class ChSession:
                 source = source.withColumn(
                     cname, F.from_json(lit, target_t))
         else:
-            source = build(self.spark, node.select, self._tables(),
-                           self._engines(), settings=self.settings,
-                           udfs=self.udfs, views=self._param_views())
+            source = self._build(node.select)
             source = source.toDF(*cols)
         # missing columns get their declared DEFAULT / MATERIALIZED /
         # ALIAS expression (evaluated over the supplied columns;
@@ -1683,17 +1534,15 @@ class ChSession:
         Summing/AggregatingMergeTree targets) and appends to the target
         table. Chained MVs cascade, with a depth bound as the cycle
         guard."""
-        if _depth > 8 or not getattr(self, "mat_views", None):
+        if _depth > 8:
             return
         for mv in self.mat_views:
             if (mv["src_db"], mv["src_table"]) != (src_meta.database,
                                                    src_meta.name):
                 continue
-            tables = self._tables()
-            tables[mv["src_table"]] = batch
-            tables[f"{src_meta.database}.{src_meta.name}"] = batch
-            out = build(self.spark, mv["query"], tables, self._engines(),
-                        settings=self.settings, udfs=self.udfs)
+            out = self._build(mv["query"], overlay={
+                mv["src_table"]: batch,
+                f"{src_meta.database}.{src_meta.name}": batch})
             tmeta = self._resolve(mv["target_db"], mv["target_table"])
             out = out.select(*[
                 F.col(f"`{n}`").cast(ch_type_to_spark(t)).alias(n)
@@ -1841,32 +1690,27 @@ class ChSession:
 
     def _show(self, node: ShowStmt):
         if node.what == "DATABASES":
-            return self.spark.createDataFrame(
-                [(d,) for d in sorted(self.databases)], "name string")
+            return self._frame(*_SYSTEM_TABLES["databases"](self))
         if node.what == "PROCESSLIST":
             # execution is synchronous in this engine — by the time a
             # statement can observe the process list, nothing is running
             # (CH semantics preserved: the running-queries view, empty)
-            return self.spark.createDataFrame(
+            return self._frame(
                 [], "query_id string, query string, elapsed double")
         if node.what == "DICTIONARIES":
-            return self.spark.createDataFrame(
-                [(n,) for n in sorted(self.dictionaries)] or [],
-                "name string")
+            return self._frame(
+                [(n,) for n in sorted(self.dictionaries)], "name string")
         if node.what == "FUNCTIONS":
             from .functions import REGISTRY
             from .functions.aggregates import AGGREGATES
             rows = ([(n, 0) for n in REGISTRY]
                     + [(n, 1) for n in AGGREGATES])
             if node.like:
-                pat = re.compile(
-                    "^" + re.escape(node.like).replace("%", ".*")
-                    .replace("_", ".") + "$", re.IGNORECASE)
+                pat = _like(node.like)
                 rows = [r for r in rows if pat.match(r[0])]
-            return self.spark.createDataFrame(
-                sorted(rows) or [], "name string, is_aggregate int")
+            return self._frame(sorted(rows), "name string, is_aggregate int")
         if node.what == "ENGINES":
-            return self.spark.createDataFrame(
+            return self._frame(
                 [(e,) for e in sorted(
                     ("MergeTree", "ReplacingMergeTree",
                      "SummingMergeTree", "AggregatingMergeTree",
@@ -1876,26 +1720,21 @@ class ChSession:
                      "Dictionary", "Merge", "File"))], "name string")
         if node.what == "GRANTS":
             # single-user engine: the default user holds everything
-            return self.spark.createDataFrame(
+            return self._frame(
                 [("GRANT ALL ON *.* TO default WITH GRANT OPTION",)],
                 "grants string")
         if node.what in ("SETTINGS", "CHANGED_SETTINGS"):
-            rows = [(k, str(v), int(k in self.settings)) for k, v in
-                    sorted({**_reference_defaults(), **_SETTING_DEFAULTS,
-                            **self.settings}.items())]
+            rows, schema = _SYSTEM_TABLES["settings"](self)
             if node.what == "CHANGED_SETTINGS":
                 rows = [r for r in rows if r[2]]
             if node.like:
-                pat = re.compile(
-                    "^" + re.escape(node.like).replace("%", ".*")
-                    .replace("_", ".") + "$", re.IGNORECASE)
+                pat = _like(node.like)
                 rows = [r for r in rows if pat.match(r[0])]
-            return self.spark.createDataFrame(
-                rows or [], "name string, value string, changed int")
+            return self._frame(rows, schema)
         if node.what == "CREATE_DATABASE":
             if node.target not in self.databases:
                 raise ValueError(f"unknown database: {node.target}")
-            return self.spark.createDataFrame(
+            return self._frame(
                 [(f"CREATE DATABASE {node.target}",)], "statement string")
         if node.what == "CREATE_DICTIONARY":
             d = self.dictionaries.get(node.target)
@@ -1911,20 +1750,17 @@ class ChSession:
                     f"SOURCE(CLICKHOUSE(TABLE '{d.source_table}')) "
                     f"LAYOUT({d.layout}())"
                     + (f" LIFETIME({d.lifetime})" if d.lifetime else ""))
-            return self.spark.createDataFrame([(stmt,)], "statement string")
+            return self._frame([(stmt,)], "statement string")
         if node.what == "CREATE_TABLE":
             meta = self._resolve(node.database, node.target)
-            return self.spark.createDataFrame(
+            return self._frame(
                 [(self._format_create(meta),)], "statement string")
         names = sorted(self._db(node.database))
         if node.like:
-            pat = re.compile(
-                "^" + re.escape(node.like).replace("%", ".*").replace("_", ".")
-                + "$", re.IGNORECASE)
+            pat = _like(node.like)
             names = [n for n in names
                      if bool(pat.match(n)) != node.not_like]
-        return self.spark.createDataFrame([(n,) for n in names] or
-                                          [], "name string")
+        return self._frame([(n,) for n in names], "name string")
 
     def _format_create(self, meta: TableMeta) -> str:
         from .plans.ast_nodes import format_node
@@ -1976,15 +1812,13 @@ class ChSession:
             # DESCRIBE (SELECT ...): the query's result schema, Spark
             # types rendered in CH spelling where the inverse map knows
             # them
-            df = build(self.spark, node.query, self._tables(),
-                       self._engines(), settings=self.settings,
-                       udfs=self.udfs, views=self._param_views())
+            df = self._build(node.query)
             u64 = getattr(df, "_ch_uint64_cols", frozenset())
             rows = [(f.name,
                      "UInt64" if f.name in u64
                      else _spark_type_to_ch(f.dataType.simpleString()),
                      "", "", "", "", "") for f in df.schema.fields]
-            return self.spark.createDataFrame(
+            return self._frame(
                 rows, "name string, type string, default_type string, "
                 "default_expression string, comment string, "
                 "codec_expression string, ttl_expression string")
@@ -1996,7 +1830,7 @@ class ChSession:
                          format_node(ast) if ast is not None else "",
                          meta.comments.get(n, ""),
                          meta.codecs.get(n, ""), ""))
-        return self.spark.createDataFrame(
+        return self._frame(
             rows, "name string, type string, default_type string, "
             "default_expression string, comment string, "
             "codec_expression string, ttl_expression string")
@@ -2007,7 +1841,7 @@ class ChSession:
             ok = node.database in self.databases
         else:
             ok = node.table in self._db(node.database)
-        return self.spark.createDataFrame([(int(ok),)], "result int")
+        return self._frame([(int(ok),)], "result int")
 
     def _use(self, node: UseStmt):
         if node.database not in self.databases:
@@ -2061,8 +1895,8 @@ class ChSession:
                                 if f.endswith(".parquet")) or 1
                 rows.append((meta.database, meta.name, parts, n,
                              (n + 8191) // 8192))
-            return self.spark.createDataFrame(
-                rows or [], "database string, table string, parts bigint,"
+            return self._frame(
+                rows, "database string, table string, parts bigint,"
                 " rows bigint, marks bigint")
         elif node.kind == "QUERY TREE":
             # analyzer-tree shape (sections QUERY / PROJECTION COLUMNS /
@@ -2121,8 +1955,7 @@ class ChSession:
             from .plans.format_sql import format_sql
             text = format_sql(node.query, one_line=False)
         else:
-            df = build(self.spark, node.query, self._tables(),
-                       self._engines(), views=self._param_views())
+            df = self._build(node.query)
             mode = {"PLAN": "extended",
                     "PIPELINE": "formatted"}[node.kind]
             try:
@@ -2132,8 +1965,7 @@ class ChSession:
                 text = df._jdf.queryExecution().explainString(jmode)
             except Exception:
                 text = df._jdf.queryExecution().toString()
-        return self.spark.createDataFrame(
-            [(line,) for line in text.split("\n")], "explain string")
+        return self._lines(text, "explain")
 
     # --- streaming surface (§2.9): LIVE VIEW / WINDOW VIEW / WATCH --------
 
@@ -2173,7 +2005,7 @@ class ChSession:
             raise ValueError(f"WATCH target is not a view: {node.name}")
         meta.settings["_version"] = meta.settings.get("_version", 0) + 1
         if node.events:
-            return self.spark.createDataFrame(
+            return self._frame(
                 [(meta.settings["_version"],)], "version bigint")
         df = self._read(meta)
         to_table = meta.settings.get("to_table")
@@ -2214,10 +2046,7 @@ class ChSession:
     def _output_inner(self, node: OutputClause):
         inner = node.query
         if isinstance(inner, (SelectQuery, UnionQuery)):
-            df = build(self.spark, inner, self._tables(), self._engines(),
-                       settings=self.settings, udfs=self.udfs,
-                       dictionaries=self.dictionaries,
-                       views=self._param_views())
+            df = self._build(inner)
         else:
             df = self._dispatch_node(inner)
             if df is None or not hasattr(df, "columns"):
@@ -2268,41 +2097,33 @@ class ChSession:
                      else "compact"
                      if node.format.startswith("PrettyCompact")
                      else "full")
-            return self.spark.createDataFrame(
-                [(line,) for line in to_pretty(df, style=style)
-                 .split("\n")],
-                "output string")
+            return self._lines(to_pretty(df, style=style))
         if node.format in ("TabSeparated", "TSV", "TabSeparatedWithNames",
                            "TSVWithNames"):
             from .sources.formats import to_tab_separated
             text = to_tab_separated(df)
             if node.format.endswith("WithNames"):
                 text = "\t".join(df.columns) + "\n" + text
-            return self.spark.createDataFrame(
-                [(line,) for line in text.split("\n")], "output string")
+            return self._lines(text)
         if node.format in ("CSV", "CSVWithNames"):
             from .sources.formats import to_csv_text
-            text = to_csv_text(df,
-                               header=node.format.endswith("WithNames"))
-            return self.spark.createDataFrame(
-                [(line,) for line in text.split("\n")], "output string")
+            return self._lines(to_csv_text(
+                df, header=node.format.endswith("WithNames")))
         if node.format == "JSONEachRow":
             from .sources.formats import to_json_each_row
-            return self.spark.createDataFrame(
-                [(line,) for line in to_json_each_row(df).split("\n")],
-                "output string")
+            return self._lines(to_json_each_row(df))
         if node.format in ("CustomSeparated", "CustomSeparatedWithNames",
                            "Template"):
-            text = self._settings_format_text(df, node.format)
-            return self.spark.createDataFrame(
-                [(line,) for line in text.rstrip("\n").split("\n")],
-                "output string")
+            return self._lines(
+                self._settings_format_text(df, node.format).rstrip("\n"))
         if node.format in TEXT_RENDERERS:
-            return self.spark.createDataFrame(
-                [(line,) for line in
-                 TEXT_RENDERERS[node.format](df).split("\n")],
-                "output string")
+            return self._lines(TEXT_RENDERERS[node.format](df))
         return df
+
+    def _lines(self, text: str, column: str = "output") -> DataFrame:
+        """Rendered text as a one-column frame, one row per line."""
+        return self._frame([(line,) for line in text.split("\n")],
+                           f"{column} string")
 
     def _insert_into_function(self, node: InsertStmt):
         """INSERT INTO FUNCTION sink: null(...) discards after
@@ -2311,9 +2132,7 @@ class ChSession:
         from .plans.ast_nodes import Literal as _Lit
         tf = node.function
         if node.select is not None:
-            src = build(self.spark, node.select, self._tables(),
-                        self._engines(), settings=self.settings,
-                        udfs=self.udfs)
+            src = self._build(node.select)
         else:
             rows = []
             from .plans.builder import Context as _BCtx
@@ -2329,12 +2148,12 @@ class ChSession:
                 # empty VALUES list: nothing to insert — the null()
                 # sink discards anyway, file() writes an empty frame
                 cols = node.columns or ["c1"]
-                src = self.spark.createDataFrame(
+                src = self._frame(
                     [], ", ".join(f"`{c}` string" for c in cols))
             else:
                 cols = node.columns or [f"c{i + 1}"
                                         for i in range(len(rows[0]))]
-                src = self.spark.createDataFrame(rows, cols)
+                src = self._frame(rows, cols)
         fname = tf.name.lower()
         if fname == "null":
             src.count()                      # evaluate, discard
@@ -2392,7 +2211,7 @@ class ChSession:
     def _check(self, node: CheckStmt):
         meta = self._resolve(node.database, node.table)
         n = self._read(meta).count()       # full read-validate pass
-        return self.spark.createDataFrame([(1, n)],
+        return self._frame([(1, n)],
                                           "result int, rows bigint")
 
     # --- admin verbs ------------------------------------------------------
@@ -2423,7 +2242,7 @@ class ChSession:
         status = ("ok" if any(node.verb.startswith(v)
                               for v in self._SYSTEM_SUPPORTED)
                   else "noop (not applicable on Spark)")
-        return self.spark.createDataFrame([(node.verb, status)],
+        return self._frame([(node.verb, status)],
                                           "verb string, status string")
 
     def _kill(self, node: KillStmt):
@@ -2482,7 +2301,220 @@ class ChSession:
         self._db(db)[table] = meta
 
     def _ok(self):
-        return self.spark.createDataFrame([(0,)], "ok int")
+        return self._frame([(0,)], "ok int")
+
+
+_RESULT_SETTINGS = ("limit", "offset", "max_result_rows")
+
+
+def _is_param_view(meta: TableMeta) -> bool:
+    return meta.is_view and _ast_has_params(meta.view_query)
+
+
+@functools.lru_cache(maxsize=256)
+def _ddl_struct(schema: str) -> StructType:
+    return _parse_datatype_string(schema)
+
+
+class _Catalog(Mapping):
+    """A statement's read-only name → DataFrame mapping over the session
+    catalog (SURVEY §1.3, §2.12: a table is a DataFrame, a view a stored
+    query). ``in`` and iteration answer from names alone. A table is
+    read, a view body built or one system.* frame made only when the
+    builder asks for that name, then memoised for the statement.
+
+    Bare names resolve in ``dbs``: the current database for a
+    statement, the view's database then ``default`` for a view body.
+    Parameterized views stay out: they bind at call sites through the
+    builder's view ASTs. ``resolving`` holds the views being built, so a
+    cycle raises a named error; iteration (``merge()``) skips them."""
+
+    def __init__(self, session: ChSession,
+                 dbs: tuple[str, ...] | None = None,
+                 resolving: frozenset = frozenset(),
+                 memo: dict | None = None):
+        self.session = session
+        self.dbs = dbs or (session.current_db,)
+        self.resolving = resolving
+        self.memo = {} if memo is None else memo
+
+    def _entry(self, name):
+        """The system.* table name or TableMeta a name denotes, or
+        None."""
+        if not isinstance(name, str):
+            return None
+        if name.startswith("system.") and name[7:] in _SYSTEM_TABLES:
+            return name[7:]
+        databases = self.session.databases
+        db, _, table = name.partition(".")
+        for meta in [databases.get(d, {}).get(name) for d in self.dbs] + [
+                databases.get(db, {}).get(table)]:
+            if meta is not None and not _is_param_view(meta):
+                return meta
+        return None
+
+    def __contains__(self, name) -> bool:
+        return self._entry(name) is not None
+
+    def __getitem__(self, name) -> DataFrame:
+        entry = self._entry(name)
+        if entry is None:
+            raise KeyError(name)
+        return self.frame(entry)
+
+    def __iter__(self):
+        yield from (f"system.{n}" for n in _SYSTEM_TABLES)
+        for name, meta in self.session._named(self.dbs):
+            if not (_is_param_view(meta)
+                    or (meta.database, meta.name) in self.resolving):
+                yield name
+
+    def __len__(self) -> int:
+        return sum(1 for _ in self)
+
+    def frame(self, entry: "TableMeta | str") -> DataFrame:
+        s = self.session
+        if isinstance(entry, str):
+            key = ("system", entry)
+        else:
+            key = (entry.database, entry.name)
+        if key in self.memo:
+            return self.memo[key]
+        if isinstance(entry, str):
+            df = s._frame(*_SYSTEM_TABLES[entry](s))
+        elif not entry.is_view:
+            df = s._scan(entry)
+        elif key in self.resolving:
+            raise ValueError(
+                f"circular view reference involving {entry.name}")
+        else:
+            df = s._build(entry.view_query, catalog=_Catalog(
+                s, (entry.database, "default"), self.resolving | {key},
+                self.memo))
+        self.memo[key] = df
+        return df
+
+
+def _tables_rows(s: ChSession) -> list[tuple]:
+    return [(db, name, meta.engine, ", ".join(meta.order_by),
+             meta.partition_by or "")
+            for db in sorted(s.databases)
+            for name, meta in sorted(s.databases[db].items())]
+
+
+def _columns_rows(s: ChSession) -> list[tuple]:
+    return [(db, name, cn, ct, pos)
+            for db in sorted(s.databases)
+            for name, meta in sorted(s.databases[db].items())
+            for pos, (cn, ct) in enumerate(meta.columns, 1)]
+
+
+# Catalog-backed system.* tables: name → (session → (rows, schema)).
+# The builder makes system.one / numbers / functions itself.
+_SYSTEM_TABLES = {
+    "tables": lambda s: (
+        _tables_rows(s), "database string, name string, engine string,"
+        " sorting_key string, partition_key string"),
+    "columns": lambda s: (
+        _columns_rows(s), "database string, table string, name string,"
+        " type string, position int"),
+    "databases": lambda s: (
+        [(d,) for d in sorted(s.databases)], "name string"),
+    "settings": lambda s: (
+        [(k, str(v), int(k in s.settings)) for k, v in sorted(
+            {**_reference_defaults(), **_SETTING_DEFAULTS,
+             **s.settings}.items())],
+        "name string, value string, changed int"),
+    "dictionaries": lambda s: (
+        sorted((d.database, d.name, d.layout, d.key, d.source_table,
+                d.cache is not None) for d in s.dictionaries.values()),
+        "database string, name string, layout string, key string,"
+        " source string, loaded boolean"),
+    "query_log": lambda s: (
+        list(s.query_log), "query string, type string,"
+        " query_duration_ms double, event_time timestamp"),
+    "parts": lambda s: (
+        s._parts_rows(), "database string, table string, name string,"
+        " rows bigint, bytes_on_disk bigint, active boolean"),
+    # one row per in-flight query: this session's current statement (the
+    # reference lists live queries; a local engine always has the one)
+    "processes": lambda s: ([("default", "")], "user string, query string"),
+    "formats": lambda s: (
+        sorted((n, 1, 1) for n in _format_names()),
+        "name string, is_input int, is_output int"),
+    "table_functions": lambda s: (
+        [(n,) for n in sorted(
+            ("numbers", "numbers_mt", "view", "one", "zeros", "zeros_mt",
+             "file", "url", "values", "format", "generateRandom", "merge",
+             "input", "null", "dsirSelect", "packSequences",
+             "domainMix"))],
+        "name string"),
+    "aggregate_function_combinators": lambda s: (
+        [(n,) for n in sorted(
+            ("If", "Array", "ArrayIf", "Map", "SimpleState", "State",
+             "Merge", "MergeState", "ForEach", "Distinct", "OrDefault",
+             "OrNull", "Resample", "ArgMin", "ArgMax"))],
+        "name string"),
+    # mutations apply synchronously here (each ALTER rewrite completes
+    # before execute() returns), so every row is done
+    "mutations": lambda s: (
+        list(s.mutations), "database string, table string,"
+        " mutation_id string, command string, is_done int"),
+    # no background merge pool — Spark rewrites are the merges
+    "merges": lambda s: (
+        [], "database string, table string, elapsed double,"
+        " progress double"),
+    "clusters": lambda s: (
+        [("default", 1, 1, 1, "localhost", "127.0.0.1", 9000, 1)],
+        "cluster string, shard_num int, shard_weight int,"
+        " replica_num int, host_name string, host_address string,"
+        " port int, is_local int"),
+    "disks": lambda s: (
+        [("default", s.warehouse, _disk_free(s.warehouse),
+          _disk_total(s.warehouse), "Local")],
+        "name string, path string, free_space bigint,"
+        " total_space bigint, type string"),
+    "storage_policies": lambda s: (
+        [("default", "default", 0, ["default"])],
+        "policy_name string, volume_name string, volume_priority int,"
+        " disks array<string>"),
+    "macros": lambda s: ([], "macro string, substitution string"),
+    "users": lambda s: (
+        [("default", "local_directory", "no_password")],
+        "name string, storage string, auth_type string"),
+    "roles": lambda s: ([], "name string, id string, storage string"),
+    "grants": lambda s: (
+        [("default", None, "ALL", None, None, 0, 1)],
+        "user_name string, role_name string, access_type string,"
+        " database string, table string, is_partial_revoke int,"
+        " grant_option int"),
+    "events": lambda s: (
+        [("Query", len(s.query_log), "Number of queries started"),
+         ("FailedQuery",
+          sum(1 for q in s.query_log if q[1] == "ExceptionWhileProcessing"),
+          "Number of failed queries")],
+        "event string, value bigint, description string"),
+    "metrics": lambda s: (
+        [("Query", 0, "Queries executing right now"),
+         ("TCPConnection", 0, "TCP connections")],
+        "metric string, value bigint, description string"),
+    "asynchronous_metrics": lambda s: (
+        [("Uptime", 0.0), ("MemoryResident", 0.0)],
+        "metric string, value double"),
+    "replicas": lambda s: (
+        [], "database string, table string, is_leader int,"
+        " is_readonly int, absolute_delay bigint"),
+    "detached_parts": lambda s: (
+        [(db, tbl, part) for (db, tbl), parts in s.detached_parts.items()
+         for part in parts],
+        "database string, table string, partition_id string"),
+}
+
+
+def _like(pattern: str) -> re.Pattern:
+    """A SHOW … LIKE pattern (% any run, _ one character) as a regex."""
+    return re.compile("^" + re.escape(pattern).replace("%", ".*")
+                      .replace("_", ".") + "$", re.IGNORECASE)
 
 
 def _partition_column(node: CreateTable) -> tuple[str | None, object | None]:
@@ -2530,56 +2562,6 @@ def _literal_py(node):
         items = [_literal_py(i) for i in node.args]
         return dict(zip(items[0::2], items[1::2]))
     raise ValueError(f"INSERT VALUES supports literals, got {node}")
-
-
-def _referenced_table_names(node) -> tuple[set, bool]:
-    """(db_or_None, table) pairs a query's AST references — TableRefs,
-    view()/IN-table forms, subqueries — plus a flag for dynamic table
-    functions (merge()) whose reference set is pattern-driven."""
-    from .plans.ast_nodes import (FuncCall, Identifier, Join, Subquery,
-                                  SubqueryRef, TableFunction, TableRef)
-    names: set = set()
-    dynamic = False
-
-    def walk(n):
-        nonlocal dynamic
-        if n is None or isinstance(n, (str, int, float, bool, bytes)):
-            return
-        if isinstance(n, (list, tuple)):
-            for x in n:
-                walk(x)
-            return
-        if isinstance(n, TableRef):
-            names.add((n.database, n.table))
-            return
-        if isinstance(n, (SubqueryRef, Subquery)):
-            walk(n.query)
-            return
-        if isinstance(n, TableFunction):
-            if n.name.lower() == "merge":
-                dynamic = True
-            walk(n.args)
-            return
-        if isinstance(n, Join):
-            walk(n.left)
-            walk(n.right)
-            walk(n.on)
-            return
-        if isinstance(n, FuncCall):
-            if (n.name in ("in", "notIn", "globalIn", "globalNotIn")
-                    and len(n.args) == 2
-                    and isinstance(n.args[1], Identifier)):
-                # x IN table form
-                names.add((None, n.args[1].name))
-            walk(n.args)
-            walk(n.params)
-            if n.filter_where is not None:
-                walk(n.filter_where)
-            return
-        for f in getattr(n, "__dataclass_fields__", {}):
-            walk(getattr(n, f))
-    walk(node)
-    return names, dynamic
 
 
 def _spark_type_to_ch(spark_t: str) -> str:

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import re as _re_mod
+from collections import ChainMap
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -171,7 +172,7 @@ class Context:
     dictionaries: dict[str, object] = field(default_factory=dict)
 
     def child(self) -> "Context":
-        return Context(self.spark, dict(self.tables), dict(self.aliases),
+        return Context(self.spark, ChainMap({}, self.tables), dict(self.aliases),
                        engines=self.engines, params=self.params,
                        settings=self.settings, udfs=self.udfs,
                        dictionaries=self.dictionaries,
@@ -233,7 +234,7 @@ def build(spark: SparkSession, q: SelectQuery | UnionQuery,
           udfs: dict[str, object] | None = None,
           dictionaries: dict[str, object] | None = None,
           views: dict[str, object] | None = None) -> DataFrame:
-    ctx = Context(spark, dict(tables), engines=engines or {},
+    ctx = Context(spark, ChainMap({}, tables), engines=engines or {},
                   params=params or {}, settings=settings or {},
                   udfs=udfs or {}, dictionaries=dictionaries or {},
                   view_asts=views or {})

@@ -905,7 +905,7 @@ class Parser:
             return self._substring()
         if upper == "TRIM":
             return self._trim()
-        if upper == "POSITION":
+        if upper == "POSITION" and self.peek().is_op("("):
             return self._position()
         if upper == "EXISTS" and self.peek().is_op("("):
             self.advance()

@@ -281,9 +281,9 @@ def test_parametric_quantile_combinators(spark):
     assert d == pytest.approx(2.0)
 
 
-def test_dict_hierarchy_functions(spark):
+def test_dict_hierarchy_functions(spark, tmp_path):
     from clickhouse_from_scratch_spark.ddl import ChSession
-    sess = ChSession(spark)
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE hsrc (id UInt64, name String, "
                  "parent UInt64) ENGINE = Memory")
     sess.execute("INSERT INTO hsrc VALUES (1, 'one', 0), (2, 'two', 1), "

@@ -863,11 +863,11 @@ def test_merge_table_function_and_null_engine(sess):
     assert sess.execute("SELECT count() AS c FROM sink").collect()[0].c == 0
 
 
-def test_default_expressions_fill_partial_insert(spark):
+def test_default_expressions_fill_partial_insert(spark, tmp_path):
     """Omitted INSERT columns take their declared DEFAULT expression —
     including defaults referencing supplied columns — not the bare
     type default."""
-    sess = ChSession(spark)
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE dflt (a Int32, b String DEFAULT 'none', "
                  "c Int32 DEFAULT a * 2) ENGINE = Memory")
     sess.execute("INSERT INTO dflt (a) VALUES (5), (7)")
@@ -876,12 +876,12 @@ def test_default_expressions_fill_partial_insert(spark):
     assert rows == [(5, 'none', 10), (7, 'none', 14)]
 
 
-def test_materialized_column_semantics(spark):
+def test_materialized_column_semantics(spark, tmp_path):
     """MATERIALIZED columns are computed at insert, excluded from the
     implicit INSERT column list and from SELECT *, selectable by
     name, and rejected as explicit INSERT targets."""
     import pytest
-    sess = ChSession(spark)
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE matc (a Int32, m Int32 MATERIALIZED "
                  "a + 1) ENGINE = Memory")
     sess.execute("INSERT INTO matc VALUES (10)")   # one value: a only
@@ -893,10 +893,10 @@ def test_materialized_column_semantics(spark):
         sess.execute("INSERT INTO matc (m) VALUES (1)")
 
 
-def test_describe_ch_shape(spark):
+def test_describe_ch_shape(spark, tmp_path):
     """DESCRIBE emits the CH 7-column shape with default/comment/codec
     attributes rendered and empty strings elsewhere."""
-    sess = ChSession(spark)
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE dsh (id UInt64, v Float64 DEFAULT 0 "
                  "COMMENT 'val' CODEC(ZSTD(3)), m Int32 MATERIALIZED "
                  "id + 1) ENGINE = MergeTree ORDER BY id")
@@ -911,8 +911,8 @@ def test_describe_ch_shape(spark):
     assert "id" in rows[2].default_expression
 
 
-def test_alias_column_hidden_and_selectable(spark):
-    sess = ChSession(spark)
+def test_alias_column_hidden_and_selectable(spark, tmp_path):
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE alc (a Int32, twice Int32 ALIAS a * 2) "
                  "ENGINE = Memory")
     sess.execute("INSERT INTO alc VALUES (4)")
@@ -922,11 +922,11 @@ def test_alias_column_hidden_and_selectable(spark):
             sess.execute("SELECT twice FROM alc").collect()] == [(8,)]
 
 
-def test_summing_tuple_column_list(spark):
+def test_summing_tuple_column_list(spark, tmp_path):
     """SummingMergeTree((q)) — the docs' tuple form — sums ONLY the
     listed columns; unlisted numeric columns keep an existing value
     (never a sum)."""
-    sess = ChSession(spark)
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE s_tup (k Int32, q Int64, w Int64) "
                  "ENGINE = SummingMergeTree((q)) ORDER BY k")
     sess.execute("INSERT INTO s_tup VALUES (1, 5, 100), (1, 7, 200)")
@@ -935,12 +935,12 @@ def test_summing_tuple_column_list(spark):
     assert row.w in (100, 200)
 
 
-def test_ephemeral_column_semantics(spark):
+def test_ephemeral_column_semantics(spark, tmp_path):
     """EPHEMERAL columns (docs create/table#ephemeral; parser surface
     ParserCreateQuery.h:205-215): INSERT-time inputs visible to DEFAULT
     expressions, never stored, not in SELECT *, not selectable,
     shown by DESCRIBE with default_type EPHEMERAL."""
-    sess = ChSession(spark)
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE eph (id Int32, unhexed String "
                  "EPHEMERAL '0', hexed String DEFAULT unhex(unhexed)) "
                  "ENGINE = Memory")
@@ -960,11 +960,11 @@ def test_ephemeral_column_semantics(spark):
     assert sess.execute("SELECT t2 FROM eph2").collect()[0].t2 == "!"
 
 
-def test_alter_add_column_default_applies_to_new_inserts(spark):
+def test_alter_add_column_default_applies_to_new_inserts(spark, tmp_path):
     """ALTER ADD COLUMN ... DEFAULT backfills existing rows from the
     current expression AND fills the column on later partial INSERTs;
     COMMENT COLUMN reaches DESCRIBE."""
-    sess = ChSession(spark)
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE alt_d (a Int64, b Int64) ENGINE = Memory")
     sess.execute("INSERT INTO alt_d VALUES (1, 10), (2, 20)")
     sess.execute("ALTER TABLE alt_d ADD COLUMN c Int64 DEFAULT a * 100")
@@ -979,10 +979,10 @@ def test_alter_add_column_default_applies_to_new_inserts(spark):
     assert desc["c"][0] == "DEFAULT" and desc["a"][1] == "the key"
 
 
-def test_materialized_view_to_target_summing(spark):
+def test_materialized_view_to_target_summing(spark, tmp_path):
     """The canonical CH pattern: MV TO a SummingMergeTree target —
     per-block partial aggregates accumulate, FINAL collapses them."""
-    sess = ChSession(spark)
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE ev (k Int32, v Int64) ENGINE = Memory")
     sess.execute("CREATE TABLE agg (k Int32, total Int64) "
                  "ENGINE = SummingMergeTree() ORDER BY k")
@@ -998,8 +998,8 @@ def test_materialized_view_to_target_summing(spark):
         "SELECT count() AS c FROM mv_agg").collect()[0].c >= 2
 
 
-def test_show_create_renders_column_attributes(spark):
-    sess = ChSession(spark)
+def test_show_create_renders_column_attributes(spark, tmp_path):
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     sess.execute("CREATE TABLE scr (a Int32, b String DEFAULT 'x', "
                  "m Int32 MATERIALIZED a + 1, e String EPHEMERAL) "
                  "ENGINE = MergeTree ORDER BY a")

@@ -632,7 +632,7 @@ def test_tsv_output_ch_escaping(spark, tmp_path):
     assert len(text.splitlines()) == 3
 
 
-def test_uint64_unsigned_text_rendering(spark):
+def test_uint64_unsigned_text_rendering(spark, tmp_path):
     """UInt64-as-Long display policy: dialect-UInt64 output columns
     re-base negative longs +2^64 in every text renderer, so the max
     UInt64 prints 18446744073709551615 (CH behavior), while genuinely
@@ -642,7 +642,7 @@ def test_uint64_unsigned_text_rendering(spark):
     from clickhouse_from_scratch_spark.sources.formats import (
         to_csv_text, to_json_each_row, to_pretty, to_tab_separated,
         to_values)
-    s = ChSession(spark)
+    s = ChSession(spark, warehouse=str(tmp_path / "wh"))
     df = s.execute("SELECT toUInt64(18446744073709551615) AS u, "
                    "toInt64(-1) AS i")
     big = "18446744073709551615"
@@ -657,23 +657,23 @@ def test_uint64_unsigned_text_rendering(spark):
     assert to_json_each_row(df2) == '{"wrap":"-1"}'
 
 
-def test_json_denormals_render_null(spark):
+def test_json_denormals_render_null(spark, tmp_path):
     """output_format_json_quote_denormals = 0 (CH default): nan and
     ±inf serialize as null in JSON output formats."""
     from clickhouse_from_scratch_spark.ddl import ChSession
     from clickhouse_from_scratch_spark.sources.formats import (
         to_json_each_row)
-    s = ChSession(spark)
+    s = ChSession(spark, warehouse=str(tmp_path / "wh"))
     df = s.execute("SELECT 0/0 AS nan_v, 1/0 AS inf_v, -1/0 AS ninf_v")
     assert to_json_each_row(df) == \
         '{"nan_v":null,"inf_v":null,"ninf_v":null}'
 
 
-def test_pretty_style_families(spark):
+def test_pretty_style_families(spark, tmp_path):
     """FORMAT Pretty = heavy-ruled header box; PrettyCompact = names in
     the top border; PrettySpace = no grid (published CH layouts)."""
     from clickhouse_from_scratch_spark.ddl import ChSession
-    s = ChSession(spark)
+    s = ChSession(spark, warehouse=str(tmp_path / "wh"))
     base = ("SELECT number AS n, concat('row', toString(number)) AS s "
             "FROM numbers(1) FORMAT ")
 
@@ -699,12 +699,12 @@ def test_pretty_style_families(spark):
     assert render("PrettyNoEscapes") == render("Pretty")
 
 
-def test_json_output_family(spark):
+def test_json_output_family(spark, tmp_path):
     """JSONStringsEachRow / JSONCompactEachRow[WithNamesAndTypes] /
     JSONObjectEachRow / JSONColumns / SQLInsert renderers, with the
     dialect-UInt64 meta type honored (numbers() is UInt64)."""
     from clickhouse_from_scratch_spark.ddl import ChSession
-    s = ChSession(spark)
+    s = ChSession(spark, warehouse=str(tmp_path / "wh"))
 
     def render(fmt, q="SELECT number AS x, concat('a', toString(number))"
                        " AS s FROM numbers(2)"):

@@ -269,13 +269,13 @@ def test_untuple_output_names_tuple_element(sess):
                           "tupleElement(tuple(1, 'a'), 2)"]
 
 
-def test_restore_missing_backup_named_error(sess):
+def test_restore_missing_backup_named_error(sess, tmp_path):
     """CH raises BACKUP_NOT_FOUND (598) when restoring a name that was
     never backed up — not a raw filesystem error."""
     with pytest.raises(Exception, match="BACKUP_NOT_FOUND"):
-        sess.execute("RESTORE TABLE nope FROM Disk('backups', 'nothere')")
+        sess.execute(f"RESTORE TABLE nope FROM Disk('{tmp_path}', 'nothere')")
     with pytest.raises(Exception, match="BACKUP_NOT_FOUND"):
-        sess.execute("RESTORE DATABASE nodb FROM Disk('backups', 'no2')")
+        sess.execute(f"RESTORE DATABASE nodb FROM Disk('{tmp_path}', 'no2')")
 
 
 # --- sweep-F: lightweight DELETE / ALTER tail / system tables / EXPLAIN ----

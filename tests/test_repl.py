@@ -33,10 +33,10 @@ def test_split_statements_heredoc():
     assert stmts == ["SELECT $t$x;y$t$ AS s"]
 
 
-def test_run_statement_renders_pretty(spark):
+def test_run_statement_renders_pretty(spark, tmp_path):
     from clickhouse_from_scratch_spark.ddl import ChSession
 
-    sess = ChSession(spark)
+    sess = ChSession(spark, warehouse=str(tmp_path / "wh"))
     out = io.StringIO()
     run_statement(sess, "SELECT 42 AS answer", out=out)
     text = out.getvalue()
