@@ -20,10 +20,12 @@ queries automatically see each table's engine metadata.
 
 from __future__ import annotations
 
+import atexit
 import functools
 import os
 import re
 import shutil
+import tempfile
 from collections import ChainMap
 from collections.abc import Mapping
 from dataclasses import dataclass, field
@@ -235,8 +237,13 @@ class ChSession:
 
     def __init__(self, spark: SparkSession, warehouse: str | None = None):
         self.spark = spark
-        self.warehouse = warehouse or os.path.join(
-            os.getcwd(), ".chspark_warehouse")
+        if warehouse is None:
+            # no warehouse given: a private temporary one, removed at
+            # interpreter exit — not when the session is collected, since
+            # the frames it returned read their files lazily
+            warehouse = tempfile.mkdtemp(prefix="chspark_warehouse_")
+            atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
+        self.warehouse = warehouse
         os.makedirs(self.warehouse, exist_ok=True)
         self.databases: dict[str, dict[str, TableMeta]] = {"default": {}}
         self.current_db = "default"
@@ -1390,6 +1397,7 @@ class ChSession:
                 # Float64): lower each row to a FROM-less SELECT and
                 # union, whose projection casts to the column type —
                 # stays JVM-side
+                _check_int64_literals(node.values, cols, types)
                 from .plans.ast_nodes import Alias as _Alias
                 from .plans.ast_nodes import SelectQuery as _SQ
                 from .plans.ast_nodes import UnionQuery as _UQ
@@ -1701,14 +1709,16 @@ class ChSession:
             return self._frame(
                 [(n,) for n in sorted(self.dictionaries)], "name string")
         if node.what == "FUNCTIONS":
+            # one row per name, like system.functions: REGISTRY holds
+            # the scalars and the base aggregates; combinator spellings
+            # (sumIf, uniqArray) are resolved, not listed
             from .functions import REGISTRY
             from .functions.aggregates import AGGREGATES
-            rows = ([(n, 0) for n in REGISTRY]
-                    + [(n, 1) for n in AGGREGATES])
+            rows = [(n, int(n in AGGREGATES)) for n in sorted(REGISTRY)]
             if node.like:
                 pat = _like(node.like)
                 rows = [r for r in rows if pat.match(r[0])]
-            return self._frame(sorted(rows), "name string, is_aggregate int")
+            return self._frame(rows, "name string, is_aggregate int")
         if node.what == "ENGINES":
             return self._frame(
                 [(e,) for e in sorted(
@@ -2540,6 +2550,26 @@ def _render_expr(node) -> str:
     if isinstance(node, TupleLiteral):
         return f"({', '.join(_render_expr(a) for a in node.items)})"
     return "<expr>"
+
+
+def _check_int64_literals(rows, cols, types) -> None:
+    """A VALUES literal that fits no 64-bit integer cannot go into an
+    integer column — the expression path's cast would store 0. In-range
+    literals keep CH's wrap-around."""
+    for row in rows:
+        for v, c in zip(row, cols):
+            if ch_type_to_spark(types[c]) not in ("tinyint", "smallint",
+                                                  "int", "long"):
+                continue
+            try:
+                x = _literal_py(v)
+            except ValueError:
+                continue
+            if isinstance(x, int) and not isinstance(x, bool) \
+                    and not -(1 << 63) <= x < (1 << 64):
+                raise ValueError(
+                    f"INSERT VALUES: {x} does not fit a 64-bit integer "
+                    f"(column {c} {types[c]})")
 
 
 def _literal_py(node):

@@ -13,7 +13,9 @@ Everything is a JVM-side built-in; the -If combinator is
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -23,9 +25,31 @@ def _c(x) -> Column:
     return x if isinstance(x, Column) else F.lit(x)
 
 
-def _if(agg: Callable[[Column], Column]) -> Callable[..., Column]:
-    """-If combinator: aggregate over rows where cond holds."""
-    return lambda x, cond: agg(F.when(_c(cond), _c(x)))
+INT_TYPES = frozenset({"tinyint", "smallint", "int", "bigint", "boolean"})
+
+
+def _untyped(i: int):
+    return None
+
+
+def _typed(fn):
+    """Mark a kernel whose result depends on an argument's type: the
+    resolver passes it ``arg_type`` (argument index → Spark DataType or
+    None)."""
+    fn.typed = True
+    return fn
+
+
+def _levels(n_args: int, fn: Callable[..., Column]) -> Callable[..., Column]:
+    """quantiles*(l1, …, lk)(args): every leading value is a level, the
+    last ``n_args`` values are the arguments."""
+    def g(*a):
+        levels = a[:-n_args]
+        if not levels or any(isinstance(q, Column) for q in levels):
+            raise ValueError("quantiles* take constant level parameters "
+                             "and then the argument columns")
+        return fn(levels, *a[-n_args:])
+    return g
 
 
 def _quantile_exact(x, q) -> Column:
@@ -174,8 +198,12 @@ AGGREGATES: dict[str, Callable[..., Column]] = {
     # parametric quantiles: quantile(q)(x) — exact interpolated percentile
     "quantile": lambda q, x=None: F.percentile(_c(x), F.lit(q)) if x is not None else F.median(_c(q)),
     "quantileExact": lambda q, x: _quantile_exact(x, q),
-    "quantileTDigest": lambda q, x: F.percentile_approx(_c(x), F.lit(q)),
-    "quantiles": lambda qs, x: F.percentile(_c(x), F.array(*[F.lit(q) for q in qs])),
+    # CH's TDigest/Timing sketches return Float32 whatever the input
+    # type; Spark's percentile_approx returns the input type
+    "quantileTDigest": lambda q, x: F.percentile_approx(
+        _c(x), F.lit(q)).cast("float"),
+    "quantiles": _levels(1, lambda qs, x: F.percentile(
+        _c(x), F.array(*[F.lit(q) for q in qs]))),
     "median": lambda x: F.median(_c(x)),
     # parametric max_size form groupArray(N)(x) keeps the first N values
     # (published CH contract; parametric grammar at reference
@@ -210,20 +238,16 @@ AGGREGATES: dict[str, Callable[..., Column]] = {
         / F.sum(F.when(_c(x).isNotNull(), _c(w)))),
     "anyHeavy": lambda x: F.mode(_c(x)),       # most-frequent approximation
     "entropy": lambda x: _entropy(_c(x)),
-    # groupConcat[(sep)](x): parametric separator arrives first (builder
-    # passes params before args); NULLs skipped like CH
+    # groupConcat[(sep)](x): parametric separator arrives first (the
+    # resolver passes params before args); NULLs skipped like CH
     "groupConcat": lambda *a: F.array_join(
         F.collect_list(_c(a[-1]).cast("string")),
         str(a[0]) if len(a) > 1 and not isinstance(a[0], Column) else ""),
-    # default-parameter forms; the parametric (lr, l2, batch, method)
-    # form is dispatched explicitly in the builder (params lead there)
-    "stochasticLinearRegression":
-        lambda *a: ml_regression(False, [], list(a)),
-    "stochasticLogisticRegression":
-        lambda *a: ml_regression(True, [], list(a)),
+    "stochasticLinearRegression": lambda *a: ml_regression(False, *a),
+    "stochasticLogisticRegression": lambda *a: ml_regression(True, *a),
 }
 
-def ml_regression(logistic: bool, params: list, args: list) -> Column:
+def ml_regression(logistic: bool, *a) -> Column:
     """``stochasticLinearRegression`` / ``stochasticLogisticRegression``
     (public CH signature ``(learning_rate, l2_reg, batch_size, method)
     (target, p1..pk)``; the reference declares the names in its
@@ -243,9 +267,13 @@ def ml_regression(logistic: bool, params: list, args: list) -> Column:
     in an Arrow scalar UDF over the single aggregated row. The LOGISTIC
     path needs the raw observations (IRLS is not moment-expressible):
     collect_list per group, so it's bounded by group size like
-    groupArray."""
+    groupArray. The optional parameters are the leading plain values,
+    the target and feature columns follow."""
     import pandas as pd
 
+    n_params = next((i for i, v in enumerate(a) if isinstance(v, Column)),
+                    len(a))
+    params, args = a[:n_params], a[n_params:]
     l2 = float(params[1]) if len(params) > 1 else 0.1
     method = str(params[3]).strip("'\"") if len(params) > 3 else "SGD"
     if method not in ("SGD", "Momentum", "Nesterov", "Adam"):
@@ -417,7 +445,7 @@ def _top_k_weighted(k: int, x, w) -> Column:
         (-F.aggregate(F.filter(pairs, lambda p: p["v"] == v),
                       F.lit(0.0), lambda a, p: a + p["w"])).alias("nw"),
         v.alias("k"))))
-    return F.slice(F.transform(ranked, lambda s: s["k"]), 1, k)
+    return F.slice(F.transform(ranked, lambda s: s["k"]), 1, int(k))
 
 
 def _interval_length_sum(s, e) -> Column:
@@ -495,33 +523,35 @@ AGGREGATES.update({
         _moving_fold(a, avg=True) if b is None
         else _moving_fold(b, avg=True, window=int(a))),
     "deltaSumTimestamp": _delta_sum_ts,
-    "quantileTiming": lambda q, x: F.percentile_approx(_c(x), F.lit(q)),
+    "quantileTiming": lambda q, x: F.percentile_approx(
+        _c(x), F.lit(q)).cast("float"),
     "quantileDeterministic":
         lambda q, x, det=None: F.percentile(_c(x), F.lit(q)),
-    "quantileBFloat16": lambda q, x: F.percentile_approx(_c(x), F.lit(q)),
+    "quantileBFloat16": lambda q, x: F.percentile_approx(
+        _c(x), F.lit(q)).cast("double"),
     # array form reuses one collect_list buffer (Catalyst dedupes the
     # identical aggregate subexpression across the picks)
-    "quantilesExact": lambda qs, x: F.array(
-        *[_quantile_exact(x, q) for q in qs]),
+    "quantilesExact": _levels(1, lambda qs, x: F.array(
+        *[_quantile_exact(x, q) for q in qs])),
     # Exclusive = R-6 (PERCENTILE.EXC); Inclusive = R-7 (PERCENTILE.INC)
     # — the latter is exactly Spark's exact percentile interpolation
     "quantileExactExclusive": lambda q, x: _quantile_exact_exclusive(x, q),
     "quantileExactInclusive": lambda q, x: F.percentile(_c(x), F.lit(q)),
-    "quantilesExactExclusive": lambda qs, x: F.array(
-        *[_quantile_exact_exclusive(x, q) for q in qs]),
-    "quantilesExactInclusive": lambda qs, x: F.percentile(
-        _c(x), F.array(*[F.lit(q) for q in qs])),
-    "quantilesTDigest": lambda qs, x: F.percentile_approx(
-        _c(x), F.array(*[F.lit(q) for q in qs])),
-    "quantilesTiming": lambda qs, x: F.percentile_approx(
-        _c(x), F.array(*[F.lit(q) for q in qs])),
+    "quantilesExactExclusive": _levels(1, lambda qs, x: F.array(
+        *[_quantile_exact_exclusive(x, q) for q in qs])),
+    "quantilesExactInclusive": _levels(1, lambda qs, x: F.percentile(
+        _c(x), F.array(*[F.lit(q) for q in qs]))),
+    "quantilesTDigest": _levels(1, lambda qs, x: F.percentile_approx(
+        _c(x), F.array(*[F.lit(q) for q in qs])).cast("array<float>")),
+    "quantilesTiming": _levels(1, lambda qs, x: F.percentile_approx(
+        _c(x), F.array(*[F.lit(q) for q in qs])).cast("array<float>")),
     # weighted quantiles: Spark percentile takes a frequency column
     "quantileExactWeighted": lambda q, x, w: F.percentile(
         _c(x), F.lit(q), _c(w).cast("long")),
-    "quantilesExactWeighted": lambda qs, x, w: F.percentile(
-        _c(x), F.array(*[F.lit(q) for q in qs]), _c(w).cast("long")),
+    "quantilesExactWeighted": _levels(2, lambda qs, x, w: F.percentile(
+        _c(x), F.array(*[F.lit(q) for q in qs]), _c(w).cast("long"))),
     "quantileTimingWeighted": lambda q, x, w: F.percentile(
-        _c(x), F.lit(q), _c(w).cast("long")),
+        _c(x), F.lit(q), _c(w).cast("long")).cast("float"),
     # exact lower/upper-bound selection (no interpolation)
     "quantileExactLow": lambda q, x: F.element_at(
         F.array_sort(F.collect_list(_c(x))),
@@ -530,14 +560,16 @@ AGGREGATES.update({
         F.array_sort(F.collect_list(_c(x))),
         (F.ceil(F.lit(q) * (F.count(_c(x)) - 1)) + 1).cast("int")),
     "medianExact": lambda x: _quantile_exact(x, 0.5),
-    "medianTDigest": lambda x: F.percentile_approx(_c(x), F.lit(0.5)),
+    "medianTDigest": lambda x: F.percentile_approx(
+        _c(x), F.lit(0.5)).cast("float"),
     "topKWeighted": _top_k_weighted,
     "first_value": lambda x: F.first(_c(x), ignorenulls=True),
     "last_value": lambda x: F.last(_c(x), ignorenulls=True),
     "uniqTheta": lambda x: F.approx_count_distinct(_c(x)),
-    "groupArraySample": lambda n, x: F.slice(F.collect_list(_c(x)), 1, n),
+    "groupArraySample": lambda n, x: F.slice(
+        F.collect_list(_c(x)), 1, int(n)),
     "groupArrayLast": lambda n, x: F.reverse(F.slice(
-        F.reverse(F.collect_list(_c(x))), 1, n)),
+        F.reverse(F.collect_list(_c(x))), 1, int(n))),
     "sumCount": lambda x: F.struct(F.sum(_c(x)).alias("_1"),
                                    F.count(_c(x)).alias("_2")),
     "simpleLinearRegression": _simple_linreg,
@@ -815,15 +847,13 @@ AGGREGATES.update({
 })
 
 
-# --- generic combinator resolution (public CH combinator mechanics) -------
-#
-# Any aggregate name can be suffixed: sumIf, sumArray, sumArrayIf,
-# avgForEach, countOrNull, anyState, … Resolution peels suffixes right to
-# left until it reaches a base aggregate, composing wrappers.
+# --- per-array kernels (-Array, -Distinct, -ForEach, arrayReduce) --------
 
 def _var_flat(flat: Column, samp: bool) -> Column:
     """Population/sample variance of one array's elements (two-pass over
-    the group-local array — JVM-side, no extra shuffle)."""
+    the group-local array — JVM-side, no extra shuffle). One value gives
+    the sample forms nan (0/0), as the row aggregates do; no value gives
+    NULL."""
     d = F.filter(flat, lambda v: v.isNotNull())
     d = F.transform(d, lambda v: v.cast("double"))
     n = F.size(d).cast("double")
@@ -831,7 +861,8 @@ def _var_flat(flat: Column, samp: bool) -> Column:
     ss = F.aggregate(d, F.lit(0.0),
                      lambda a, v: a + (v - mean) * (v - mean))
     denom = (n - 1) if samp else n
-    return F.when(denom > 0, ss / denom)
+    out = F.when(denom > 0, ss / denom)
+    return out.when(n > 0, F.lit(float("nan"))) if samp else out
 
 
 def _quantile_flat(flat: Column, q: float) -> Column:
@@ -864,18 +895,22 @@ def _quantile_flat_exclusive(flat: Column, q: float) -> Column:
             .otherwise(v_lo + (h - lo.cast("double")) * (v_hi - v_lo))
 
 
-def quantile_flat(base_name: str, flat: Column, q: float) -> Column:
-    """Parametric quantile over one flattened array (-Array combinator
-    path): Exclusive is R-6, everything else the R-7 interpolation."""
-    if base_name.rstrip("s").endswith("Exclusive") \
-            or base_name.endswith("Exclusive"):
-        return _quantile_flat_exclusive(flat, q)
-    return _quantile_flat(flat, q)
-
-
-def _reduce_flat(base_name: str, flat: Column, sfx: str) -> Column:
-    """Apply aggregate ``base_name`` to the elements of one array."""
+def reduce_array(name: str, params, flat: Column,
+                 sfx: str = "Array") -> Column:
+    """Apply aggregate ``name`` with its ``params`` to the elements of one
+    array: the kernel behind -Array, -Distinct, arrayReduce and
+    arrayReduceInRanges. Parametric quantiles interpolate exactly (R-6
+    for the Exclusive names, R-7 otherwise); -OrNull, -OrDefault and
+    -Array stacked on the name wrap the inner reduction."""
     from .registry import REGISTRY as R
+    if name.startswith(("quantile", "median")) and (params
+                                                    or name == "median"):
+        pick = (_quantile_flat_exclusive if "Exclusive" in name
+                else _quantile_flat)
+        levels = params or [0.5]
+        if name.startswith("quantiles"):
+            return F.array(*[pick(flat, float(q)) for q in levels])
+        return pick(flat, float(levels[0]))
     reducers = {
         "sum": lambda: R["arraySum"](flat),
         "count": lambda: F.size(flat).cast("long"),
@@ -892,42 +927,27 @@ def _reduce_flat(base_name: str, flat: Column, sfx: str) -> Column:
         "varSamp": lambda: _var_flat(flat, samp=True),
         "stddevPop": lambda: F.sqrt(_var_flat(flat, samp=False)),
         "stddevSamp": lambda: F.sqrt(_var_flat(flat, samp=True)),
-        "median": lambda: _quantile_flat(flat, 0.5),
     }
-    if base_name in reducers:
-        return reducers[base_name]()
+    if name in reducers and not params:
+        return reducers[name]()
     # canonical-order stacking on a SUFFIXED base (reference rewrite
     # appends a combinator to any name, ExpressionElementParsers.cpp:
     # 866-867): peel the base's own trailing combinator and wrap the
     # inner flat reduction — minOrNullDistinct reduces min over the
     # distinct array, then applies the empty-set→NULL contract.
-    if base_name.endswith("OrNull") and len(base_name) > 6:
-        inner = _reduce_flat(base_name[:-6], flat, sfx)
+    if name.endswith("OrNull") and len(name) > 6:
+        inner = reduce_array(name[:-6], params, flat, sfx)
         return F.when(F.size(flat) > 0, inner)
-    if base_name.endswith("OrDefault") and len(base_name) > 9:
-        inner = _reduce_flat(base_name[:-9], flat, sfx)
+    if name.endswith("OrDefault") and len(name) > 9:
+        inner = reduce_array(name[:-9], params, flat, sfx)
         return F.coalesce(inner, F.lit(0))
-    if base_name.endswith("Array") and len(base_name) > 5:
+    if name.endswith("Array") and len(name) > 5:
         # stacked -ArrayArray (sumArrayArray over Array(Array(T))):
         # flatten one level and reduce with the inner base
-        return _reduce_flat(base_name[:-5], F.flatten(flat), sfx)
-    raise ValueError(f"-{sfx} combinator unsupported for {base_name}")
-
-
-def _array_combinator(base_name: str, arr) -> Column:
-    """-Array: aggregate over every ELEMENT of the array arguments
-    (sumArray([1,2]) over 2 rows = sum of 4 numbers). One flatten over
-    the group's collected arrays, then a JVM array reduction."""
-    return _reduce_flat(base_name,
-                        F.flatten(F.collect_list(_c(arr))), "Array")
-
-
-def _distinct_combinator(base_name: str, x) -> Column:
-    """-Distinct: aggregate over the group's distinct values (natively
-    implemented bases — sumDistinct, countDistinct — resolve first and
-    never reach this)."""
-    return _reduce_flat(base_name,
-                        F.array_distinct(F.collect_list(_c(x))), "Distinct")
+        return reduce_array(name[:-5], params, F.flatten(flat), sfx)
+    with_params = " with parameters" if params else ""
+    raise ValueError(f"-{sfx} combinator unsupported for {name}"
+                     f"{with_params}")
 
 
 def _foreach_combinator(base_name: str, arr) -> Column:
@@ -957,7 +977,7 @@ def _foreach_combinator(base_name: str, arr) -> Column:
                        lambda acc, m: F.zip_with(acc, m, ops[base_name]))
 
 
-def _combine(base, base_name: str, sfx: str):
+def _combine(base, base_name: str, sfx: str, params: list, arg_type):
     if sfx == "If":
         def _ifed(*a):
             # CH truthy condition: any non-zero numeric counts
@@ -996,7 +1016,7 @@ def _combine(base, base_name: str, sfx: str):
         if base_name in ("uniq", "uniqHLL12", "uniqCombined") \
                 and sfx != "SimpleState":
             if sfx == "State":
-                return lambda x: F.hll_sketch_agg(_c(x))
+                return lambda x: F.hll_sketch_agg(_sketch_input(x, arg_type))
             if sfx == "Merge":
                 return lambda s: F.hll_sketch_estimate(F.hll_union_agg(_c(s)))
             return lambda s: F.hll_union_agg(_c(s))     # MergeState
@@ -1014,7 +1034,8 @@ def _combine(base, base_name: str, sfx: str):
             # re-applied at merge (sumIfMerge ≡ sumMerge); count states
             # merge by SUMMING, not by counting state rows
             if base_name.endswith("If") and len(base_name) > 2:
-                return resolve_aggregate(base_name[:-2] + sfx)
+                return resolve_aggregate(base_name[:-2] + sfx, params,
+                                         arg_type)
             _MERGE_OPS = {
                 "count": lambda s: F.coalesce(
                     F.sum(_c(s)), F.lit(0)).cast("long"),
@@ -1036,7 +1057,11 @@ def _combine(base, base_name: str, sfx: str):
             return base
         return base
     if sfx == "Array":
-        return lambda arr: _array_combinator(base_name, arr)
+        # -Array: aggregate over every ELEMENT of the array arguments
+        # (sumArray([1,2]) over 2 rows = sum of 4 numbers) — one flatten
+        # over the group's collected arrays, then an array reduction
+        return lambda arr: reduce_array(
+            base_name, params, F.flatten(F.collect_list(_c(arr))))
     if sfx == "ForEach":
         return lambda arr: _foreach_combinator(base_name, arr)
     if sfx in ("ArgMin", "ArgMax"):
@@ -1066,9 +1091,9 @@ def _combine(base, base_name: str, sfx: str):
             return fold(sel)
         return _arged
     if sfx == "Map":
-        # generic -Map combinator (sumMap/minMap/maxMap are dispatched
-        # earlier in the builder): apply the base per map KEY across the
-        # group — countMap, avgMap, uniqMap, anyMap …
+        # generic -Map combinator (sumMap/minMap/maxMap are base
+        # aggregates of their own): apply the base per map KEY across
+        # the group — countMap, avgMap, uniqMap, anyMap …
         fold = _FOLDABLE_BASES.get(base_name)
         if fold is None:
             def _unsupported(*a):
@@ -1089,21 +1114,25 @@ def _combine(base, base_name: str, sfx: str):
                     lambda e: e["value"]))))
         return _mapped
     if sfx == "Distinct":
+        # -Distinct: aggregate over the group's distinct values (natively
+        # implemented bases — sumDistinct, countDistinct — resolve first
+        # and never reach this)
         def _distincted(*a):
+            inner, x = base_name, a[0] if a else None
             if base_name.endswith("If") and len(base_name) > 2 \
                     and len(a) == 2:
                 # avgIf(DISTINCT x, p): filter first (collect_list drops
                 # the NULLed-out rows), then distinct-reduce with the
                 # unsuffixed base — filter-then-distinct ≡
                 # distinct-of-filtered for a row predicate
-                return _distinct_combinator(
-                    base_name[:-2],
-                    F.when(_c(a[1]).cast("boolean"), _c(a[0])))
-            if len(a) != 1:
+                inner = base_name[:-2]
+                x = F.when(_c(a[1]).cast("boolean"), _c(a[0]))
+            elif len(a) != 1:
                 raise ValueError(
                     f"-Distinct combinator needs exactly one argument "
                     f"for {base_name} (got {len(a)})")
-            return _distinct_combinator(base_name, a[0])
+            return reduce_array(inner, params, F.array_distinct(
+                F.collect_list(_c(x))), "Distinct")
         return _distincted
     raise AssertionError(sfx)
 
@@ -1133,64 +1162,109 @@ _COMBINATOR_SUFFIXES = ("OrNull", "OrDefault", "SimpleState", "MergeState",
                         "Distinct", "ArgMin", "ArgMax", "Map")
 
 
-def resolve_aggregate(name: str) -> Callable[..., Column] | None:
-    """Base aggregate or combinator chain → callable; None if ``name``
-    is not an aggregate (callers then treat it as a scalar)."""
+def resolve_aggregate(name: str, params=(), arg_type=None
+                      ) -> Callable[..., Column] | None:
+    """Aggregate name with its combinator suffixes → callable over the
+    call's argument columns; None if ``name`` is not an aggregate
+    (callers then treat it as a scalar). ``params`` are the call's
+    parameters (quantile(0.9)(x)); ``arg_type(i)`` gives the Spark type
+    of argument ``i``, or None, to the kernels that depend on it.
+    Raises ValueError when the base takes no parameters."""
+    arg_type = arg_type or _untyped
+    params = list(params)
     if name in AGGREGATES:
-        return AGGREGATES[name]
+        return _bind(name, AGGREGATES[name], params, arg_type)
+    if name.endswith("Resample") and len(name) > 8:
+        # the last three parameters are the resampling's own
+        base = resolve_aggregate(name[:-8], params[:-3], arg_type)
+        return None if base is None else _resample(base, params)
     for sfx in _COMBINATOR_SUFFIXES:
         if name.endswith(sfx) and len(name) > len(sfx):
             base_name = name[:-len(sfx)]
-            base = resolve_aggregate(base_name)
+            base = resolve_aggregate(base_name, params, arg_type)
             if base is None:
                 continue
-            return _combine(base, base_name, sfx)
+            return _combine(base, base_name, sfx, params, arg_type)
     return None
 
 
-# -If combinator for every base aggregate (sumIf, countIf, avgIf, ...)
-_IF_BASES = ["sum", "count", "avg", "min", "max", "any", "uniq", "uniqExact",
-             "argMin", "argMax"]
+# --- resolution: parameters, then combinators (public CH mechanics) -------
+#
+# Any aggregate name can be suffixed: sumIf, sumArray, sumArrayIf,
+# avgForEach, countOrNull, anyState, countResample, … Resolution peels
+# suffixes right to left until it reaches a base aggregate, binds the
+# call's parameters into that base, then composes the combinator wrappers
+# around it — so topKIf(2)(x, c), quantileArray(0.5)(a) and
+# quantileExactExclusiveOrNull(0.5)(x) need no special case.
+
+# bases whose published signature takes leading parameters (these and
+# every quantile*); each kernel takes them first and coerces them
+# itself. Any other base given parameters is an error (uniqExact(1)(x)
+# must not become count_distinct(1, x)).
+_PARAMETRIC = frozenset({
+    "groupArray", "groupUniqArray", "groupConcat", "groupArrayMovingSum",
+    "groupArrayMovingAvg", "groupArrayInsertAt", "groupArraySample",
+    "groupArrayLast", "groupArraySorted", "topK", "topKWeighted",
+    "histogram", "uniqUpTo", "sparkbar", "sparkBar",
+    "largestTriangleThreeBuckets", "lttb", "meanZTest", "windowFunnel",
+    "exponentialMovingAverage", "sequenceMatch", "sequenceCount",
+    "stochasticLinearRegression", "stochasticLogisticRegression",
+    "sumMapFiltered"})
+# uniqCombined(HLL_precision)(x): the precision tunes the sketch's
+# memory/error trade-off; the HLL backing here uses its default rsd
+_PRECISION_ONLY = frozenset({"uniqCombined", "uniqCombined64"})
+
+# sum(x > 5): CH aggregates a predicate argument as a UInt8 number
+NUMERIC_PREFIXES = (
+    "sum", "avg", "quantile", "median", "stddev", "var", "covar", "corr",
+    "skew", "kurt", "deltaSum", "boundingRatio", "rankCorr")
 
 
-def register_into(registry: dict[str, Callable[..., Column]]) -> None:
-    registry.update(AGGREGATES)
-    for base in _IF_BASES:
-        fn = AGGREGATES[base]
-        # conditions cast to boolean: CH accepts truthy ints (countIf(x%2))
-        if base == "count":
-            # countIf(cond) counts matching rows; the two-arg form
-            # countIf(x, cond) — count's 0-or-1-arg signature plus the
-            # -If trailing condition — counts rows where cond holds AND
-            # x is non-NULL (count(when(cond, x)))
-            registry["countIf"] = lambda *a: (
-                F.count(F.when(_c(a[-1]).cast("boolean"), F.lit(1)))
-                if len(a) == 1 else
-                F.count(F.when(_c(a[1]).cast("boolean"), _c(a[0]))))
-        elif base in ("argMin", "argMax"):
-            def _arg_if(f):
-                return lambda a, v, cond: f(
-                    F.when(_c(cond).cast("boolean"), _c(a)),
-                    F.when(_c(cond).cast("boolean"), _c(v)))
-            registry[base + "If"] = _arg_if(fn)
-        else:
-            def _mk(f):
-                raw = getattr(f, "_raw", None)
-                if raw is not None:
-                    # uniq family: restrict the NULL-as-distinct flag
-                    # to condition-matching rows (masked-out rows must
-                    # not add a phantom NULL value)
-                    def g(x, cond):
-                        c = _c(cond).cast("boolean")
-                        v = _c(x)
-                        flag = F.coalesce(F.max(F.when(
-                            F.coalesce(c, F.lit(False)) & v.isNull(),
-                            1).otherwise(0)), F.lit(0))
-                        return (raw(F.when(c, v)) + flag).cast("long")
-                    return g
-                return lambda x, cond: f(
-                    F.when(_c(cond).cast("boolean"), _c(x)))
-            registry[base + "If"] = _mk(fn)
+def _bind(name: str, fn, params: list, arg_type) -> Callable[..., Column]:
+    if name in _PRECISION_ONLY and len(params) == 1:
+        params = []
+    if params and not (name.startswith("quantile")
+                       or name in _PARAMETRIC):
+        raise ValueError(f"aggregate function {name} cannot have parameters")
+    if getattr(fn, "typed", False):
+        # a typed kernel sees the params first: position i is an argument
+        # of the call only from len(params) on
+        n = len(params)
+        fn = partial(fn, arg_type=lambda i: arg_type(i - n) if i >= n
+                     else None)
+    return (lambda *a: fn(*params, *a)) if params else fn
+
+
+def _resample(base, params: list) -> Callable[..., Column]:
+    """-Resample(start, end, step)(args…, key): one aggregate per key
+    bucket [lo, lo + step), expanded statically (params are literals) —
+    a single pass with map-side combine per bucket."""
+    def resampled(*a):
+        if len(params) < 3:
+            raise ValueError("-Resample needs the (start, end, step) "
+                             "parameters")
+        start, end, step = (int(p) for p in params[-3:])
+        key, vals = _c(a[-1]), a[:-1]
+        buckets = []
+        for lo in range(start, end, step):
+            cond = (key >= F.lit(lo)) & (key < F.lit(lo + step))
+            buckets.append(base(*[F.when(cond, v) for v in vals]) if vals
+                           else base(F.when(cond, F.lit(1))))
+        return F.array(*buckets)
+    return resampled
+
+
+def _sketch_input(x, arg_type) -> Column:
+    """hll_sketch_agg accepts int/bigint/string/binary only: widen narrow
+    integrals (CH UInt8/16 land as tinyint/smallint after the
+    wrap-modulo lowering) and stringify other types."""
+    dt = arg_type(0)
+    s = dt.simpleString() if dt is not None else None
+    if s in ("tinyint", "smallint", "boolean"):
+        return _c(x).cast("bigint")
+    if s is not None and s not in ("int", "bigint", "string", "binary"):
+        return _c(x).cast("string")
+    return _c(x)
 
 
 # --- two-sample statistical tests ------------------------------------------
@@ -1301,15 +1375,18 @@ def _anova(v, idx) -> Column:
     return F.struct(fstat.alias("f_statistic"), p.alias("p_value"))
 
 
-def _group_array_insert_at(*a) -> Column:
+@_typed
+def _group_array_insert_at(*a, arg_type=_untyped) -> Column:
     """groupArrayInsertAt([default[, size]])(x, pos): place x at its
     0-based pos; gaps take the explicit default (params lead, CH
-    convention) or the resolved type default the builder passes.
+    convention) or the value type's default (IDataType::getDefault).
     State is the collected (pos, value) pair list — bounded by the
     group, same as CH's array state."""
     default = size = None
     if len(a) == 2:
         x, pos = a
+        dt = arg_type(0)
+        default = empty_set_default("", dt) if dt is not None else None
     elif len(a) == 3:
         default, x, pos = a
     elif len(a) == 4:
@@ -1349,31 +1426,43 @@ AGGREGATES.update({
 # --- Map-combining aggregates (sumMap / minMap / maxMap) -------------------
 #
 # CH sumMap(keys, values) sums values per key across rows and returns
-# (sorted keys, values). The merge state is a map folded with
-# map_zip_with (key-union merge) — the same bounded-by-distinct-keys
+# (sorted keys, values); sumMap(map) returns the merged map. Each row
+# becomes one map, and the group's maps fold with map_zip_with (key-union
+# merge) seeded with the first map — the same bounded-by-distinct-keys
 # state CH keeps, one map-side-combined shuffle, no explode+regroup.
 
-def _map_merge_agg(op) -> Callable[..., Column]:
-    def agg(k, v=None):
-        if v is None:
-            per_row = _c(k)
-        else:
-            # a single row may repeat keys (sumMap([1,2,1], [10,20,30]))
-            # — CH combines them; map_from_arrays would throw
-            # DUPLICATED_MAP_KEY. Fold single-entry maps with the SAME
-            # merge op, entirely row-local.
-            kc, vc = _c(k), _c(v)
-            per_row = F.aggregate(
-                F.zip_with(kc, vc, lambda a, b: F.map_from_arrays(
-                    F.array(a), F.array(b))),
-                F.map_from_arrays(F.slice(kc, 1, 0), F.slice(vc, 1, 0)),
-                lambda acc, m: F.map_zip_with(acc, m, op))
+def _map_fold(op, widen_ints: bool = False) -> Callable[..., Column]:
+    def merge(_, a, b):
+        return F.when(a.isNull(), b).when(b.isNull(), a).otherwise(op(a, b))
+
+    @_typed
+    def agg(k, v=None, arg_type=_untyped):
+        as_map = v is None
+        if as_map:
+            k, v = F.map_keys(_c(k)), F.map_values(_c(k))
+        k, v = _c(k), _c(v)
+        if widen_ints:
+            # CH widens summed integers to Int64 (NumberTraits), so a
+            # 32-bit value cannot overflow mid-group
+            dt = arg_type(0 if as_map else 1)
+            et = getattr(dt, "valueType" if as_map else "elementType", None)
+            if et is not None and et.simpleString() in INT_TYPES:
+                v = v.cast("array<bigint>")
+        # a single row may repeat keys (sumMap([1,2,1], [10,20,30])) — CH
+        # combines them; map_from_arrays would throw DUPLICATED_MAP_KEY.
+        # Fold single-entry maps with the same merge, entirely row-local.
+        per_row = F.aggregate(
+            F.zip_with(k, v, lambda a, b: F.map_from_arrays(F.array(a),
+                                                            F.array(b))),
+            F.map_from_arrays(F.slice(k, 1, 0), F.slice(v, 1, 0)),
+            lambda acc, m: F.map_zip_with(acc, m, merge))
         maps = F.collect_list(per_row)
         merged = F.aggregate(
-            F.slice(maps, F.lit(2),
-                    F.greatest(F.size(maps) - 1, F.lit(0))),
-            F.element_at(maps, 1),
-            lambda acc, m: F.map_zip_with(acc, m, op))
+            F.slice(maps, F.lit(2), F.greatest(F.size(maps) - 1, F.lit(0))),
+            F.try_element_at(maps, F.lit(1)),
+            lambda acc, m: F.map_zip_with(acc, m, merge))
+        if as_map:
+            return merged
         keys = F.array_sort(F.map_keys(merged))
         return F.struct(
             keys.alias("_1"),
@@ -1382,13 +1471,25 @@ def _map_merge_agg(op) -> Callable[..., Column]:
     return agg
 
 
+@_typed
+def _sum_map_filtered(keep, k, v, arg_type=_untyped) -> Column:
+    """sumMapFiltered(keys_to_keep)(keys, values): sumMap over the listed
+    keys only — each row's arrays are filtered first."""
+    if not isinstance(keep, Column):
+        keep = F.array(*[F.lit(x) for x in keep])
+    pairs = F.zip_with(_c(k), _c(v),
+                       lambda a, b: F.struct(a.alias("k"), b.alias("v")))
+    flt = F.filter(pairs, lambda p: F.array_contains(keep, p.k))
+    return AGGREGATES["sumMap"](F.transform(flt, lambda p: p.k),
+                                F.transform(flt, lambda p: p.v),
+                                arg_type=lambda i: arg_type(i + 1))
+
+
 AGGREGATES.update({
-    "sumMap": _map_merge_agg(
-        lambda k, a, b: F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0))),
-    "minMap": _map_merge_agg(
-        lambda k, a, b: F.coalesce(F.least(a, b), a, b)),
-    "maxMap": _map_merge_agg(
-        lambda k, a, b: F.coalesce(F.greatest(a, b), a, b)),
+    "sumMap": _map_fold(lambda a, b: a + b, widen_ints=True),
+    "minMap": _map_fold(F.least),
+    "maxMap": _map_fold(F.greatest),
+    "sumMapFiltered": _sum_map_filtered,
 })
 
 
@@ -1744,18 +1845,83 @@ AGGREGATES.update({
     # GK sketch → Spark's approx percentile with the same accuracy knob
     "quantileGK": lambda acc, q, x: F.percentile_approx(
         _c(x), F.lit(float(q)), F.lit(int(acc))),
-    "quantilesGK": lambda acc, qs, x: F.percentile_approx(
-        _c(x), F.array(*[F.lit(float(q)) for q in qs]), F.lit(int(acc))),
+    "quantilesGK": lambda acc, *a: _levels(1, lambda qs, x: (
+        F.percentile_approx(_c(x), F.array(*[F.lit(float(q)) for q in qs]),
+                            F.lit(int(acc)))))(*a),
     "quantileInterpolatedWeighted": lambda q, x, w: F.percentile(
         _c(x), F.lit(float(q)), _c(w).cast("long")),
 })
 
 
-def _sum_map_filtered_misuse(*a):
-    # the real lowering lives in the builder (needs the parametric key
-    # list + _map_agg); this entry only makes name classification work
-    raise ValueError("sumMapFiltered requires the parametric form "
-                     "sumMapFiltered([keys])(keys_col, values_col)")
+# --- result-type rules ------------------------------------------------------
+
+_NAN_EMPTY = re.compile(
+    r"(?i)^(avg|var|stddev|covar|corr|skew|kurt|quantile|median|entropy"
+    r"|rankCorr|mannWhitney|welchTTest|studentTTest)")
 
 
-AGGREGATES["sumMapFiltered"] = _sum_map_filtered_misuse
+def empty_set_default(name: str, dtype) -> Column | None:
+    """CH empty-set result for a keyless aggregate: the result type's
+    default value (getLeastSupertype/IDataType::getDefault semantics for
+    aggregates without keys) — 0 / '' / false / epoch / [] — with the
+    moment family yielding nan (0/0 in Float64). -OrNull keeps NULL,
+    -State/-Merge keep their sketch carriers. None = leave as built."""
+    low = name.lower()
+    if any(low.endswith(sfx) for sfx in
+           ("ornull", "state", "merge", "mergestate")):
+        return None
+    dts = dtype.simpleString()
+    if _NAN_EMPTY.match(name) and dts in ("double", "float"):
+        # cast: a bare double NaN literal would promote a Float32-typed
+        # aggregate (e.g. quantileTDigest) to double via when/otherwise
+        return F.lit(float("nan")).cast(dts)
+    if dts in ("tinyint", "smallint", "int", "bigint", "float",
+               "double") or dts.startswith("decimal"):
+        return F.lit(0).cast(dts)
+    if dts == "string":
+        return F.lit("")
+    if dts == "boolean":
+        return F.lit(False)
+    if dts == "date":
+        return F.to_date(F.lit("1970-01-01"))
+    if dts.startswith("timestamp"):
+        return F.to_timestamp(F.lit("1970-01-01 00:00:00")).cast(dts)
+    if dts.startswith("array<"):
+        return F.array().cast(dts)
+    if dts.startswith("struct<"):
+        # tuple results (sumMap, argMin tuple forms): per-field defaults
+        fields = []
+        for f in dtype.fields:
+            fd = empty_set_default("", f.dataType)
+            if fd is None:
+                return None
+            fields.append(fd.alias(f.name))
+        return F.struct(*fields)
+    if dts.startswith("map<"):
+        return F.create_map().cast(dts)
+    return None
+
+
+_WIDEN_SUM = re.compile(
+    r"sum(?:If|OrNull|OrDefault)*(?:Array|Distinct|ForEach)"
+    r"(?:Array|Distinct|ForEach|If|OrNull|OrDefault)*"
+    r"|groupArrayMovingSum|deltaSum")
+
+
+def widened_sum_type(name: str, arg_type) -> str | None:
+    """Sum family over integers yields Int64 (Array(Int64) for the
+    array-valued forms), never Float64 (CH NumberTraits). Spark's own
+    sum already does; the array kernels (-Array, -Distinct, -ForEach,
+    moving and delta sums) compute in double (exact below 2^53 —
+    documented policy), so their result is cast back when the first
+    argument is integral. Returns the Spark cast target or None."""
+    if not _WIDEN_SUM.fullmatch(name):
+        return None
+    at = arg_type(0)
+    at = at.simpleString() if at is not None else ""
+    elem = at[6:-1] if at.startswith("array<") and at.endswith(">") else at
+    if elem not in INT_TYPES:
+        return None
+    array_valued = name == "groupArrayMovingSum" or "ForEach" in name
+    return "array<bigint>" if array_valued else "bigint"
+

@@ -47,11 +47,12 @@ def _alias(name: str, fn: Callable[..., Column]) -> None:
 
 
 def ch(name: str, *args) -> Column:
-    """Evaluate ClickHouse function ``name`` over Column/literal args."""
-    try:
-        fn = REGISTRY[name]
-    except KeyError:
-        raise KeyError(f"ClickHouse function not implemented: {name}") from None
+    """Evaluate ClickHouse function ``name`` over Column/literal args;
+    aggregate combinator spellings (countIf, sumArray) resolve through
+    the aggregate resolver."""
+    fn = REGISTRY.get(name) or _resolve_aggregate(name)
+    if fn is None:
+        raise KeyError(f"ClickHouse function not implemented: {name}")
     return fn(*args)
 
 
@@ -1236,55 +1237,29 @@ _alias("emptyArrayString", lambda: F.array().cast("array<string>"))
 def _array_reduce(name, a) -> Column:
     """arrayReduce('agg', arr): apply an aggregate-function name to the
     array's elements (ref src/Functions/array/arrayReduce.cpp accepts any
-    registered aggregate). Names expressible as array kernels run JVM-side;
-    anything else raises a named BuildError instead of a raw KeyError.
-    Parametric spellings pass the params inside the string — CH accepts
-    arrayReduce('quantile(0.5)', arr) / 'topK(2)' the same way."""
+    registered aggregate) through the same per-array reducer as the
+    -Array combinator, so arrayReduce('f(p)', arr) equals fArray(p)(arr)
+    on a one-row group. Base names match case-insensitively; parametric
+    spellings pass the params inside the string — CH accepts
+    arrayReduce('quantile(0.5)', arr) / 'topK(2)' the same way. Anything
+    the reducer cannot express raises a named BuildError."""
+    import ast
     import re as _re
-    agg = str(name).strip().lower()
-    pm = _re.fullmatch(r"(\w+)\(([^)]*)\)", agg)
-    if pm:
-        base, argtxt = pm.group(1), pm.group(2).strip()
-        if base in ("quantile", "medianexact", "quantileexact"):
-            from .aggregates import _quantile_flat
-            return _quantile_flat(F.transform(_c(a), lambda x:
-                                              x.cast("double")),
-                                  float(argtxt or 0.5))
-        from ..plans.builder import BuildError
-        raise BuildError(
-            f"arrayReduce: unsupported parametric aggregate {name!r}")
-    if agg == "median":
-        from .aggregates import _quantile_flat
-        return _quantile_flat(F.transform(_c(a), lambda x:
-                                          x.cast("double")), 0.5)
-    n = F.size(_c(a))
-    mean = REGISTRY["arrayAvg"](a)
-    sq_dev = F.aggregate(
-        _c(a), F.lit(0.0),
-        lambda acc, x: acc + (x.cast("double") - mean) ** 2)
-    kernels: dict[str, Callable[[], Column]] = {
-        "sum": lambda: REGISTRY["arraySum"](a),
-        "min": lambda: F.array_min(_c(a)),
-        "max": lambda: F.array_max(_c(a)),
-        "avg": lambda: mean,
-        "count": lambda: n.cast("long"),
-        "any": lambda: F.element_at(_c(a), 1),
-        "anylast": lambda: F.element_at(_c(a), -1),
-        "uniq": lambda: F.size(F.array_distinct(_c(a))).cast("long"),
-        "uniqexact": lambda: F.size(F.array_distinct(_c(a))).cast("long"),
-        "grouparray": lambda: _c(a),
-        "groupuniqarray": lambda: F.array_distinct(_c(a)),
-        "varpop": lambda: sq_dev / n,
-        "varsamp": lambda: F.when(n > 1, sq_dev / (n - 1)),
-        "stddevpop": lambda: F.sqrt(sq_dev / n),
-        "stddevsamp": lambda: F.when(n > 1, F.sqrt(sq_dev / (n - 1))),
-    }
-    if agg not in kernels:
-        from ..plans.builder import BuildError
-        raise BuildError(
-            f"arrayReduce: unsupported aggregate function {name!r} "
-            f"(supported: {', '.join(sorted(kernels))})")
-    return kernels[agg]()
+
+    from ..plans.builder import BuildError
+    from .aggregates import AGGREGATES, reduce_array
+    pm = _re.fullmatch(r"\s*(\w+)\s*(?:\(([^)]*)\))?\s*", str(name))
+    try:
+        if pm is None:
+            raise ValueError("not an aggregate name")
+        canon = {n.lower(): n for n in AGGREGATES}
+        agg = canon.get(pm.group(1).lower(), pm.group(1))
+        params = [ast.literal_eval(p.strip())
+                  for p in (pm.group(2) or "").split(",") if p.strip()]
+        return reduce_array(agg, params, _c(a))
+    except (ValueError, TypeError, SyntaxError) as e:
+        raise BuildError(f"arrayReduce: unsupported aggregate function "
+                         f"{name!r}: {e}") from None
 
 
 _alias("arrayReduce", _array_reduce)
@@ -1879,10 +1854,11 @@ _alias("docFingerprint", lambda t: _text.doc_fingerprint(_c(t)))
 _alias("cosineSimilarity", lambda a, b: _cosine(_c(a), _c(b)))
 
 
-# --- aggregates (names; combinators -If/-Distinct in aggregates.py) -------
-from . import aggregates as _aggs  # noqa: E402  (registers agg names)
+# --- aggregates (names; combinator spellings resolve in aggregates.py) ----
+from .aggregates import AGGREGATES as _AGGREGATES  # noqa: E402
+from .aggregates import resolve_aggregate as _resolve_aggregate  # noqa: E402
 
-_aggs.register_into(REGISTRY)
+REGISTRY.update(_AGGREGATES)
 
 
 # --- SQL-standard case-insensitive aliases --------------------------------

@@ -341,7 +341,7 @@ def _minhash_sql(shingles_sql: str, num_hashes: int) -> str:
     per-struct ``F.lit``/``F.struct`` calls costs ~400 py4j round trips
     per plan build (~0.35 s of pure driver time per bench pass); the
     string parses JVM-side in one call to the identical Catalyst tree
-    (signatures verified bit-equal in tools/probe_r13_opt).
+    (the signatures were checked bit-equal against the per-struct build).
     """
     params = _perm_params(num_hashes)
     ab_sql = "array(" + ",".join(

@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 import re as _re_mod
 from collections import ChainMap
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -26,7 +26,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ..functions import REGISTRY, ch
-from ..functions.aggregates import AGGREGATES, resolve_aggregate
+from ..functions.aggregates import (
+    INT_TYPES, NUMERIC_PREFIXES, empty_set_default, resolve_aggregate,
+    widened_sum_type,
+)
 from ..functions.registry import typed_array_sum
 from ..functions.typemap import (
     CH_NUMERIC, arithmetic_result_type, ch_literal_type, ch_type_to_spark,
@@ -44,19 +47,11 @@ from .ast_nodes import (
     TableRef, TupleLiteral, UnionQuery, WindowSpec, format_node,
 )
 
-_AGG_NAMES = set(AGGREGATES) | {n + "If" for n in AGGREGATES} | {
-    "count", "countIf", "countDistinct", "sumMap", "minMap", "maxMap",
-    "grouping", "GROUPING"}
-
-
 def _is_agg_name(name: str) -> bool:
     """Aggregate detection incl. combinator chains (sumArrayIf,
     countResample, anyState, ...) via aggregates.resolve_aggregate."""
-    if name in _AGG_NAMES:
-        return True
-    if name.endswith("Resample"):
-        return resolve_aggregate(name[: -len("Resample")]) is not None
-    return resolve_aggregate(name) is not None
+    return name in ("grouping", "GROUPING") \
+        or resolve_aggregate(name) is not None
 
 _WINDOW_FNS = {
     "row_number": lambda: F.row_number(),
@@ -2724,8 +2719,8 @@ def _apply_aggregate(df: DataFrame, q: SelectQuery,
         wrapped = []
         for slot in agg_slots:
             c: Column = F.col(slot)
-            d = _empty_set_default(_slot_fnames.get(slot, ""),
-                                   out.schema[slot].dataType)
+            d = empty_set_default(_slot_fnames.get(slot, ""),
+                                  out.schema[slot].dataType)
             if d is not None:
                 c = F.when(F.col("__cnt_all") == 0, d).otherwise(c)
             wrapped.append(c.alias(slot))
@@ -2880,30 +2875,12 @@ def _totals_row(src: DataFrame, agg_cols: list, slot_names: list,
             for k in knames]
     for slot in slot_names:
         c: Column = F.col(slot)
-        d = _empty_set_default(slot_fnames.get(slot, ""),
-                               t.schema[slot].dataType)
+        d = empty_set_default(slot_fnames.get(slot, ""),
+                              t.schema[slot].dataType)
         if d is not None:
             c = F.when(F.col("__cnt_all") == 0, d).otherwise(c)
         cols.append(c.alias(slot))
     return t.select(*cols)
-
-
-_NUMERIC_AGG_PREFIXES = (
-    "sum", "avg", "quantile", "median", "stddev", "var", "covar", "corr",
-    "skew", "kurt", "deltaSum", "boundingRatio", "rankCorr")
-
-
-# aggregates whose PUBLISHED signature takes leading parameters and
-# whose registry implementation consumes them as leading args (the
-# explicitly-dispatched parametric families — quantile*, topK, GK,
-# windowFunnel, sequence*, sumMapFiltered, … — are handled before the
-# generic path and not listed here)
-_GENERIC_PARAMETRIC_AGGS = {
-    "groupArray", "groupUniqArray", "groupConcat",
-    "groupArrayMovingSum", "groupArrayMovingAvg", "groupArrayInsertAt",
-    "sparkbar", "sparkBar", "largestTriangleThreeBuckets", "lttb",
-    "meanZTest",
-}
 
 
 # aggregate CONSTRUCTORS in pyspark.sql.functions: in window position
@@ -2970,18 +2947,15 @@ def _agg_column(node: FuncCall, ctx: Context, df: DataFrame,
     -OrNull keeps NULL; count* is already 0; Nullable arguments keep
     NULL (AggregateFunctionNull)."""
     try:
-        if over is not None:
-            # window position: each aggregate LEAF gets .over applied as
-            # it is constructed, so composite aggregates (uniq null
-            # flags, -OrNull gates, sorted-collect quantiles, parametric
-            # slices) work as window functions like in CH
-            with _windowed_agg_constructors(over):
-                result = _agg_column_inner(node, ctx, df)
-        else:
+        # window position: each aggregate LEAF gets .over applied as it
+        # is constructed, so composite aggregates (uniq null flags,
+        # -OrNull gates, sorted-collect quantiles, parametric slices)
+        # work as window functions like in CH
+        with (_windowed_agg_constructors(over) if over is not None
+              else nullcontext()):
             result = _agg_column_inner(node, ctx, df)
     except (TypeError, IndexError) as e:
-        # never leak a raw Python TypeError from the registry dispatch —
-        # a non-parametric aggregate given parameters (sum(1)(x)) or a
+        # never leak a raw Python TypeError from a kernel — a
         # wrong-arity call surfaces as a NAMED engine error
         raise BuildError(
             "wrong number of arguments or parameters for aggregate "
@@ -3012,16 +2986,13 @@ def _agg_column(node: FuncCall, ctx: Context, df: DataFrame,
         if isinstance(vn, (Star, Lambda)):
             continue
         try:
-            vc = _eval(_inline(vn, ctx), ctx, df)
-            if df.select(vc).schema[0].nullable:
-                return result
+            f = _probe_field(vn, _eval(_inline(vn, ctx), ctx, df), ctx, df)
         except Exception:
+            f = None
+        if f is None or f.nullable:
             return result
-    try:
-        dt = df.select(result).schema[0].dataType
-    except Exception:
-        return result
-    d = _empty_set_default(base, dt)
+    dt = _probe_dtype(node, result, ctx, df)
+    d = empty_set_default(base, dt) if dt is not None else None
     if d is None:
         return result
     if cond_node is not None:
@@ -3036,8 +3007,10 @@ def _agg_column(node: FuncCall, ctx: Context, df: DataFrame,
 
 def _agg_column_inner(node: FuncCall, ctx: Context,
                       df: DataFrame) -> Column:
-    """Lower one aggregate call: -If/-Distinct combinators, FILTER(WHERE),
-    parametric form."""
+    """Lower one aggregate call in two steps: normalize its modifiers
+    into a combinator name and arguments (FILTER → -If, DISTINCT →
+    -Distinct), then make one resolver call. The sum-family widening
+    applies to the result."""
     name = node.name
     if name in ("grouping", "GROUPING"):
         # grouping(expr): 1 on subtotal rows where expr is aggregated
@@ -3053,11 +3026,11 @@ def _agg_column_inner(node: FuncCall, ctx: Context,
             slots.append(F.col(slot))
         return (F.grouping(slots[0]) if len(slots) == 1
                 else F.grouping_id(*slots)).cast("long")
-    if name == "count" and any(isinstance(a, Star) for a in node.args):
-        node = FuncCall("count", [], node.params, node.distinct,
-                        node.filter_where)
-    args = [_eval(_inline(a, ctx), ctx, df) for a in node.args]
-    if name.startswith(_NUMERIC_AGG_PREFIXES):
+    arg_nodes = list(node.args)
+    if name == "count" and any(isinstance(a, Star) for a in arg_nodes):
+        arg_nodes = []                              # count(*) = count()
+    args = [_eval(_inline(a, ctx), ctx, df) for a in arg_nodes]
+    if name.startswith(NUMERIC_PREFIXES):
         # sum(x > 5): CH aggregates predicates as UInt8 numbers. The
         # last arg of an -If variant is a condition, not a value.
         n_vals = len(args) - 1 if name.endswith("If") else len(args)
@@ -3065,372 +3038,52 @@ def _agg_column_inner(node: FuncCall, ctx: Context,
                 if (i < n_vals and not isinstance(a, (Lambda, Star))
                     and _is_boolish(a, df))
                 else c
-                for i, (a, c) in enumerate(zip(node.args, args))]
+                for i, (a, c) in enumerate(zip(arg_nodes, args))]
     params = [a.value if isinstance(a, Literal) else _eval(a, ctx, df)
               for a in node.params]
-    cond = None
-    if node.filter_where is not None:
-        # truthy FILTER (WHERE x % 2) — same coercion as WHERE position
-        cond = _eval(_inline(node.filter_where, ctx), ctx, df) \
-            .cast("boolean")
     if node.nulls_modifier is not None:
         # RESPECT/IGNORE NULLS only exists for the any family (CH rejects
         # it elsewhere); never silently drop the modifier
-        if name not in ("any", "anyLast") or node.distinct or cond is not None:
+        if name not in ("any", "anyLast") or node.distinct \
+                or node.filter_where is not None:
             raise BuildError(
                 f"{node.nulls_modifier.upper()} NULLS not supported here "
                 f"(aggregate {name})")
         f = F.first if name == "any" else F.last
         return f(args[0], ignorenulls=(node.nulls_modifier == "ignore"))
-    if node.distinct:
-        if name == "count" and args:
-            # count_distinct_implementation (Settings.h:210, default
-            # uniqExact): count(DISTINCT ...) lowers as the configured
-            # uniq-family aggregate; uniqExact keeps the exact path below
-            impl = str(ctx.settings.get("count_distinct_implementation",
-                                        "uniqExact")).strip("'\"")
-            if impl != "uniqExact":
-                if impl not in ("uniq", "uniqCombined", "uniqCombined64",
-                                "uniqHLL12"):
-                    raise BuildError(
-                        f"count_distinct_implementation = {impl!r} is not "
-                        f"a uniq-family aggregate")
-                a = [F.when(cond, x) for x in args] if cond is not None \
-                    else list(args)
-                return ch(impl, *a)
-        if name in ("count", "sum"):
-            # FILTER composes with DISTINCT: nulled-out rows are ignored
-            # by the distinct aggregation. count(DISTINCT x) is CH's
-            # uniqExact: NULL counts as a distinct value, so add the
-            # any-real-NULL flag (restricted to FILTER-matching rows).
-            if name == "count" and len(args) == 1:
-                raw = args[0]
-                isnull = (raw.isNull() if cond is None else
-                          (F.coalesce(cond, F.lit(False)) & raw.isNull()))
-                a0 = F.when(cond, raw) if cond is not None else raw
-                flag = F.coalesce(
-                    F.max(F.when(isnull, 1).otherwise(0)), F.lit(0))
-                return (F.count_distinct(a0) + flag).cast("long")
-            if cond is not None:
-                args = [F.when(cond, a) for a in args]
-            return (F.count_distinct(*args) if name == "count"
-                    else F.sum_distinct(*args))
-        if params:
+    if node.distinct and name == "count":
+        # count_distinct_implementation (Settings.h:210, default
+        # uniqExact): count(DISTINCT ...) is the configured uniq kernel
+        name = str(ctx.settings.get("count_distinct_implementation",
+                                    "uniqExact")).strip("'\"")
+        if name not in ("uniqExact", "uniq", "uniqCombined",
+                        "uniqCombined64", "uniqHLL12"):
             raise BuildError(
-                f"DISTINCT with parametric aggregate {name} not supported")
-        # Resolved below via REGISTRY or the generic -Distinct combinator
-        # (resolve_aggregate); unresolvable names raise — the DISTINCT
-        # modifier is never silently dropped.
-        name = name + "Distinct"
-    if cond is not None:
-        if name + "If" in REGISTRY:
-            return ch(name + "If", *args, cond) if args else ch("countIf", cond)
-        resolved = resolve_aggregate(name + "If")
-        if resolved is not None:
-            try:
-                return resolved(*args, cond) if args else resolved(cond)
-            except ValueError as e:
-                raise BuildError(str(e)) from None
-        raise BuildError(f"FILTER not supported for {name}")
-    if name.endswith("If") and name in REGISTRY and not params:
-        return ch(name, *args)
-    if name.endswith("If") and len(name) > 2 and params:
-        # parametric + -If combo (topKIf(2)(x, cond)): peel the If here
-        # so the parametric dispatch below sees the base name
-        cond_col = args[-1].cast("boolean")   # CH truthy condition
-        args = [F.when(cond_col, a) for a in args[:-1]]
-        name = name[:-2]
-    # parametric + -OrNull / -Array combos (quantileExactExclusiveOrNull
-    # (0.5)(x), quantileArray(0.5)(arr)): peel like the -If peel above —
-    # OrNull = NULL on an empty set instead of the type default; Array =
-    # aggregate over the flattened array elements
-    # (restricted to quantile/median: every other parametric return
-    # below would silently drop the peeled modifier otherwise)
-    _ornull_src = None
-    if params and name.endswith("OrNull") and name not in REGISTRY \
-            and name[:-6].startswith(("quantile", "median")):
-        _ornull_src = args[0] if args else F.lit(1)
-        name = name[:-6]
+                f"count_distinct_implementation = {name!r} is not "
+                f"a uniq-family aggregate")
+    elif node.distinct:
+        name += "Distinct"
+    if node.filter_where is not None:
+        # FILTER (WHERE p) is the -If combinator; p is truthy like WHERE
+        arg_nodes.append(node.filter_where)
+        args.append(_eval(_inline(node.filter_where, ctx), ctx, df)
+                    .cast("boolean"))
+        name += "If"
 
-    def _ornull(out: Column) -> Column:
-        if _ornull_src is None:
-            return out
-        return F.when(F.count(_ornull_src) > 0, out)
+    def arg_type(i: int):
+        return _probe_dtype(arg_nodes[i], args[i], ctx, df)
 
-    if params and name.endswith("Array") and name not in REGISTRY \
-            and name[:-5].startswith(("quantile", "median")) and args:
-        from ..functions.aggregates import quantile_flat
-        base = name[:-5]
-        flat = F.flatten(F.collect_list(args[0]))
-        if base.startswith("quantiles"):
-            out = F.array(*[quantile_flat(base, flat, float(p))
-                            for p in params])
-        else:
-            out = quantile_flat(base, flat, float(params[0]))
-        return _ornull(out)
-    if name == "quantileGK" and len(params) == 2:
-        # GK sketch: (accuracy, level)(x)
-        return ch(name, int(params[0]), float(params[1]), *args)
-    if name == "quantilesGK" and len(params) >= 2:
-        return ch(name, int(params[0]), [float(p) for p in params[1:]],
-                  *args)
-    if name.startswith("quantiles") and params:
-        out = ch(name, params, *args)
-        w = _widen_sum_target(name, args, df)
-        return _ornull(out.cast(w) if w else out)
-    if (name.startswith("quantile") or name.startswith("median")) and params:
-        out = ch(name, params[0], *args)
-        w = _widen_sum_target(name, args, df)
-        return _ornull(out.cast(w) if w else out)
-    if name in ("topK", "histogram", "groupArraySample", "groupArrayLast",
-                "topKWeighted", "uniqUpTo", "groupArraySorted") and params:
-        return ch(name, int(params[0]), *args)
-    if name == "windowFunnel" and params:
-        # windowFunnel(window[, 'strict_order'|'strict_dedup'|
-        # 'strict_increase'…]) — modes pass through, never dropped
-        return ch(name, float(params[0]),
-                  *[str(p).strip("'\"") for p in params[1:]], *args)
-    if name == "exponentialMovingAverage" and params:
-        return ch(name, float(params[0]), *args)
-    if name in ("sequenceMatch", "sequenceCount") and params:
-        return ch(name, str(params[0]), *args)
-    if name in ("stochasticLinearRegression",
-                "stochasticLogisticRegression"):
-        from ..functions.aggregates import ml_regression
-        try:
-            return ml_regression(name == "stochasticLogisticRegression",
-                                 params, args)
-        except ValueError as e:
-            raise BuildError(str(e)) from None
-    if name == "count" and not args:
-        return F.count(F.lit(1))
-    if name == "sumMapFiltered" and params and len(args) == 2:
-        # sumMapFiltered(keys_to_keep)(k, v): drop non-listed keys from
-        # each row's arrays, then the plain sumMap per-group fold
-        keep = (params[0] if isinstance(params[0], Column)
-                else F.array(*[F.lit(v) for v in params[0]]))
-        pairs = F.zip_with(args[0], args[1],
-                           lambda k, v: F.struct(k.alias("k"),
-                                                 v.alias("v")))
-        flt = F.filter(pairs, lambda p: F.array_contains(keep, p.k))
-        return _map_agg("sumMap", F.transform(flt, lambda p: p.k),
-                        F.transform(flt, lambda p: p.v), df)
-    if name == "groupArrayInsertAt" and len(args) == 2 and not params:
-        # plain form fills gaps with the VALUE type's default
-        # (IDataType::getDefault) — resolved here where the schema is
-        from ..functions.aggregates import _group_array_insert_at
-        dtp = _probe_dtype(node.args[0], args[0], ctx, df)
-        d = _empty_set_default("", dtp) if dtp is not None else None
-        return _group_array_insert_at(d, args[0], args[1]) if d is not None \
-            else _group_array_insert_at(args[0], args[1])
-    if name in ("sumMap", "minMap", "maxMap") and len(args) == 2:
-        return _map_agg(name, args[0], args[1], df)
-    if name in ("sumMap", "minMap", "maxMap") and len(args) == 1:
-        # map-argument form: merge per-row maps, return a map
-        return _map_agg(name, F.map_keys(args[0]), F.map_values(args[0]),
-                        df, as_map=True)
-    widen = _widen_sum_target(name, args, df)
-    if (params and len(params) == 1
-            and name in ("uniqCombined", "uniqCombined64")):
-        # uniqCombined(HLL_precision)(x): the precision parameter tunes
-        # the sketch's memory/error trade-off (public signature); the
-        # HLL backing here uses its default rsd either way
-        params = []
-    if params and name in REGISTRY:
-        # parametric form f(p...)(args) without explicit dispatch above:
-        # params lead (CH convention). Only the names that DOCUMENT
-        # parameters may take this path — a variadic or
-        # arity-coinciding registry entry would otherwise silently
-        # absorb the params as extra arguments (uniqExact(1)(x) must be
-        # an error, not count_distinct(1, x)).
-        if name not in _GENERIC_PARAMETRIC_AGGS:
-            raise BuildError(
-                f"aggregate function {name} cannot have parameters")
-        out = ch(name, *params, *args)
-        return out.cast(widen) if widen else out
-    if name in REGISTRY:
-        out = ch(name, *args)
-        return out.cast(widen) if widen else out
-    if name.endswith("Resample") and params and len(params) >= 3:
-        # -Resample(start, end, step)(args..., key): one aggregate per
-        # bucket, expanded statically (params are literals) — stays a
-        # single pass with map-side combine per bucket
-        base = resolve_aggregate(name[: -len("Resample")])
-        if base is not None:
-            start, end, step = (int(params[0]), int(params[1]),
-                                int(params[2]))
-            key, vals = args[-1], args[:-1]
-            buckets = []
-            for lo in range(start, end, step):
-                cond = (key >= F.lit(lo)) & (key < F.lit(lo + step))
-                buckets.append(
-                    base(*[F.when(cond, v) for v in vals]) if vals
-                    else base(F.when(cond, F.lit(1))))
-            return F.array(*buckets)
-    if name in ("uniqState", "uniqHLL12State", "uniqCombinedState",
-                "uniqCombined64State") and args and df is not None:
-        # hll_sketch_agg accepts int/bigint/string/binary only: widen
-        # narrow integrals (CH UInt8/16 land as tinyint/smallint after
-        # the wrap-modulo lowering) and stringify other types
-        try:
-            dt = df.select(args[0].alias("__p")).schema[0] \
-                .dataType.simpleString()
-        except Exception:
-            dt = None
-        if dt in ("tinyint", "smallint", "boolean"):
-            args = [args[0].cast("bigint"), *args[1:]]
-        elif dt is not None and dt not in ("int", "bigint", "string",
-                                           "binary"):
-            args = [args[0].cast("string"), *args[1:]]
-    combined = resolve_aggregate(name)
-    if combined is not None:
-        try:
-            out = combined(*args)
-        except ValueError as e:
-            raise BuildError(str(e)) from None
-        return out.cast(widen) if widen else out
-    raise BuildError(f"unknown aggregate: {name}")
-
-
-_NAN_EMPTY_AGGS = _re_mod.compile(
-    r"(?i)^(avg|var|stddev|covar|corr|skew|kurt|quantile|median|entropy"
-    r"|rankCorr|mannWhitney|welchTTest|studentTTest)")
-
-
-def _empty_set_default(name: str, dtype) -> Column | None:
-    """CH empty-set result for a keyless aggregate: the result type's
-    default value (getLeastSupertype/IDataType::getDefault semantics for
-    aggregates without keys) — 0 / '' / false / epoch / [] — with the
-    moment family yielding nan (0/0 in Float64). -OrNull keeps NULL,
-    -State/-Merge keep their sketch carriers. None = leave as built."""
-    low = name.lower()
-    if any(low.endswith(sfx) for sfx in
-           ("ornull", "state", "merge", "mergestate")):
-        return None
-    dts = dtype.simpleString()
-    if _NAN_EMPTY_AGGS.match(name) and dts in ("double", "float"):
-        # cast: a bare double NaN literal would promote a Float32-typed
-        # aggregate (e.g. quantileTDigest) to double via when/otherwise
-        return F.lit(float("nan")).cast(dts)
-    if dts in ("tinyint", "smallint", "int", "bigint", "float",
-               "double") or dts.startswith("decimal"):
-        return F.lit(0).cast(dts)
-    if dts == "string":
-        return F.lit("")
-    if dts == "boolean":
-        return F.lit(False)
-    if dts == "date":
-        return F.to_date(F.lit("1970-01-01"))
-    if dts.startswith("timestamp"):
-        return F.to_timestamp(F.lit("1970-01-01 00:00:00")).cast(dts)
-    if dts.startswith("array<"):
-        return F.array().cast(dts)
-    if dts.startswith("struct<"):
-        # tuple results (sumMap, argMin tuple forms): per-field defaults
-        fields = []
-        for f in dtype.fields:
-            fd = _empty_set_default("", f.dataType)
-            if fd is None:
-                return None
-            fields.append(fd.alias(f.name))
-        return F.struct(*fields)
-    if dts.startswith("map<"):
-        return F.create_map().cast(dts)
-    return None
-
-
-_WIDEN_SUM_RX = _re_mod.compile(
-    r"(?:sum(?:Array|Distinct|ForEach|If|OrNull|OrDefault)+"
-    r"|groupArrayMovingSum)$")
-
-_INT_SPARK_TYPES = {"tinyint", "smallint", "int", "bigint", "boolean"}
-
-# CH's Timing/TDigest quantile sketches return Float32 and BFloat16
-# returns Float64 regardless of input type; Spark's percentile_approx
-# returns the INPUT type (int in → int out), so the lowering casts the
-# sketch results explicitly.
-_QUANTILE_F32 = {"quantileTDigest", "quantileTiming",
-                 "quantileTimingWeighted", "quantileTDigestWeighted",
-                 "medianTDigest", "medianTiming"}
-_QUANTILE_F32_ARR = {"quantilesTDigest", "quantilesTiming"}
-
-
-def _widen_sum_target(name: str, args: list, df: DataFrame | None
-                      ) -> str | None:
-    """Aggregate result-type fidelity casts (CH NumberTraits + the
-    quantile-sketch return types). Sum family: summing integers yields
-    Int64 (Array(Int64) for the array-valued forms), never Float64 —
-    the flat/array kernels in functions/aggregates.py compute in double
-    (exact below 2^53 — documented policy), so the lowering casts the
-    result back to the widened integer type when the argument is
-    integral; deltaSum follows the same policy. Timing/TDigest
-    quantiles → Float32, BFloat16 → Float64 (CH contract, independent
-    of input type). Returns the Spark cast target or None."""
-    if name in _QUANTILE_F32:
-        return "float"
-    if name in _QUANTILE_F32_ARR:
-        return "array<float>"
-    if name in ("quantileBFloat16", "medianBFloat16"):
-        return "double"
-    if df is None or not args:
-        return None
-    if name != "deltaSum" and not _WIDEN_SUM_RX.fullmatch(name):
-        return None
     try:
-        at = df.select(args[0]).schema[0].dataType.simpleString()
-    except Exception:
-        return None
-    elem = at[6:-1] if at.startswith("array<") and at.endswith(">") else at
-    if elem not in _INT_SPARK_TYPES:
-        return None
-    array_valued = name == "groupArrayMovingSum" or "ForEach" in name
-    return "array<bigint>" if array_valued else "bigint"
-
-
-def _map_agg(name: str, keys: Column, vals: Column,
-             df: DataFrame, as_map: bool = False) -> Column:
-    """sumMap/minMap/maxMap(keys, values): per-key reduction across the
-    group, returned as CH's tuple(sorted keys array, values array).
-
-    JVM-side shape: one map per row (map_from_arrays), collect_list per
-    group, then a map_zip_with fold — group-local memory is O(distinct
-    keys in group), no extra shuffle beyond the aggregation itself."""
-    if name == "sumMap":
-        # CH widens summed integer values to Int64 (NumberTraits), so a
-        # 32-bit input can't overflow mid-group
-        vt = df.select(vals.alias("__v")).schema[0].dataType.simpleString()
-        if vt.startswith("array<") and vt[6:-1] in _INT_SPARK_TYPES:
-            vals = vals.cast("array<bigint>")
-    op = {"sumMap": lambda a, b: a + b, "minMap": F.least,
-          "maxMap": F.greatest}[name]
-    # a single row may repeat keys (sumMap([1,2,1], [10,20,30])) — CH
-    # combines them; a direct map_from_arrays would throw
-    # DUPLICATED_MAP_KEY. Fold single-entry maps with the same op,
-    # entirely row-local.
-    per_row = F.aggregate(
-        F.zip_with(keys, vals,
-                   lambda a, b: F.map_from_arrays(F.array(a),
-                                                  F.array(b))),
-        F.map_from_arrays(F.slice(keys, 1, 0), F.slice(vals, 1, 0)),
-        lambda acc, m: F.map_zip_with(
-            acc, m, lambda _, a, b: F.when(a.isNull(), b)
-                                     .when(b.isNull(), a)
-                                     .otherwise(op(a, b))))
-    map_t = df.select(per_row.alias("__m")).schema[0].dataType.simpleString()
-    merged = F.aggregate(
-        F.collect_list(per_row),
-        F.lit(None).cast(map_t),
-        lambda acc, m: F.when(acc.isNull(), m).otherwise(
-            F.map_zip_with(acc, m,
-                           lambda _, a, b: F.when(a.isNull(), b)
-                                            .when(b.isNull(), a)
-                                            .otherwise(op(a, b)))))
-    if as_map:
-        return merged
-    ks = F.array_sort(F.map_keys(merged))
-    return F.struct(ks.alias("_1"),
-                    F.transform(ks, lambda k: F.element_at(merged, k))
-                    .alias("_2"))
+        fn = resolve_aggregate(name, params, arg_type)
+        out = fn(*args) if fn is not None else None
+    except BuildError:
+        raise
+    except ValueError as e:
+        raise BuildError(str(e)) from None
+    if out is None:
+        raise BuildError(f"unknown aggregate: {name}")
+    widen = widened_sum_type(name, arg_type)
+    return out.cast(widen) if widen else out
 
 
 def _slotify(node, ctx: Context):
@@ -4358,7 +4011,7 @@ def _lower_default_value(name, node, cols, ctx, df):
         raise BuildError(
             "defaultValueOfArgumentType: argument type unresolvable "
             "in lambda position — bind it to a lambda parameter")
-    d = _empty_set_default("", dt_obj)
+    d = empty_set_default("", dt_obj)
     return d if d is not None else F.lit(None).cast(dt_obj.simpleString())
 
 
@@ -4420,7 +4073,7 @@ def _lower_array_sum(name, node, cols, ctx, df):
     if name == "arraySum" and elem is not None:
         return typed_array_sum(cols[0], elem)
     out = REGISTRY[name](cols[0])
-    if elem in _INT_SPARK_TYPES:
+    if elem in INT_TYPES:
         return out.cast("bigint" if name == "arraySum" else "array<bigint>")
     return out
 
@@ -4663,7 +4316,7 @@ def _lower_empty_array_to_single(name, node, cols, ctx, df):
     if not isinstance(dt, ArrayType):
         return None
     elem = dt.elementType
-    d = _empty_set_default("", elem)
+    d = empty_set_default("", elem)
     if d is None:
         d = F.lit(None).cast(elem)
     return F.when(F.size(cols[0]) == 0,
@@ -4739,7 +4392,7 @@ def _lower_round(name, node, cols, ctx, df):
         away = info[0] != "f"
     else:
         dts = _probe_simple(node.args[0], cols[0], ctx, df)
-        away = dts.startswith("decimal") or dts in _INT_SPARK_TYPES
+        away = dts.startswith("decimal") or dts in INT_TYPES
     return (F.round(cols[0], int(n)) if away
             else F.bround(cols[0], int(n)))
 
@@ -5502,16 +5155,25 @@ def _enum_to_number(src: Column, pairs: list) -> Column:
 
 
 def _probe_dtype(arg, col, ctx: Context, df: DataFrame | None):
-    """Resolved Spark DataType of an argument expression, or None.
+    """Resolved Spark DataType of an argument expression, or None."""
+    f = _probe_field(arg, col, ctx, df)
+    return f.dataType if f is not None else None
+
+
+def _probe_field(arg, col, ctx: Context, df: DataFrame | None):
+    """Resolved Spark StructField (type and nullability) of an argument
+    expression, or None — the one schema probe of the builder.
 
     Frame columns resolve through a schema-only plan analysis (no job).
     Lambda parameters resolve through the type the enclosing HOF bound
     for them — df.select would throw AnalysisException there, since the
     param only exists inside the HOF. Composite expressions over lambda
     params stay None (callers keep their documented fallback)."""
+    from pyspark.sql import types as _T
     if _refs_lambda_param(arg, ctx):
         if isinstance(arg, Identifier) and len(arg.parts) == 1:
-            return ctx.lambda_param_types.get(arg.name)
+            dt = ctx.lambda_param_types.get(arg.name)
+            return _T.StructField(arg.name, dt) if dt is not None else None
         return None
     if df is None:
         return None
@@ -5525,37 +5187,40 @@ def _probe_dtype(arg, col, ctx: Context, df: DataFrame | None):
         nm = arg.name
         if df.columns.count(nm) == 1:
             try:
-                return df.schema[nm].dataType
+                return df.schema[nm]
             except Exception:
                 pass
     if isinstance(arg, Literal):
-        from pyspark.sql import types as _T
         v = arg.value
+        dt = None
         if isinstance(v, bool):
-            return _T.BooleanType()
-        if isinstance(v, int):
+            dt = _T.BooleanType()
+        elif isinstance(v, int):
             if -(1 << 31) <= v < (1 << 31):
-                return _T.IntegerType()
-            if -(1 << 63) <= v < (1 << 64):
-                return _T.LongType()     # UInt64 carries as Long (§1.2)
-            return _T.DecimalType(38, 0)
-        if isinstance(v, float):
-            return _T.DoubleType()
-        if isinstance(v, str):
-            return _T.StringType()
+                dt = _T.IntegerType()
+            elif -(1 << 63) <= v < (1 << 64):
+                dt = _T.LongType()     # UInt64 carries as Long (§1.2)
+            else:
+                dt = _T.DecimalType(38, 0)
+        elif isinstance(v, float):
+            dt = _T.DoubleType()
+        elif isinstance(v, str):
+            dt = _T.StringType()
+        if dt is not None:
+            return _T.StructField("lit", dt, nullable=False)
     key = (id(df), _ast_key(arg))
     hit = _PROBE_CACHE.get(key)
     if hit is not None and hit[0] is df:
         return hit[1]
     try:
-        dt = df.select(col).schema[0].dataType
+        f = df.select(col).schema[0]
     except Exception:
-        dt = None
+        f = None
     if len(_PROBE_CACHE) > 4096:
         _PROBE_CACHE.clear()
     # the value keeps df alive, so its id cannot be reused while cached
-    _PROBE_CACHE[key] = (df, dt)
-    return dt
+    _PROBE_CACHE[key] = (df, f)
+    return f
 
 
 _PROBE_CACHE: dict = {}

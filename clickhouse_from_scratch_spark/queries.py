@@ -1837,6 +1837,21 @@ def sql_asof_strict(spark, sf_dir):
     """)
 
 
+def _memory_session(spark, sf_dir):
+    """A ChSession (temporary warehouse) whose default database holds
+    every catalog table as a Memory table."""
+    from .catalog import load_all
+    from .ddl import ChSession, TableMeta
+
+    s = ChSession(spark)
+    for name, df in load_all(spark, sf_dir).items():
+        s.databases["default"][name] = TableMeta(
+            name=name, database="default",
+            columns=[(f.name, f.dataType.simpleString())
+                     for f in df.schema.fields], memory_df=df)
+    return s
+
+
 @query("sql_udf_macro", oracle="""
 SELECT o_orderkey,
        round(o_totalprice * 1.1, 4) AS taxed,
@@ -1847,15 +1862,7 @@ def sql_udf_macro(spark, sf_dir):
     """CREATE FUNCTION SQL lambda UDFs through a full session: macro
     expansion into JVM expressions (ddl.ChSession + builder._substitute),
     composing one UDF inside another."""
-    from .catalog import load_all
-    from .ddl import ChSession, TableMeta
-
-    s = ChSession(spark)
-    for name, df in load_all(spark, sf_dir).items():
-        s.databases["default"][name] = TableMeta(
-            name=name, database="default",
-            columns=[(f.name, f.dataType.simpleString())
-                     for f in df.schema.fields], memory_df=df)
+    s = _memory_session(spark, sf_dir)
     s.execute("CREATE FUNCTION with_tax AS (p, rate) -> p * (1 + rate)")
     s.execute("CREATE FUNCTION std_tax AS p -> with_tax(p, 0.1)")
     return s.execute("""
@@ -1875,15 +1882,7 @@ def sql_final_summing(spark, sf_dir):
     """SummingMergeTree FINAL (operators/final.py final_summing): one
     row per sorting key with summable columns summed — the oracle
     states the same collapse as a plain GROUP BY SUM."""
-    from .catalog import load_all
-    from .ddl import ChSession, TableMeta
-
-    s = ChSession(spark)
-    for name, df in load_all(spark, sf_dir).items():
-        s.databases["default"][name] = TableMeta(
-            name=name, database="default",
-            columns=[(f.name, f.dataType.simpleString())
-                     for f in df.schema.fields], memory_df=df)
+    s = _memory_session(spark, sf_dir)
     s.execute("CREATE TABLE sum_t (k UInt64, qty Float64) "
               "ENGINE = SummingMergeTree ORDER BY k")
     s.execute("INSERT INTO sum_t SELECT l_orderkey AS k, "
@@ -2022,15 +2021,7 @@ def sql_dict_get(spark, sf_dir):
     nation table once into a RAM map (bounded by contract — every CH
     layout is memory-resident) and each dictGet is a map lookup, the
     broadcast-hash analogue of the LEFT JOIN the oracle states."""
-    from .catalog import load_all
-    from .ddl import ChSession, TableMeta
-
-    s = ChSession(spark)
-    for name, df in load_all(spark, sf_dir).items():
-        s.databases["default"][name] = TableMeta(
-            name=name, database="default",
-            columns=[(f.name, f.dataType.simpleString())
-                     for f in df.schema.fields], memory_df=df)
+    s = _memory_session(spark, sf_dir)
     s.execute("""
         CREATE DICTIONARY nat_dict (
             n_nationkey UInt64, n_name String DEFAULT '?')

@@ -19,6 +19,7 @@ a statement. ``exit``, ``quit`` or Ctrl-D leave the loop.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -108,17 +109,17 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--sf-dir", default=None,
                     help="parquet dir to pre-register as tables "
                          "(e.g. /root/testdata/sf0.001)")
-    ap.add_argument("--warehouse", default=None)
+    ap.add_argument("--warehouse",
+                    default=os.path.join(os.getcwd(), ".chspark_warehouse"),
+                    help="table data directory, kept across runs "
+                         "(default: ./.chspark_warehouse)")
     args = ap.parse_args(argv)
 
     spark = get_spark(app_name="chspark-repl")
     spark.sparkContext.setLogLevel("ERROR")
     session = ChSession(spark, warehouse=args.warehouse)
     if args.sf_dir:
-        import os
-
         from .catalog import load_all
-
         from .ddl import TableMeta
         from .sources.formats import _CH_TYPE
 
