@@ -60,14 +60,28 @@ def _quantile_exact(x, q) -> Column:
     interpolation on even-sized groups (e.g. [10,20,30,40] level 0.5 →
     30, not 25). Buffers the group's values — exact by definition, same
     cost class as CH's own exact quantile."""
-    arr = F.array_sort(F.collect_list(_c(x)))
+    return _exact_pick(F.array_sort(F.collect_list(_c(x))),
+                       "quantileExact", q)
+
+
+def _exact_rank(name: str, q, n: Column) -> Column:
+    """The 1-based index among ``n`` sorted values that quantileExact,
+    quantileExactLow or quantileExactHigh picks at ``level=q``."""
     q = float(q)
+    if name == "quantileExactLow":
+        return (F.floor(F.lit(q) * (n - 1)) + 1).cast("int")
+    if name == "quantileExactHigh":
+        return (F.ceil(F.lit(q) * (n - 1)) + 1).cast("int")
     if q >= 1.0:
-        idx = F.size(arr)
-    else:
-        idx = F.least(F.floor(F.lit(q) * F.size(arr)).cast("int") + 1,
-                      F.size(arr))
-    return F.try_element_at(arr, F.greatest(idx, F.lit(1)))
+        return n
+    return F.least(F.floor(F.lit(q) * n).cast("int") + 1, n)
+
+
+def _exact_pick(sorted_arr: Column, name: str, q) -> Column:
+    """The :func:`_exact_rank` element of a sorted NULL-free array, NULL
+    when it is empty — the row kernels and their -Array forms share it."""
+    idx = _exact_rank(name, q, F.size(sorted_arr))
+    return F.try_element_at(sorted_arr, F.greatest(idx, F.lit(1)))
 
 
 def _quantile_exact_exclusive(x, q) -> Column:
@@ -555,10 +569,10 @@ AGGREGATES.update({
     # exact lower/upper-bound selection (no interpolation)
     "quantileExactLow": lambda q, x: F.element_at(
         F.array_sort(F.collect_list(_c(x))),
-        (F.floor(F.lit(q) * (F.count(_c(x)) - 1)) + 1).cast("int")),
+        _exact_rank("quantileExactLow", q, F.count(_c(x)))),
     "quantileExactHigh": lambda q, x: F.element_at(
         F.array_sort(F.collect_list(_c(x))),
-        (F.ceil(F.lit(q) * (F.count(_c(x)) - 1)) + 1).cast("int")),
+        _exact_rank("quantileExactHigh", q, F.count(_c(x)))),
     "medianExact": lambda x: _quantile_exact(x, 0.5),
     "medianTDigest": lambda x: F.percentile_approx(
         _c(x), F.lit(0.5)).cast("float"),
@@ -895,14 +909,27 @@ def _quantile_flat_exclusive(flat: Column, q: float) -> Column:
             .otherwise(v_lo + (h - lo.cast("double")) * (v_hi - v_lo))
 
 
+# per-array spellings that pick like their row kernel -> that kernel
+_EXACT_PICKS = {"quantileExact": "quantileExact",
+                "quantilesExact": "quantileExact",
+                "quantileExactLow": "quantileExactLow",
+                "quantileExactHigh": "quantileExactHigh"}
+
+
 def reduce_array(name: str, params, flat: Column,
                  sfx: str = "Array") -> Column:
     """Apply aggregate ``name`` with its ``params`` to the elements of one
     array: the kernel behind -Array, -Distinct, arrayReduce and
-    arrayReduceInRanges. Parametric quantiles interpolate exactly (R-6
-    for the Exclusive names, R-7 otherwise); -OrNull, -OrDefault and
-    -Array stacked on the name wrap the inner reduction."""
+    arrayReduceInRanges. quantileExact, quantilesExact and
+    quantileExactLow/High pick their row kernels' element; the other
+    parametric quantiles interpolate exactly (R-6 for the Exclusive
+    names, R-7 otherwise); -OrNull, -OrDefault and -Array stacked on the
+    name wrap the inner reduction."""
     from .registry import REGISTRY as R
+    if name in _EXACT_PICKS and params:
+        d = F.array_sort(F.filter(flat, lambda v: v.isNotNull()))
+        picks = [_exact_pick(d, _EXACT_PICKS[name], q) for q in params]
+        return F.array(*picks) if name == "quantilesExact" else picks[0]
     if name.startswith(("quantile", "median")) and (params
                                                     or name == "median"):
         pick = (_quantile_flat_exclusive if "Exclusive" in name

@@ -3,17 +3,20 @@
 Scale notes (the whole point of these designs):
 - Exact dedup: hash-groupBy on a 64-bit content hash — one shuffle whose
   keys are uniform by construction (no skew), map-side combine applies.
-- MinHash+LSH: per-row signature computation is embarrassingly parallel
-  (JVM expression or Arrow/numpy kernel). Candidate generation explodes
+- MinHash+LSH: per-row signature computation is embarrassingly parallel.
+  Shingles are hashed JVM-side; the K-permutation min is ONE whole-batch
+  numpy kernel per Arrow batch at every input size (no row-at-a-time
+  Python, no per-token lambda calls). Candidate generation explodes
   b band-keys per doc and groups on the band key: shuffle volume is
   b×docs instead of docs², and bucket sizes are bounded by the hash
   space. This is the only all-pairs-avoiding strategy that survives
   100 TB.
-- SimHash: signature via per-bit weighted majority over token hashes;
-  near-dup = identical signature (or pigeonhole banding for hamming<=k
-  candidates).
+- SimHash: signature via per-bit weighted majority over token hashes —
+  tokens hashed JVM-side, the vote and bit packing one numpy kernel shared
+  by the xxhash64 signature and its md5 oracle twin; near-dup = identical
+  signature (or pigeonhole banding for hamming<=k candidates).
 
-Every banding path — MinHash (JVM and Arrow), its md5 oracle twin,
+Every banding path — MinHash, its md5 oracle twin,
 SimHash hamming and hyperplane LSH (``similarity.lsh_near_dup_pairs``)
 — shares ONE kernel, :func:`_banded_pairs_sql`: the caller supplies the
 select that explodes each document into (band, bucket) rows, the kernel
@@ -244,125 +247,140 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
                  F.count(F.lit(1)).alias("dup_count")))
 
 
-# Input-size threshold for the automatic MinHash kernel choice
-# (use_arrow=None). Measured r14 crossover on the declared kernel:
-#   sf0.1 (0.6 MB docs): JVM 0.28 s vs Arrow 0.31 s signature pass —
-#     a wash, and the JVM kernel is steadier under co-tenant load;
-#   sf1 (5.7 MB docs):   JVM 1.60 s vs Arrow 0.69 s (2.3×), full LSH
-#     candidates 2.27 → 1.58 s — the per-worker numpy import and Arrow
-#     batch setup amortize, and the K×N multiply-mod-min is exactly the
-#     shape numpy wins at.
-# Between those points the curves cross near a few MB; 4 MiB keeps every
-# bench/gate SF on the steady JVM path and every at-scale corpus on the
-# vectorized one. Results are bit-equal either way (pinned in
-# tests/test_pipeline.py::test_minhash_fused_build_matches_arrow_kernel).
-_ARROW_INPUT_THRESHOLD = 4 * 1024 * 1024
+# Values per numpy slice of an Arrow batch: every lane temporary of the
+# signature kernels is one slice long (8 MiB), whatever the batch's row
+# count and document lengths.
+_SLICE_VALUES = 1 << 20
 
 
-def _auto_arrow(rel: DataFrame) -> bool:
-    """use_arrow=None resolver: Arrow for inputs past the measured
-    crossover, JVM below it (or when the size is unknowable). ``rel``
-    is the projection the kernel reads — (id, text), the relation the
-    crossover was measured on — so wide extra columns of a documents
-    table do not flip small inputs to the Arrow kernel."""
-    try:
-        size = int(rel._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return False
-    if size >= (1 << 60):
-        # stats-less relations (parallelized test data, RDD-backed
-        # plans) report spark.sql.defaultSizeInBytes = Long.MaxValue —
-        # that is "unknown", not "huge": keep the steady JVM kernel
-        return False
-    return size >= _ARROW_INPUT_THRESHOLD
+def _segment_lanes(lanes: int, lane, reduce, max_values: int = _SLICE_VALUES):
+    """Whole-batch segmented reduction over a ``list<int64>`` Arrow array.
+
+    Returns ``run(arr) -> (out, lengths)``: ``out[i, k]`` is ``reduce``
+    over ``lane(values of row i, k, buf)`` as uint64 (int64 values
+    are reinterpreted, two's complement), ``lengths`` the per-row value
+    counts, NULL rows counting 0. Rows without values keep ``out`` 0.
+
+    The values are flattened once and cut into row slices of at most
+    ``max_values`` values (one longer row is a slice of its own); per
+    slice and lane, ``reduce.reduceat`` over the start offsets of the
+    non-empty rows folds each row's segment — no Python per row and no
+    values × lanes matrix. Every kernel is built from nested functions,
+    which cloudpickle ships by value: a worker runs them without
+    importing this package.
+    """
+    import numpy as np
+
+    def run(arr):
+        lengths = (arr.value_lengths().fill_null(0)
+                   .to_numpy(zero_copy_only=False).astype(np.int64))
+        values = (arr.flatten().to_numpy(zero_copy_only=False)
+                  .astype(np.int64, copy=False).view(np.uint64))
+        ends = np.cumsum(lengths)
+        out = np.zeros((len(lengths), lanes), dtype=np.uint64)
+        lo = 0
+        while lo < len(lengths):
+            v0 = int(ends[lo] - lengths[lo])
+            hi = max(lo + 1, int(np.searchsorted(ends, v0 + max_values,
+                                                 side="right")))
+            rows = np.flatnonzero(lengths[lo:hi])
+            if rows.size:
+                vals = values[v0:ends[hi - 1]]
+                starts = ends[lo:hi][rows] - lengths[lo:hi][rows] - v0
+                buf = np.empty_like(vals)
+                for k in range(lanes):
+                    out[lo + rows, k] = reduce.reduceat(
+                        lane(vals, k, buf), starts)
+            lo = hi
+        return out, lengths
+
+    return run
+
+
+def _minhash_kernel(num_hashes: int, max_values: int = _SLICE_VALUES):
+    """The K-permutation MinHash of a ``list<int64>`` shingle-hash Arrow
+    array: lane k of a row is min over its hashes h of
+    ``(h·a_k + b_k) mod M``, computed in uint64 (the product wraps mod
+    2^64 before the mod M). Empty and NULL rows get the sentinel M in
+    every lane."""
+    import numpy as np
+    import pyarrow as pa
+
+    a, b = np.array(_perm_params(num_hashes), dtype=np.uint64).T
+    m = np.uint64(_MERSENNE)
+
+    def lane(h, k, out):
+        np.multiply(h, a[k], out=out)
+        np.add(out, b[k], out=out)
+        return np.remainder(out, m, out=out)
+
+    lanes = _segment_lanes(num_hashes, lane, np.minimum, max_values)
+
+    def kernel(arr):
+        mins, lengths = lanes(arr)
+        mins[lengths == 0] = m
+        offsets = np.arange(0, (len(arr) + 1) * num_hashes, num_hashes,
+                            dtype=np.int32)
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(mins.reshape(-1).view(np.int64)))
+
+    return kernel
+
+
+def _simhash_kernel(nbits: int, max_values: int = _SLICE_VALUES):
+    """The SimHash vote of a ``list<int64>`` token-hash Arrow array: bit
+    b of a row's signature is 1 iff the sum over its tokens of
+    ``2·bit(h, b) − 1`` is positive, i.e. iff more than half of the
+    tokens have bit b set. Bits ``nbits`` and up are 0; an empty row
+    signs 0 and a NULL row NULL."""
+    import numpy as np
+    import pyarrow as pa
+
+    one = np.uint64(1)
+    weights = one << np.arange(nbits, dtype=np.uint64)
+
+    def lane(h, bit, out):
+        np.right_shift(h, np.uint64(bit), out=out)
+        return np.bitwise_and(out, one, out=out)
+
+    lanes = _segment_lanes(nbits, lane, np.add, max_values)
+
+    def kernel(arr):
+        ones, lengths = lanes(arr)
+        bits = 2 * ones > lengths.astype(np.uint64)[:, None]
+        sig = np.bitwise_or.reduce(bits * weights, axis=1)
+        return pa.array(sig.view(np.int64),
+                        mask=arr.is_null().to_numpy(zero_copy_only=False))
+
+    return kernel
+
+
+def _arrow_kernel(kernel, return_type: str):
+    """Scalar Arrow UDF over one of the signature kernels (the hints must
+    be real classes: this module postpones annotations)."""
+    import pyarrow as pa
+    kernel.__annotations__ = {"arr": pa.Array, "return": pa.Array}
+    return F.arrow_udf(kernel, return_type)
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       num_hashes: int = 64, shingle_n: int = 3,
-                       use_arrow: bool | None = True) -> DataFrame:
+                       num_hashes: int = 64,
+                       shingle_n: int = 3) -> DataFrame:
     """Append ``signature: array<long>`` — K-permutation MinHash.
 
-    Shingle hashing stays JVM-side; the K-permutation min is a vectorized
-    Arrow-batched numpy kernel (measured 2.3× faster than the equivalent
-    zip_with/aggregate expression at sf1 — the K×N multiply-mod-min is
-    exactly the shape numpy wins at). ``use_arrow=False`` selects the
-    pure-JVM expression path; ``None`` picks by input size (see
-    ``_ARROW_INPUT_THRESHOLD``). Signatures are bit-equal either way.
+    Shingle hashing stays JVM-side; the K-permutation min is one
+    whole-batch numpy kernel per Arrow batch (:func:`_minhash_kernel`).
+    Empty and NULL texts sign as the all-sentinel array.
     """
-    if use_arrow is None:
-        use_arrow = _auto_arrow(docs.select(text_col))
     docs = _ensure_parallelism(docs)
-    sh = shingles(text_col, shingle_n)
-    docs = docs.withColumn("__shingles", sh)
-    if use_arrow:
-        sig = _minhash_arrow_udf(num_hashes)(F.col("__shingles"))
-    else:
-        sig = _minhash_jvm_expr(num_hashes)
-    return docs.withColumn("signature", sig).drop("__shingles")
-
-
-def _minhash_arrow_udf(num_hashes: int):
-    # imports at closure level keep pipeline importable without pandas;
-    # the type hints must be real classes (module uses postponed
-    # annotations, so build the hints explicitly via __annotations__)
-    import numpy as np
-    import pandas as pd
-
-    params = _perm_params(num_hashes)
-    sentinel = [int(_MERSENNE)] * num_hashes
-
-    def minhash_np(sh):
-        a = np.array([p[0] for p in params], dtype=np.uint64)
-        b = np.array([p[1] for p in params], dtype=np.uint64)
-        m = np.uint64(_MERSENNE)
-        out = []
-        for arr in sh:
-            if arr is None or len(arr) == 0:
-                out.append(sentinel)
-                continue
-            h = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-            with np.errstate(over="ignore"):
-                vals = (h[:, None] * a[None, :] + b[None, :]) % m
-            out.append([int(v) for v in vals.min(axis=0)])
-        return pd.Series(out)
-
-    minhash_np.__annotations__ = {"sh": pd.Series, "return": pd.Series}
-    return F.pandas_udf(minhash_np, "array<long>")
-
-
-def _minhash_sql(shingles_sql: str, num_hashes: int) -> str:
-    """SQL-string K-permutation MinHash over a shingle-array expression:
-    one aggregate pass, K-wide running-min accumulator merged with
-    zip_with (K separate array_min(transform(...)) would traverse the
-    array K times and blow up codegen).
-
-    ONE SQL string: the K-struct (a, b) literal array built via
-    per-struct ``F.lit``/``F.struct`` calls costs ~400 py4j round trips
-    per plan build (~0.35 s of pure driver time per bench pass); the
-    string parses JVM-side in one call to the identical Catalyst tree
-    (the signatures were checked bit-equal against the per-struct build).
-    """
-    params = _perm_params(num_hashes)
-    ab_sql = "array(" + ",".join(
-        f"named_struct('a', {a}L, 'b', {b}L)" for a, b in params) + ")"
-    return (
-        f"aggregate({shingles_sql}, array_repeat({_MERSENNE}L, {num_hashes}), "
-        f"(acc, h) -> zip_with(acc, {ab_sql}, "
-        f"(cur, p) -> least(cur, pmod(h * p.a + p.b, {_MERSENNE}L))), "
-        "x -> x)")
-
-
-def _minhash_jvm_expr(num_hashes: int) -> Column:
-    """Column form of :func:`_minhash_sql` over a ``__shingles`` column."""
-    return F.expr(_minhash_sql("__shingles", num_hashes))
+    sig = _arrow_kernel(_minhash_kernel(num_hashes), "array<long>")
+    return docs.withColumn("signature", sig(shingles(text_col, shingle_n)))
 
 
 def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_hashes: int = 64,
                            bands: int = 16, shingle_n: int = 3,
-                           max_bucket_size: int = 10000,
-                           use_arrow: bool | None = True) -> DataFrame:
+                           max_bucket_size: int = 10000) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding.
 
     Signature split into ``bands`` bands of r = K/bands rows; docs sharing
@@ -375,36 +393,18 @@ def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
     degenerate buckets (boilerplate-identical shards) whose quadratic
     pair fan-out would dominate — standard LSH-dedup guard at 100 TB.
     """
-    docs = docs.select(id_col, text_col)
-    if use_arrow is None:
-        use_arrow = _auto_arrow(docs)
     r = num_hashes // bands
-
+    docs = minhash_signatures(docs.select(id_col, text_col), text_col,
+                              num_hashes, shingle_n)
     # Band bucket = xxhash64 over the band index + the band's r signature
     # longs DIRECTLY (multi-arg xxhash64): casting every signature long
     # to string and concat_ws-joining them paid O(r) string allocations
     # per band per doc just to feed a hash (guide §1.2 per-task work).
     # ``inline`` explodes the band structs straight into (band, bucket)
     # columns inside the kernel's banded select.
-    def band_structs(s: str) -> str:
-        args = ", ".join(f"{s}[b*{r}+{i}]" for i in range(r))
-        return (f"transform(sequence(0, {bands - 1}), b -> named_struct("
-                f"'band', b, 'bucket', xxhash64(b, {args})))")
-
-    if use_arrow:
-        docs = minhash_signatures(docs, text_col, num_hashes, shingle_n,
-                                  use_arrow=True)
-        bands_sql = band_structs("signature")
-    else:
-        # Pure-JVM kernel: shingles -> signature -> band structs FUSED
-        # into one expression, analyzed once. The signature
-        # subexpression is let-bound (1-element transform) so it is
-        # evaluated ONCE per row.
-        docs = _ensure_parallelism(docs)
-        sig_sql = _minhash_sql(_shingles_sql(_q(text_col), shingle_n),
-                               num_hashes)
-        bands_sql = (f"element_at(transform(array({sig_sql}), "
-                     f"s -> {band_structs('s')}), 1)")
+    args = ", ".join(f"signature[b*{r}+{i}]" for i in range(r))
+    bands_sql = (f"transform(sequence(0, {bands - 1}), b -> named_struct("
+                 f"'band', b, 'bucket', xxhash64(b, {args})))")
     return _banded_pairs(docs, [_q(id_col), f"inline({bands_sql})"],
                          id_col, max_bucket_size)
 
@@ -412,15 +412,14 @@ def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
 def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", threshold: float = 0.6,
                         num_hashes: int = 64, bands: int = 16,
-                        shingle_n: int = 3,
-                        use_arrow: bool | None = True) -> DataFrame:
+                        shingle_n: int = 3) -> DataFrame:
     """Exact n-gram Jaccard over LSH candidates (verify step).
 
     LSH prunes to near-linear candidates, then the exact Jaccard is
     array_intersect/array_union on shingle-hash arrays — still JVM-side.
     """
     cands = minhash_lsh_candidates(docs, text_col, id_col, num_hashes,
-                                   bands, shingle_n, use_arrow=use_arrow)
+                                   bands, shingle_n)
     sh = docs.select(F.col(id_col), shingles(text_col, shingle_n).alias("sh"))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
@@ -456,56 +455,40 @@ def ngram_jaccard_exact_pairs(docs: DataFrame, text_col: str = "text",
             .filter(F.col("jaccard") >= threshold))
 
 
-# SimHash token hash -> (per-token Spark hash, bit b of token hash h as
-# a 0/1 SQL expression, signature width). "md5" is the oracle twin: md5
-# exists in both engines, so DuckDB recomputes the exact signature; bit
-# b of a token is bit b%4 of hex digit b//4.
-_SIMHASH_TOKEN_BITS = {
-    "xxhash64": (F.xxhash64, "((h >> b) & 1L)", 64),
-    "md5": (F.md5,
-            "(shiftright(cast(conv(substring("
-            "h, cast(b div 4 as int) + 1, 1), 16, 10) as int), "
-            "cast(b % 4 as int)) & 1)", 32),
+# SimHash token hash -> (per-token Spark hash as a long, signature
+# width). "md5" is the oracle twin: md5 exists in both engines, so DuckDB
+# recomputes the exact signature. Its token hash reverses the first 8 hex
+# digits before parsing them, which puts bit b%4 of hex digit b//4 at
+# bit b.
+_SIMHASH_TOKEN_HASH = {
+    "xxhash64": (F.xxhash64, 64),
+    "md5": (lambda w: F.conv(F.reverse(F.substring(F.md5(w), 1, 8)),
+                             16, 10).cast("bigint"), 32),
 }
 
 
 def simhash_signatures(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id",
                        hash: str = "xxhash64") -> DataFrame:
-    """SimHash over word hashes, fully JVM-side: 64-bit over xxhash64
-    token hashes, or the deterministic 32-bit md5 twin the DuckDB
-    oracle gate recomputes (``hash="md5"``).
+    """SimHash over word hashes: 64-bit over xxhash64 token hashes, or
+    the deterministic 32-bit md5 twin the DuckDB oracle gate recomputes
+    (``hash="md5"``).
 
-    For each bit position, majority vote of token-hash bits:
-    bit_b = 1 iff sum over tokens of (2*bit(h,b) - 1) > 0.
-    Expressed as one aggregate over the token-hash array per bit, folded
-    into the signature with shiftleft/bitwise-or — no Python, no explode.
+    Tokens are hashed JVM-side; the per-bit majority vote (bit_b = 1 iff
+    sum over tokens of (2*bit(h,b) - 1) > 0) and the bit packing are one
+    whole-batch numpy kernel (:func:`_simhash_kernel`) shared by both
+    hashes, so the md5 oracle pins the production vote.
     """
-    if hash not in _SIMHASH_TOKEN_BITS:
+    if hash not in _SIMHASH_TOKEN_HASH:
         raise ValueError(f"simhash_signatures: unknown hash {hash!r}")
-    token_hash, bit, nbits = _SIMHASH_TOKEN_BITS[hash]
+    token_hash, nbits = _SIMHASH_TOKEN_HASH[hash]
     docs = _ensure_parallelism(docs)
     words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
                      lambda w: w != "")
-    docs = docs.withColumn("__h",
-                           F.transform(words, lambda w: token_hash(w)))
-
-    # ONE aggregate pass building an nbits-wide vote vector, then one
-    # fold packing sign bits — the previous per-bit spelling ran nbits
-    # separate aggregates (nbits traversals of the token-hash array per
-    # row and an nbits-times bigger codegen tree). Exactly the same
-    # votes/bits (integer ops only); r13 optimization, guide §1.2.
-    sig = F.expr(
-        "aggregate("
-        "  zip_with("
-        f"    aggregate(__h, array_repeat(0L, {nbits}),"
-        f"      (acc, h) -> zip_with(acc, sequence(0, {nbits - 1}),"
-        f"        (a, b) -> a + {bit} * 2L - 1L),"
-        "      x -> x),"
-        f"    sequence(0, {nbits - 1}),"
-        "    (v, b) -> IF(v > 0L, shiftleft(1L, b), 0L)),"
-        "  0L, (acc, x) -> acc | x, x -> x)")
-    return docs.select(F.col(id_col), sig.alias("simhash"))
+    sig = _arrow_kernel(_simhash_kernel(nbits), "long")
+    return docs.select(F.col(id_col),
+                       sig(F.transform(words, lambda w: token_hash(w)))
+                       .alias("simhash"))
 
 
 def _md5_sig_sql(text_col: str, num_hashes: int) -> str:

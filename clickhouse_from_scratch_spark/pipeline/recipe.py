@@ -96,10 +96,9 @@ def prepare_training_data(docs: DataFrame, text_col: str = "text",
         canon = fp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
         df = df.join(canon.select(id_col), id_col)
     elif near_dup == "minhash":
-        # LSH candidates + exact-Jaccard verify, JVM minhash kernel
+        # LSH candidates + exact-Jaccard verify
         pairs = ngram_jaccard_pairs(df, text_col=text_col, id_col=id_col,
-                                    threshold=jaccard_threshold,
-                                    use_arrow=False)
+                                    threshold=jaccard_threshold)
         df = dedup_keep_canonical(df, pairs, id_col=id_col)
     elif near_dup is not None:
         raise ValueError(f"near_dup={near_dup!r}: use 'exact', "

@@ -1226,17 +1226,16 @@ def dedup_exact_q(spark, sf_dir):
 def dedup_minhash_q(spark, sf_dir):
     """MinHash+LSH near-dup candidate pairs (shingle→minhash→band→join).
 
-    Kernel choice is automatic by input size (use_arrow=None, r14):
-    below the measured ~4 MiB crossover the steady pure-JVM expression
-    kernel runs (all bench/gate SFs land here — sf0.1 signature pass
-    JVM 0.28 s vs Arrow 0.31 s, and the JVM path has no worker-import
-    jitter); above it the vectorized Arrow/numpy kernel wins (sf1:
-    0.69 s vs 1.60 s signature, 1.58 s vs 2.27 s end-to-end). The two
-    kernels are bit-equal (pinned in tests), so the declared output
-    never depends on the choice.
+    One signature kernel: JVM shingle hashes, then a whole-batch numpy
+    K-permutation min per Arrow batch (pipeline/dedup.py
+    ``_minhash_kernel``) — the signatures ``dedupMinHash`` computes.
+    Contract note: until the JVM twin was removed this query ran a JVM
+    kernel below 4 MiB of input whose signed ``pmod`` differs from the
+    unsigned mod whenever ``h·a + b`` wraps negative; the candidate
+    pairs at sf0.001–sf0.1 are unchanged by the switch.
     """
     docs = _t(spark, sf_dir, "documents")
-    return (minhash_lsh_candidates(docs, use_arrow=None)
+    return (minhash_lsh_candidates(docs)
             .orderBy("id_a", "id_b"))
 
 

@@ -12,7 +12,7 @@ an ingest pipeline wants duplicates dropped AS data arrives:
   fine for bounded backfills, documented misuse otherwise).
 - ``streaming_minhash_signatures`` — per-row MinHash signatures on a
   stream (stateless: shingle + K-perm-min are pure projections, so the
-  same JVM kernel as batch applies unchanged). Banded LSH *candidate
+  batch kernel applies unchanged). Banded LSH *candidate
   pairs* need a corpus-wide shuffle and belong to the batch layer: the
   standard 100 TB ingest shape is signatures-on-ingest (here), then a
   periodic batch ``minhash_lsh_candidates`` over the signed corpus.
@@ -47,9 +47,8 @@ def streaming_minhash_signatures(stream: DataFrame,
                                  text_col: str = "text",
                                  num_hashes: int = 64,
                                  shingle_n: int = 3) -> DataFrame:
-    """Append MinHash signatures to a stream (stateless projection;
-    identical signatures to the batch kernel so downstream batch LSH
-    can band them directly)."""
+    """Append MinHash signatures to a stream (stateless projection; it
+    IS the batch kernel, so downstream batch LSH can band them
+    directly)."""
     from ..pipeline.dedup import minhash_signatures
-    return minhash_signatures(stream, text_col, num_hashes, shingle_n,
-                              use_arrow=False)
+    return minhash_signatures(stream, text_col, num_hashes, shingle_n)

@@ -74,6 +74,25 @@ def test_array_reduce_equals_array_combinator(spark, spelled, array_form):
     assert reduced is not None and reduced == aggregated
 
 
+@pytest.mark.parametrize("spelled, picked", [
+    ("quantileExact(0.5)", 30),
+    ("quantilesExact(0.25, 0.5, 1)", [20, 30, 40]),
+    ("quantileExactLow(0.5)", 20),
+    ("quantileExactHigh(0.5)", 30),
+])
+def test_exact_quantile_array_forms_pick_like_row_kernel(spark, spelled,
+                                                          picked):
+    # no interpolation in any spelling: [10, 20, 30, 40] at 0.5 is 30
+    # (quantileExact's sorted element at floor(level·n)), never 25
+    name, params = spelled.split("(", 1)
+    arr = "[10, 40, 20, 30]"
+    row, = one(spark, f"SELECT {spelled}(x) FROM "
+               f"(SELECT arrayJoin({arr}) AS x)")
+    array_form, reduced = one(spark, f"SELECT {name}Array({params}({arr}), "
+                              f"arrayReduce('{spelled}', {arr})")
+    assert row == array_form == reduced == picked
+
+
 def test_array_reduce_base_names_match_case_insensitively(spark):
     assert one(spark, "SELECT arrayReduce('SUM', [1, 2]), "
                "arrayReduce('anylast', [7, 8]), "

@@ -63,53 +63,111 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert (0, 3) not in pairs and (3, 4) not in pairs
 
 
-def test_minhash_fused_build_matches_arrow_kernel(spark):
-    # r13 optimization: the JVM path fuses shingles -> signature -> band
-    # structs into ONE inline() selectExpr. The candidate pairs must be
-    # identical to the (unfused) Arrow kernel path, and the fused plan
-    # must stay pure-JVM with no extra shuffles.
-    docs = _docs(spark)
-    jvm = sorted((r.id_a, r.id_b) for r in
-                 minhash_lsh_candidates(docs, use_arrow=False).collect())
-    arw = sorted((r.id_a, r.id_b) for r in
-                 minhash_lsh_candidates(docs, use_arrow=True).collect())
-    assert jvm == arw and jvm
+_M = (1 << 61) - 1
+_U64 = (1 << 64) - 1
 
-    df = minhash_lsh_candidates(docs, use_arrow=False)
+
+def _ref_minhash(hashes, k=64):
+    """Plain-Python MinHash: lane i = min over h of ((h·a + b) mod 2^64)
+    mod M on the unsigned hash; no hashes -> the sentinel M."""
+    from clickhouse_from_scratch_spark.pipeline.dedup import _perm_params
+    if not hashes:
+        return [_M] * k
+    return [min((((h & _U64) * a + b) & _U64) % _M for h in hashes)
+            for a, b in _perm_params(k)]
+
+
+def _ref_simhash(hashes, nbits=64):
+    """Plain-Python SimHash vote: bit b set iff the ±1 votes of the
+    tokens' bit b sum above 0; returned as a signed 64-bit long."""
+    if hashes is None:
+        return None
+    sig = 0
+    for b in range(nbits):
+        if sum(2 * ((h >> b) & 1) - 1 for h in hashes) > 0:
+            sig |= 1 << b
+    return sig - (1 << 64) if sig >= 1 << 63 else sig
+
+
+def _edge_docs(spark):
+    """The tiny fixture plus NULL text, empty and blank text, a
+    duplicate id and a NULL id."""
+    extra = spark.createDataFrame(
+        [(5, None), (6, ""), (7, "   "), (0, "a second doc with id zero"),
+         (None, "one two three four five")], "doc_id long, text string")
+    return _docs(spark).unionByName(extra)
+
+
+# rows of int64 hash lists spanning several kernel slices at small
+# max_values: NULL and empty rows, a row longer than a slice, extremes
+_KERNEL_ROWS = [[1, -2, 3], None, [], [(1 << 63) - 1, -(1 << 63), 0],
+                [5] * 9, [7, 8], [], [-1]]
+
+
+def test_minhash_kernel_matches_python_reference(spark):
+    import pyarrow as pa
+    from clickhouse_from_scratch_spark.pipeline.dedup import (
+        _minhash_kernel, shingles)
+    rows = (minhash_signatures(_edge_docs(spark))
+            .select("doc_id", "signature", shingles("text").alias("sh"))
+            .collect())
+    assert len(rows) == 10
+    for r in rows:
+        assert list(r.signature) == _ref_minhash(r.sh), r.doc_id
+    # the numpy kernel alone, cut into row slices of 1..2^20 values,
+    # and over a sliced (offset) Arrow array
+    arr = pa.array(_KERNEL_ROWS, pa.list_(pa.int64()))
+    for max_values in (1, 2, 4, 1 << 20):
+        kernel = _minhash_kernel(8, max_values)
+        assert kernel(arr).to_pylist() == [
+            _ref_minhash(r, 8) for r in _KERNEL_ROWS]
+        assert kernel(arr.slice(3)).to_pylist() == [
+            _ref_minhash(r, 8) for r in _KERNEL_ROWS[3:]]
+    # one Arrow kernel, no row-at-a-time Python UDF; shuffles:
+    # parallelism repartition (absent when the scan already has enough
+    # splits) + band-bucket groupBy + pair distinct — never more (each
+    # Exchange prints twice in formatted mode: tree + detail)
+    df = minhash_lsh_candidates(_docs(spark))
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
         .fromString("formatted")
     plan = df._jdf.queryExecution().explainString(jmode)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # shuffles: parallelism repartition (absent when the scan already
-    # has enough splits) + band-bucket groupBy + pair distinct — never
-    # more (each Exchange prints twice in formatted mode: tree + detail)
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" in plan
     assert plan.count("Exchange") - plan.count("BroadcastExchange") <= 6
 
 
-def test_minhash_auto_kernel_switch(spark):
-    # r14: use_arrow=None picks the kernel by input size — JVM below
-    # the measured crossover (steady, no worker-import jitter: every
-    # bench/gate SF), Arrow above it (vectorized numpy wins at sf1+).
-    # Kernels are bit-equal (pinned above), so outputs never depend on
-    # the choice.
-    from clickhouse_from_scratch_spark.pipeline.dedup import (
-        _ARROW_INPUT_THRESHOLD, _auto_arrow)
-    assert not _auto_arrow(spark.range(10))
-    assert _auto_arrow(spark.range(_ARROW_INPUT_THRESHOLD // 4))
-    # the tiny-fixture plan stays pure JVM under auto
-    df = minhash_lsh_candidates(_docs(spark), use_arrow=None)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    # the choice sizes (id, text) only: a wide extra column pushes the
-    # whole relation past the crossover but must not flip the kernel
-    wide = spark.range(100_000).select(
-        F.col("id").alias("doc_id"), F.lit("a b c d").alias("text"),
-        F.lit(b"payload").alias("pad"))
-    assert _auto_arrow(wide)
-    assert not _auto_arrow(wide.select("doc_id", "text"))
-    df = minhash_lsh_candidates(wide, use_arrow=None)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+def test_simhash_kernel_matches_python_reference(spark):
+    import hashlib
+    from collections import Counter
+
+    import pyarrow as pa
+    from clickhouse_from_scratch_spark.pipeline.dedup import _simhash_kernel
+    docs = _edge_docs(spark)
+    words = F.filter(F.split(F.lower("text"), r"\s+"), lambda w: w != "")
+    toks = docs.select("doc_id", "text",
+                       F.transform(words, lambda w: F.xxhash64(w))
+                       .alias("h")).collect()
+    got = Counter(map(tuple, simhash_signatures(docs).collect()))
+    assert got == Counter((r.doc_id, _ref_simhash(r.h)) for r in toks)
+    # the md5 twin: token hash = the first 8 hex digits of md5 reversed,
+    # so bit b of the 32-bit signature votes on bit b%4 of hex digit b//4
+
+    def md5_token(w):
+        return int(hashlib.md5(w.encode()).hexdigest()[:8][::-1], 16)
+
+    got = Counter(map(tuple, simhash_signatures(docs, hash="md5").collect()))
+    assert got == Counter(
+        (r.doc_id, None if r.text is None else _ref_simhash(
+            [md5_token(w) for w in r.text.lower().split()], 32))
+        for r in toks)
+    assert got[(5, None)] == 1 and got[(6, 0)] == 1
+    arr = pa.array(_KERNEL_ROWS, pa.list_(pa.int64()))
+    for max_values in (1, 2, 4, 1 << 20):
+        for nbits in (32, 64):
+            kernel = _simhash_kernel(nbits, max_values)
+            assert kernel(arr).to_pylist() == [
+                _ref_simhash(r, nbits) for r in _KERNEL_ROWS]
+            assert kernel(arr.slice(3)).to_pylist() == [
+                _ref_simhash(r, nbits) for r in _KERNEL_ROWS[3:]]
 
 
 def test_bounded_buckets_caps_hot_buckets(spark):
@@ -146,10 +204,7 @@ def test_bounded_buckets_caps_hot_buckets(spark):
 
 # every banding caller of the shared kernel, on the tiny fixtures
 _BANDING_CALLERS = {
-    "minhash_jvm": lambda spark: minhash_lsh_candidates(
-        _docs(spark), use_arrow=False),
-    "minhash_arrow": lambda spark: minhash_lsh_candidates(
-        _docs(spark), use_arrow=True),
+    "minhash_arrow": lambda spark: minhash_lsh_candidates(_docs(spark)),
     "minhash_md5": lambda spark: minhash_md5_candidates(_docs(spark)),
     "simhash_hamming": lambda spark: simhash_hamming_pairs(
         simhash_signatures(_docs(spark))),
@@ -201,7 +256,7 @@ def test_ngram_jaccard_lsh_subset_of_exact(spark):
                  _docs(spark), threshold=0.1).collect()}
     lsh = {(r.id_a, r.id_b): r.jaccard
            for r in ngram_jaccard_pairs(
-               _docs(spark), threshold=0.1, use_arrow=False).collect()}
+               _docs(spark), threshold=0.1).collect()}
     assert set(lsh) <= set(exact)
     assert all(abs(exact[p] - j) < 1e-12 for p, j in lsh.items())
     assert (0, 1) in lsh                           # exact dup recalled

@@ -163,6 +163,35 @@ def test_streaming_exact_dedup(spark, tmp_path):
     assert sigs.isStreaming and "signature" in sigs.columns
 
 
+def test_streaming_minhash_signatures_equal_batch(spark, tmp_path):
+    # one MinHash kernel: rows signed on a stream carry exactly the
+    # signatures the batch pass (dedupMinHash) computes
+    from clickhouse_from_scratch_spark.pipeline import minhash_signatures
+    from clickhouse_from_scratch_spark.streaming import (
+        streaming_minhash_signatures,
+    )
+    rows = [(0, "the quick brown fox jumps over the lazy dog"),
+            (1, "the quick brown fox jumps over the lazy cat"),
+            (2, None), (3, ""), (4, "short text")]
+    path = str(tmp_path / "mh_src")
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.mode("overwrite").parquet(path)
+    stream = spark.readStream.schema("doc_id long, text string") \
+        .parquet(path)
+    q = (streaming_minhash_signatures(stream).writeStream.format("memory")
+         .queryName("mh_stream_out").outputMode("append").start())
+    try:
+        q.processAllAvailable()
+        streamed = spark.sql(
+            "SELECT doc_id, signature FROM mh_stream_out").collect()
+    finally:
+        q.stop()
+    batch = minhash_signatures(spark.read.parquet(path)) \
+        .select("doc_id", "signature").collect()
+    assert len(streamed) == len(rows)
+    assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch))
+
+
 def test_live_view_watch_liveness_rate_source(spark, tmp_path):
     """End-to-end liveness: LIVE VIEW over a rate source → WATCH EVENTS
     heartbeats advance on their own → WATCH snapshots grow →

@@ -3,8 +3,8 @@
 two-stage pair explode must produce byte-identical pairs to the pre-r14
 collect_set-then-filter + inline(flatten()) spelling (``old_buckets`` /
 ``old_pairs`` below), for every public banding caller, on real testdata:
-MinHash (JVM and Arrow kernels), the md5 MinHash twin, SimHash hamming
-and hyperplane LSH over embeddings.
+MinHash, the md5 MinHash twin, SimHash hamming and hyperplane LSH over
+embeddings.
 
 Usage: python tools/probe_r14_buckets.py [sf_dir]
 """
@@ -54,9 +54,9 @@ def main() -> None:
     spark = get_spark("probe_r14_buckets")
 
     from clickhouse_from_scratch_spark.pipeline.dedup import (
-        _ensure_parallelism, _md5_sig_sql, _minhash_sql, _shingles_sql,
-        minhash_lsh_candidates, minhash_md5_candidates,
-        simhash_hamming_pairs, simhash_signatures,
+        _ensure_parallelism, _md5_sig_sql, minhash_lsh_candidates,
+        minhash_md5_candidates, minhash_signatures, simhash_hamming_pairs,
+        simhash_signatures,
     )
     from clickhouse_from_scratch_spark.pipeline.similarity import (
         lsh_near_dup_pairs)
@@ -64,29 +64,22 @@ def main() -> None:
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
 
-    # --- caller 1: minhash_lsh_candidates, both signature kernels -------
-    # rebuild the banded frame as the kernel does, then run the
-    # reference bucket + pair tail over it
-    r, bands, nh = 4, 16, 64
-    sig_sql = _minhash_sql(_shingles_sql("`text`", 3), nh)
-    args = ", ".join(f"s[b*{r}+{i}]" for i in range(r))
-    banded = _ensure_parallelism(docs.select("doc_id", "text")) \
-        .selectExpr(
-            "`doc_id`",
-            f"inline(element_at(transform(array({sig_sql}), "
-            f"s -> transform(sequence(0, {bands - 1}), "
-            f"b -> named_struct('band', b, "
-            f"'bucket', xxhash64(b, {args})))), 1))")
+    # --- caller 1: minhash_lsh_candidates ------------------------------
+    # band the kernel's signatures as the caller does, then run the
+    # reference bucket + pair tail over them
+    r, bands = 4, 16
+    args = ", ".join(f"signature[b*{r}+{i}]" for i in range(r))
+    banded = minhash_signatures(docs.select("doc_id", "text")).selectExpr(
+        "`doc_id`",
+        f"inline(transform(sequence(0, {bands - 1}), "
+        f"b -> named_struct('band', b, 'bucket', xxhash64(b, {args}))))")
     ref = pairs_set(old_pairs(old_buckets(banded, ["band", "bucket"],
                                           "doc_id", 10000)))
-    for use_arrow in (False, True):
-        t0 = time.perf_counter()
-        got = pairs_set(minhash_lsh_candidates(docs, use_arrow=use_arrow))
-        dt = time.perf_counter() - t0
-        assert got == ref, (f"minhash (use_arrow={use_arrow}) differs: "
-                            f"{len(ref)} vs {len(got)}")
-        print(f"minhash_lsh_candidates(use_arrow={use_arrow}): "
-              f"{len(got)} pairs identical ({dt:.2f}s)")
+    t0 = time.perf_counter()
+    got = pairs_set(minhash_lsh_candidates(docs))
+    dt = time.perf_counter() - t0
+    assert got == ref, f"minhash differs: {len(ref)} vs {len(got)}"
+    print(f"minhash_lsh_candidates: {len(got)} pairs identical ({dt:.2f}s)")
 
     # --- caller 2: md5 twin (oracle query) -------------------------------
     nh5, bands5 = 16, 4

@@ -3,8 +3,8 @@
 
 Fixture: one hot LSH bucket — N identical documents (every band hash
 collides) over a base of distinct documents. Measures, for the OLD
-unbounded collect_set spelling vs ``minhash_lsh_candidates`` on the
-JVM kernel (row_number-capped buckets):
+unbounded collect_set spelling vs ``minhash_lsh_candidates``
+(row_number-capped buckets):
   - wall time of the candidate-pair count
   - per-stage max task duration vs median (straggler factor)
   - per-stage peak execution memory (the aggregation buffer the old
@@ -76,8 +76,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from clickhouse_from_scratch_spark.pipeline.dedup import (
-        _ensure_parallelism, _minhash_sql, _shingles_sql,
-        minhash_lsh_candidates)
+        minhash_lsh_candidates, minhash_signatures)
     from tools.probe_r14_buckets import old_buckets, old_pairs
 
     # hot docs: identical boilerplate; base docs: unique tail keeps the
@@ -93,16 +92,12 @@ def main() -> None:
                         F.lit(" with some filler words appended here")))
                     .alias("text")))
 
-    r, bands, nh = 4, 16, 64
-    sig_sql = _minhash_sql(_shingles_sql("`text`", 3), nh)
-    args = ", ".join(f"s[b*{r}+{i}]" for i in range(r))
-    banded = _ensure_parallelism(docs.select("doc_id", "text")) \
-        .selectExpr(
-            "`doc_id`",
-            f"inline(element_at(transform(array({sig_sql}), "
-            f"s -> transform(sequence(0, {bands - 1}), "
-            f"b -> named_struct('band', b, "
-            f"'bucket', xxhash64(b, {args})))), 1))")
+    r, bands = 4, 16
+    args = ", ".join(f"signature[b*{r}+{i}]" for i in range(r))
+    banded = minhash_signatures(docs.select("doc_id", "text")).selectExpr(
+        "`doc_id`",
+        f"inline(transform(sequence(0, {bands - 1}), "
+        f"b -> named_struct('band', b, 'bucket', xxhash64(b, {args}))))")
 
     # warm the JVM/codegen on the shared signature pipeline so run order
     # does not contaminate the A/B (first pass pays JIT compilation)
@@ -113,7 +108,7 @@ def main() -> None:
         ("old_unbounded", lambda: old_pairs(
             old_buckets(banded, ["band", "bucket"], "doc_id", cap))),
         ("new_bounded", lambda: minhash_lsh_candidates(
-            docs, use_arrow=False, max_bucket_size=cap)),
+            docs, max_bucket_size=cap)),
     ]:
         tracker = spark.sparkContext.statusTracker()
         before_ids = set(tracker.getJobIdsForGroup() or [])
