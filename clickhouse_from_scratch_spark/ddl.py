@@ -1280,22 +1280,40 @@ class ChSession:
         return pv.eqNullSafe(lit)
 
     def _rewrite(self, meta: TableMeta, df: DataFrame) -> None:
-        """Replace a table's contents (ALTER rewrite path): Memory tables
-        swap the cached frame (lineage truncated so repeated ALTERs don't
-        stack plans); parquet tables write to a sibling dir then swap, so
-        the lazy self-read never overwrites its own input."""
+        """Replace a table's contents with ``df``, a lazy frame that may
+        read the table itself: the one path for ALTER mutations and
+        OPTIMIZE. Memory tables swap in a local checkpoint (lineage
+        truncated so repeated rewrites don't stack plans; no
+        CacheManager entry is left behind). Parquet tables write to a
+        sibling dir then swap, so the self-read never overwrites its own
+        input. A bucketed table's session-catalog entry is keyed on its
+        path, so the sibling's entry is renamed to the table's and
+        pointed at the table's path after the swap: the bucketing
+        metadata survives and no stale file listing is left behind."""
         if meta.path is None:
             meta.memory_df = df.localCheckpoint(eager=True)
             return
         old, tmp = meta.path, meta.path + ".alter"
         try:
             meta.path = tmp
+            tmp_cat = self._catalog_name(meta)
             self._write(meta, df, "overwrite")
         finally:
             meta.path = old
+        bucketed = meta.bucket_spec() is not None
+        if bucketed:
+            cat = self._catalog_name(meta)
+            self.spark.sql(f"DROP TABLE IF EXISTS {cat}")
+            self.spark.sql(f"ALTER TABLE {tmp_cat} RENAME TO {cat}")
         if os.path.exists(old):
             shutil.rmtree(old)
         os.rename(tmp, old)
+        if bucketed:
+            self.spark.sql(f"ALTER TABLE {cat} SET LOCATION '{old}'")
+            if meta.partition_by and meta.partition_expr is None:
+                # the catalog tracks partitions: drop the sibling's,
+                # register the swapped-in ones
+                self.spark.sql(f"MSCK REPAIR TABLE {cat} SYNC PARTITIONS")
 
     def _truncate(self, node: TruncateStmt):
         if getattr(node, "if_exists", False):
@@ -1373,6 +1391,26 @@ class ChSession:
             cols = [n for n, _ in meta.columns
                     if meta.defaults.get(n, ("",))[0]
                     not in hidden_kinds + ("EPHEMERAL",)]
+        inline_files: list[str] = []
+        try:
+            source = self._insert_source(node, meta, cols, inline_files)
+            if inline_files and (meta.memory_df is not None
+                                 or self._mvs_on(meta)):
+                # a Memory table and the materialized views read the
+                # source lazily: take the rows off the file first
+                source = source.localCheckpoint(eager=True)
+            self._store_insert(node, meta, source)
+        finally:
+            for f in inline_files:
+                os.remove(f)
+        return self._ok()
+
+    def _insert_source(self, node: InsertStmt, meta: "TableMeta",
+                       cols: list[str],
+                       inline_files: list[str]) -> DataFrame:
+        """The rows an INSERT supplies, as a frame with columns ``cols``.
+        Inline FORMAT data goes through a temp file, whose path is
+        appended to ``inline_files`` for the caller to remove."""
         if node.values is not None:
             types = dict(meta.columns)
 
@@ -1407,6 +1445,9 @@ class ChSession:
                 ast = (sels[0] if len(sels) == 1
                        else _UQ(sels, ["all"] * (len(sels) - 1)))
                 source = self._build(ast)
+            # the rows are in the driver: one write task and one part,
+            # as CH makes one part per INSERT block
+            source = source.coalesce(1)
         elif node.infile is not None or node.format_data is not None:
             from .sources import read_format
 
@@ -1443,6 +1484,7 @@ class ChSession:
                 with tempfile.NamedTemporaryFile(
                         "w", suffix=".rows", delete=False,
                         encoding="utf-8") as fh:
+                    inline_files.append(fh.name)
                     fh.write(data)
                     path = fh.name
             from .sources import from_capnproto, from_msgpack, from_row_binary
@@ -1480,6 +1522,13 @@ class ChSession:
         else:
             source = self._build(node.select)
             source = source.toDF(*cols)
+        return source
+
+    def _store_insert(self, node: InsertStmt, meta: "TableMeta",
+                      source: DataFrame) -> None:
+        """Append an INSERT's rows to ``meta``: fill the omitted columns,
+        cast to the stored types, then write (or union into a Memory
+        table) and feed the materialized views."""
         # missing columns get their declared DEFAULT / MATERIALIZED /
         # ALIAS expression (evaluated over the supplied columns;
         # iterative passes resolve defaults referencing other defaulted
@@ -1532,7 +1581,12 @@ class ChSession:
         else:
             self._write(meta, source, mode="append")
         self._propagate_mvs(meta, source)
-        return self._ok()
+
+    def _mvs_on(self, meta: TableMeta) -> list[dict]:
+        """The materialized views an INSERT into ``meta`` triggers."""
+        return [mv for mv in self.mat_views
+                if (mv["src_db"], mv["src_table"])
+                == (meta.database, meta.name)]
 
     def _propagate_mvs(self, src_meta: TableMeta, batch: DataFrame,
                        _depth: int = 0) -> None:
@@ -1544,10 +1598,7 @@ class ChSession:
         guard."""
         if _depth > 8:
             return
-        for mv in self.mat_views:
-            if (mv["src_db"], mv["src_table"]) != (src_meta.database,
-                                                   src_meta.name):
-                continue
+        for mv in self._mvs_on(src_meta):
             out = self._build(mv["query"], overlay={
                 mv["src_table"]: batch,
                 f"{src_meta.database}.{src_meta.name}": batch})
@@ -1562,6 +1613,12 @@ class ChSession:
             self._propagate_mvs(tmeta, out, _depth + 1)
 
     def _optimize(self, node: OptimizeStmt):
+        """OPTIMIZE [FINAL] [DEDUPLICATE]: one forced merge. The table's
+        rows, collapsed by its engine under FINAL, deduplicated and
+        TTL-purged, replace its contents through ``_rewrite`` in one
+        write job. Nothing is cached, and AQE coalesces the FINAL
+        shuffle, so a small table ends with one part, as CH's
+        OPTIMIZE FINAL leaves one."""
         meta = self._resolve(node.database, node.table)
         df = self._read(meta)
         if node.final and meta.order_by:
@@ -1587,12 +1644,7 @@ class ChSession:
             ttl_col = _beval(ttl_ast, _BCtx(self.spark, {}), df)
             df = df.filter(ttl_col.cast("timestamp")
                            > F.current_timestamp())
-        materialized = df.cache()
-        materialized.count()
-        if meta.memory_df is not None:
-            meta.memory_df = materialized
-        else:
-            self._write(meta, materialized, mode="overwrite")
+        self._rewrite(meta, df)
         return self._ok()
 
     def _parts_rows(self) -> list[tuple]:

@@ -2060,7 +2060,6 @@ def _java_hash_utf16le(c) -> Column:
     lo + 256*hi (doc contract: javaHashUTF16LE(convertCharset('test',
     'utf-8', 'utf-16le')) = javaHash('test') = 3556498)."""
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
 
     def _jh(vs):
         out = []
@@ -2075,7 +2074,8 @@ def _java_hash_utf16le(c) -> Column:
             out.append(h - (1 << 32) if h >= (1 << 31) else h)
         return pd.Series(out, dtype="object")
 
-    return F.pandas_udf(_jh, "int", PandasUDFType.SCALAR)(
+    _jh.__annotations__ = {"vs": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_jh, "int")(
         _c(c).cast("string"))
 
 
@@ -2090,7 +2090,6 @@ def _convert_charset(s, from_cs, to_cs) -> Column:
     its utf-8 bytes. Arrow-batched scalar UDF (cold path — charset
     transcoding is not expressible in JVM expressions)."""
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
 
     def _conv(vs, vf, vt):
         out = []
@@ -2112,7 +2111,9 @@ def _convert_charset(s, from_cs, to_cs) -> Column:
             out.append(enc.decode("latin-1"))
         return pd.Series(out)
 
-    return F.pandas_udf(_conv, "string", PandasUDFType.SCALAR)(
+    _conv.__annotations__ = {"vs": pd.Series, "vf": pd.Series,
+                             "vt": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_conv, "string")(
         _c(s).cast("string"), _c(from_cs).cast("string"),
         _c(to_cs).cast("string"))
 
@@ -4578,7 +4579,6 @@ def _series_outliers_tukey(arr, min_q=0.25, max_q=0.75, k=1.5) -> Column:
     outlier score — distance beyond the Tukey fences
     [q_min - k*IQR, q_max + k*IQR], 0 inside (published contract)."""
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
 
     lo = float(min_q) if not isinstance(min_q, Column) else 0.25
     hi = float(max_q) if not isinstance(max_q, Column) else 0.75
@@ -4603,7 +4603,8 @@ def _series_outliers_tukey(arr, min_q=0.25, max_q=0.75, k=1.5) -> Column:
             out.append([float(v) for v in score])
         return pd.Series(out, dtype="object")
 
-    return F.pandas_udf(_tukey, "array<double>", PandasUDFType.SCALAR)(
+    _tukey.__annotations__ = {"vs": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_tukey, "array<double>")(
         _c(arr).cast("array<double>"))
 
 
@@ -4612,7 +4613,6 @@ def _series_period_fft(arr) -> Column:
     power spectrum's peak frequency (published contract: period of the
     strongest non-DC component)."""
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
 
     def _fft(vs):
         import numpy as np
@@ -4634,7 +4634,8 @@ def _series_period_fft(arr) -> Column:
             out.append(float(round(1.0 / freq)))
         return pd.Series(out, dtype="float64")
 
-    return F.pandas_udf(_fft, "double", PandasUDFType.SCALAR)(
+    _fft.__annotations__ = {"vs": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_fft, "double")(
         _c(arr).cast("array<double>"))
 
 
@@ -4668,7 +4669,6 @@ def _json_kv_raw(c, *path) -> Column:
     compact form. Arrow scalar UDF (raw-per-dynamic-key is not
     expressible with Spark's literal-path JSON readers)."""
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
 
     def _kv(vs):
         import json
@@ -4690,16 +4690,15 @@ def _json_kv_raw(c, *path) -> Column:
                         for k, v in obj.items()])
         return pd.Series(out, dtype="object")
 
-    return F.pandas_udf(
-        _kv, "array<struct<key:string,value:string>>",
-        PandasUDFType.SCALAR)(_c(c).cast("string"))
+    _kv.__annotations__ = {"vs": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_kv, "array<struct<key:string,value:string>>")(
+        _c(c).cast("string"))
 
 
 def _json_merge_patch(*docs) -> Column:
     """jsonMergePatch (RFC 7386): right-to-left object merge, null
     removes a key. Arrow scalar UDF."""
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
 
     def _merge(*cols):
         import json
@@ -4728,7 +4727,8 @@ def _json_merge_patch(*docs) -> Column:
                 out.append(None)
         return pd.Series(out, dtype="object")
 
-    return F.pandas_udf(_merge, "string", PandasUDFType.SCALAR)(
+    _merge.__annotations__ = {"cols": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_merge, "string")(
         *[_c(d).cast("string") for d in docs])
 
 
@@ -4736,7 +4736,6 @@ def _json_all_paths(c) -> Column:
     """JSONAllPaths: every leaf path in the document (dotted keys,
     array hops collapse onto the element paths like the reference)."""
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
 
     def _paths(vs):
         import json
@@ -4770,7 +4769,8 @@ def _json_all_paths(c) -> Column:
                 out.append([])
         return pd.Series(out, dtype="object")
 
-    return F.pandas_udf(_paths, "array<string>", PandasUDFType.SCALAR)(
+    _paths.__annotations__ = {"vs": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_paths, "array<string>")(
         _c(c).cast("string"))
 
 

@@ -60,6 +60,12 @@ def get_spark(app_name: str = "clickhouse_from_scratch_spark",
         # — a plan built from thousands of F.* calls pays seconds for
         # it; the engine surfaces its own errors, so turn it off
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # the generated-class cache (keyed on the source text) at 100
+        # entries, split over 4 LRU segments, is smaller than one
+        # ingest cycle's ~90 classes, so every cycle recompiled with
+        # Janino what it compiled one cycle earlier. Static: a session
+        # this function does not start keeps Spark's 100
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Python workers start from worker_daemon, which takes Spark's
         # archives off their import path: each task's invalidate_caches()
         # otherwise re-reads every archive (~220 ms of worker CPU a task)

@@ -12,6 +12,15 @@ from clickhouse_from_scratch_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    # pandas UDFs declare their kind with type hints; the deprecated
+    # PandasUDFType argument fails the test that builds one
+    config.addinivalue_line(
+        "filterwarnings",
+        "error:.*it is preferred to specify type hints for pandas UDF"
+        ":UserWarning")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))

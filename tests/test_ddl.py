@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from clickhouse_from_scratch_spark.ddl import ChSession
@@ -362,6 +364,33 @@ def test_insert_expressions_inline_format_and_infile(spark, tmp_path):
               "ENGINE = Memory")
     s.execute(f"INSERT INTO t2 FROM INFILE '{out}' FORMAT CSVWithNames")
     assert s.execute("SELECT count() AS n FROM t2").collect()[0].n == 5
+
+
+def test_inline_format_insert_no_temp_leak(sess):
+    """Inline FORMAT data reaches the reader through a temp file, removed
+    once the INSERT is done; the lazy readers (a Memory table, a
+    materialized view into one) still read their rows afterwards."""
+    import glob
+    import tempfile
+    pattern = os.path.join(tempfile.gettempdir(), "*.rows")
+    before = set(glob.glob(pattern))
+    sess.execute("CREATE TABLE fm (a Int64, b String) "
+                 "ENGINE = MergeTree ORDER BY a")
+    sess.execute("CREATE TABLE fmem (a Int64, b String) ENGINE = Memory")
+    sess.execute("CREATE TABLE fmv (a Int64) ENGINE = Memory")
+    sess.execute("CREATE MATERIALIZED VIEW fm_mv TO fmv AS "
+                 "SELECT a * 10 AS a FROM fm")
+    for t in ("fm", "fmem"):
+        sess.execute(f'INSERT INTO {t} FORMAT JSONEachRow '
+                     '{"a": 1, "b": "x"} {"a": 2, "b": "y"}')
+        sess.execute(f'INSERT INTO {t} FORMAT CSV 3,"z"')
+    assert set(glob.glob(pattern)) <= before
+    for t in ("fm", "fmem"):
+        assert sorted(tuple(r) for r in sess.execute(
+            f"SELECT a, b FROM {t}").collect()) == \
+            [(1, "x"), (2, "y"), (3, "z")]
+    assert sorted(r.a for r in sess.execute("SELECT a FROM fmv").collect()) \
+        == [10, 20, 30]
 
 
 def test_select_bare_literal_columns(spark):
@@ -784,6 +813,39 @@ def test_bucketed_table_lifecycle(sess, spark):
     # this table's session-catalog entry is gone too
     assert not spark.catalog.tableExists(cat)
 
+    # OPTIMIZE FINAL and an ALTER mutation replace a bucketed table
+    # through the one rewrite path; the bucketing metadata survives
+    def catalog_tables():
+        return {t.name for t in spark.catalog.listTables()}
+
+    before = catalog_tables()
+    sess.execute("CREATE TABLE br (k UInt64, v String, ver UInt32) "
+                 "ENGINE = ReplacingMergeTree(ver) ORDER BY k "
+                 "SETTINGS buckets = 4")
+    sess.execute("INSERT INTO br VALUES (1, 'a', 1), (2, 'b', 1), "
+                 "(3, 'c', 1), (1, 'a2', 2), (2, 'b2', 2)")
+
+    def rows_and_plan():
+        rows = [tuple(r) for r in sess.execute(
+            "SELECT k, v FROM br ORDER BY k").collect()]
+        # an aggregate on the bucket column keeps the bucketed scan
+        plan = sess.execute("SELECT k, count() AS c FROM br GROUP BY k"
+                            )._jdf.queryExecution().executedPlan()
+        return rows, plan.toString()
+
+    sess.execute("OPTIMIZE TABLE br FINAL")
+    rows, plan = rows_and_plan()
+    assert rows == [(1, "a2"), (2, "b2"), (3, "c")]
+    assert "Bucketed: true" in plan
+    sess.execute("ALTER TABLE br UPDATE v = 'z' WHERE k = 2")
+    rows, plan = rows_and_plan()
+    assert rows == [(1, "a2"), (2, "z"), (3, "c")]
+    assert "Bucketed: true" in plan
+    # the sibling directory and its catalog entry are gone
+    meta = sess._resolve(None, "br")
+    assert not os.path.exists(meta.path + ".alter")
+    assert catalog_tables() - before == {sess._catalog_name(meta)}
+
 
 # --- Nested type (DataTypeNested.cpp / NestedUtils.cpp; SURVEY §1.2) --------
 
@@ -843,6 +905,73 @@ def test_system_query_log_and_parts(sess):
         "WHERE table = 'ql'").collect()
     assert sum(r.rows for r in parts) == 3
     assert all(r.bytes_on_disk > 0 for r in parts)
+
+
+def test_one_part_per_insert_and_optimize(sess):
+    """Each INSERT block writes one part, as CH does, whether its VALUES
+    are literals, expressions or inline FORMAT data; OPTIMIZE FINAL of a
+    small table leaves one part."""
+    sess.execute("CREATE TABLE op (k Int64, v Float64, ver UInt32) "
+                 "ENGINE = ReplacingMergeTree(ver) ORDER BY k")
+
+    def parts():
+        return sess.execute("SELECT rows FROM system.parts "
+                            "WHERE table = 'op'").collect()
+
+    lits = ", ".join(f"({k}, {k}.5, 1)" for k in range(40))
+    sess.execute(f"INSERT INTO op VALUES {lits}")
+    assert len(parts()) == 1
+    exprs = ", ".join(f"({k}, {k} * 2, 2)" for k in range(0, 40, 2))
+    sess.execute(f"INSERT INTO op VALUES {exprs}")
+    assert len(parts()) == 2
+    sess.execute('INSERT INTO op FORMAT JSONEachRow {"k": 1, "v": 0.5, '
+                 '"ver": 3} {"k": 3, "v": 1.5, "ver": 3}')
+    assert len(parts()) == 3
+    sess.execute("OPTIMIZE TABLE op FINAL")
+    assert [r.rows for r in parts()] == [40]
+    got = {r.k: (r.v, r.ver) for r in
+           sess.execute("SELECT k, v, ver FROM op").collect()}
+    assert got[0] == (0.0, 2) and got[1] == (0.5, 3) and got[39] == (39.5, 1)
+
+
+def test_optimize_leaves_no_cache_entry(sess, spark):
+    """OPTIMIZE replaces a table without caching a copy, on MergeTree and
+    Memory tables alike."""
+    spark.catalog.clearCache()
+    for name, engine, kept in (
+            ("oc_rmt", "ReplacingMergeTree(ver) ORDER BY k", 2),
+            ("oc_mem", "Memory", 3)):
+        sess.execute(f"CREATE TABLE {name} (k Int64, ver UInt32) "
+                     f"ENGINE = {engine}")
+        sess.execute(f"INSERT INTO {name} VALUES (1, 1), (1, 2), (2, 1)")
+        sess.execute(f"OPTIMIZE TABLE {name} FINAL")
+        assert sess.execute(f"SELECT count() AS c FROM {name}"
+                            ).collect()[0].c == kept
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_repeated_ingest_cycle_compiles_nothing(sess, spark):
+    """A repeated statement cycle reuses the classes Spark generated for
+    it the first time: the second cycle makes no Janino compile."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    sess.execute("CREATE TABLE cg (k Int64, v Float64, ver UInt32) "
+                 "ENGINE = ReplacingMergeTree(ver) ORDER BY k")
+    rows = ", ".join(f"({k}, {k}.5, {k % 3})" for k in range(40))
+
+    def cycle():
+        sess.execute("TRUNCATE TABLE cg")
+        sess.execute("INSERT INTO cg SELECT number AS k, number * 0.5 AS v, "
+                     "0 AS ver FROM numbers(100)")
+        sess.execute(f"INSERT INTO cg VALUES {rows}")
+        sess.execute("SELECT intDiv(k, 10) AS b, count() AS n, max(ver) AS "
+                     "ver FROM cg FINAL GROUP BY b ORDER BY b").toArrow()
+        sess.execute("OPTIMIZE TABLE cg FINAL")
+        return sess.execute("SELECT sum(v) AS s FROM cg").collect()[0].s
+
+    first = cycle()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    assert cycle() == first
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == before
 
 
 def test_merge_table_function_and_null_engine(sess):
