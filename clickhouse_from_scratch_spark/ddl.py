@@ -37,9 +37,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (StructType, TimestampType,
                                _parse_datatype_string)
 
-from .functions.typemap import ch_type_to_spark
+from .functions.typemap import ch_type_to_spark, column_ch_types, spark_to_ch
 from .operators import final as final_op
 from .plans.builder import build
+from .sources.formats import format_table
 from .plans.statements import (
     AlterStmt, AttachStmt, BackupStmt, CheckStmt, CreateDatabase,
     CreateDictionary, CreateLiveView, CreateTable,
@@ -213,16 +214,6 @@ def _ast_has_params(node, _depth: int = 0) -> bool:
     return False
 
 
-def _format_names() -> set[str]:
-    """All FORMAT names with a live reader/writer or text renderer
-    (system.formats contract: one row per registered format)."""
-    from .sources import FORMATS
-    from .sources.formats import TEXT_RENDERERS
-    return (set(FORMATS) | set(TEXT_RENDERERS)
-            | {"Pretty", "PrettyCompact", "PrettySpace", "JSONEachRow",
-               "RowBinary", "MsgPackEachRow", "CapnProto", "Template"})
-
-
 def _reference_defaults() -> dict[str, object]:
     """The full 472-name settings namespace with reference defaults —
     system.settings lists every name the dialect accepts, changed=0
@@ -353,7 +344,7 @@ class ChSession:
                           sample_by: str | None = None) -> None:
         """Expose an existing DataFrame (e.g. testdata parquet) as a table."""
         meta = TableMeta(name, self.current_db,
-                         [(f.name, _spark_to_ch(f.dataType.simpleString()))
+                         [(f.name, spark_to_ch(f.dataType))
                           for f in df.schema.fields],
                          engine="External", memory_df=df,
                          order_by=order_by or [], sample_by=sample_by)
@@ -545,9 +536,7 @@ class ChSession:
         if node.as_select is not None:
             source = self._build(node.as_select)
             if not meta.columns:
-                meta.columns = [(f.name,
-                                 _spark_to_ch(f.dataType.simpleString()))
-                                for f in source.schema.fields]
+                meta.columns, source = _declared_columns(source)
         elif node.as_table is not None:
             src_meta = self._resolve(None, node.as_table)
             meta.columns = list(src_meta.columns)
@@ -610,10 +599,9 @@ class ChSession:
                         from_=TableRef(None, tmeta.name)))
                 target_db, target_table = tmeta.database, tmeta.name
             else:
+                columns, df = _declared_columns(df)
                 meta = TableMeta(
-                    node.name, db,
-                    [(f.name, _spark_to_ch(f.dataType.simpleString()))
-                     for f in df.schema.fields],
+                    node.name, db, columns,
                     engine="MergeTree",
                     path=os.path.join(self.warehouse, db, node.name))
                 self._write(meta, df if node.populate
@@ -1487,13 +1475,11 @@ class ChSession:
                     inline_files.append(fh.name)
                     fh.write(data)
                     path = fh.name
-            from .sources import from_capnproto, from_msgpack, from_row_binary
-            byte_decoders = {"RowBinary": from_row_binary,
-                             "MsgPackEachRow": from_msgpack,
-                             "CapnProto": from_capnproto}
-            if fmt in byte_decoders:
-                source = byte_decoders[fmt](
-                    self.spark, open(path, "rb").read(), text_schema)
+            from .sources.formats import BYTE_DECODERS
+            if fmt in BYTE_DECODERS:
+                with open(path, "rb") as fh:
+                    source = BYTE_DECODERS[fmt](
+                        self.spark, fh.read(), text_schema)
             else:
                 extra = {}
                 if fmt == "Regexp":
@@ -1871,15 +1857,10 @@ class ChSession:
         column has no such attribute."""
         from .plans.ast_nodes import format_node
         if getattr(node, "query", None) is not None:
-            # DESCRIBE (SELECT ...): the query's result schema, Spark
-            # types rendered in CH spelling where the inverse map knows
-            # them
+            # DESCRIBE (SELECT ...): the CH types of the query's result
             df = self._build(node.query)
-            u64 = getattr(df, "_ch_uint64_cols", frozenset())
-            rows = [(f.name,
-                     "UInt64" if f.name in u64
-                     else _spark_type_to_ch(f.dataType.simpleString()),
-                     "", "", "", "", "") for f in df.schema.fields]
+            rows = [(n, t, "", "", "", "", "")
+                    for n, t in zip(df.columns, column_ch_types(df))]
             return self._frame(
                 rows, "name string, type string, default_type string, "
                 "default_expression string, comment string, "
@@ -2114,72 +2095,15 @@ class ChSession:
             if df is None or not hasattr(df, "columns"):
                 raise ValueError("INTO OUTFILE/FORMAT applies to "
                                  "statements that return a result")
-        from .sources.formats import TEXT_RENDERERS
+        from .sources.formats import TEXT_FORMATS, render_text
         if node.outfile:
-            from .sources import (
-                to_capnproto,
-                to_msgpack,
-                to_native,
-                to_row_binary,
-            )
-            byte_codecs = {"RowBinary": to_row_binary,
-                           "MsgPackEachRow": to_msgpack,
-                           "Native": to_native,
-                           "CapnProto": to_capnproto}
-            if node.format in byte_codecs:
-                with open(node.outfile, "wb") as fh:
-                    fh.write(byte_codecs[node.format](df))
-                return self._ok()
-            if node.format in TEXT_RENDERERS:
-                # console/interchange formats render driver-side
-                with open(node.outfile, "w", encoding="utf-8") as fh:
-                    fh.write(TEXT_RENDERERS[node.format](df))
-                return self._ok()
-            if node.format in ("CustomSeparated",
-                               "CustomSeparatedWithNames", "Template"):
-                text = self._settings_format_text(df, node.format)
-                with open(node.outfile, "w", encoding="utf-8") as fh:
-                    fh.write(text)
-                return self._ok()
             from .sources import write_format
             write_format(df, node.format or "Parquet", node.outfile,
-                         compression=node.compression)
+                         compression=node.compression,
+                         settings=self.settings)
             return self._ok()
-        if node.format in ("Pretty", "PrettyCompact", "PrettySpace",
-                           "PrettyMonoBlock", "PrettyCompactMonoBlock",
-                           "PrettySpaceMonoBlock", "PrettyNoEscapes",
-                           "PrettyCompactNoEscapes",
-                           "PrettySpaceNoEscapes"):
-            # style families: Pretty* = heavy-ruled header box,
-            # PrettyCompact* = names-in-border grid, PrettySpace* = no
-            # grid; MonoBlock/NoEscapes variants share the base layout
-            # (no ANSI escapes are emitted in the first place)
-            from .sources.formats import to_pretty
-            style = ("space" if node.format.startswith("PrettySpace")
-                     else "compact"
-                     if node.format.startswith("PrettyCompact")
-                     else "full")
-            return self._lines(to_pretty(df, style=style))
-        if node.format in ("TabSeparated", "TSV", "TabSeparatedWithNames",
-                           "TSVWithNames"):
-            from .sources.formats import to_tab_separated
-            text = to_tab_separated(df)
-            if node.format.endswith("WithNames"):
-                text = "\t".join(df.columns) + "\n" + text
-            return self._lines(text)
-        if node.format in ("CSV", "CSVWithNames"):
-            from .sources.formats import to_csv_text
-            return self._lines(to_csv_text(
-                df, header=node.format.endswith("WithNames")))
-        if node.format == "JSONEachRow":
-            from .sources.formats import to_json_each_row
-            return self._lines(to_json_each_row(df))
-        if node.format in ("CustomSeparated", "CustomSeparatedWithNames",
-                           "Template"):
-            return self._lines(
-                self._settings_format_text(df, node.format).rstrip("\n"))
-        if node.format in TEXT_RENDERERS:
-            return self._lines(TEXT_RENDERERS[node.format](df))
+        if node.format in TEXT_FORMATS:
+            return self._lines(render_text(df, node.format, self.settings))
         return df
 
     def _lines(self, text: str, column: str = "output") -> DataFrame:
@@ -2225,50 +2149,11 @@ class ChSession:
             path = str(tf.args[0].value)
             fmt = (str(tf.args[1].value) if len(tf.args) > 1
                    else "Parquet")
-            write_format(src, fmt, path)
+            write_format(src, fmt, path, settings=self.settings)
             return self._ok()
         raise ValueError(
             f"INSERT INTO FUNCTION {tf.name} is not implemented "
             f"(NOT_IMPLEMENTED)")
-
-    def _settings_format_text(self, df, fmt: str) -> str:
-        """Render the settings-driven text formats (CustomSeparated /
-        Template) — shared by the console FORMAT suffix and INTO
-        OUTFILE paths."""
-        def _s(name, dflt):
-            v = str(self.settings.get(name, dflt))
-            return (v.replace("\\t", "\t").replace("\\n", "\n")
-                    .replace("\\r", "\r"))
-
-        if fmt == "Template":
-            from .sources.formats import to_template
-            row_fmt = str(self.settings.get(
-                "format_template_row_format",
-                self.settings.get("format_template_row", "")))
-            if not row_fmt:
-                raise ValueError(
-                    "FORMAT Template requires SET "
-                    "format_template_row_format = '...'")
-            between = _s("format_template_rows_between_delimiter", "\\n")
-            rs = str(self.settings.get(
-                "format_template_resultset_format",
-                self.settings.get("format_template_resultset", ""))) \
-                or None
-            return to_template(df, row_fmt,
-                               row_between_delimiter=between,
-                               resultset_format=rs)
-        from .sources.formats import to_custom_separated
-        text = to_custom_separated(
-            df,
-            escaping=_s("format_custom_escaping_rule", "Escaped"),
-            field_delim=_s("format_custom_field_delimiter", "\t"),
-            row_before=_s("format_custom_row_before_delimiter", ""),
-            row_after=_s("format_custom_row_after_delimiter", "\n"),
-            row_between=_s("format_custom_row_between_delimiter", ""),
-            result_before=_s("format_custom_result_before_delimiter", ""),
-            result_after=_s("format_custom_result_after_delimiter", ""),
-            with_names=fmt.endswith("WithNames"))
-        return text
 
     def _check(self, node: CheckStmt):
         meta = self._resolve(node.database, node.table)
@@ -2355,7 +2240,7 @@ class ChSession:
                 f"BACKUP_NOT_FOUND: backup '{path}' does not exist")
         df = self.spark.read.parquet(path)
         meta = TableMeta(table, db,
-                         [(f.name, _spark_to_ch(f.dataType.simpleString()))
+                         [(f.name, spark_to_ch(f.dataType))
                           for f in df.schema.fields],
                          engine="MergeTree",
                          path=os.path.join(self.warehouse, db, table))
@@ -2502,7 +2387,7 @@ _SYSTEM_TABLES = {
     # reference lists live queries; a local engine always has the one)
     "processes": lambda s: ([("default", "")], "user string, query string"),
     "formats": lambda s: (
-        sorted((n, 1, 1) for n in _format_names()),
+        format_table(),
         "name string, is_input int, is_output int"),
     "table_functions": lambda s: (
         [(n,) for n in sorted(
@@ -2646,24 +2531,6 @@ def _literal_py(node):
     raise ValueError(f"INSERT VALUES supports literals, got {node}")
 
 
-def _spark_type_to_ch(spark_t: str) -> str:
-    """CH spelling of a Spark result type for DESCRIBE (SELECT ...)."""
-    from .functions.typemap import spark_type_to_ch_numeric
-    num = spark_type_to_ch_numeric(spark_t)
-    if num:
-        return num
-    base = {"string": "String", "boolean": "UInt8", "date": "Date",
-            "timestamp": "DateTime", "timestamp_ntz": "DateTime",
-            "binary": "String"}.get(spark_t)
-    if base:
-        return base
-    if spark_t.startswith("array<"):
-        return f"Array({_spark_type_to_ch(spark_t[6:-1])})"
-    if spark_t.startswith("decimal"):
-        return "Decimal" + spark_t[7:]
-    return spark_t
-
-
 def _split_json_objects(text: str) -> list[str]:
     """Split concatenated JSON rows ({..} {..} objects or [..] [..]
     arrays — JSONCompactEachRow — on any whitespace/newline layout) into
@@ -2794,17 +2661,15 @@ def _type_default_py(ch_type: str):
     return None
 
 
-def _spark_to_ch(simple: str) -> str:
-    table = {"bigint": "Int64", "int": "Int32", "smallint": "Int16",
-             "tinyint": "Int8", "double": "Float64", "float": "Float32",
-             "string": "String", "date": "Date", "timestamp": "DateTime",
-             "boolean": "Bool", "binary": "String"}
-    if simple in table:
-        return table[simple]
-    m = re.match(r"array<(.+)>$", simple)
-    if m:
-        return f"Array({_spark_to_ch(m.group(1))})"
-    m = re.match(r"decimal\((\d+),(\d+)\)$", simple)
-    if m:
-        return f"Decimal({m.group(1)},{m.group(2)})"
-    return "String"
+def _declared_columns(df: DataFrame) -> tuple[list, DataFrame]:
+    """(name, CH type) columns for a table created from a result, and
+    the result cast to the storage types of those CH types where the
+    builder's type overlay differs from the Spark type (a predicate's
+    UInt8 is stored as smallint)."""
+    types = column_ch_types(df)
+    overlay = getattr(df, "_ch_type_overlay", None)
+    if overlay:
+        df = df.select(*[
+            F.col(f"`{n}`").cast(ch_type_to_spark(overlay[n])).alias(n)
+            if n in overlay else F.col(f"`{n}`") for n in df.columns])
+    return list(zip(df.columns, types)), df

@@ -1096,14 +1096,8 @@ def _combine(base, base_name: str, sfx: str, params: list, arg_type):
         # rows whose last argument is the group's min/max — CH keeps a
         # (state, best_v) pair, restarting the state on a better v, so
         # the result is the base over ALL best-v rows. Buffered fold
-        # (bounded by the group, same state class as rankCorr etc.).
-        fold = _FOLDABLE_BASES.get(base_name)
-        if fold is None:
-            def _unsupported(*a):
-                raise ValueError(
-                    f"-{sfx} combinator is not supported for {base_name}")
-            return _unsupported
-
+        # (bounded by the group, same state class as rankCorr etc.),
+        # reduced by the base's array kernel.
         def _arged(*a):
             v = _c(a[-1])
             x = _c(a[0]) if len(a) > 1 else F.lit(1)
@@ -1115,19 +1109,13 @@ def _combine(base, base_name: str, sfx: str, params: list, arg_type):
             sel = F.transform(
                 F.filter(pairs, lambda s: s["v"] == best),
                 lambda s: s["x"])
-            return fold(sel)
+            return reduce_array(base_name, params, sel, sfx)
         return _arged
     if sfx == "Map":
         # generic -Map combinator (sumMap/minMap/maxMap are base
         # aggregates of their own): apply the base per map KEY across
-        # the group — countMap, avgMap, uniqMap, anyMap …
-        fold = _FOLDABLE_BASES.get(base_name)
-        if fold is None:
-            def _unsupported(*a):
-                raise ValueError(
-                    f"-Map combinator is not supported for {base_name}")
-            return _unsupported
-
+        # the group — countMap, avgMap, uniqMap, anyMap … — with the
+        # base's array kernel over each key's values
         def _mapped(*a):
             m = _c(a[0]) if len(a) == 1 else F.map_from_arrays(_c(a[0]),
                                                                _c(a[1]))
@@ -1136,9 +1124,10 @@ def _combine(base, base_name: str, sfx: str, params: list, arg_type):
                 F.transform(entries, lambda e: e["key"])))
             return F.map_from_arrays(
                 keys,
-                F.transform(keys, lambda k: fold(F.transform(
-                    F.filter(entries, lambda e: e["key"] == k),
-                    lambda e: e["value"]))))
+                F.transform(keys, lambda k: reduce_array(
+                    base_name, params, F.transform(
+                        F.filter(entries, lambda e: e["key"] == k),
+                        lambda e: e["value"]), sfx)))
         return _mapped
     if sfx == "Distinct":
         # -Distinct: aggregate over the group's distinct values (natively
@@ -1163,26 +1152,6 @@ def _combine(base, base_name: str, sfx: str, params: list, arg_type):
         return _distincted
     raise AssertionError(sfx)
 
-
-# array-fold forms of the foldable bases, shared by the -ArgMin/-ArgMax
-# and generic -Map combinators (the fold runs over the buffered
-# selection, preserving the element type where possible)
-_FOLDABLE_BASES: dict[str, Callable[[Column], Column]] = {
-    "sum": lambda vs: F.aggregate(
-        vs, F.element_at(vs, 1) * 0, lambda acc, v: acc + v),
-    "count": lambda vs: F.size(vs).cast("long"),
-    "avg": lambda vs: (F.aggregate(vs, F.lit(0.0),
-                                   lambda a, v: a + v.cast("double"))
-                       / F.size(vs)),
-    "min": F.array_min,
-    "max": F.array_max,
-    "any": lambda vs: F.element_at(vs, 1),
-    "anyLast": lambda vs: F.element_at(vs, -1),
-    "groupArray": lambda vs: vs,
-    "groupUniqArray": F.array_distinct,
-    "uniq": lambda vs: F.size(F.array_distinct(vs)).cast("long"),
-    "uniqExact": lambda vs: F.size(F.array_distinct(vs)).cast("long"),
-}
 
 _COMBINATOR_SUFFIXES = ("OrNull", "OrDefault", "SimpleState", "MergeState",
                         "State", "Merge", "Array", "ForEach", "If",
@@ -1930,8 +1899,8 @@ def empty_set_default(name: str, dtype) -> Column | None:
 
 
 _WIDEN_SUM = re.compile(
-    r"sum(?:If|OrNull|OrDefault)*(?:Array|Distinct|ForEach)"
-    r"(?:Array|Distinct|ForEach|If|OrNull|OrDefault)*"
+    r"sum(?:If|OrNull|OrDefault)*(?:Array|Distinct|ForEach|ArgMin|ArgMax)"
+    r"(?:Array|Distinct|ForEach|ArgMin|ArgMax|If|OrNull|OrDefault)*"
     r"|groupArrayMovingSum|deltaSum")
 
 
@@ -1939,7 +1908,7 @@ def widened_sum_type(name: str, arg_type) -> str | None:
     """Sum family over integers yields Int64 (Array(Int64) for the
     array-valued forms), never Float64 (CH NumberTraits). Spark's own
     sum already does; the array kernels (-Array, -Distinct, -ForEach,
-    moving and delta sums) compute in double (exact below 2^53 —
+    -ArgMin/-ArgMax, moving and delta sums) compute in double (exact below 2^53 —
     documented policy), so their result is cast back when the first
     argument is integral. Returns the Spark cast target or None."""
     if not _WIDEN_SUM.fullmatch(name):

@@ -172,6 +172,49 @@ def spark_type_to_ch_numeric(spark_type: str) -> str | None:
     return _SPARK_TO_CH_NUM.get(spark_type.lower())
 
 
+# the rest of the Spark scalar types the engine stores
+_SPARK_TO_CH = {**_SPARK_TO_CH_NUM,
+                "string": "String", "binary": "String", "date": "Date",
+                "timestamp": "DateTime", "timestamp_ntz": "DateTime",
+                "void": "Nullable(Nothing)"}
+
+
+def spark_to_ch(dt) -> str:
+    """The CH spelling of a Spark DataType — the inverse of
+    ``ch_type_to_spark`` for every type a result or a table column can
+    have: scalars, ``Decimal(P, S)``, ``Array(T)``, ``Map(K, V)`` and
+    ``Tuple(…)`` (unnamed when the struct's fields are ``_1``, ``_2``,
+    …, as the builder makes them; named otherwise). A type with no CH
+    spelling keeps Spark's name."""
+    from pyspark.sql import types as T
+    if isinstance(dt, T.ArrayType):
+        return f"Array({spark_to_ch(dt.elementType)})"
+    if isinstance(dt, T.MapType):
+        return f"Map({spark_to_ch(dt.keyType)}, {spark_to_ch(dt.valueType)})"
+    if isinstance(dt, T.StructType):
+        unnamed = all(f.name == f"_{i}" for i, f in enumerate(dt.fields, 1))
+        return "Tuple(" + ", ".join(
+            spark_to_ch(f.dataType) if unnamed
+            else f"{f.name} {spark_to_ch(f.dataType)}"
+            for f in dt.fields) + ")"
+    if isinstance(dt, T.DecimalType):
+        return f"Decimal({dt.precision}, {dt.scale})"
+    s = dt.simpleString()
+    return _SPARK_TO_CH.get(s, s)
+
+
+def column_ch_types(df) -> list[str]:
+    """CH type of each column of a result frame: the builder's type
+    overlay (``_ch_type_overlay``, name → CH type) where the dialect type
+    differs from the stored one — a predicate is UInt8 but stored as
+    boolean, UInt64 is stored as Long — else the spelling of the Spark
+    type. DDL typing, DESCRIBE, format metadata and every cell
+    serializer read this one answer."""
+    overlay = getattr(df, "_ch_type_overlay", None) or {}
+    return [overlay.get(f.name) or spark_to_ch(f.dataType)
+            for f in df.schema.fields]
+
+
 def ch_literal_type(value) -> str | None:
     """CH type of a bare literal (FieldToDataType: smallest fitting type;
     non-negative ints are unsigned — toTypeName(1) = UInt8)."""

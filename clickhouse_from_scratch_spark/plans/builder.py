@@ -23,7 +23,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, MapType, StructType
+from pyspark.sql.types import (ArrayType, BooleanType, LongType, MapType,
+                               StructType)
 
 from ..functions import REGISTRY, ch
 from ..functions.aggregates import (
@@ -33,8 +34,8 @@ from ..functions.aggregates import (
 from ..functions.registry import typed_array_sum
 from ..functions.typemap import (
     CH_NUMERIC, arithmetic_result_type, ch_literal_type, ch_type_to_spark,
-    least_supertype, negate_result_type, spark_type_to_ch_numeric,
-    NoCommonTypeError,
+    least_supertype, negate_result_type, spark_to_ch,
+    spark_type_to_ch_numeric, NoCommonTypeError,
 )
 from ..operators import (
     any_join, array_join, asof_join, final, join_with_defaults, limit_by,
@@ -165,6 +166,10 @@ class Context:
     # CREATE DICTIONARY lookups: name → provider with .maps()/.key_type/
     # .attr_ch_type()/.attr_default() (duck-typed; lives in ddl.DictMeta)
     dictionaries: dict[str, object] = field(default_factory=dict)
+    # _probe_field's memo, (id(df), expression key) → (df, field): one
+    # per build(), shared by every context of that build, so a probed
+    # frame lives no longer than the statement that built it
+    probe_memo: dict = field(default_factory=dict)
 
     def child(self) -> "Context":
         return Context(self.spark, ChainMap({}, self.tables), dict(self.aliases),
@@ -172,7 +177,8 @@ class Context:
                        settings=self.settings, udfs=self.udfs,
                        dictionaries=self.dictionaries,
                        view_asts=self.view_asts,
-                       read_meter=self.read_meter)
+                       read_meter=self.read_meter,
+                       probe_memo=self.probe_memo)
 
 
 # settings the engine implements ONLY at their CH-default value: the
@@ -256,7 +262,6 @@ def build(spark: SparkSession, q: SelectQuery | UnionQuery,
         return out
     tot_df = getattr(out, "_ch_totals_df", None)
     ext_df = getattr(out, "_ch_extremes_df", None)
-    u8 = getattr(out, "_ch_uint8_cols", None)
     main = getattr(out, "_ch_main_df", out)
     if s_off is not None:
         main = main.offset(s_off)
@@ -266,16 +271,24 @@ def build(spark: SparkSession, q: SelectQuery | UnionQuery,
         main = _enforce_row_cap(
             main, cap, _overflow_mode(ctx, "result_overflow_mode"),
             "max_result_rows")
-    out = main
+    sliced = main
     if tot_df is not None:
-        out = main.unionByName(tot_df)
-        out._ch_main_df = main
-        out._ch_totals_df = tot_df
+        sliced = main.unionByName(tot_df)
+        sliced._ch_main_df = main
+        sliced._ch_totals_df = tot_df
     if ext_df is not None:
-        out._ch_extremes_df = ext_df
-    if u8:
-        out._ch_uint8_cols = u8
-    return out
+        sliced._ch_extremes_df = ext_df
+    return _with_overlay(sliced, getattr(out, "_ch_type_overlay", None))
+
+
+def _with_overlay(df: DataFrame, overlay: dict | None) -> DataFrame:
+    """Attach the result's type overlay (output name → CH type, for the
+    columns whose dialect type differs from the spelling of their Spark
+    type; ``typemap.column_ch_types`` reads it) — the one place a result
+    frame gets it, whichever frame wraps the result last."""
+    if overlay:
+        df._ch_type_overlay = overlay
+    return df
 
 
 def _setop_filter(left: DataFrame, right: DataFrame,
@@ -350,17 +363,20 @@ def _build_query(q, ctx: Context) -> DataFrame:
         # CH set ops are positional; result names come from the first
         # SELECT (SelectUnionMode semantics)
         cols = first.columns
+        arms = [first]
 
-        def _align(df: DataFrame) -> DataFrame:
+        def _arm(sel) -> DataFrame:
+            df = _build_query(sel, ctx)
             if len(df.columns) != len(cols):
                 raise BuildError("UNION branches have different column "
                                  "counts")
+            arms.append(df)
             return df.toDF(*cols)
 
         def _chain(head: DataFrame, rest) -> DataFrame:
             out = head
             for m, sel in rest:
-                nxt = _align(_build_query(sel, ctx))
+                nxt = _arm(sel)
                 out = (out.intersect(nxt) if m == "intersect"
                        else _setop_filter(out, nxt, anti=False))
             return out
@@ -368,7 +384,7 @@ def _build_query(q, ctx: Context) -> DataFrame:
         out = _chain(first, groups[0][1:])
         for grp in groups[1:]:
             outer, head_sel = grp[0]
-            nxt = _chain(_align(_build_query(head_sel, ctx)), grp[1:])
+            nxt = _chain(_arm(head_sel), grp[1:])
             if outer == "all":
                 out = out.union(nxt)
             elif outer == "distinct":
@@ -377,7 +393,11 @@ def _build_query(q, ctx: Context) -> DataFrame:
                 out = out.subtract(nxt)
             elif outer == "except_all":
                 out = _setop_filter(out, nxt, anti=True)
-        return out
+        # a column keeps the dialect type every arm agrees on
+        types = [[(getattr(a, "_ch_type_overlay", None) or {}).get(c)
+                  for c in a.columns] for a in arms]
+        return _with_overlay(out, {c: ts[0] for c, *ts in zip(cols, *types)
+                                   if ts[0] and len(set(ts)) == 1})
     return _build_select(q, ctx)
 
 
@@ -698,20 +718,7 @@ def _build_select(q: SelectQuery, ctx: Context) -> DataFrame:
     if ext_df is not None:
         # computed post-projection, so it already carries output names
         df._ch_extremes_df = ext_df
-    u8 = _uint8_bool_cols(q.select, df, ctx)
-    if u8:
-        # Spark BooleanType output columns whose DIALECT type is UInt8
-        # (predicate results — CH renders them 1/0, not true/false);
-        # the text-format renderers read this to pick the CH cell form
-        df._ch_uint8_cols = u8
-    u64 = _uint64_cols(q.select, df, ctx)
-    if u64:
-        # Spark LongType output columns whose DIALECT type is UInt64
-        # (stored two's-complement per the UInt64-as-Long policy);
-        # renderers print negative values + 2^64 so 0xFFFF... shows as
-        # 18446744073709551615, the way CH formats UInt64
-        df._ch_uint64_cols = u64
-    return df
+    return _with_overlay(df, _type_overlay(q.select, df, ctx))
 
 
 def _renders_as_ch_bool(item, ctx: Context) -> bool:
@@ -747,47 +754,43 @@ def _renders_as_ch_bool(item, ctx: Context) -> bool:
     return False
 
 
-def _uint8_bool_cols(select_items, df: DataFrame,
-                     ctx: Context) -> frozenset:
-    """Names of output columns that are Spark BooleanType but dialect
-    UInt8 (comparison/predicate results). Schema-only — no job."""
-    from pyspark.sql.types import BooleanType
+def _type_overlay(select_items, df: DataFrame, ctx: Context) -> dict:
+    """Output name → CH type for the columns whose dialect type differs
+    from the spelling of their Spark type. Schema-only — no job."""
     fields = df.schema.fields
-    if not any(isinstance(f.dataType, BooleanType) for f in fields):
-        return frozenset()
+    if len(select_items) == 1 and isinstance(select_items[0], Star):
+        select_items = select_items * len(fields)
     if len(select_items) != len(fields):
         # projection shape diverged from the select list (kept helper
-        # columns, etc.) — leave unmarked; booleans render as Bool
-        return frozenset()
-    return frozenset(
-        f.name for item, f in zip(select_items, fields)
-        if isinstance(f.dataType, BooleanType)
-        and not _renders_as_ch_bool(item, ctx))
-
-
-def _uint64_cols(select_items, df: DataFrame,
-                 ctx: Context) -> frozenset:
-    """Names of output columns that are Spark LongType but dialect
-    UInt64 (the UInt64-as-Long policy stores them two's-complement).
-    Schema-only — no job."""
-    from pyspark.sql.types import LongType
-    fields = df.schema.fields
-    if not any(isinstance(f.dataType, LongType) for f in fields):
-        return frozenset()
-    if len(select_items) != len(fields):
-        return frozenset()
-    out = set()
+        # columns, etc.) — no overlay; every column reads as Spark types
+        return {}
+    out = {}
     for item, f in zip(select_items, fields):
-        if not isinstance(f.dataType, LongType):
-            continue
-        if isinstance(item, Star):
-            # * projection: the declared dialect type carries through
-            cht = ctx.ch_types.get(f.name)
-        else:
-            cht = _infer_ch_type(item, ctx, df)
-        if cht == "UInt64":
-            out.add(f.name)
-    return frozenset(out)
+        t = _item_overlay(item, f, ctx, df)
+        if t is not None:
+            out[f.name] = t
+    return out
+
+
+def _item_overlay(item, field, ctx: Context,
+                  df: DataFrame | None) -> str | None:
+    """The dialect type of one expression where it differs from the
+    spelling of its Spark type: ``UInt8`` for a boolean that is a
+    predicate result (a genuine Bool stays Bool), ``UInt64`` for a Long
+    whose dialect type is UInt64 (stored two's-complement per the
+    UInt64-as-Long policy); else None. A ``*`` column keeps its
+    declared type."""
+    dt = field.dataType
+    if not isinstance(dt, (BooleanType, LongType)):
+        return None
+    want = "UInt8" if isinstance(dt, BooleanType) else "UInt64"
+    if isinstance(item, Star):
+        t = ctx.ch_types.get(field.name)
+    elif isinstance(dt, BooleanType):
+        t = None if _renders_as_ch_bool(item, ctx) else "UInt8"
+    else:
+        t = _infer_ch_type(item, ctx, df)
+    return want if t == want else None
 
 
 def _extremes_block(df: DataFrame) -> DataFrame:
@@ -1009,11 +1012,7 @@ def _build_from(node, ctx: Context) -> DataFrame:
             ctx.engines.get(rkey, {}).get("hidden", []))
         for cname, ctype in ctx.engines.get(rkey, {}).get("columns",
                                                           {}).items():
-            # ambiguous across joined tables → drop to schema inference
-            if ctx.ch_types.get(cname, ctype) != ctype:
-                ctx.ch_types[cname] = ""
-            else:
-                ctx.ch_types[cname] = ctype
+            _declare(ctx, cname, ctype)
         cap = _limit_setting(ctx, "max_rows_to_read")
         if cap is not None:
             df = _meter_scan(df, cap, ctx, name)
@@ -1045,6 +1044,12 @@ def _build_from(node, ctx: Context) -> DataFrame:
         return df
     if isinstance(node, SubqueryRef):
         df = _build_query(node.query, ctx)
+        # a subquery's columns keep the dialect types of its result: a
+        # predicate stays UInt8, a Bool stays Bool, UInt64 stays UInt64
+        overlay = getattr(df, "_ch_type_overlay", None) or {}
+        for f in df.schema.fields:
+            if isinstance(f.dataType, BooleanType) or f.name in overlay:
+                _declare(ctx, f.name, overlay.get(f.name, "Bool"))
         if node.alias:
             df = df.alias(node.alias)
             ctx.tables.setdefault(node.alias, df)
@@ -1150,10 +1155,17 @@ def _declare_numbers_type(ctx: Context) -> None:
     width (number % 2 is UInt8, hex(number) is 16 digits). Ambiguity
     with a same-named column from a joined table drops to schema
     inference, mirroring the engine-metadata rule."""
-    if ctx.ch_types.get("number", "UInt64") != "UInt64":
-        ctx.ch_types["number"] = ""
+    _declare(ctx, "number", "UInt64")
+
+
+def _declare(ctx: Context, name: str, ch_type: str) -> None:
+    """Record a source column's declared CH type; a name declared with
+    two different types (ambiguous across joined sources) is marked ""
+    and drops to schema inference."""
+    if ctx.ch_types.get(name, ch_type) != ch_type:
+        ctx.ch_types[name] = ""
     else:
-        ctx.ch_types["number"] = "UInt64"
+        ctx.ch_types[name] = ch_type
 
 
 def _system_table(table: str, ctx: Context) -> DataFrame:
@@ -1423,7 +1435,7 @@ def _table_function(node: TableFunction, ctx: Context) -> DataFrame:
         sub = Context(ctx.spark, ctx.tables, engines=ctx.engines,
                       params=binds, settings=ctx.settings,
                       udfs=ctx.udfs, dictionaries=ctx.dictionaries,
-                      view_asts=ctx.view_asts)
+                      view_asts=ctx.view_asts, probe_memo=ctx.probe_memo)
         return _build_query(ctx.view_asts[node.name], sub)
     raise BuildError(f"unsupported table function: {node.name}")
 
@@ -4166,35 +4178,21 @@ def _lower_hex_bin(name, node, cols, ctx, df):
 
 @_lowers("formatRow", "formatRowNoNewline")
 def _lower_format_row(name, node, cols, ctx, df):
-    # per-row CSV/TSV/JSONEachRow/Values text, Arrow-batched, with the
-    # cell renderers of the INTO OUTFILE/FORMAT writers
+    # one row of a row-oriented text FORMAT, written by the cell
+    # serializers of the FORMAT output and INTO OUTFILE
     if len(node.args) < 2:
         return None
     if not isinstance(node.args[0], Literal):
         raise BuildError("formatRow needs a literal format name")
-    fmt = str(node.args[0].value)
-    vals = cols[1:]
-    names = [_auto_name(a) for a in node.args[1:]]
-    simples = [_probe_simple(a, c, ctx, df) or "string"
-               for a, c in zip(node.args[1:], vals)]
-    newline = name == "formatRow"
-    from ..sources.formats import render_row
-    import pandas as pd
-
-    def frow(sdf):
-        # object dtype keeps NULLs as None (numeric pandas columns would
-        # coerce them to NaN and render 'nan' instead of \N)
-        sdf = sdf.astype(object).where(pd.notnull(sdf), None)
-        return pd.Series([
-            render_row(fmt,
-                       [v.tolist() if hasattr(v, "tolist") else v
-                        for v in row],
-                       simples, names, newline)
-            for row in sdf.itertuples(index=False, name=None)])
-
-    frow.__annotations__ = {"sdf": pd.DataFrame, "return": pd.Series}
-    return F.pandas_udf(frow, "string")(F.struct(
-        *[v.alias(f"c{i}") for i, v in enumerate(vals)]))
+    from pyspark.sql.types import StringType, StructField
+    from ..sources.formats import format_row
+    args, vals = node.args[1:], cols[1:]
+    fields = [_probe_field(a, c, ctx, df) or StructField("_", StringType())
+              for a, c in zip(args, vals)]
+    return format_row(
+        str(node.args[0].value), vals, [f.dataType for f in fields],
+        [_item_overlay(a, f, ctx, df) for a, f in zip(args, fields)],
+        [_auto_name(a) for a in args], newline=name == "formatRow")
 
 
 @_lowers("arrayFlatten", "flatten")
@@ -4363,7 +4361,8 @@ def _lower_to_string(name, node, cols, ctx, df):
     if dts.startswith(("array", "struct", "map")):
         # composite values render as CH literals ('[1,2]', "(1,'a')",
         # "{'k':1}"), not Spark's cast text
-        return _ch_literal_render(cols[0], dt_obj)
+        from ..sources.formats import value_text
+        return value_text(cols[0], dt_obj)
     if dts.startswith("decimal"):
         # CH trims trailing decimal zeros by default
         # (output_format_decimal_trailing_zeros = false)
@@ -4438,8 +4437,8 @@ def _lower_to_type_name(name, node, cols, ctx, df):
             return F.lit("JSON")
     t = _literal_render_type(arg) or _infer_ch_type(arg, ctx, df)
     if t is None:
-        dts = _probe_simple(arg, cols[0], ctx, df)
-        t = _spark_to_ch_name(dts) if dts else None
+        dt = _probe_dtype(arg, cols[0], ctx, df)
+        t = spark_to_ch(dt) if dt is not None else None
     return F.lit(t or "Dynamic")
 
 
@@ -4990,50 +4989,6 @@ def _infer_ch_type(node, ctx: Context, df: DataFrame | None,
     return None
 
 
-_SPARK_TO_CH_NAME = {
-    "bigint": "Int64", "int": "Int32", "smallint": "Int16",
-    "tinyint": "Int8", "double": "Float64", "float": "Float32",
-    "string": "String", "date": "Date", "timestamp": "DateTime",
-    "timestamp_ntz": "DateTime", "boolean": "Bool", "binary": "String",
-}
-
-
-def _split_type_args(body: str) -> list[str]:
-    """Split 'int,struct<a:int,b:string>' at top-level commas."""
-    out, depth, cur = [], 0, []
-    for ch in body:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
-
-
-def _spark_to_ch_name(dt: str) -> str:
-    if dt.startswith("array<") and dt.endswith(">"):
-        return f"Array({_spark_to_ch_name(dt[6:-1])})"
-    if dt.startswith("decimal"):
-        # CH spells it with a space: Decimal(18, 4)
-        return "Decimal" + dt[7:].replace(",", ", ")
-    if dt.startswith("struct<") and dt.endswith(">"):
-        elems = [_spark_to_ch_name(p.split(":", 1)[1])
-                 for p in _split_type_args(dt[7:-1]) if ":" in p]
-        return f"Tuple({', '.join(elems)})"
-    if dt.startswith("map<") and dt.endswith(">"):
-        kv = _split_type_args(dt[4:-1])
-        if len(kv) == 2:
-            return (f"Map({_spark_to_ch_name(kv[0])}, "
-                    f"{_spark_to_ch_name(kv[1])})")
-    return _SPARK_TO_CH_NAME.get(dt, dt)
-
-
 def _refs_lambda_param(n, ctx: Context) -> bool:
     """True when the expression references a name bound as a lambda
     parameter in the current scope — such columns resolve only inside
@@ -5051,75 +5006,6 @@ def _refs_lambda_param(n, ctx: Context) -> bool:
     if isinstance(n, (ArrayLiteral, TupleLiteral)):
         return any(_refs_lambda_param(a, ctx) for a in n.items)
     return False
-
-
-def _ch_literal_render(col: Column, dt) -> Column:
-    """CH text rendering of a composite value as its literal form (the
-    IColumn text serialization toString uses): arrays ``[1,2]``, tuples
-    ``(1,'a')``, maps ``{'k':1}`` — no spaces, strings/dates inside
-    composites single-quoted with backslash escaping, floats trimmed of
-    the integral ``.0``, NULL elements as ``NULL``. Pure JVM expression
-    tree built from the resolved dtype."""
-    from pyspark.sql.types import (ArrayType, BooleanType, DateType,
-                                   MapType, StringType, StructType,
-                                   TimestampNTZType, TimestampType)
-
-    def render(c: Column, t, quoted: bool) -> Column:
-        if isinstance(t, ArrayType):
-            inner = F.transform(
-                c, _render_closure(t.elementType))
-            return F.concat(F.lit("["),
-                            F.array_join(inner, ",", "NULL"),
-                            F.lit("]"))
-        if isinstance(t, MapType):
-            ents = F.transform(
-                F.map_entries(c),
-                _map_entry_closure(t.keyType, t.valueType))
-            return F.concat(F.lit("{"),
-                            F.array_join(ents, ",", "NULL"),
-                            F.lit("}"))
-        if isinstance(t, StructType):
-            parts: list = [F.lit("(")]
-            for i, fld in enumerate(t.fields):
-                if i:
-                    parts.append(F.lit(","))
-                parts.append(F.coalesce(
-                    render(c[fld.name], fld.dataType, True),
-                    F.lit("NULL")))
-            parts.append(F.lit(")"))
-            return F.concat(*parts)
-        if isinstance(t, StringType):
-            esc = F.regexp_replace(
-                F.regexp_replace(c, r"\\", r"\\\\"), "'", r"\\'")
-            return (F.concat(F.lit("'"), esc, F.lit("'"))
-                    if quoted else c)
-        if isinstance(t, (DateType, TimestampType, TimestampNTZType)):
-            s = c.cast("string")
-            if isinstance(t, (TimestampType, TimestampNTZType)):
-                s = F.date_format(c, "yyyy-MM-dd HH:mm:ss")
-            return (F.concat(F.lit("'"), s, F.lit("'"))
-                    if quoted else s)
-        if isinstance(t, BooleanType):
-            return F.when(c, F.lit("true")).otherwise(F.lit("false"))
-        out = c.cast("string")
-        if t.simpleString() in ("float", "double"):
-            out = F.regexp_replace(out, r"^(-?\d+)\.0$", "$1")
-        elif t.simpleString().startswith("decimal"):
-            out = F.regexp_replace(
-                F.regexp_replace(out, r"(\.\d*?)0+$", "$1"),
-                r"\.$", "")
-        return out
-
-    def _render_closure(t):
-        return lambda x: render(x, t, True)
-
-    def _map_entry_closure(kt, vt):
-        return lambda e: F.concat(
-            F.coalesce(render(e["key"], kt, True), F.lit("NULL")),
-            F.lit(":"),
-            F.coalesce(render(e["value"], vt, True), F.lit("NULL")))
-
-    return render(col, dt, False)
 
 
 def _enum_pairs(cht: str | None) -> list | None:
@@ -5209,21 +5095,16 @@ def _probe_field(arg, col, ctx: Context, df: DataFrame | None):
         if dt is not None:
             return _T.StructField("lit", dt, nullable=False)
     key = (id(df), _ast_key(arg))
-    hit = _PROBE_CACHE.get(key)
+    hit = ctx.probe_memo.get(key)
     if hit is not None and hit[0] is df:
         return hit[1]
     try:
         f = df.select(col).schema[0]
     except Exception:
         f = None
-    if len(_PROBE_CACHE) > 4096:
-        _PROBE_CACHE.clear()
-    # the value keeps df alive, so its id cannot be reused while cached
-    _PROBE_CACHE[key] = (df, f)
+    # the value keeps df alive, so its id cannot be reused while memoised
+    ctx.probe_memo[key] = (df, f)
     return f
-
-
-_PROBE_CACHE: dict = {}
 
 
 _COND_HOFS = {"arrayFilter", "arrayExists", "arrayAll", "arrayCount",
@@ -5271,7 +5152,7 @@ def _hof_call(node: FuncCall, ctx: Context, df: DataFrame | None) -> Column:
     def _body(*args: Column) -> Column:
         inner = Context(ctx.spark, ctx.tables, ctx.aliases,
                         dict(ctx.lambda_params), ctx.columns,
-                        engines=ctx.engines)
+                        engines=ctx.engines, probe_memo=ctx.probe_memo)
         inner.lambda_param_types = {**ctx.lambda_param_types, **ptypes}
         for p, c in zip(lam.params, args):
             inner.lambda_params[p] = c

@@ -3246,8 +3246,8 @@ ORDER BY l_orderkey
 """)
 def sql_format_row(spark, sf_dir):
     """formatRowNoNewline('CSV'/'Values', ...) — the per-row text-format
-    kernel (Arrow-batched over a packed struct; same cell renderers as
-    INTO OUTFILE) pinned against string-built DuckDB twins."""
+    kernel (a JVM expression over the same cell serializers as FORMAT
+    output and INTO OUTFILE) pinned against string-built DuckDB twins."""
     return _sql(spark, sf_dir, """
         SELECT l_orderkey,
                formatRowNoNewline('CSV', l_orderkey, l_returnflag,

@@ -121,14 +121,12 @@ def main(argv: list[str] | None = None) -> None:
     if args.sf_dir:
         from .catalog import load_all
         from .ddl import TableMeta
-        from .sources.formats import _CH_TYPE
+        from .functions.typemap import spark_to_ch
 
         for name, df in load_all(spark, args.sf_dir).items():
             session.databases["default"][name] = TableMeta(
                 name=name, database="default",
-                columns=[(f.name,
-                          _CH_TYPE.get(f.dataType.simpleString(),
-                                       f.dataType.simpleString()))
+                columns=[(f.name, spark_to_ch(f.dataType))
                          for f in df.schema.fields],
                 engine="MergeTree",
                 path=os.path.join(args.sf_dir, f"{name}.parquet"),

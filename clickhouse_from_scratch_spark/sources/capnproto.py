@@ -106,10 +106,10 @@ def _list_ptr(offset_words: int, elem_size_code: int, count: int) -> bytes:
                        | (elem_size_code << 32) | (count << 35))
 
 
-def to_capnproto(df: DataFrame, n: int = 100000) -> bytes:
-    """Encode up to n rows as a sequence of framed Cap'n Proto messages
+def to_capnproto(df: DataFrame) -> bytes:
+    """Encode every row as a sequence of framed Cap'n Proto messages
     (one message per row, CH CapnProto style)."""
-    return _encode_rows(df.schema.fields, df.limit(n).collect())
+    return _encode_rows(df.schema.fields, df.collect())
 
 
 def _encode_rows(fields, rows) -> bytes:

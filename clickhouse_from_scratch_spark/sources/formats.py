@@ -2,22 +2,28 @@
 
 Reference: ``src/Formats/registerFormats.cpp:10-77`` declares the format
 set (all registrations commented out there; only Native has live code —
-``NativeWriter.cpp``/``NativeReader.cpp``). We implement the formats Spark
-covers natively and the ClickHouse text formats as options on Spark's
-CSV/JSON readers; Pretty* are console renderers.
-
-Each entry: name → (reader kwargs for ``spark.read``, writer kwargs).
-``INTO OUTFILE ... COMPRESSION`` (``ParserQueryWithOutput.cpp:83-99``) maps
-to the ``compression`` option.
+``NativeWriter.cpp``/``NativeReader.cpp``). Inputs: ``FORMATS`` maps a
+name to Spark's reader (the ClickHouse text formats as options on its
+CSV/JSON readers, or a dedicated lowering). Outputs: ``TEXT_FORMATS``
+maps each text format to its cells' escaping rule and its layout, the
+one table the console FORMAT suffix, INTO OUTFILE and formatRow read;
+the byte codecs and Spark's columnar writers are OUTFILE-only.
+``INTO OUTFILE ... COMPRESSION`` (``ParserQueryWithOutput.cpp:83-99``)
+maps to the writers' ``compression`` option.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..functions.typemap import CH_NUMERIC, column_ch_types
 
 
 def _parse_ddl_schema(spark: SparkSession, schema: str):
@@ -206,63 +212,42 @@ def read_format(spark: SparkSession, fmt: str, path: str,
                 table = pa.ipc.open_stream(fh).read_all()
         return spark.createDataFrame(table)
     reader = spark.read.format(name).options(**{**ropts, **extra})
+    if name == "json" and schema:
+        # CH quotes 64-bit integers in JSON output and writes predicates
+        # as 1/0: read numbers and booleans as their text, then cast
+        st = _parse_ddl_schema(spark, schema)
+        loose = [isinstance(f.dataType, (T.NumericType, T.BooleanType))
+                 for f in st.fields]
+        df = reader.schema(T.StructType([
+            T.StructField(f.name, T.StringType()) if lo else f
+            for f, lo in zip(st.fields, loose)])).load(path)
+        return df.select(*[
+            F.col(f"`{f.name}`").try_cast(f.dataType).alias(f.name) if lo
+            else F.col(f"`{f.name}`") for f, lo in zip(st.fields, loose)])
     if schema:
         reader = reader.schema(schema)
     return reader.load(path)
 
-
-def _ch_text_cell_col(field, tsv: bool, bool_as_int: bool = False):
-    """One output cell rendered CH-style, pure JVM (distributed):
-    CSV always double-quotes String/Date/DateTime (published CSV format
-    contract); TSV backslash-escapes instead of quoting; floats drop a
-    trailing .0; decimals trim trailing zeros; NULL is \\N; composites
-    (arrays/tuples/maps) use the CH literal form via the builder's
-    ``_ch_literal_render`` kernel; UInt8-typed booleans render 1/0."""
-    dt = field.dataType.simpleString()
-    c = F.col(f"`{field.name}`")
-
-    def quote(s):
-        if tsv:
-            return s
-        return F.concat(F.lit('"'),
-                        F.replace(s, F.lit('"'), F.lit('""')), F.lit('"'))
-
-    if dt in ("string", "binary"):
-        s = c.cast("string")
-        if tsv:
-            for frm, to in (("\\", "\\\\"), ("\t", "\\t"),
-                            ("\n", "\\n"), ("\r", "\\r")):
-                s = F.replace(s, F.lit(frm), F.lit(to))
-            out = s
-        else:
-            out = quote(s)
-    elif dt == "date":
-        out = quote(F.date_format(c, "yyyy-MM-dd"))
-    elif dt.startswith("timestamp"):
-        out = quote(F.date_format(c, "yyyy-MM-dd HH:mm:ss"))
-    elif dt in ("float", "double"):
-        out = F.regexp_replace(c.cast("string"), r"\.0$", "")
-    elif dt.startswith("decimal"):
-        s = c.cast("string")
-        out = F.when(
-            s.contains("."),
-            F.regexp_replace(F.regexp_replace(s, "0+$", ""), r"\.$", "")
-        ).otherwise(s)
-    elif dt == "boolean":
-        out = (F.when(c, F.lit("1")).otherwise(F.lit("0")) if bool_as_int
-               else F.when(c, F.lit("true")).otherwise(F.lit("false")))
-    elif dt.startswith(("array<", "struct<", "map<")):
-        from ..plans.builder import _ch_literal_render
-        out = quote(_ch_literal_render(c, field.dataType))
-    else:
-        out = c.cast("string")
-    return F.when(c.isNull(), F.lit("\\N")).otherwise(out)
-
-
 def write_format(df: DataFrame, fmt: str, path: str,
-                 compression: str | None = None, mode: str = "overwrite",
-                 **extra) -> None:
-    """``SELECT ... INTO OUTFILE 'path' [COMPRESSION 'm'] FORMAT fmt``."""
+                 compression: str | None = None,
+                 settings: dict | None = None) -> None:
+    """``SELECT ... INTO OUTFILE 'path' [COMPRESSION 'm'] FORMAT fmt``
+    and ``INSERT INTO FUNCTION file(path, fmt)``: ONE file at ``path``.
+    A text format writes exactly the text the console shows (plus the
+    final newline); the byte codecs and Spark's columnar writers are
+    OUTFILE-only. With COMPRESSION, the CSV/TSV/JSONEachRow family goes
+    through Spark's own csv/json writers, which compress."""
+    if fmt in TEXT_FORMATS and not compression:
+        _write_text(df, fmt, path, settings or {})
+        return
+    if fmt in BYTE_CODECS:
+        with open(path, "wb") as fh:
+            fh.write(BYTE_CODECS[fmt](df))
+        return
+    if fmt not in FORMATS:
+        raise ValueError(f"FORMAT {fmt} cannot be written"
+                         + (f" with COMPRESSION '{compression}'"
+                            if compression else ""))
     name, _, wopts = FORMATS[fmt]
     if name == "noop":  # FORMAT Null — execute, discard rows
         df.write.format("noop").mode("overwrite").save()
@@ -293,58 +278,54 @@ def write_format(df: DataFrame, fmt: str, path: str,
     opts = dict(wopts)
     if compression:
         opts["compression"] = _COMPRESSION[compression.lower()]
-    header_names: list[str] | None = None
-    sep = opts.get("sep", ",")
-    if name == "csv" and not compression:
-        # CH text conventions, which Spark's csv writer cannot produce:
-        # CSV always double-quotes String/Date/DateTime cells; TSV
-        # backslash-ESCAPES instead of quoting. Pre-render every cell
-        # JVM-side, join with the separator, and write through the raw
-        # TEXT writer so no second-level quoting ever applies.
-        # (Compressed output keeps the plain csv writer — splicing a
-        # header into a compressed stream is not worth the delta.)
-        tsv = sep == "\t"
-        u8 = _u8_cols(df)
-        rendered = [_ch_text_cell_col(f, tsv=tsv, bool_as_int=f.name in u8)
-                    for f in df.schema.fields]
-        if opts.get("header") == "true":
-            # CH quotes CSV header names too; prepended onto the single
-            # output file below
-            q = '"' if not tsv else ""
-            header_names = [q + f.replace('"', '""') + q
-                            for f in df.columns]
-        df = df.select(F.concat_ws(sep, *rendered).alias("value"))
-        name, opts = "text", {}
-    # CH INTO OUTFILE produces ONE file at the named path (ClientBase
-    # writes the result client-side); Spark's writer emits a directory
-    # of part files, so write to a sibling dir and move the single part
-    # into place. INTO OUTFILE is inherently a single-file artifact —
-    # for distributed multi-file output use the table write path.
+    _write_single(df, name, opts, path)
+
+
+def _write_text(df: DataFrame, fmt: str, path: str, settings: dict) -> None:
+    """A text FORMAT into one file. Row formats write their line column
+    from the executors (header lines first); document formats write the
+    text ``render_text`` builds — the same text either way."""
+    spec = TEXT_FORMATS[fmt]
+    if spec.doc is not None or spec.sep != "\n":
+        text = render_text(df, fmt, settings)
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write(text + "\n" if text else "")
+        return
+    types = column_ch_types(df)
+    head = spec.head(df.columns, types) if spec.head else []
+    _write_single(_line_frame(df, spec, types), "text", {}, path, head)
+
+
+def _write_single(df: DataFrame, name: str, opts: dict, path: str,
+                  head: list[str] | None = None) -> None:
+    """CH INTO OUTFILE produces ONE file at the named path (ClientBase
+    writes the result client-side); Spark's writer emits a directory of
+    part files, so write one part to a sibling dir and move it into
+    place, after the ``head`` lines when there are any."""
     import glob
     import shutil
     tmp = path + ".spark-out"
-    (df.coalesce(1).write.format(name)
-     .options(**{**opts, **extra}).mode(mode).save(tmp))
+    df.coalesce(1).write.format(name).options(**opts).mode(
+        "overwrite").save(tmp)
     parts = [p for p in glob.glob(os.path.join(tmp, "part-*"))
              if not p.endswith(".crc")]
-    if len(parts) == 1:
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        elif os.path.exists(path):
-            os.remove(path)
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    elif os.path.exists(path):
+        os.remove(path)
+    if head:
+        with open(path, "w", encoding="utf-8") as out:
+            out.write("".join(h + "\n" for h in head))
+            for p in parts:
+                with open(p, encoding="utf-8") as part:
+                    shutil.copyfileobj(part, out)
+    elif len(parts) == 1:
         shutil.move(parts[0], path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        if header_names is not None and not compression:
-            # CH writes the (quoted) header itself; splice it onto the
-            # single client-side artifact
-            with open(path, "r+", encoding="utf-8") as fh:
-                body = fh.read()
-                fh.seek(0)
-                fh.write(sep.join(header_names) + "\n" + body)
+    elif name == "text":
+        open(path, "w").close()
     else:   # zero parts (empty writer quirk): keep the directory form
-        if os.path.exists(path):
-            shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
         shutil.move(tmp, path)
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def to_native(df: DataFrame) -> bytes:
@@ -402,7 +383,7 @@ _RB_PACK = {"bigint": "q", "int": "i", "smallint": "h", "tinyint": "b",
             "double": "d", "float": "f", "boolean": "B"}
 
 
-def to_row_binary(df: DataFrame, n: int = 100000) -> bytes:
+def to_row_binary(df: DataFrame) -> bytes:
     """CH ``RowBinary``: rows of fixed-width little-endian scalars;
     String as ULEB128 length + UTF-8 bytes; Date as uint16 days since
     epoch; DateTime as uint32 unix seconds (RowBinary wire layout per
@@ -412,7 +393,7 @@ def to_row_binary(df: DataFrame, n: int = 100000) -> bytes:
     from datetime import date, datetime, timezone
 
     buf = bytearray()
-    for row in df.limit(n).collect():
+    for row in df.collect():
         for field, v in zip(df.schema.fields, row):
             t = field.dataType.simpleString()
             if t in _RB_PACK:
@@ -546,10 +527,10 @@ def _mp_value(v, t: str) -> bytes:
     raise ValueError(f"MsgPack: unsupported type {t}")
 
 
-def to_msgpack(df: DataFrame, n: int = 100000) -> bytes:
+def to_msgpack(df: DataFrame) -> bytes:
     """CH ``MsgPackEachRow`` output: rows of MessagePack values."""
     buf = bytearray()
-    for row in df.limit(n).collect():
+    for row in df.collect():
         for field, v in zip(df.schema.fields, row):
             buf += _mp_value(v, field.dataType.simpleString())
     return bytes(buf)
@@ -635,11 +616,342 @@ def from_msgpack(spark: SparkSession, data: bytes, schema: str) -> DataFrame:
     return spark.createDataFrame(rows, st)
 
 
-_NUMERIC_TYPES = {"tinyint", "smallint", "int", "bigint", "float", "double"}
+# --- cell serializers -------------------------------------------------------
+# ClickHouse writes a value's text once per type and escaping rule
+# (ISerialization's Escaped / Quoted / CSV / JSON / Raw / XML text
+# variants) and builds every output format from those. ``cell`` is that
+# serializer here, a Column expression, so its three callers share it:
+# the console collects the serialized cells, INTO OUTFILE writes them
+# from the executors, and formatRow is a scalar function. Rules:
+#   Escaped     TabSeparated: backslash escapes, NULL is \N
+#   Quoted      Values / CH literals: 'strings', NULL is NULL
+#   CSV         "strings" with "" doubling, NULL is \N
+#   JSON        JSON values; 64-bit ints quoted, nan/inf are null
+#   JSONString  the Raw text as a JSON string (the *Strings formats)
+#   Raw         the text as is, NULL is \N
+#   XML         the text with XML entities, NULL is empty
+#   Text        the text as is, NULL is ᴺᵁᴸᴸ (Pretty, Vertical, Markdown)
+# Inside a composite every element is Quoted (JSON: JSON), so Array,
+# Tuple and Map values read as CH literals: [1,2], (1,'a'), {'k':1}.
+# Floats keep Java's text for exponents (1.0E-5, 1.0E20) with an
+# integral .0 dropped; nan and ±inf are spelled as CH does.
+
+NULL_TEXT = {"Escaped": "\\N", "Quoted": "NULL", "CSV": "\\N",
+             "JSON": "null", "JSONString": "null", "Raw": "\\N",
+             "XML": "", "Text": "ᴺᵁᴸᴸ"}
 
 
-def to_pretty(df: DataFrame, n: int = 20,
-              style: str = "compact") -> str:
+def _replace_all(s: Column, pairs) -> Column:
+    for frm, to in pairs:
+        s = F.replace(s, F.lit(frm), F.lit(to))
+    return s
+
+
+_ESCAPES = (("\\", "\\\\"), ("\t", "\\t"), ("\n", "\\n"), ("\r", "\\r"))
+_QUOTED_ESCAPES = _ESCAPES[:1] + (("'", "\\'"),) + _ESCAPES[1:]
+_XML_ENTITIES = (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"),
+                 ("'", "&apos;"), ('"', "&quot;"))
+
+
+def _csv_quoted(s: Column) -> Column:
+    return F.concat(F.lit('"'), F.replace(s, F.lit('"'), F.lit('""')),
+                    F.lit('"'))
+
+
+def _json_string(s: Column) -> Column:
+    """``s`` as a JSON string literal (Jackson's escaping, via to_json
+    of a one-element array with the brackets cut off)."""
+    j = F.to_json(F.array(s))
+    return F.substr(j, F.lit(2), F.length(j) - 2)
+
+
+# how each rule writes a String value (Date and DateTime text alike)
+_STRING_TEXT = {
+    "Escaped": lambda s: _replace_all(s, _ESCAPES),
+    "Quoted": lambda s: F.concat(
+        F.lit("'"), _replace_all(s, _QUOTED_ESCAPES), F.lit("'")),
+    "CSV": _csv_quoted,
+    "JSON": _json_string,
+    "XML": lambda s: _replace_all(s, _XML_ENTITIES),
+    "Raw": lambda s: s,
+    "Text": lambda s: s,
+}
+# how each rule wraps a composite's literal text
+_COMPOSITE_TEXT = {"CSV": _csv_quoted,
+                   "XML": lambda s: _replace_all(s, _XML_ENTITIES)}
+
+
+def cell(c: Column, dt, rule: str, ch: str | None = None) -> Column:
+    """The text of column ``c`` (Spark type ``dt``; ``ch`` is its CH
+    type where the result's type overlay gives one) under escaping
+    ``rule``, with the rule's NULL text: never NULL."""
+    return F.when(c.isNull(), F.lit(NULL_TEXT[rule])).otherwise(
+        value_text(c, dt, rule, ch))
+
+
+def value_text(c: Column, dt, rule: str = "Text",
+               ch: str | None = None) -> Column:
+    """The text of a non-NULL value of ``c`` under ``rule`` (NULL stays
+    NULL); toString of a composite is this, under Text."""
+    if rule == "JSONString":
+        return _json_string(value_text(c, dt, "Raw", ch))
+    if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
+        lit = _composite(c, dt, "JSON" if rule == "JSON" else "Quoted")
+        return _COMPOSITE_TEXT.get(rule, lambda s: s)(lit)
+    if isinstance(dt, T.BooleanType):
+        yes, no = ("1", "0") if ch == "UInt8" else ("true", "false")
+        return F.when(c, F.lit(yes)).otherwise(F.lit(no))
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        return _STRING_TEXT[rule](F.date_format(c, "yyyy-MM-dd HH:mm:ss"))
+    if not isinstance(dt, T.NumericType):
+        return _STRING_TEXT[rule](c.cast("string"))
+    s = c.cast("string")
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        inf = F.lit(float("inf"))
+        if rule == "JSON":
+            # output_format_json_quote_denormals = 0: nan/inf are null
+            return F.when(F.isnan(c) | (F.abs(c) == inf), F.lit("null")) \
+                .otherwise(F.regexp_replace(s, r"^(-?\d+)\.0$", "$1"))
+        return (F.when(F.isnan(c), F.lit("nan"))
+                .when(c == inf, F.lit("inf"))
+                .when(c == -inf, F.lit("-inf"))
+                .otherwise(F.regexp_replace(s, r"^(-?\d+)\.0$", "$1")))
+    if isinstance(dt, T.DecimalType):
+        # output_format_decimal_trailing_zeros = 0: 1.50 prints 1.5
+        return F.regexp_replace(
+            F.regexp_replace(s, r"(\.\d*?)0+$", "$1"), r"\.$", "")
+    if ch == "UInt64":
+        # UInt64 is stored two's-complement in a Long: conv reads a
+        # negative as its unsigned 64-bit value (-1 → 18446744073709551615)
+        s = F.when(c < 0, F.conv(s, 10, 10)).otherwise(s)
+    if rule == "JSON" and isinstance(dt, T.LongType):
+        # output_format_json_quote_64bit_integers = 1
+        return F.concat(F.lit('"'), s, F.lit('"'))
+    return s
+
+
+def _composite(c: Column, dt, rule: str) -> Column:
+    """Literal text of an Array / Map / Tuple value whose elements are
+    written under ``rule`` (Quoted or JSON)."""
+    if isinstance(dt, T.ArrayType):
+        return F.concat(F.lit("["), F.array_join(
+            F.transform(c, _element(dt.elementType, rule)), ","), F.lit("]"))
+    if isinstance(dt, T.MapType):
+        return F.concat(F.lit("{"), F.array_join(
+            F.transform(F.map_entries(c),
+                        _entry(dt.keyType, dt.valueType, rule)), ","),
+            F.lit("}"))
+    # an unnamed Tuple is a JSON array (the reference-era default,
+    # output_format_json_named_tuples_as_objects = 0)
+    parts: list[Column] = []
+    for f in dt.fields:
+        parts += [F.lit(",")] if parts else []
+        parts.append(cell(c[f.name], f.dataType, rule))
+    return F.concat(F.lit("[" if rule == "JSON" else "("), *parts,
+                    F.lit("]" if rule == "JSON" else ")"))
+
+
+# closure factories: a HOF lambda must take exactly the HOF's arguments
+def _element(dt, rule: str):
+    return lambda x: cell(x, dt, rule)
+
+
+def _entry(kt, vt, rule: str):
+    def key(k):
+        # JSON object keys are strings whatever the key type
+        return (_json_string(value_text(k, kt, "Raw")) if rule == "JSON"
+                else cell(k, kt, rule))
+    return lambda e: F.concat(key(e["key"]), F.lit(":"),
+                              cell(e["value"], vt, rule))
+
+
+def _name_text(name: str, rule: str) -> str:
+    """A column name or type name (header rows, object keys) under
+    ``rule``: names are strings, so only the string branch applies."""
+    import json
+    if rule in ("JSON", "JSONString"):
+        return json.dumps(name, ensure_ascii=False)
+    if rule == "CSV":
+        return '"' + name.replace('"', '""') + '"'
+    pairs = {"Quoted": _QUOTED_ESCAPES, "Escaped": _ESCAPES,
+             "XML": _XML_ENTITIES}.get(rule, ())
+    for frm, to in pairs:
+        name = name.replace(frm, to)
+    return f"'{name}'" if rule == "Quoted" else name
+
+
+def _positional(df: DataFrame) -> DataFrame:
+    """``df`` with its columns renamed c0, c1, … (result names may
+    repeat)."""
+    return df.toDF(*[f"c{i}" for i in range(len(df.columns))])
+
+
+def _cells(df: DataFrame, rule: str, types: list[str]) -> list[Column]:
+    """Every column of ``_positional(df)`` serialized under ``rule``."""
+    return [cell(F.col(f"c{i}"), f.dataType, rule, t)
+            for i, (f, t) in enumerate(zip(df.schema.fields, types))]
+
+
+def _collect_cells(df: DataFrame, rule: str, types: list[str],
+                   n: int | None = None) -> list[tuple]:
+    """Rows of ``df`` as tuples of cell text under ``rule``."""
+    out = _positional(df).select(*_cells(df, rule, types))
+    if n is not None:
+        out = out.limit(n)
+    return [tuple(r) for r in out.collect()]
+
+
+def _line_frame(df: DataFrame, spec: "TextFormat",
+                types: list[str]) -> DataFrame:
+    """One ``value`` row per result row: the row format's line."""
+    line = spec.line(_cells(df, spec.rule, types), df.columns)
+    return _positional(df).select(line.alias("value"))
+
+
+def _is_numeric(ch: str) -> bool:
+    """Right-aligned in the Pretty family and Markdown."""
+    return (ch in CH_NUMERIC and ch != "Bool") or ch.startswith("Decimal")
+
+
+# --- layouts ----------------------------------------------------------------
+# A row format writes one line per row from that row's cells (plus header
+# lines); a document format builds its whole text from the frame.
+
+@dataclass(frozen=True)
+class TextFormat:
+    rule: str | None                  # None: format_* settings choose
+    line: Callable | None = None      # (cells, names) → Column
+    head: Callable | None = None      # (names, types) → header lines
+    doc: Callable | None = None       # (df, settings) → text
+    sep: str = "\n"                   # between row lines
+
+
+def _delimited(rule: str, sep: str, open_: str = "", close: str = "",
+               names: bool = False, types: bool = False,
+               row_sep: str = "\n") -> TextFormat:
+    """Cells joined by ``sep`` inside ``open_``…``close``, optionally
+    under a names row and a types row written the same way."""
+    def line(cells, _names):
+        return F.concat(F.lit(open_), F.concat_ws(sep, *cells),
+                        F.lit(close))
+
+    def head(col_names, col_types):
+        rows = [col_names] * names + [col_types] * types
+        return [open_ + sep.join(_name_text(x, rule) for x in r) + close
+                for r in rows]
+    return TextFormat(rule, line, head if names or types else None,
+                      sep=row_sep)
+
+
+def _keyed(rule: str, open_: str, key: Callable[[str], str], sep: str,
+           close: str) -> TextFormat:
+    """Cells as ``key(name)``-prefixed values: JSON objects, TSKV."""
+    def line(cells, names):
+        parts: list[Column] = []
+        for i, (n, c) in enumerate(zip(names, cells)):
+            parts += [F.lit((sep if i else "") + key(n)), c]
+        return F.concat(F.lit(open_), *parts, F.lit(close))
+    return TextFormat(rule, line)
+
+
+def _json_object(rule: str) -> TextFormat:
+    return _keyed(rule, "{", lambda n: _name_text(n, "JSON") + ":", ",",
+                  "}")
+
+
+def _object_lines(df: DataFrame) -> list[str]:
+    """JSONEachRow lines of ``df``."""
+    spec = TEXT_FORMATS["JSONEachRow"]
+    return [r[0] for r in
+            _line_frame(df, spec, column_ch_types(df)).collect()]
+
+
+def _json_doc(rule: str, compact: bool):
+    """JSON / JSONCompact / JSONStrings: meta, data, totals, extremes,
+    rows — clickhouse's document layout."""
+    def doc(df, settings=None):
+        types = column_ch_types(df)
+        main = getattr(df, "_ch_main_df", df)
+        tot = getattr(df, "_ch_totals_df", None)
+        ext = getattr(df, "_ch_extremes_df", None)
+        keys = [_name_text(n, "JSON") for n in main.columns]
+
+        def obj(cells, ind):
+            if compact:
+                return ind + "[" + ", ".join(cells) + "]"
+            return (ind + "{\n" + ",\n".join(
+                f"{ind}\t{k}: {c}" for k, c in zip(keys, cells))
+                + "\n" + ind + "}")
+
+        rows = _collect_cells(main, rule, types)
+        meta = ",\n".join(
+            f'\t\t{{\n\t\t\t"name": {k},\n\t\t\t"type": '
+            f'{_name_text(t, "JSON")}\n\t\t}}' for k, t in zip(keys, types))
+        parts = ['\t"meta":\n\t[\n' + meta + "\n\t]",
+                 '\t"data":\n\t[\n'
+                 + ",\n".join(obj(r, "\t\t") for r in rows) + "\n\t]"]
+        if tot is not None:
+            trows = _collect_cells(tot, rule, types, 1)
+            if trows:
+                parts.append('\t"totals":\n' + obj(trows[0], "\t"))
+        if ext is not None:
+            lo_hi = _collect_cells(ext, rule, types, 2)
+            if len(lo_hi) == 2:
+                parts.append('\t"extremes":\n\t{\n\t\t"min":\n'
+                             + obj(lo_hi[0], "\t\t") + ',\n\t\t"max":\n'
+                             + obj(lo_hi[1], "\t\t") + "\n\t}")
+        parts.append(f'\t"rows": {len(rows)}')
+        return "{\n" + ",\n\n".join(parts) + "\n}"
+    return doc
+
+
+def _json_columns(compact: bool):
+    """JSONColumns / JSONCompactColumns: one array per column."""
+    def doc(df, settings=None):
+        rows = _collect_cells(df, "JSON", column_ch_types(df))
+        cols = ["[" + ",".join(r[i] for r in rows) + "]"
+                for i in range(len(df.columns))]
+        if compact:
+            return "[" + ",".join(cols) + "]"
+        return "{\n" + ",\n".join(
+            f"\t{_name_text(n, 'JSON')}: {c}"
+            for n, c in zip(df.columns, cols)) + "\n}"
+    return doc
+
+
+def _json_object_each_row(df, settings=None) -> str:
+    """``JSONObjectEachRow``: a single object keyed row_1, row_2, …"""
+    return "{\n" + ",\n".join(f'\t"row_{i}": {obj}' for i, obj
+                              in enumerate(_object_lines(df), 1)) + "\n}"
+
+
+def to_json_each_row_with_progress(df: DataFrame, settings=None) -> str:
+    """``JSONEachRowWithProgress``: each row wrapped as {"row": {...}},
+    then one final {"progress": {...}} event (CH streams interim
+    progress; a completed local result has exactly the final one)."""
+    import json
+    lines = [f'{{"row":{obj}}}' for obj in _object_lines(df)]
+    n = str(len(lines))
+    lines.append(json.dumps({"progress": {
+        "read_rows": n, "read_bytes": "0", "total_rows_to_read": n}},
+        separators=(",", ":")))
+    return "\n".join(lines)
+
+
+def _sql_insert(df, settings=None) -> str:
+    """``SQLInsert``: INSERT statements with a VALUES list, batched at
+    output_format_sql_insert_max_batch_size (65505) rows per statement,
+    into output_format_sql_insert_table_name (``table``)."""
+    rows = ["(" + ", ".join(r) + ")"
+            for r in _collect_cells(df, "Quoted", column_ch_types(df))]
+    cols = ", ".join(df.columns)
+    return "\n".join(
+        f"INSERT INTO table ({cols}) VALUES "
+        + ", ".join(rows[i:i + 65505]) + ";"
+        for i in range(0, len(rows), 65505))
+
+
+def to_pretty(df: DataFrame, n: int = 20, style: str = "compact") -> str:
     """Pretty-family console renderer: ClickHouse's box-drawing grid.
 
     ┌─a─┬─b──────┐
@@ -649,31 +961,23 @@ def to_pretty(df: DataFrame, n: int = 20,
     Numbers right-aligned, everything else left-aligned, NULL rendered
     as ᴺᵁᴸᴸ — matching clickhouse-client's default output format.
     ``style``: 'compact' (above), 'full' (FORMAT Pretty's heavy-ruled
-    header box), 'space' (PrettySpace, no grid).
+    header box), 'space' (PrettySpace, no grid). Shows the first ``n``
+    rows. WITH TOTALS / SET extremes=1 print as separate boxes under a
+    "Totals:" / "Extremes:" header, as clickhouse-client does.
     """
+    types = column_ch_types(df)
+    out = _pretty_box(getattr(df, "_ch_main_df", df), types, n, style)
     tot = getattr(df, "_ch_totals_df", None)
     ext = getattr(df, "_ch_extremes_df", None)
-    u8 = _u8_cols(df)
-    if tot is not None or ext is not None:
-        # WITH TOTALS / SET extremes=1: clickhouse-client prints each as
-        # a separate box under a "Totals:" / "Extremes:" header, after
-        # the main result block (_pretty_box is the plain renderer —
-        # main may be df itself when only extremes are attached)
-        main = getattr(df, "_ch_main_df", df)
-        main._ch_uint64_cols = getattr(df, "_ch_uint64_cols",
-                                       frozenset())
-        out = _pretty_box(main, n, u8, style)
-        if tot is not None:
-            out += "\n\nTotals:\n" + _pretty_box(tot, 1, u8, style)
-        if ext is not None:
-            out += "\n\nExtremes:\n" + _pretty_box(ext, 2, u8, style)
-        return out
-    return _pretty_box(df, n, u8, style)
+    if tot is not None:
+        out += "\n\nTotals:\n" + _pretty_box(tot, types, 1, style)
+    if ext is not None:
+        out += "\n\nExtremes:\n" + _pretty_box(ext, types, 2, style)
+    return out
 
 
-def _pretty_box(df: DataFrame, n: int = 20,
-                u8: frozenset = frozenset(),
-                style: str = "compact") -> str:
+def _pretty_box(df: DataFrame, types: list[str], n: int,
+                style: str) -> str:
     """One result block in a Pretty-family style.
 
     ``compact`` (the client default): column names embedded in the top
@@ -687,16 +991,9 @@ def _pretty_box(df: DataFrame, n: int = 20,
         return sum(2 if unicodedata.east_asian_width(c) in "WF" else 1
                    for c in s)
 
-    rows = _collect_rows(df, n)
+    cells = _collect_cells(df, "Text", types, n)
     names = df.columns
-    is_num = [f.dataType.simpleString() in _NUMERIC_TYPES
-              or f.dataType.simpleString().startswith("decimal")
-              or (f.dataType.simpleString() == "boolean"
-                  and f.name in u8)          # UInt8 → numeric alignment
-              for f in df.schema.fields]
-    cells = [["ᴺᵁᴸᴸ" if v is None
-              else _ch_literal(v, bool_as_int=names[i] in u8)
-              for i, v in enumerate(r)] for r in rows]
+    is_num = [_is_numeric(t) for t in types]
     widths = [max(disp_w(names[i]),
                   *([disp_w(r[i]) for r in cells] or [0]))
               for i in range(len(names))]
@@ -732,623 +1029,322 @@ def _pretty_box(df: DataFrame, n: int = 20,
     return "\n".join([head, *body, foot])
 
 
-def _dec_str(v) -> str:
-    """Decimal text: CH trims trailing fractional zeros by default
-    (output_format_decimal_trailing_zeros = false)."""
-    s = str(v)
-    if "." in s:
-        s = s.rstrip("0").rstrip(".")
-    return s or "0"
+def _pretty(style: str) -> TextFormat:
+    return TextFormat("Text", doc=lambda df, settings=None: to_pretty(
+        df, style=style))
 
 
-def _split_simple_args(body: str) -> list[str]:
-    """Split a simpleString type-arg body at top-level commas
-    ('a:int,b:array<int>' → ['a:int', 'b:array<int>'])."""
-    out: list[str] = []
-    depth, cur = 0, []
-    for ch in body:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
+def to_vertical(df: DataFrame, settings=None) -> str:
+    """``Vertical`` output: one ``Row N:`` block per row, a ─ rule under
+    the header, column names padded so values align — clickhouse-client's
+    ``\\G`` format; Totals/Extremes follow as blocks of their own."""
+    types = column_ch_types(df)
+    names = df.columns
+    width = max((len(c) for c in names), default=0) + 2   # name + ': '
+
+    def block(head: str, rows) -> str:
+        return "\n".join([head, "─" * len(head)] + [
+            f"{name + ':':<{width}}{v}"
+            for row in rows for name, v in zip(names, row)])
+
+    main = getattr(df, "_ch_main_df", df)
+    out = "\n\n".join(block(f"Row {i}:", [r]) for i, r in enumerate(
+        _collect_cells(main, "Text", types), 1))
+    tot = getattr(df, "_ch_totals_df", None)
+    ext = getattr(df, "_ch_extremes_df", None)
+    for head, frame, m in (("Totals:", tot, 1), ("Extremes:", ext, 2)):
+        if frame is not None:
+            out += "\n\n" + block(head, _collect_cells(frame, "Text",
+                                                         types, m))
     return out
 
 
-def _struct_field_types(simple: str) -> list[str]:
-    """Field types of a 'struct<a:int,b:string>' simpleString."""
-    return [p.split(":", 1)[1] for p in _split_simple_args(simple[7:-1])
-            if ":" in p]
-
-
-def _ch_literal(v, quoted: bool = False, bool_as_int: bool = False) -> str:
-    """CH literal text of a collected value — the driver-side twin of
-    the builder's ``_ch_literal_render`` (the oracled ``toString``
-    kernel): tuples ``(1,'a')``, arrays ``['a','b']``, maps
-    ``{'k':[1,2]}`` — no spaces, strings/dates single-quoted inside
-    composites with backslash escaping, floats trimmed of the integral
-    ``.0``, NULL elements spelled ``NULL``. ``bool_as_int`` renders a
-    boolean as the UInt8 ``1``/``0`` (predicate results in CH)."""
-    import datetime
-    import decimal
-
-    from pyspark.sql import Row
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        if bool_as_int:
-            return "1" if v else "0"
-        return "true" if v else "false"
-    if isinstance(v, Row):
-        return "(" + ",".join(
-            _ch_literal(x, True, bool_as_int) for x in v) + ")"
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(
-            _ch_literal(x, True, bool_as_int) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(
-            _ch_literal(k, True, bool_as_int) + ":"
-            + _ch_literal(x, True, bool_as_int)
-            for k, x in v.items()) + "}"
-    if isinstance(v, decimal.Decimal):
-        return _dec_str(v)
-    if isinstance(v, float):
-        s = str(v)
-        return s[:-2] if s.endswith(".0") else s
-    if isinstance(v, datetime.datetime):
-        s = v.strftime("%Y-%m-%d %H:%M:%S")
-        return "'" + s + "'" if quoted else s
-    if isinstance(v, datetime.date):
-        s = v.isoformat()
-        return "'" + s + "'" if quoted else s
-    if isinstance(v, (bytes, bytearray)):
-        v = bytes(v).decode("utf-8", "replace")
-    if isinstance(v, str):
-        if quoted:
-            return ("'" + v.replace("\\", "\\\\").replace("'", "\\'")
-                    + "'")
-        return v
-    return str(v)
-
-
-def _u8_cols(df: DataFrame) -> frozenset:
-    """Output columns the builder marked as UInt8-typed booleans
-    (predicate results — rendered 1/0, not true/false)."""
-    return getattr(df, "_ch_uint8_cols", frozenset())
-
-
-def _collect_rows(df: DataFrame, n: int, u64: frozenset | None = None):
-    """``limit(n).collect()`` plus the UInt64-as-Long display fix:
-    columns the builder marked dialect-UInt64 (``_ch_uint64_cols``)
-    re-base negative longs by +2^64, so 0xFFFF… renders as
-    18446744073709551615 — the way CH prints UInt64 — instead of -1.
-    Rows come back as plain tuples (positional/zip access only)."""
-    rows = df.limit(n).collect()
-    if u64 is None:
-        u64 = getattr(df, "_ch_uint64_cols", frozenset())
-    if not u64:
-        return rows
-    ids = {i for i, nm in enumerate(df.columns) if nm in u64}
-    return [tuple((v + (1 << 64))
-                  if i in ids and isinstance(v, int)
-                  and not isinstance(v, bool) and v < 0 else v
-                  for i, v in enumerate(r))
-            for r in rows]
-
-
-def _text_cell(v, simple: str, quote_strings: bool,
-               bool_as_int: bool = False, nested: bool = False) -> str:
-    """One CH text-format cell (TabSeparated/CSV array conventions):
-    escaped strings, [..] arrays / (..) tuples / {..} maps with no
-    spaces and quoted string elements, trimmed decimals,
-    seconds-precision DateTime. A NULL element INSIDE a composite
-    spells ``NULL`` (the literal form); a top-level NULL is ``\\N``."""
-    import datetime
-    if v is None:
-        return "NULL" if nested else "\\N"
-    if simple == "boolean":
-        if bool_as_int:
-            return "1" if v else "0"
-        return "true" if v else "false"
-    if simple.startswith("decimal"):
-        return _dec_str(v)
-    if simple in ("float", "double"):
-        out = str(v)
-        return out[:-2] if out.endswith(".0") else out
-    if simple.startswith("array<"):
-        inner = simple[6:-1]
-        return "[" + ",".join(
-            _text_cell(x, inner, quote_strings=True,
-                       bool_as_int=bool_as_int, nested=True)
-            for x in v) + "]"
-    if simple.startswith("struct<"):
-        inners = _struct_field_types(simple)
-        return "(" + ",".join(
-            _text_cell(x, t, quote_strings=True,
-                       bool_as_int=bool_as_int, nested=True)
-            for x, t in zip(v, inners)) + ")"
-    if simple.startswith("map<"):
-        kv = _split_simple_args(simple[4:-1])
-        kt, vt = (kv + ["string", "string"])[:2]
-        return "{" + ",".join(
-            _text_cell(k, kt, quote_strings=True,
-                       bool_as_int=bool_as_int, nested=True)
-            + ":" + _text_cell(x, vt, quote_strings=True,
-                               bool_as_int=bool_as_int, nested=True)
-            for k, x in v.items()) + "}"
-    if simple.startswith("timestamp") and isinstance(v, datetime.datetime):
-        s = v.strftime("%Y-%m-%d %H:%M:%S")
-        return "'" + s + "'" if quote_strings else s
-    if simple == "date" and isinstance(v, datetime.date):
-        s = v.isoformat()
-        return "'" + s + "'" if quote_strings else s
-    if simple in ("string", "binary"):
-        sv = _tsv_escape(str(v))
-        return "'" + sv.replace("'", "\\'") + "'" if quote_strings else sv
-    return str(v)
-
-
-def to_tab_separated(df: DataFrame, n: int = 10000) -> str:
-    """TabSeparated text output (CH's default client format): NULL is
-    ``\\N``, strings backslash-escape tab/newline, arrays render as
-    ``[1,2]`` with quoted string elements, decimals trim trailing
-    zeros."""
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    names = df.columns
-    rows = _collect_rows(df, n)
-    return "\n".join(
-        "\t".join(_text_cell(v, t, quote_strings=False,
-                             bool_as_int=names[i] in u8)
-                  for i, (v, t) in enumerate(zip(row, simples)))
-        for row in rows)
-
-
-# --- ClickHouse text formats (registerFormats.cpp:10-77 tail) --------------
-# These are console/interchange renderers: inherently driver-side (they
-# produce ONE ordered text document). Large exports should use the
-# distributed writers above (CSV/TSV/Parquet/ORC); these cap at `n` rows.
-
-_CH_TYPE = {"bigint": "Int64", "int": "Int32", "smallint": "Int16",
-            "tinyint": "Int8", "double": "Float64", "float": "Float32",
-            "string": "String", "date": "Date", "timestamp": "DateTime",
-            "timestamp_ntz": "DateTime", "boolean": "Bool",
-            "binary": "String"}
-
-
-def _ch_type(simple: str) -> str:
-    if simple in _CH_TYPE:
-        return _CH_TYPE[simple]
-    if simple.startswith("array<") and simple.endswith(">"):
-        return f"Array({_ch_type(simple[6:-1])})"
-    if simple.startswith("decimal"):
-        return "Decimal" + simple[7:]
-    return "String"
-
-
-def _tsv_escape(s: str) -> str:
-    return (s.replace("\\", "\\\\").replace("\t", "\\t")
-            .replace("\n", "\\n").replace("\r", "\\r"))
-
-
-def _quote(v) -> str:
-    """CH single-quoted string literal with backslash escaping."""
-    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _values_cell(v, simple: str, bool_as_int: bool = False) -> str:
-    if v is None:
-        return "NULL"
-    if simple == "boolean":
-        if bool_as_int:
-            return "1" if v else "0"
-        return "true" if v else "false"
-    if simple.startswith("decimal"):
-        return _dec_str(v)
-    if simple in _NUMERIC_TYPES:
-        return str(v)
-    if simple.startswith("array<"):
-        inner = simple[6:-1]
-        return "[" + ",".join(
-            _values_cell(x, inner, bool_as_int) for x in v) + "]"
-    if simple.startswith("struct<"):
-        inners = _struct_field_types(simple)
-        return "(" + ",".join(
-            _values_cell(x, t, bool_as_int)
-            for x, t in zip(v, inners)) + ")"
-    if simple.startswith("map<"):
-        kv = _split_simple_args(simple[4:-1])
-        kt, vt = (kv + ["string", "string"])[:2]
-        return "{" + ",".join(
-            _values_cell(k, kt, bool_as_int) + ":"
-            + _values_cell(x, vt, bool_as_int)
-            for k, x in v.items()) + "}"
-    import datetime
-    if simple.startswith("timestamp") and isinstance(v, datetime.datetime):
-        return "'" + v.strftime("%Y-%m-%d %H:%M:%S") + "'"
-    return _quote(v)
-
-
-def to_values(df: DataFrame, n: int = 10000) -> str:
-    """``Values`` output: ``(1,'a'),(2,'b')`` — the same syntax INSERT
-    accepts, strings single-quoted with backslash escapes, NULL bare."""
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    names = df.columns
-    return ",".join(
-        "(" + ",".join(_values_cell(v, t, names[i] in u8)
-                       for i, (v, t) in enumerate(zip(row, simples))) + ")"
-        for row in _collect_rows(df, n))
-
-
-def to_vertical(df: DataFrame, n: int = 10000) -> str:
-    """``Vertical`` output: one ``Row N:`` block per row, a ─ rule under
-    the header, column names padded so values align — clickhouse-client's
-    ``\\G`` format."""
-    tot = getattr(df, "_ch_totals_df", None)
-    ext = getattr(df, "_ch_extremes_df", None)
-    u8 = _u8_cols(df)
-    if tot is not None or ext is not None:
-        # separate Totals/Extremes blocks, same as clickhouse-client's
-        # \G output
-
-        def block(head: str, frame: DataFrame, m: int) -> str:
-            names = frame.columns
-            pad = max((len(c) for c in names), default=0) + 1
-            lines = [head, "─" * len(head)]
-            for row in frame.limit(m).collect():
-                lines += [f"{name + ':':<{pad + 1}}"
-                          f"{'ᴺᵁᴸᴸ' if v is None else _ch_literal(v, bool_as_int=name in u8)}"
-                          for name, v in zip(names, row)]
-            return "\n".join(lines)
-
-        main = getattr(df, "_ch_main_df", df)
-        main._ch_uint64_cols = getattr(df, "_ch_uint64_cols",
-                                       frozenset())
-        out = _vertical_rows(main, n, u8)
-        if tot is not None:
-            out += "\n\n" + block("Totals:", tot, 1)
-        if ext is not None:
-            out += "\n\n" + block("Extremes:", ext, 2)
-        return out
-    return _vertical_rows(df, n, u8)
-
-
-def _vertical_rows(df: DataFrame, n: int = 10000,
-                   u8: frozenset = frozenset()) -> str:
-    names = df.columns
-    pad = max((len(c) for c in names), default=0) + 1   # name + ':'
-    blocks = []
-    for i, row in enumerate(_collect_rows(df, n), 1):
-        head = f"Row {i}:"
-        lines = [head, "─" * len(head)]
-        lines += [f"{name + ':':<{pad + 1}}"
-                  f"{'ᴺᵁᴸᴸ' if v is None else _ch_literal(v, bool_as_int=name in u8)}"
-                  for name, v in zip(names, row)]
-        blocks.append("\n".join(lines))
-    return "\n\n".join(blocks)
-
-
-def to_tskv(df: DataFrame, n: int = 10000) -> str:
-    """``TSKV``: ``name=value`` pairs tab-separated, TSV escaping, NULL
-    as ``\\N``."""
-    names = [_tsv_escape(c).replace("=", "\\=") for c in df.columns]
-    u8 = _u8_cols(df)
-    raw = df.columns
-    null = "\\N"
-    return "\n".join(
-        "\t".join(k + "=" + (null if v is None else _tsv_escape(
-            _ch_literal(v, bool_as_int=raw[i] in u8)))
-                  for i, (k, v) in enumerate(zip(names, row)))
-        for row in _collect_rows(df, n))
-
-
-def to_markdown(df: DataFrame, n: int = 10000) -> str:
+def to_markdown(df: DataFrame, settings=None) -> str:
     """``Markdown`` output: header row, alignment rule (numbers right),
     pipe-escaped cells."""
-    is_num = [f.dataType.simpleString() in _NUMERIC_TYPES
-              or f.dataType.simpleString().startswith("decimal")
-              for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    names = df.columns
-    esc = lambda s: s.replace("|", "\\|")  # noqa: E731
+    types = column_ch_types(df)
+
+    def esc(s):
+        return s.replace("|", "\\|")
     out = ["| " + " | ".join(esc(c) for c in df.columns) + " |",
-           "|" + "|".join("---:" if num else ":---" for num in is_num) + "|"]
-    out += ["| " + " | ".join(
-        "ᴺᵁᴸᴸ" if v is None
-        else esc(_ch_literal(v, bool_as_int=names[i] in u8))
-        for i, v in enumerate(row)) + " |"
-        for row in _collect_rows(df, n)]
+           "|" + "|".join("---:" if _is_numeric(t) else ":---"
+                          for t in types) + "|"]
+    out += ["| " + " | ".join(esc(c) for c in r) + " |"
+            for r in _collect_cells(df, "Text", types)]
     return "\n".join(out)
 
 
-def _xml_escape(s: str) -> str:
-    return (s.replace("&", "&amp;").replace("<", "&lt;")
-            .replace(">", "&gt;").replace("'", "&apos;")
-            .replace('"', "&quot;"))
-
-
-def to_xml(df: DataFrame, n: int = 10000) -> str:
+def to_xml(df: DataFrame, settings=None) -> str:
     """``XML`` document output: meta (name+CH type), data rows, rows
     count — the reference's declared XML layout."""
-    rows = _collect_rows(df, n)
+    types = column_ch_types(df)
+    rows = _collect_cells(df, "XML", types)
+    tags = [_name_text(n, "XML") for n in df.columns]
     out = ["<?xml version='1.0' encoding='UTF-8' ?>", "<result>",
            "\t<meta>", "\t\t<columns>"]
-    for f in df.schema.fields:
-        out += ["\t\t\t<column>",
-                f"\t\t\t\t<name>{_xml_escape(f.name)}</name>",
-                f"\t\t\t\t<type>{_meta_type(f, df)}</type>",
+    for tag, t in zip(tags, types):
+        out += ["\t\t\t<column>", f"\t\t\t\t<name>{tag}</name>",
+                f"\t\t\t\t<type>{_name_text(t, 'XML')}</type>",
                 "\t\t\t</column>"]
     out += ["\t\t</columns>", "\t</meta>", "\t<data>"]
-    u8 = _u8_cols(df)
-    for row in rows:
+    for r in rows:
         out.append("\t\t<row>")
-        for name, v in zip(df.columns, row):
-            tag = _xml_escape(name)
-            out.append(
-                f"\t\t\t<{tag}>"
-                f"{'' if v is None else _xml_escape(_ch_literal(v, bool_as_int=name in u8))}"
-                f"</{tag}>")
+        out += [f"\t\t\t<{tag}>{v}</{tag}>" for tag, v in zip(tags, r)]
         out.append("\t\t</row>")
     out += ["\t</data>", f"\t<rows>{len(rows)}</rows>", "</result>"]
     return "\n".join(out)
 
 
-_BIG_INT = {"bigint"}
+def _rule(name: str) -> str:
+    """The escaping rule named by format_custom_escaping_rule or a
+    Template placeholder (None is Raw)."""
+    rule = "Raw" if name == "None" else name
+    if rule not in ("Escaped", "Quoted", "CSV", "JSON", "XML", "Raw"):
+        raise ValueError(f"unknown escaping rule {name!r}")
+    return rule
 
 
-def _json_cell(v, simple: str, bool_as_int: bool = False):
-    import math
-    if v is None:
-        return None
-    if simple in _BIG_INT:
-        # CH quotes (U)Int64 in JSON by default
-        # (output_format_json_quote_64bit_integers = 1)
-        return str(v)
-    if simple in _NUMERIC_TYPES:
-        if isinstance(v, float) and not math.isfinite(v):
-            # CH default output_format_json_quote_denormals = 0:
-            # nan/inf/-inf serialize as null in all JSON formats
-            return None
-        return v
-    if simple == "boolean":
-        # predicate results are UInt8 in the dialect → JSON number 1/0
-        return int(v) if bool_as_int else v
-    if simple.startswith("array<"):
-        inner = simple[6:-1]
-        return [_json_cell(x, inner, bool_as_int) for x in v]
-    if simple.startswith("struct<"):
-        # unnamed Tuple → JSON array of elements (the reference-era
-        # default; output_format_json_named_tuples_as_objects = 0)
-        inners = _struct_field_types(simple)
-        return [_json_cell(x, t, bool_as_int) for x, t in zip(v, inners)]
-    if simple.startswith("map<"):
-        kv = _split_simple_args(simple[4:-1])
-        kt, vt = (kv + ["string", "string"])[:2]
-        return {str(k): _json_cell(x, vt, bool_as_int)
-                for k, x in v.items()}
-    if simple.startswith("decimal"):
-        # CH JSON renders Decimal as an unquoted number by default
-        # (output_format_json_quote_decimals = 0), trailing zeros
-        # trimmed; exact below 2^53 (the documented float policy)
-        iv = int(v)
-        return iv if v == iv else float(_dec_str(v))
-    import datetime
-    if isinstance(v, datetime.datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S")
-    return str(v)
-
-
-def _meta_type(field, df: DataFrame) -> str:
-    """CH type name for format metadata — honors the builder's
-    dialect-UInt64 marker (Spark stores UInt64 as signed Long)."""
-    if field.name in getattr(df, "_ch_uint64_cols", frozenset()):
-        return "UInt64"
-    return _ch_type(field.dataType.simpleString())
-
-
-def _json_doc(df: DataFrame, n: int, compact: bool) -> str:
-    import json
-    tot = getattr(df, "_ch_totals_df", None)
-    ext = getattr(df, "_ch_extremes_df", None)
-    u8 = _u8_cols(df)
-    main = getattr(df, "_ch_main_df", df) if tot is not None else df
-    rows = _collect_rows(main, n, getattr(df, "_ch_uint64_cols", frozenset()))
-    simples = [f.dataType.simpleString() for f in main.schema.fields]
-    meta = [{"name": f.name, "type": _meta_type(f, df)}
-            for f in main.schema.fields]
-
-    def row_obj(row):
-        return ([_json_cell(v, s, c in u8)
-                 for c, v, s in zip(main.columns, row, simples)]
-                if compact else
-                {c: _json_cell(v, s, c in u8)
-                 for c, v, s in zip(main.columns, row, simples)})
-
-    doc: dict = {"meta": meta, "data": [row_obj(r) for r in rows]}
-    # CH JSON formats carry WITH TOTALS / extremes as dedicated fields
-    # between data and rows (published JSON format contract)
-    if tot is not None:
-        trows = tot.limit(1).collect()
-        if trows:
-            doc["totals"] = row_obj(trows[0])
-    if ext is not None:
-        erows = ext.limit(2).collect()
-        if len(erows) == 2:
-            doc["extremes"] = {"min": row_obj(erows[0]),
-                               "max": row_obj(erows[1])}
-    doc["rows"] = len(rows)
-    return json.dumps(doc, ensure_ascii=False, indent="\t")
-
-
-def to_json(df: DataFrame, n: int = 10000) -> str:
-    """``JSON`` document output: {meta, data: [objects], rows}."""
-    return _json_doc(df, n, compact=False)
-
-
-def to_json_compact(df: DataFrame, n: int = 10000) -> str:
-    """``JSONCompact``: like JSON but data rows are arrays."""
-    return _json_doc(df, n, compact=True)
-
-
-def to_json_each_row(df: DataFrame, n: int = 10000) -> str:
-    """``JSONEachRow`` as a string: one JSON object per line, compact
-    separators (CH emits ``{"x":1}``, no spaces)."""
-    import json
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    return "\n".join(
-        json.dumps({c: _json_cell(v, s, c in u8)
-                    for c, v, s in zip(df.columns, row, simples)},
-                   ensure_ascii=False, separators=(",", ":"))
-        for row in _collect_rows(df, n))
-
-
-def _json_str_cell(v, simple: str, bool_as_int: bool = False):
-    """*Strings JSON variants: every value serialized as its CH text
-    form in a JSON string; NULL stays null."""
-    if v is None:
-        return None
-    c = _json_cell(v, simple, bool_as_int)
-    if isinstance(c, (dict, list)):
-        # composites keep their CH literal text inside the string
-        return _ch_literal(v, bool_as_int=bool_as_int)
-    if isinstance(c, bool):
-        return "true" if c else "false"
-    return str(c)
-
-
-def _each_row_lines(df: DataFrame, n: int, compact: bool,
-                    strings: bool) -> list[str]:
-    import json
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    cell = _json_str_cell if strings else _json_cell
-    out = []
-    for row in _collect_rows(df, n):
-        vals = [cell(v, s, c in u8)
-                for c, v, s in zip(df.columns, row, simples)]
-        obj = vals if compact else dict(zip(df.columns, vals))
-        out.append(json.dumps(obj, ensure_ascii=False,
-                              separators=(",", ":")))
-    return out
-
-
-def to_json_compact_each_row(df: DataFrame, n: int = 10000,
-                             with_names: bool = False,
-                             with_types: bool = False) -> str:
-    """``JSONCompactEachRow[WithNames[AndTypes]]``: one JSON array per
-    line; optional header lines with names / CH types."""
-    import json
-    head = []
+def to_custom_separated(df: DataFrame, escaping: str = "Escaped",
+                        field_delim: str = "\t",
+                        row_before: str = "", row_after: str = "\n",
+                        row_between: str = "",
+                        result_before: str = "",
+                        result_after: str = "",
+                        with_names: bool = False) -> str:
+    """``CustomSeparated``: the format_custom_* settings drive the
+    delimiters; each cell escapes per format_custom_escaping_rule.
+    ``with_names`` renders the CustomSeparatedWithNames header as the
+    FIRST ROW — after result_before_delimiter and joined to the data
+    rows by row_between_delimiter, matching the reference's row
+    ordering (the header is just row 0 of the result set)."""
+    rule = _rule(escaping)
+    rows = _collect_cells(df, rule, column_ch_types(df))
     if with_names:
-        head.append(json.dumps(df.columns, ensure_ascii=False,
-                               separators=(",", ":")))
-    if with_types:
-        head.append(json.dumps(
-            [_meta_type(f, df) for f in df.schema.fields],
-            ensure_ascii=False, separators=(",", ":")))
-    return "\n".join(head + _each_row_lines(df, n, True, False))
+        rows.insert(0, [_name_text(n, rule) for n in df.columns])
+    return (result_before + row_between.join(
+        row_before + field_delim.join(r) + row_after for r in rows)
+        + result_after)
 
 
-def to_json_strings_each_row(df: DataFrame, n: int = 10000) -> str:
-    """``JSONStringsEachRow``: objects with every value as a string."""
-    return "\n".join(_each_row_lines(df, n, False, True))
+_TPL_RE = None
 
 
-def to_json_compact_strings_each_row(df: DataFrame,
-                                     n: int = 10000) -> str:
-    """``JSONCompactStringsEachRow``: arrays of string-formatted
-    values."""
-    return "\n".join(_each_row_lines(df, n, True, True))
+def to_template(df: DataFrame, row_format: str,
+                row_between_delimiter: str = "\n",
+                resultset_format: str | None = None) -> str:
+    """``Template`` output: ``${col:Escaping}`` placeholders per row
+    (Raw when the escaping is omitted). ``resultset_format`` may
+    reference ``${data}`` plus ``${rows}``."""
+    import re as _re
+
+    global _TPL_RE
+    if _TPL_RE is None:
+        _TPL_RE = _re.compile(r"\$\{(\w+)(?::(\w+))?\}")
+    where = {n: i for i, n in enumerate(df.columns)}
+    refs = list(dict.fromkeys((m.group(1), m.group(2) or "Raw")
+                              for m in _TPL_RE.finditer(row_format)))
+    for name, _ in refs:
+        if name not in where:
+            raise ValueError(f"Template: unknown column {name}")
+    fields, types = df.schema.fields, column_ch_types(df)
+    rows = _positional(df).select(*[
+        cell(F.col(f"c{where[n]}"), fields[where[n]].dataType, _rule(esc),
+             types[where[n]]) for n, esc in refs]).collect()
+
+    def row_text(r):
+        text = dict(zip(refs, r))
+        return _TPL_RE.sub(
+            lambda m: text[(m.group(1), m.group(2) or "Raw")], row_format)
+
+    data = row_between_delimiter.join(row_text(r) for r in rows)
+    if resultset_format is None:
+        return data
+    return (resultset_format.replace("${data}", data)
+            .replace("${rows}", str(len(rows))))
 
 
-def to_json_object_each_row(df: DataFrame, n: int = 10000) -> str:
-    """``JSONObjectEachRow``: a single object keyed row_1, row_2, …"""
-    import json
-    lines = _each_row_lines(df, n, False, False)
-    body = ",\n".join(f'\t"row_{i}": {obj}'
-                      for i, obj in enumerate(lines, 1))
-    return "{\n" + body + "\n}"
+def _setting(settings: dict, name: str, default: str) -> str:
+    v = str(settings.get(name, default))
+    return v.replace("\\t", "\t").replace("\\n", "\n").replace("\\r", "\r")
 
 
-def to_json_columns(df: DataFrame, n: int = 10000,
-                    compact: bool = False) -> str:
-    """``JSONColumns`` / ``JSONCompactColumns``: columnar JSON — one
-    array per column (object-keyed or positional)."""
-    import json
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    rows = _collect_rows(df, n)
-    cols = [[_json_cell(r[i], simples[i], c in u8) for r in rows]
-            for i, c in enumerate(df.columns)]
-    if compact:
-        return json.dumps(cols, ensure_ascii=False,
-                          separators=(",", ":"))
-    body = ",\n".join(
-        f'\t{json.dumps(c, ensure_ascii=False)}: '
-        + json.dumps(col, ensure_ascii=False, separators=(",", ":"))
-        for c, col in zip(df.columns, cols))
-    return "{\n" + body + "\n}"
+def _custom_separated(with_names: bool):
+    def doc(df, settings):
+        def s(name, default):
+            return _setting(settings, "format_custom_" + name, default)
+        return to_custom_separated(
+            df, escaping=s("escaping_rule", "Escaped"),
+            field_delim=s("field_delimiter", "\t"),
+            row_before=s("row_before_delimiter", ""),
+            row_after=s("row_after_delimiter", "\n"),
+            row_between=s("row_between_delimiter", ""),
+            result_before=s("result_before_delimiter", ""),
+            result_after=s("result_after_delimiter", ""),
+            with_names=with_names)
+    return doc
 
 
-def to_pretty_json_each_row(df: DataFrame, n: int = 10000) -> str:
-    """``PrettyJSONEachRow``: one indented JSON object per row."""
-    import json
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    return "\n".join(
-        json.dumps({c: _json_cell(v, s, c in u8)
-                    for c, v, s in zip(df.columns, row, simples)},
-                   ensure_ascii=False, indent=2)
-        for row in _collect_rows(df, n))
+def _template(df, settings) -> str:
+    row_fmt = str(settings.get("format_template_row_format",
+                               settings.get("format_template_row", "")))
+    if not row_fmt:
+        raise ValueError("FORMAT Template requires SET "
+                         "format_template_row_format = '...'")
+    rs = str(settings.get("format_template_resultset_format",
+                          settings.get("format_template_resultset", "")))
+    return to_template(df, row_fmt, row_between_delimiter=_setting(
+        settings, "format_template_rows_between_delimiter", "\\n"),
+        resultset_format=rs or None)
 
 
-def to_json_strings(df: DataFrame, n: int = 10000) -> str:
-    """``JSONStrings``: the JSON document with string-formatted data
-    values (meta/rows unchanged)."""
-    import json
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    meta = [{"name": f.name, "type": _meta_type(f, df)}
-            for f in df.schema.fields]
-    rows = _collect_rows(df, n)
-    data = [{c: _json_str_cell(v, s, c in u8)
-             for c, v, s in zip(df.columns, row, simples)}
-            for row in rows]
-    return json.dumps({"meta": meta, "data": data, "rows": len(rows)},
-                      ensure_ascii=False, indent="\t")
+# FORMAT name → rule and layout: the one table the console FORMAT
+# suffix, INTO OUTFILE, formatRow and system.formats read
+TEXT_FORMATS: dict[str, TextFormat] = {
+    **dict.fromkeys(("TabSeparated", "TSV"), _delimited("Escaped", "\t")),
+    **dict.fromkeys(("TabSeparatedWithNames", "TSVWithNames"),
+                    _delimited("Escaped", "\t", names=True)),
+    **dict.fromkeys(("TabSeparatedWithNamesAndTypes",
+                     "TSVWithNamesAndTypes"),
+                    _delimited("Escaped", "\t", names=True, types=True)),
+    "CSV": _delimited("CSV", ","),
+    "CSVWithNames": _delimited("CSV", ",", names=True),
+    "CSVWithNamesAndTypes": _delimited("CSV", ",", names=True, types=True),
+    "TSKV": _keyed("Escaped", "", lambda n: _name_text(n, "Escaped")
+                   .replace("=", "\\=") + "=", "\t", ""),
+    **dict.fromkeys(("JSONEachRow", "JSONLines", "NDJSON"),
+                    _json_object("JSON")),
+    "JSONStringsEachRow": _json_object("JSONString"),
+    "PrettyJSONEachRow": _keyed("JSON", "{\n",
+                                lambda n: f"    {_name_text(n, 'JSON')}: ",
+                                ",\n", "\n}"),
+    "JSONCompactEachRow": _delimited("JSON", ",", "[", "]"),
+    "JSONCompactEachRowWithNames": _delimited("JSON", ",", "[", "]",
+                                              names=True),
+    "JSONCompactEachRowWithNamesAndTypes": _delimited(
+        "JSON", ",", "[", "]", names=True, types=True),
+    "JSONCompactStringsEachRow": _delimited("JSONString", ",", "[", "]"),
+    "Values": _delimited("Quoted", ",", "(", ")", row_sep=","),
+    "JSON": TextFormat("JSON", doc=_json_doc("JSON", False)),
+    "JSONCompact": TextFormat("JSON", doc=_json_doc("JSON", True)),
+    "JSONStrings": TextFormat("JSONString",
+                              doc=_json_doc("JSONString", False)),
+    "JSONColumns": TextFormat("JSON", doc=_json_columns(False)),
+    "JSONCompactColumns": TextFormat("JSON", doc=_json_columns(True)),
+    "JSONObjectEachRow": TextFormat("JSON", doc=_json_object_each_row),
+    "JSONEachRowWithProgress": TextFormat(
+        "JSON", doc=to_json_each_row_with_progress),
+    "SQLInsert": TextFormat("Quoted", doc=_sql_insert),
+    "XML": TextFormat("XML", doc=to_xml),
+    "Markdown": TextFormat("Text", doc=to_markdown),
+    "Vertical": TextFormat("Text", doc=to_vertical),
+    # style families: Pretty* = heavy-ruled header box, PrettyCompact* =
+    # names-in-border grid, PrettySpace* = no grid; MonoBlock/NoEscapes
+    # variants share the base layout (no ANSI escapes are emitted)
+    **{f"{base}{variant}": _pretty(style)
+       for base, style in (("Pretty", "full"), ("PrettyCompact", "compact"),
+                           ("PrettySpace", "space"))
+       for variant in ("", "MonoBlock", "NoEscapes")},
+    "CustomSeparated": TextFormat(None, doc=_custom_separated(False)),
+    "CustomSeparatedWithNames": TextFormat(None,
+                                           doc=_custom_separated(True)),
+    "Template": TextFormat(None, doc=_template),
+}
 
 
-def to_sql_insert(df: DataFrame, n: int = 10000,
-                  table: str = "table",
-                  max_batch_size: int = 65505) -> str:
-    """``SQLInsert``: INSERT statements with a VALUES list (batched at
-    output_format_sql_insert_max_batch_size rows per statement)."""
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    names = df.columns
-    rows = _collect_rows(df, n)
-    cols = ", ".join(names)
-    stmts, batch = [], []
-    for row in rows:
-        batch.append("(" + ", ".join(
-            _values_cell(v, s, names[i] in u8)
-            for i, (v, s) in enumerate(zip(row, simples))) + ")")
-        if len(batch) >= max_batch_size:
-            stmts.append(f"INSERT INTO {table} ({cols}) VALUES "
-                         + ", ".join(batch) + ";")
-            batch = []
-    if batch:
-        stmts.append(f"INSERT INTO {table} ({cols}) VALUES "
-                     + ", ".join(batch) + ";")
-    return "\n".join(stmts)
+def render_text(df: DataFrame, fmt: str, settings: dict | None = None) -> str:
+    """The text of ``df`` in text FORMAT ``fmt``, without a final
+    newline: what the console shows line by line and INTO OUTFILE
+    writes. Every row is rendered (the Pretty family shows its first
+    20)."""
+    spec = TEXT_FORMATS[fmt]
+    if spec.doc is not None:
+        text = spec.doc(df, settings or {})
+        return text[:-1] if text.endswith("\n") else text
+    types = column_ch_types(df)
+    head = spec.head(df.columns, types) if spec.head else []
+    lines = [r[0] for r in _line_frame(df, spec, types).collect()]
+    return spec.sep.join(head + lines)
+
+
+_ROW_FORMATS = {name.lower(): spec for name, spec in TEXT_FORMATS.items()
+                if spec.line is not None}
+
+
+def format_row(fmt: str, cols: list[Column], dts: list, types: list,
+               names: list[str], newline: bool) -> Column:
+    """``formatRow(fmt, …)``: one row of a row-oriented text FORMAT,
+    with the cells INTO OUTFILE and the console write."""
+    spec = _ROW_FORMATS.get(fmt.lower())
+    if spec is None:
+        raise ValueError(f"formatRow: unsupported format {fmt!r}")
+    line = spec.line([cell(c, dt, spec.rule, t)
+                      for c, dt, t in zip(cols, dts, types)], names)
+    return F.concat(line, F.lit("\n")) if newline else line
+
+
+def to_tab_separated(df: DataFrame) -> str:
+    """TabSeparated text (CH's default client format)."""
+    return render_text(df, "TabSeparated")
+
+
+def to_csv_text(df: DataFrame, header: bool = False) -> str:
+    """``FORMAT CSV[WithNames]`` text."""
+    return render_text(df, "CSVWithNames" if header else "CSV")
+
+
+def to_json_each_row(df: DataFrame) -> str:
+    """``JSONEachRow`` text: one compact JSON object per line."""
+    return render_text(df, "JSONEachRow")
+
+
+def to_values(df: DataFrame) -> str:
+    """``Values`` text: ``(1,'a'),(2,'b')``."""
+    return render_text(df, "Values")
+
+
+def to_tskv(df: DataFrame) -> str:
+    """``TSKV`` text: ``name=value`` pairs, tab-separated."""
+    return render_text(df, "TSKV")
+
+
+def to_json(df: DataFrame) -> str:
+    """``JSON`` document: {meta, data: [objects], rows}."""
+    return render_text(df, "JSON")
+
+
+def to_json_compact(df: DataFrame) -> str:
+    """``JSONCompact``: like JSON but data rows are arrays."""
+    return render_text(df, "JSONCompact")
+
+
+# the byte codecs: OUTFILE-only writers, and readers for INSERT … FORMAT
+def _to_capnproto(df: DataFrame) -> bytes:
+    from .capnproto import to_capnproto
+    return to_capnproto(df)
+
+
+def _from_capnproto(spark: SparkSession, data: bytes,
+                    schema: str) -> DataFrame:
+    from .capnproto import from_capnproto
+    return from_capnproto(spark, data, schema)
+
+
+BYTE_CODECS = {"RowBinary": to_row_binary, "MsgPackEachRow": to_msgpack,
+               "CapnProto": _to_capnproto}
+BYTE_DECODERS = {"RowBinary": from_row_binary, "MsgPackEachRow": from_msgpack,
+                 "CapnProto": _from_capnproto}
+
+
+def format_table() -> list[tuple[str, int, int]]:
+    """``system.formats``: (name, is_input, is_output) of every format
+    with a reader or a writer."""
+    inputs = (set(FORMATS) - {"Null"}) | set(BYTE_DECODERS)
+    outputs = (set(TEXT_FORMATS) | set(BYTE_CODECS)
+               | {n for n, (kind, _, _) in FORMATS.items()
+                  if kind in ("parquet", "orc", "avro", "noop")
+                  or kind.startswith("arrow-ipc")})
+    return sorted((n, int(n in inputs), int(n in outputs))
+                  for n in inputs | outputs)
 
 
 def tsv_unescape_columns(df: DataFrame) -> DataFrame:
@@ -1369,115 +1365,6 @@ def tsv_unescape_columns(df: DataFrame) -> DataFrame:
             c = F.replace(c, F.lit(sent), F.lit("\\"))
         cols.append(c.alias(f.name))
     return df.select(*cols)
-
-
-def to_custom_separated(df: DataFrame, n: int = 10000,
-                        escaping: str = "Escaped",
-                        field_delim: str = "\t",
-                        row_before: str = "", row_after: str = "\n",
-                        row_between: str = "",
-                        result_before: str = "",
-                        result_after: str = "",
-                        with_names: bool = False) -> str:
-    """``CustomSeparated``: the format_custom_* settings drive the
-    delimiters; each cell escapes per format_custom_escaping_rule
-    (Escaped = TSV, Quoted = CH literal, CSV, JSON, Raw/None).
-    ``with_names`` renders the CustomSeparatedWithNames header as the
-    FIRST ROW — after result_before_delimiter and joined to the data
-    rows by row_between_delimiter, matching the reference's row
-    ordering (the header is just row 0 of the result set)."""
-    import json
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    names = df.columns
-
-    def cell(v, s, i):
-        if escaping == "Quoted":
-            return _values_cell(v, s, names[i] in u8)
-        if escaping == "CSV":
-            return _csv_cell(v, s, names[i] in u8)
-        if escaping == "JSON":
-            return json.dumps(_json_cell(v, s, names[i] in u8),
-                              ensure_ascii=False, separators=(",", ":"))
-        if escaping in ("Raw", "None"):
-            # no escaping: raw string text; non-strings use the plain
-            # text form (which never contains escapes for them)
-            if v is None:
-                return ""
-            if isinstance(v, str):
-                return v
-        # Escaped (default): TSV conventions
-        return _text_cell(v, s, quote_strings=False,
-                          bool_as_int=names[i] in u8)
-
-    rows_txt = [row_before
-                + field_delim.join(cell(v, s, i)
-                                   for i, (v, s)
-                                   in enumerate(zip(row, simples)))
-                + row_after
-                for row in _collect_rows(df, n)]
-    if with_names:
-        hdr = (row_before
-               + field_delim.join(cell(c, "string", i)
-                                  for i, c in enumerate(names))
-               + row_after)
-        rows_txt.insert(0, hdr)
-    return result_before + row_between.join(rows_txt) + result_after
-
-
-_TPL_RE = None
-
-
-def to_template(df: DataFrame, row_format: str,
-                row_between_delimiter: str = "\n",
-                resultset_format: str | None = None,
-                n: int = 10000) -> str:
-    """``Template`` output: ``${col:Escaping}`` placeholders per row.
-
-    Escapings: Raw (as-is), Escaped (TSV), Quoted (CH literal), CSV
-    (RFC double-quote), JSON, XML. ``resultset_format`` may reference
-    ``${data}`` plus ``${rows:...}``."""
-    import json
-    import re as _re
-
-    global _TPL_RE
-    if _TPL_RE is None:
-        _TPL_RE = _re.compile(r"\$\{(\w+)(?::(\w+))?\}")
-    simples = dict(zip(df.columns, (f.dataType.simpleString()
-                                    for f in df.schema.fields)))
-
-    def render(v, simple, esc):
-        if esc == "Quoted":
-            return _values_cell(v, simple)
-        s = "" if v is None else str(v)
-        if esc == "Escaped":
-            return _tsv_escape(s)
-        if esc == "CSV":
-            return '"' + s.replace('"', '""') + '"'
-        if esc == "JSON":
-            return json.dumps(_json_cell(v, simple), ensure_ascii=False)
-        if esc == "XML":
-            return _xml_escape(s)
-        return s                                           # Raw
-
-    rows = df.limit(n).collect()
-
-    def row_text(row):
-        d = dict(zip(df.columns, row))
-
-        def sub(m):
-            name, esc = m.group(1), m.group(2) or "Raw"
-            if name not in d:
-                raise ValueError(f"Template: unknown column {name}")
-            return render(d[name], simples[name], esc)
-        return _TPL_RE.sub(sub, row_format)
-
-    data = row_between_delimiter.join(row_text(r) for r in rows)
-    if resultset_format is None:
-        return data
-    return (resultset_format.replace("${data}", data)
-            .replace("${rows}", str(len(rows))))
-
 
 def read_regexp(spark: SparkSession, path: str, regexp: str,
                 schema: str, skip_unmatched: bool = False) -> DataFrame:
@@ -1504,28 +1391,6 @@ def read_regexp(spark: SparkSession, path: str, regexp: str,
             .cast(f.dataType).alias(f.name)
             for i, f in enumerate(st.fields)]
     return matched.select(*cols)
-
-
-# FORMAT-name → driver-side string renderer (used by the FORMAT suffix
-# and INTO OUTFILE for these text formats)
-def to_json_each_row_with_progress(df: DataFrame, n: int = 10000) -> str:
-    """``JSONEachRowWithProgress``: each row wrapped as {"row": {...}},
-    followed by one final {"progress": {...}} event (CH streams interim
-    progress; a completed local result has exactly the final one)."""
-    import json
-    rows = _collect_rows(df, n)
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    out = [json.dumps(
-        {"row": {c: _json_cell(v, s, c in u8)
-                 for c, v, s in zip(df.columns, row, simples)}},
-        ensure_ascii=False, separators=(",", ":")) for row in rows]
-    out.append(json.dumps({"progress": {
-        "read_rows": str(len(rows)), "read_bytes": "0",
-        "total_rows_to_read": str(len(rows))}},
-        separators=(",", ":")))
-    return "\n".join(out) + "\n"
-
 
 def read_json_as_string(spark: SparkSession, path: str) -> DataFrame:
     """``JSONAsString`` input: each top-level JSON object becomes ONE row
@@ -1559,92 +1424,3 @@ def read_json_as_string(spark: SparkSession, path: str) -> DataFrame:
     # (same constraint CH's parallel parsing has for this format)
     return lines.rdd.mapPartitions(reassemble).toDF(["json"])
 
-
-TEXT_RENDERERS = {
-    "Values": to_values,
-    "Vertical": to_vertical,
-    "TSKV": to_tskv,
-    "Markdown": to_markdown,
-    "XML": to_xml,
-    "JSON": to_json,
-    "JSONCompact": to_json_compact,
-    "JSONEachRowWithProgress": to_json_each_row_with_progress,
-    "JSONStrings": to_json_strings,
-    "JSONCompactEachRow": to_json_compact_each_row,
-    "JSONCompactEachRowWithNames": lambda df, n=10000:
-        to_json_compact_each_row(df, n, with_names=True),
-    "JSONCompactEachRowWithNamesAndTypes": lambda df, n=10000:
-        to_json_compact_each_row(df, n, with_names=True,
-                                 with_types=True),
-    "JSONStringsEachRow": to_json_strings_each_row,
-    "JSONCompactStringsEachRow": to_json_compact_strings_each_row,
-    "JSONObjectEachRow": to_json_object_each_row,
-    "JSONColumns": to_json_columns,
-    "JSONCompactColumns": lambda df, n=10000:
-        to_json_columns(df, n, compact=True),
-    "PrettyJSONEachRow": to_pretty_json_each_row,
-    "JSONLines": to_json_each_row,
-    "NDJSON": to_json_each_row,
-    "SQLInsert": to_sql_insert,
-}
-
-
-def _csv_cell(v, simple: str, bool_as_int: bool = False) -> str:
-    """CH CSV output cell: numbers bare, NULL = \\N, strings always
-    double-quoted with '""' doubling, composites quoted whole in their
-    text form."""
-    if v is None:
-        return "\\N"
-    if simple == "boolean":
-        if bool_as_int:
-            return "1" if v else "0"
-        return "true" if v else "false"
-    if simple.startswith("decimal"):
-        return _dec_str(v)
-    if simple in _NUMERIC_TYPES:
-        return _text_cell(v, simple, quote_strings=False)
-    composite = simple.startswith(("array<", "struct<", "map<"))
-    body = _text_cell(v, simple, quote_strings=composite,
-                      bool_as_int=bool_as_int)
-    return '"' + str(body).replace('"', '""') + '"'
-
-
-def to_csv_text(df: DataFrame, n: int = 10000,
-                header: bool = False) -> str:
-    """Console ``FORMAT CSV[WithNames]`` rendering (same cell contract
-    as the distributed INTO OUTFILE writer)."""
-    simples = [f.dataType.simpleString() for f in df.schema.fields]
-    u8 = _u8_cols(df)
-    names = df.columns
-    lines = []
-    if header:
-        lines.append(",".join('"' + c.replace('"', '""') + '"'
-                              for c in df.columns))
-    for row in _collect_rows(df, n):
-        lines.append(",".join(
-            _csv_cell(v, s, names[i] in u8)
-            for i, (v, s) in enumerate(zip(row, simples))))
-    return "\n".join(lines)
-
-
-def render_row(fmt: str, values, simples, names,
-               newline: bool = True) -> str:
-    """One row in a CH row-oriented text format — the formatRow()
-    scalar-function kernel (CSV / TSV / JSONEachRow / Values)."""
-    import json
-    f = fmt.lower()
-    if f == "csv":
-        out = ",".join(_csv_cell(v, s) for v, s in zip(values, simples))
-    elif f in ("tsv", "tabseparated"):
-        out = "\t".join(_text_cell(v, s, quote_strings=False)
-                        for v, s in zip(values, simples))
-    elif f == "jsoneachrow":
-        out = json.dumps({n: _json_cell(v, s) for n, v, s in
-                          zip(names, values, simples)},
-                         ensure_ascii=False, separators=(",", ":"))
-    elif f == "values":
-        out = "(" + ",".join(_values_cell(v, s)
-                             for v, s in zip(values, simples)) + ")"
-    else:
-        raise ValueError(f"formatRow: unsupported format {fmt!r}")
-    return out + "\n" if newline else out

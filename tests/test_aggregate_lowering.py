@@ -164,3 +164,41 @@ def test_insert_literal_beyond_64_bits_raises(spark, tmp_path, engine):
     with pytest.raises(ValueError, match="64-bit"):
         sess.execute("INSERT INTO big VALUES (1180591620717411303424)")
     assert sess.execute("SELECT count() FROM big").collect()[0][0] == 0
+
+
+# --- -ArgMin/-ArgMax/-Map fold through the base's array kernel -------------
+
+def test_arg_and_map_combinators_type_like_the_base(spark):
+    """sumArgMin, sumArgMax and avgMap reduce with reduce_array, the
+    kernel of sumArray and arrayReduce: an Int32 sum is Int64."""
+    src = "(SELECT toInt32(number) AS x, number % 3 AS v FROM numbers(9))"
+    assert one(spark, "SELECT toTypeName(sumArgMin(x, v)), "
+               "toTypeName(sumArgMax(x, v)), toTypeName(sum(x)), "
+               f"toTypeName(sumArray([x])) FROM {src}") == ("Int64",) * 4
+    assert one(spark, f"SELECT sumArgMin(x, v), sumArgMax(x, v), "
+               f"avgMap(map('k', x)) FROM {src}") == (9, 15, {"k": 4.0})
+
+
+def test_probe_memo_lives_for_one_build(spark, monkeypatch):
+    """A frame the builder probes for a type is garbage once its
+    statement is built: the memo belongs to the build's Context."""
+    import gc
+    import weakref
+
+    from clickhouse_from_scratch_spark.plans import builder
+    probed = []
+    real = builder._probe_field
+
+    def spy(arg, col, ctx, df):
+        if df is not None:
+            probed.append(weakref.ref(df))
+        return real(arg, col, ctx, df)
+    monkeypatch.setattr(builder, "_probe_field", spy)
+    src = spark.range(3).toDF("x")
+    out = execute_sql(spark, "SELECT toString(x + 1) AS s FROM t",
+                      {"t": src})
+    assert sorted(r.s for r in out.collect()) == ["1", "2", "3"]
+    assert probed
+    del out, src
+    gc.collect()
+    assert [r for r in probed if r() is not None] == []

@@ -726,3 +726,153 @@ def test_json_output_family(spark, tmp_path):
         "INSERT INTO table (x, s) VALUES (0, 'a0'), (1, 'a1');"
     assert render("JSONLines") == render("NDJSON") == \
         '{"x":"0","s":"a0"}\n{"x":"1","s":"a1"}'
+
+
+# --- one output path: the console and INTO OUTFILE write the same text ------
+
+@pytest.fixture()
+def chs(spark, tmp_path):
+    from clickhouse_from_scratch_spark.ddl import ChSession
+    return ChSession(spark, warehouse=str(tmp_path / "wh"))
+
+
+def _console(sess, sql):
+    return "\n".join(r.output for r in sess.execute(sql).collect())
+
+
+def _outfile(sess, sql, fmt, tmp_path):
+    dest = str(tmp_path / f"out_{fmt}")
+    sess.execute(f"{sql} INTO OUTFILE '{dest}' FORMAT {fmt}")
+    with open(dest, encoding="utf-8") as fh:
+        return fh.read()
+
+
+UINT_PRED = ("SELECT toUInt64(-1) AS u, 1 = 1 AS p, "
+             "9007199254740993 AS big")
+
+
+@pytest.mark.parametrize("fmt", ["TSV", "JSONEachRow", "PrettyCompact"])
+def test_outfile_writes_the_console_text(chs, tmp_path, fmt):
+    """UInt64 prints unsigned and a predicate prints 1 in the file too,
+    and every text format (PrettyCompact too) can be written."""
+    text = _console(chs, f"{UINT_PRED} FORMAT {fmt}")
+    assert "18446744073709551615" in text
+    assert _outfile(chs, UINT_PRED, fmt, tmp_path) == text + "\n"
+    if fmt == "JSONEachRow":
+        assert text == ('{"u":"18446744073709551615","p":1,'
+                        '"big":"9007199254740993"}')
+
+
+def test_float_text_is_one_spelling(chs, tmp_path):
+    """Console, OUTFILE and toString spell a float alike."""
+    sql = "SELECT 1e-05 AS a, 1e20 AS b, toString(1e-05) AS c, 1.0 AS d"
+    text = _console(chs, f"{sql} FORMAT TSV")
+    assert text == "1.0E-5\t1.0E20\t1.0E-5\t1"
+    assert _outfile(chs, sql, "TSV", tmp_path) == text + "\n"
+    assert _console(chs, f"{sql} FORMAT CSV") == "1.0E-5,1.0E20,\"1.0E-5\",1"
+
+
+def test_text_formats_keep_every_row(chs, tmp_path):
+    sql = "SELECT number FROM numbers(10005)"
+    for fmt in ("TSV", "CSV", "JSONEachRow"):
+        assert len(_console(chs, f"{sql} FORMAT {fmt}").split("\n")) \
+            == 10005, fmt
+    assert len(_outfile(chs, sql, "JSONCompactEachRow",
+                        tmp_path).splitlines()) == 10005
+
+
+def test_template_escaping_rules_match_the_formats(chs):
+    sql = ("SELECT 1 = 1 AS p, NULL AS n, 1.0 AS f, [1, 2] AS a, "
+           "['x', 'y'] AS sa")
+    chs.execute("SET format_template_row_format = '${p:Escaped}|"
+                "${n:Escaped}|${f:Escaped}|${a:Escaped}|${sa:Escaped}'")
+    tsv = _console(chs, f"{sql} FORMAT TSV")
+    assert tsv == "1\t\\N\t1\t[1,2]\t['x','y']"
+    assert _console(chs, f"{sql} FORMAT Template") == tsv.replace("\t", "|")
+    chs.execute("SET format_template_row_format = '${f:CSV}|${sa:CSV}'")
+    assert _console(chs, f"{sql} FORMAT Template") == \
+        _console(chs, "SELECT 1.0 AS f, ['x', 'y'] AS sa FORMAT CSV") \
+        .replace(",", "|", 1)
+
+
+def test_format_row_writes_a_predicate_as_uint8(chs):
+    row = chs.execute("SELECT formatRow('TSV', 1 = 1, 2) AS r").collect()
+    assert row[0].r == "1\t2\n"
+
+
+def test_settings_limit_keeps_the_uint64_type(chs):
+    chs.execute("SET limit = 5")
+    assert _console(chs, "SELECT toUInt64(-1) AS u FORMAT TSV") == \
+        "18446744073709551615"
+    assert _console(chs, "SELECT toUInt64(-1) AS u FORMAT JSON").count(
+        '"type": "UInt64"') == 1
+
+
+def test_ctas_declares_composite_and_overlay_types(chs):
+    chs.execute("CREATE TABLE ct ENGINE = MergeTree ORDER BY k AS SELECT "
+                "1 AS k, (1, 'a') AS tp, map('x', 1) AS m, "
+                "toUInt64(5) AS u, 1 = 1 AS p")
+    types = {r.name: r.type for r in
+             chs.execute("DESCRIBE TABLE ct").collect()}
+    assert types == {"k": "Int32", "tp": "Tuple(Int32, String)",
+                     "m": "Map(String, Int32)", "u": "UInt64",
+                     "p": "UInt8"}
+    row = chs.execute("SELECT tp, m, u, p FROM ct").collect()[0]
+    assert (tuple(row.tp), row.m, row.u, row.p) == ((1, "a"), {"x": 1}, 5, 1)
+
+
+def test_describe_select_spells_ch_types(chs):
+    rows = chs.execute("DESCRIBE (SELECT (1, 'x') AS t, map('k', 1) AS m, "
+                       "1 = 1 AS p, true AS b, [1.5] AS a)").collect()
+    assert [r.type for r in rows] == [
+        "Tuple(Int32, String)", "Map(String, Int32)", "UInt8", "Bool",
+        "Array(Float64)"]
+
+
+SWEEP = ("SELECT toInt32(-7) AS i32, toUInt64(18446744073709551615) AS u64, "
+         "1 = 1 AS pred, true AS b, 1.0 AS f1, 1e-05 AS f2, 0/0 AS fnan, "
+         "toDecimal64(1.5, 3) AS dec, 'a\\tb\\'c\\\\d' AS s, "
+         "toDate('2024-02-29') AS d, "
+         "toDateTime('2024-02-29 12:30:00') AS dt, NULL AS n, "
+         "['x', 'y\\'z'] AS arr, (1, 'a') AS tup, map('k', 1) AS m")
+
+
+def test_every_text_format_writes_the_console_text(chs, tmp_path):
+    """One fixture row with every type the serializers branch on: for
+    every text FORMAT the INTO OUTFILE file is the console text."""
+    from clickhouse_from_scratch_spark.sources.formats import TEXT_FORMATS
+    chs.execute("SET format_template_row_format = '${i32:Quoted} "
+                "${s:CSV} ${arr:JSON} ${tup:XML} ${n:Raw} ${dt:Escaped}'")
+    for fmt in TEXT_FORMATS:
+        text = _console(chs, f"{SWEEP} FORMAT {fmt}")
+        assert _outfile(chs, SWEEP, fmt, tmp_path) == text + "\n", fmt
+    assert _console(chs, f"{SWEEP} FORMAT TSV") == (
+        "-7\t18446744073709551615\t1\ttrue\t1\t1.0E-5\tnan\t1.5\t"
+        "a\\tb'c\\\\d\t2024-02-29\t2024-02-29 12:30:00\t\\N\t"
+        "['x','y\\'z']\t(1,'a')\t{'k':1}")
+
+
+@pytest.mark.parametrize("fmt", ["CSV", "TSV", "JSONEachRow", "Values"])
+def test_format_row_is_the_console_row(chs, fmt):
+    cols = ("i32, u64, pred, b, f1, f2, fnan, dec, s, d, dt, n, arr, tup, "
+            "m")
+    row = chs.execute(f"SELECT formatRowNoNewline('{fmt}', {cols}) AS r "
+                      f"FROM ({SWEEP})").collect()[0].r
+    assert row == _console(chs, f"{SWEEP} FORMAT {fmt}")
+    assert row == _console(chs, f"SELECT * FROM ({SWEEP}) FORMAT {fmt}")
+
+
+def test_union_keeps_the_arms_dialect_types(chs):
+    assert _console(chs, "SELECT 1 = 1 AS p, toUInt64(-1) AS u UNION ALL "
+                         "SELECT 1 = 0 AS p, toUInt64(-1) AS u FORMAT TSV") \
+        == "1\t18446744073709551615\n0\t18446744073709551615"
+
+
+def test_byte_codecs_keep_every_row(chs, tmp_path):
+    from clickhouse_from_scratch_spark.sources import from_row_binary
+    dest = str(tmp_path / "rows.rb")
+    chs.execute("SELECT toInt32(number) AS x FROM numbers(100005) "
+                f"INTO OUTFILE '{dest}' FORMAT RowBinary")
+    with open(dest, "rb") as fh:
+        back = from_row_binary(chs.spark, fh.read(), "x int")
+    assert back.count() == 100005

@@ -298,8 +298,8 @@ def test_sample_hash_md5_single_scan(spark, sf_dir):
 
 
 def test_format_row_filter_pushed(spark, sf_dir):
-    # the Arrow formatRow kernel is the documented cold-path escape
-    # hatch; the row-bounding filter must still reach the parquet scan
+    # formatRow is a JVM expression over the cell serializers; the
+    # row-bounding filter must still reach the parquet scan
     plan = _plan(spark, sf_dir, "sql_format_row")
     assert "PushedFilters" in plan and "l_orderkey" in plan.split(
         "PushedFilters", 1)[1].split("]", 1)[0]

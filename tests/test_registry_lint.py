@@ -131,3 +131,42 @@ def test_lowering_table_keys_are_canonical():
     aliased = sorted(k for k in _LOWERINGS
                      if k in CANONICAL and CANONICAL[k] != k)
     assert aliased == [], f"lowerings keyed by alias names: {aliased}"
+
+
+# Spark type names, as DataType.simpleString() spells them
+_SPARK_NAMES = {"tinyint", "smallint", "int", "bigint", "long", "float",
+                "double", "boolean", "string", "binary", "date",
+                "timestamp", "timestamp_ntz"}
+
+
+def test_one_spark_to_ch_type_spelling():
+    """Only functions/typemap.py spells a Spark type in CH: no other
+    package module holds a dict literal like {"bigint": "Int64"}."""
+    from clickhouse_from_scratch_spark.functions.typemap import (
+        ch_type_to_spark)
+
+    def is_ch_type(v):
+        if not (isinstance(v, str) and v[:1].isupper()):
+            return False
+        try:
+            ch_type_to_spark(v)
+        except ValueError:
+            return False
+        return True
+
+    owner = os.path.join(PKG, "functions", "typemap.py")
+    twins = []
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == owner:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Dict) and any(
+                        isinstance(k, ast.Constant) and k.value in _SPARK_NAMES
+                        and isinstance(v, ast.Constant) and is_ch_type(v.value)
+                        for k, v in zip(node.keys, node.values)):
+                    twins.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
+    assert twins == [], f"Spark → CH type spellings outside typemap: {twins}"
