@@ -21,7 +21,6 @@ queries automatically see each table's engine metadata.
 from __future__ import annotations
 
 import atexit
-import functools
 import os
 import re
 import shutil
@@ -30,17 +29,16 @@ from collections import ChainMap
 from collections.abc import Mapping
 from dataclasses import dataclass, field
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (StructType, TimestampType,
-                               _parse_datatype_string)
+from pyspark.sql.types import _parse_datatype_string
 
-from .functions.typemap import ch_type_to_spark, column_ch_types, spark_to_ch
+from .functions.typemap import (ch_type_to_spark, column_ch_types,
+                                enum_pairs, parse_structure, spark_to_ch)
 from .operators import final as final_op
 from .plans.builder import build
-from .sources.formats import format_table
+from .sources.formats import (Inline, format_table, literal_py, local_frame,
+                              values_frame)
 from .plans.statements import (
     AlterStmt, AttachStmt, BackupStmt, CheckStmt, CreateDatabase,
     CreateDictionary, CreateLiveView, CreateTable,
@@ -465,22 +463,8 @@ class ChSession:
 
     def _frame(self, rows: list[tuple], schema: str | list[str]) -> DataFrame:
         """A driver-side result (DDL outcome, SHOW/DESCRIBE rows, Memory
-        data, a system.* table) as a LocalRelation: the rows reach the
-        JVM as one Arrow table, so reading the frame runs no Python
-        worker, unlike a list given to createDataFrame (a LogicalRDD).
-        ``schema`` is a DDL string, or column names to infer types
-        from the rows. Timestamps convert as the list path does, so a
-        naive datetime reads back unchanged."""
-        struct = (_ddl_struct(schema) if isinstance(schema, str)
-                  else self.spark._inferSchemaFromList(rows, schema))
-        arrow = to_arrow_schema(struct)
-        cols = list(zip(*rows)) or [()] * len(struct.fields)
-        return self.spark.createDataFrame(pa.Table.from_arrays(
-            [pa.array([f.dataType.toInternal(v) for v in col]
-                      if isinstance(f.dataType, TimestampType) else col,
-                      type=t)
-             for col, f, t in zip(cols, struct.fields, arrow.types)],
-            schema=arrow), struct)
+        data, a system.* table) as a LocalRelation."""
+        return local_frame(self.spark, rows, schema)
 
     # --- DDL --------------------------------------------------------------
 
@@ -549,8 +533,7 @@ class ChSession:
                 # Nested(a T, b U) flattens to parallel arrays n.a / n.b
                 # (DataTypeNested.cpp / NestedUtils.cpp; SURVEY §1.2) —
                 # ARRAY JOIN n unnests them in lockstep
-                from .sources.generate import _split_cols
-                for sub, st in _split_cols(ct[7:-1]):
+                for sub, st in parse_structure(ct[7:-1]):
                     expanded.append((f"{cn}.{sub}", f"Array({st})"))
             else:
                 expanded.append((cn, ct))
@@ -650,7 +633,7 @@ class ChSession:
         for c in node.columns:
             if c.name == key:
                 continue
-            dflt = _literal_py(c.default) if c.default is not None else None
+            dflt = literal_py(c.default) if c.default is not None else None
             attrs[c.name] = (c.type_name, dflt)
         hier = next((c.name for c in node.columns if c.hierarchical),
                     None)
@@ -1011,7 +994,7 @@ class ChSession:
                 from .operators.joins import _type_default
                 t = ch_type_to_spark(types[act.name])
                 dflt = _type_default(
-                    _ddl_struct(f"x {t}")[0].dataType).cast(t)
+                    _parse_datatype_string(t)).cast(t)
                 in_part = self._partition_match(meta, act.partition,
                                                 ctx, df, _beval)
                 newc = (dflt if in_part is None else
@@ -1344,15 +1327,6 @@ class ChSession:
     def _insert_inner(self, node: InsertStmt, meta: "TableMeta"):
         if meta.engine == "Null":
             return self._ok()          # accepted, discarded
-        if node.format == "Values" and node.format_data is not None:
-            # FORMAT Values raw data IS the VALUES grammar — reparse
-            # through the statement parser and take the native path
-            from .plans.statements import parse_statement as _ps
-            synth = _ps("INSERT INTO __values_carrier VALUES "
-                        + node.format_data)
-            node.values = synth.values
-            node.format = None
-            node.format_data = None
         if node.watch_view is not None:
             # INSERT INTO t WATCH lv (ParserInsertQuery.cpp:165-172):
             # pipe the live view's current state into the table
@@ -1379,136 +1353,25 @@ class ChSession:
             cols = [n for n, _ in meta.columns
                     if meta.defaults.get(n, ("",))[0]
                     not in hidden_kinds + ("EPHEMERAL",)]
-        inline_files: list[str] = []
-        try:
-            source = self._insert_source(node, meta, cols, inline_files)
-            if inline_files and (meta.memory_df is not None
-                                 or self._mvs_on(meta)):
-                # a Memory table and the materialized views read the
-                # source lazily: take the rows off the file first
-                source = source.localCheckpoint(eager=True)
-            self._store_insert(node, meta, source)
-        finally:
-            for f in inline_files:
-                os.remove(f)
+        self._store_insert(node, meta, self._insert_source(node, meta, cols))
         return self._ok()
 
     def _insert_source(self, node: InsertStmt, meta: "TableMeta",
-                       cols: list[str],
-                       inline_files: list[str]) -> DataFrame:
-        """The rows an INSERT supplies, as a frame with columns ``cols``.
-        Inline FORMAT data goes through a temp file, whose path is
-        appended to ``inline_files`` for the caller to remove."""
+                       cols: list[str]) -> DataFrame:
+        """The rows an INSERT supplies, as a frame with columns ``cols``
+        of the table's types."""
+        types = dict(meta.columns)
         if node.values is not None:
-            types = dict(meta.columns)
-
-            def ingest_type(ch_t: str) -> str:
-                # date/time literals arrive as strings and decimals as
-                # floats; the final projection casts to the declared type
-                spark_t = ch_type_to_spark(ch_t)
-                if spark_t in ("timestamp", "date"):
-                    return "string"
-                if spark_t.startswith("decimal"):
-                    return "double"
-                return spark_t
-
-            schema = ", ".join(f"`{c}` {ingest_type(types[c])}" for c in cols)
-            try:
-                source = self._frame(
-                    [tuple(_literal_py(v) for v in row)
-                     for row in node.values], schema)
-            except (ValueError, TypeError, OverflowError):
-                # VALUES with expressions (CH evaluates them), or a
-                # literal of another type than its column (10 for a
-                # Float64): lower each row to a FROM-less SELECT and
-                # union, whose projection casts to the column type —
-                # stays JVM-side
-                _check_int64_literals(node.values, cols, types)
-                from .plans.ast_nodes import Alias as _Alias
-                from .plans.ast_nodes import SelectQuery as _SQ
-                from .plans.ast_nodes import UnionQuery as _UQ
-                sels = [_SQ(select=[_Alias(v, c)
-                                    for v, c in zip(row, cols)])
-                        for row in node.values]
-                ast = (sels[0] if len(sels) == 1
-                       else _UQ(sels, ["all"] * (len(sels) - 1)))
-                source = self._build(ast)
-            # the rows are in the driver: one write task and one part,
-            # as CH makes one part per INSERT block
-            source = source.coalesce(1)
-        elif node.infile is not None or node.format_data is not None:
+            return values_frame(self.spark, node.values, cols,
+                                [types[c] for c in cols], self._build)
+        if node.infile is not None or node.format_data is not None:
             from .sources import read_format
-
-            types = dict(meta.columns)
-            fmt = node.format or "Parquet"
-            # Spark's csv reader rejects composite (array/map/struct)
-            # column types — carry them as strings and cast from the CH
-            # literal text after the scan (single→double quote swap
-            # makes numeric/plain-string array literals JSON-parseable)
-            composite_cols: dict[str, str] = {}
-            def _sp(c):
-                t = ch_type_to_spark(types[c])
-                if fmt.startswith(("CSV", "TabSeparated", "TSV")) \
-                        and (t.startswith("array<")
-                             or t.startswith("map<")
-                             or t.startswith("struct<")):
-                    composite_cols[c] = t
-                    return "string"
-                return t
-            text_schema = ", ".join(f"`{c}` {_sp(c)}" for c in cols)
-            needs_schema = fmt not in ("Parquet", "ORC", "Avro", "Arrow",
-                                       "ArrowStream")
-            path = node.infile
-            if path is None:               # inline FORMAT data
-                import tempfile
-
-                data = node.format_data
-                if fmt.startswith("JSON") and fmt.endswith("EachRow"):
-                    # CH accepts whitespace-separated objects on one
-                    # line; Spark's JSON reader is line-based, so
-                    # re-split the objects (brace-balanced, string- and
-                    # escape-aware) onto separate lines
-                    data = "\n".join(_split_json_objects(data))
-                with tempfile.NamedTemporaryFile(
-                        "w", suffix=".rows", delete=False,
-                        encoding="utf-8") as fh:
-                    inline_files.append(fh.name)
-                    fh.write(data)
-                    path = fh.name
-            from .sources.formats import BYTE_DECODERS
-            if fmt in BYTE_DECODERS:
-                with open(path, "rb") as fh:
-                    source = BYTE_DECODERS[fmt](
-                        self.spark, fh.read(), text_schema)
-            else:
-                extra = {}
-                if fmt == "Regexp":
-                    extra = {"regex": str(self.settings.get(
-                                 "format_regexp", "")).strip("'\""),
-                             "skip_unmatched": str(self.settings.get(
-                                 "format_regexp_skip_unmatched", 0))
-                             .strip("'\"").lower() in ("1", "true")}
-                source = read_format(self.spark, fmt, path,
-                                     schema=text_schema if needs_schema
-                                     else None, **extra)
-            if fmt in ("TabSeparated", "TSV", "TabSeparatedWithNames",
-                       "TSVWithNames", "TabSeparatedWithNamesAndTypes",
-                       "TSVWithNamesAndTypes"):
-                # CH TSV input decodes backslash escapes; Spark's CSV
-                # reader leaves them raw
-                from .sources.formats import tsv_unescape_columns
-                source = tsv_unescape_columns(source)
-            source = (source.select(*cols)
-                      if set(cols) <= set(source.columns)
-                      else source.toDF(*cols))
-            for cname, target_t in composite_cols.items():
-                lit = F.regexp_replace(F.col(f"`{cname}`"), "'", '"')
-                source = source.withColumn(
-                    cname, F.from_json(lit, target_t))
-        else:
-            source = self._build(node.select)
-            source = source.toDF(*cols)
-        return source
+            return read_format(
+                self.spark, node.format,
+                node.infile if node.infile is not None
+                else Inline(node.format_data, self._build),
+                ", ".join(f"`{c}` {types[c]}" for c in cols), self.settings)
+        return self._build(node.select).toDF(*cols)
 
     def _store_insert(self, node: InsertStmt, meta: "TableMeta",
                       source: DataFrame) -> None:
@@ -1554,7 +1417,7 @@ class ChSession:
             for n, t in meta.stored_columns()])
         if meta.memory_df is not None:
             merged = meta.memory_df.unionByName(source)
-            if (any(_enum_elements(t) for _n, t in meta.stored_columns())
+            if (any(enum_pairs(t) for _n, t in meta.stored_columns())
                     or node.format == "Regexp"):
                 # CH validates enum elements / Regexp line matches AT
                 # INSERT ("unknown element" / "doesn't match the
@@ -2115,31 +1978,10 @@ class ChSession:
         """INSERT INTO FUNCTION sink: null(...) discards after
         evaluating the source; file('path'[, 'Format']) writes through
         the format registry. Other sinks raise a named error."""
-        from .plans.ast_nodes import Literal as _Lit
         tf = node.function
-        if node.select is not None:
-            src = self._build(node.select)
-        else:
-            rows = []
-            from .plans.builder import Context as _BCtx
-            from .plans.builder import _eval as _beval
-            one = self.spark.range(1)
-            for r in node.values or []:
-                rows.append(tuple(
-                    item.value if isinstance(item, _Lit)
-                    else one.select(_beval(item, _BCtx(self.spark, {}),
-                                           one)).collect()[0][0]
-                    for item in r))
-            if not rows:
-                # empty VALUES list: nothing to insert — the null()
-                # sink discards anyway, file() writes an empty frame
-                cols = node.columns or ["c1"]
-                src = self._frame(
-                    [], ", ".join(f"`{c}` string" for c in cols))
-            else:
-                cols = node.columns or [f"c{i + 1}"
-                                        for i in range(len(rows[0]))]
-                src = self._frame(rows, cols)
+        src = (self._build(node.select) if node.select is not None
+               else values_frame(self.spark, node.values or [],
+                                 node.columns, build=self._build))
         fname = tf.name.lower()
         if fname == "null":
             src.count()                      # evaluate, discard
@@ -2256,11 +2098,6 @@ _RESULT_SETTINGS = ("limit", "offset", "max_result_rows")
 
 def _is_param_view(meta: TableMeta) -> bool:
     return meta.is_view and _ast_has_params(meta.view_query)
-
-
-@functools.lru_cache(maxsize=256)
-def _ddl_struct(schema: str) -> StructType:
-    return _parse_datatype_string(schema)
 
 
 class _Catalog(Mapping):
@@ -2489,105 +2326,13 @@ def _render_expr(node) -> str:
     return "<expr>"
 
 
-def _check_int64_literals(rows, cols, types) -> None:
-    """A VALUES literal that fits no 64-bit integer cannot go into an
-    integer column — the expression path's cast would store 0. In-range
-    literals keep CH's wrap-around."""
-    for row in rows:
-        for v, c in zip(row, cols):
-            if ch_type_to_spark(types[c]) not in ("tinyint", "smallint",
-                                                  "int", "long"):
-                continue
-            try:
-                x = _literal_py(v)
-            except ValueError:
-                continue
-            if isinstance(x, int) and not isinstance(x, bool) \
-                    and not -(1 << 63) <= x < (1 << 64):
-                raise ValueError(
-                    f"INSERT VALUES: {x} does not fit a 64-bit integer "
-                    f"(column {c} {types[c]})")
-
-
-def _literal_py(node):
-    from .plans.ast_nodes import ArrayLiteral, FuncCall, Literal, TupleLiteral
-    if isinstance(node, Literal):
-        return node.value
-    if isinstance(node, ArrayLiteral):
-        return [_literal_py(i) for i in node.items]
-    if isinstance(node, TupleLiteral):
-        return tuple(_literal_py(i) for i in node.items)
-    if isinstance(node, FuncCall) and node.name == "negate":
-        return -_literal_py(node.args[0])
-    if isinstance(node, FuncCall) and node.name in ("toDate", "toDateTime"):
-        return _literal_py(node.args[0])
-    if isinstance(node, FuncCall) and node.name == "array":
-        return [_literal_py(i) for i in node.args]
-    if isinstance(node, FuncCall) and node.name == "tuple":
-        return tuple(_literal_py(i) for i in node.args)
-    if isinstance(node, FuncCall) and node.name == "map":
-        items = [_literal_py(i) for i in node.args]
-        return dict(zip(items[0::2], items[1::2]))
-    raise ValueError(f"INSERT VALUES supports literals, got {node}")
-
-
-def _split_json_objects(text: str) -> list[str]:
-    """Split concatenated JSON rows ({..} {..} objects or [..] [..]
-    arrays — JSONCompactEachRow — on any whitespace/newline layout) into
-    one row per list entry. Depth counts BOTH bracket kinds, so an
-    array row containing a nested object (``[1, {"k": 2}]``) stays one
-    row instead of the inner object being split out; string- and
-    escape-aware."""
-    out, depth, start, in_str, esc = [], 0, None, False, False
-    for i, ch in enumerate(text):
-        if in_str:
-            if esc:
-                esc = False
-            elif ch == "\\":
-                esc = True
-            elif ch == '"':
-                in_str = False
-            continue
-        if ch == '"':
-            in_str = True
-        elif ch in "{[":
-            if depth == 0:
-                start = i
-            depth += 1
-        elif ch in "}]":
-            depth -= 1
-            if depth == 0 and start is not None:
-                out.append(text[start:i + 1])
-                start = None
-    return out or [text]
-
-
-def _enum_elements(ch_type: str) -> list[str] | None:
-    """Element names of an Enum8/Enum16 declaration, else None."""
-    import re
-    m = re.match(r"(?i)^\s*enum(?:8|16)?\s*\((.*)\)\s*$", ch_type)
-    if not m:
-        return None
-    return re.findall(r"'((?:[^'\\]|\\.)*)'\s*=", m.group(1))
-
-
-def _enum_pairs(ch_type: str) -> list[tuple[str, int]] | None:
-    """(name, id) pairs of an Enum8/Enum16 declaration, else None."""
-    import re
-    m = re.match(r"(?i)^\s*enum(?:8|16)?\s*\((.*)\)\s*$", ch_type)
-    if not m:
-        return None
-    return [(n, int(i)) for n, i in re.findall(
-        r"'((?:[^'\\]|\\.)*)'\s*=\s*(-?\d+)", m.group(1))]
-
-
 def _enum_guard(col: Column, name: str, ch_type: str) -> Column:
     """CH rejects INSERTed values outside the Enum's element set
     ("Unknown element ... for enum"); enforce lazily with raise_error so
     the check stays distributed. CH also accepts the declared numeric
     IDs at INSERT (Enum8('a'=1): inserting 1 stores 'a') — translate
     those to their element names before the guard."""
-    pairs = _enum_pairs(ch_type)
+    pairs = enum_pairs(ch_type)
     if not pairs:
         return col
     elems = [n for n, _ in pairs]

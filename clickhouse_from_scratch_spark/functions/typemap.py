@@ -133,6 +133,33 @@ def ch_type_to_spark(ch: str) -> str:
     raise ValueError(f"unmapped ClickHouse type: {ch}")
 
 
+def parse_structure(text: str) -> list[tuple[str, str]]:
+    """A CH structure string (``'a UInt64, `b c` Array(String)'``: the
+    column list of file(), s3(), format(), values(), null(),
+    generateRandom() and Nested) → ``[(name, type)]``."""
+    cols = []
+    for part in _split_args(text):
+        if not part.strip():
+            continue
+        m = re.match(r"\s*(`[^`]*`|[^\s`]+)\s+(\S.*?)\s*$", part, re.S)
+        if m is None:
+            raise ValueError(f"bad column {part.strip()!r} in structure "
+                             f"{text!r}")
+        cols.append((m.group(1).strip("`"), m.group(2)))
+    return cols
+
+
+def enum_pairs(ch_type: str | None) -> list[tuple[str, int]] | None:
+    """(element, id) pairs of an ``Enum8``/``Enum16`` declaration, with
+    ``\\'`` and ``\\\\`` in element names unescaped; None for any other
+    type."""
+    m = re.match(r"(?i)^\s*enum(?:8|16)?\s*\((.*)\)\s*$", ch_type or "")
+    if not m:
+        return None
+    return [(re.sub(r"\\(.)", r"\1", n), int(i)) for n, i in re.findall(
+        r"'((?:[^'\\]|\\.)*)'\s*=\s*(-?\d+)", m.group(1))] or None
+
+
 # --- ClickHouse numeric type algebra ---------------------------------------
 #
 # Two distinct rule-sets in the reference, both ported here:

@@ -15,7 +15,6 @@ targets Spark so Catalyst supplies analysis/optimization:
 
 from __future__ import annotations
 
-import os
 import re as _re_mod
 from collections import ChainMap
 from contextlib import contextmanager, nullcontext
@@ -24,7 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BooleanType, LongType, MapType,
-                               StructType)
+                               ShortType, StructType)
 
 from ..functions import REGISTRY, ch
 from ..functions.aggregates import (
@@ -34,7 +33,8 @@ from ..functions.aggregates import (
 from ..functions.registry import typed_array_sum
 from ..functions.typemap import (
     CH_NUMERIC, arithmetic_result_type, ch_literal_type, ch_type_to_spark,
-    least_supertype, negate_result_type, spark_to_ch,
+    enum_pairs, least_supertype, negate_result_type, parse_structure,
+    spark_to_ch,
     spark_type_to_ch_numeric, NoCommonTypeError,
 )
 from ..operators import (
@@ -442,7 +442,7 @@ def _build_select(q: SelectQuery, ctx: Context) -> DataFrame:
 
     # FROM
     if q.from_ is None:
-        df = ctx.spark.range(1).select(F.lit(1).alias("dummy"))
+        df = _system_table("one", ctx)
     else:
         df = _build_from(q.from_, ctx)
     ctx.columns = list(df.columns)
@@ -776,14 +776,14 @@ def _item_overlay(item, field, ctx: Context,
                   df: DataFrame | None) -> str | None:
     """The dialect type of one expression where it differs from the
     spelling of its Spark type: ``UInt8`` for a boolean that is a
-    predicate result (a genuine Bool stays Bool), ``UInt64`` for a Long
-    whose dialect type is UInt64 (stored two's-complement per the
-    UInt64-as-Long policy); else None. A ``*`` column keeps its
-    declared type."""
+    predicate result (a genuine Bool stays Bool) or a Short whose
+    dialect type is UInt8, ``UInt64`` for a Long whose dialect type is
+    UInt64 (stored two's-complement per the UInt64-as-Long policy);
+    else None. A ``*`` column keeps its declared type."""
     dt = field.dataType
-    if not isinstance(dt, (BooleanType, LongType)):
+    if not isinstance(dt, (BooleanType, LongType, ShortType)):
         return None
-    want = "UInt8" if isinstance(dt, BooleanType) else "UInt64"
+    want = "UInt64" if isinstance(dt, LongType) else "UInt8"
     if isinstance(item, Star):
         t = ctx.ch_types.get(field.name)
     elif isinstance(dt, BooleanType):
@@ -1173,8 +1173,11 @@ def _system_table(table: str, ctx: Context) -> DataFrame:
     ChSession layers richer ones — tables/columns/databases — on top by
     injecting db-qualified entries into the table map)."""
     if table == "one":
+        # the one row a FROM-less SELECT, system.one, one() and
+        # remote(…, system.one) read: dummy UInt8 = 0
+        _declare(ctx, "dummy", "UInt8")
         return ctx.spark.range(1).select(
-            F.lit(0).cast("tinyint").alias("dummy"))
+            F.lit(0).cast("smallint").alias("dummy"))
     if table in ("numbers", "numbers_mt"):
         # CH system.numbers is an unbounded stream (StorageSystemNumbers);
         # a query over it terminates only when a LIMIT bounds the scan.
@@ -1255,18 +1258,17 @@ def _table_function(node: TableFunction, ctx: Context) -> DataFrame:
             out = out.unionByName(f_)
         return out
     if name == "one":
-        # system.one analogue: single row, dummy UInt8 = 0
-        return ctx.spark.range(1).select(
-            F.lit(0).cast("tinyint").alias("dummy"))
+        return _system_table("one", ctx)
     if name in ("zeros", "zeros_mt"):
         n = _meter_generated(ctx, int(node.args[0].value), name)
         return ctx.spark.range(n).select(
             F.lit(0).cast("tinyint").alias("zero"))
     if name in ("file", "url"):
+        # file(path[, format[, structure]]), url(URL, format[, structure])
         from ..sources import read_format
-        path = node.args[0].value
-        fmt = node.args[1].value if len(node.args) > 1 else "Parquet"
-        return read_format(ctx.spark, fmt, path)
+        args = [str(_tf_py(a)) for a in node.args]
+        return read_format(ctx.spark, args[1] if len(args) > 1 else None,
+                           args[0], _structure(ctx, args[2:]), ctx.settings)
     if name == "generaterandom":
         # generateRandom('schema', [seed], [max_str_len], [max_arr_len]):
         # unbounded in CH — bounded here by the enclosing LIMIT exactly
@@ -1284,74 +1286,43 @@ def _table_function(node: TableFunction, ctx: Context) -> DataFrame:
             max_str=int(args[2]) if len(args) > 2 else 10,
             max_arr=int(args[3]) if len(args) > 3 else 10)
     if name == "values":
-        # values('a Int32, b String', (1,'x'), (2,'y')) — inline rows
-        from ..functions.typemap import ch_type_to_spark
-        from ..sources.generate import _split_cols
+        # values(['a Int32, b String',] (1, 'x'), (2, 'y')): without a
+        # structure the columns are c1…cN, typed from the rows
+        from ..sources import values_frame
         if not node.args:
             raise BuildError("values() requires at least one row")
+        cols = None
+        data_args = node.args
         if isinstance(node.args[0], Literal) \
                 and isinstance(node.args[0].value, str):
-            cols = _split_cols(node.args[0].value)
-            spark_schema = ", ".join(f"`{n}` {ch_type_to_spark(t)}"
-                                     for n, t in cols)
+            cols = parse_structure(_structure(ctx, [node.args[0].value]))
             data_args = node.args[1:]
-        else:
-            # schema-less form values((1, 'x'), ...): columns named
-            # c1..cN, types inferred from the rows (CH contract)
-            spark_schema = None
-            data_args = node.args
-
-        def _cell(item):
-            # constant EXPRESSIONS are allowed in VALUES rows
-            # (input_format_values_interpret_expressions default 1):
-            # evaluate against a one-row frame — bounded by the
-            # inline row count, never a table scan
-            if isinstance(item, Literal):
-                return item.value
-            one = ctx.spark.range(1)
-            return one.select(_eval(item, ctx, one)).collect()[0][0]
-
-        rows = []
-        for a in data_args:
-            if isinstance(a, TupleLiteral):
-                rows.append(tuple(_cell(item) for item in a.items))
-            else:
-                rows.append((_cell(a),))
-        if spark_schema is None:
-            width = max(len(r) for r in rows)
-            return ctx.spark.createDataFrame(
-                rows, [f"c{i + 1}" for i in range(width)])
-        return ctx.spark.createDataFrame(rows, spark_schema)
+        return values_frame(
+            ctx.spark,
+            [a.items if isinstance(a, TupleLiteral) else [a]
+             for a in data_args],
+            [n for n, _ in cols] if cols else None,
+            [t for _, t in cols] if cols else None,
+            lambda q: _build_query(q, ctx.child()))
     if name == "format":
-        # format(FormatName, 'data') — inline data in any input format;
-        # same temp-file + format-registry path as INSERT ... FORMAT
-        import tempfile
-
-        from ..sources import read_format
+        # format(format, [structure,] 'data'): inline data in any input
+        # format
+        from ..sources import Inline, read_format
         fmt = (node.args[0].name if isinstance(node.args[0], Identifier)
                else str(node.args[0].value))
-        data = node.args[1].value
-        with tempfile.NamedTemporaryFile(
-                "w", suffix=".data", delete=False) as fh:
-            fh.write(data)
-        try:
-            # inline data is bounded by the SQL statement size, so
-            # materialize eagerly — the temp file can then be removed at
-            # once (no leak, no stale lazy re-read)
-            lazy = read_format(ctx.spark, fmt, fh.name)
-            return ctx.spark.createDataFrame(lazy.collect(), lazy.schema)
-        finally:
-            os.unlink(fh.name)
+        args = [str(_tf_py(a)) for a in node.args[1:]]
+        return read_format(
+            ctx.spark, fmt,
+            Inline(args[-1], lambda q: _build_query(q, ctx.child())),
+            _structure(ctx, args[:-1]), ctx.settings)
     if name in _PIPELINE_TFS:
         return _pipeline_table_function(name, node, ctx)
     if name == "null":
         # null('a UInt8'): accepts inserts, always reads empty — the
         # Null-engine table function
-        from ..functions.typemap import ch_type_to_spark
-        from ..sources.generate import _split_cols
         if not node.args or not isinstance(node.args[0], Literal):
             raise BuildError("null() requires a structure string")
-        cols = _split_cols(node.args[0].value)
+        cols = parse_structure(node.args[0].value)
         return ctx.spark.createDataFrame(
             [], ", ".join(f"`{n}` {ch_type_to_spark(t)}"
                           for n, t in cols))
@@ -1375,7 +1346,7 @@ def _table_function(node: TableFunction, ctx: Context) -> DataFrame:
             raise BuildError(f"{name}() requires a table argument")
         key = ".".join(parts[:2])
         if key == "system.one":
-            return ctx.spark.createDataFrame([(0,)], "dummy smallint")
+            return _system_table("one", ctx)
         for cand in (key, parts[-1]):
             if cand in ctx.tables:
                 return ctx.tables[cand]
@@ -1387,10 +1358,7 @@ def _table_function(node: TableFunction, ctx: Context) -> DataFrame:
         # arguments and NOSIGN are accepted and ignored
         import re as _re
 
-        from ..functions.typemap import ch_type_to_spark
-        from ..sources import FORMATS as _FMTS
-        from ..sources import read_format
-        from ..sources.generate import _split_cols
+        from ..sources import FORMATS, read_format
         if not node.args or not isinstance(node.args[0], Literal):
             raise BuildError(f"{name}() requires a URL string")
         url = str(node.args[0].value)
@@ -1402,22 +1370,13 @@ def _table_function(node: TableFunction, ctx: Context) -> DataFrame:
         fmt, structure = None, None
         for a in node.args[1:]:
             if isinstance(a, Literal) and isinstance(a.value, str):
-                if a.value in _FMTS and fmt is None:
+                if a.value in FORMATS and fmt is None:
                     fmt = a.value
                 elif " " in a.value and structure is None:
                     structure = a.value
-        if fmt is None:
-            ext = url.rsplit(".", 1)[-1].lower()
-            fmt = {"parquet": "Parquet", "orc": "ORC", "avro": "Avro",
-                   "csv": "CSV", "tsv": "TSV",
-                   "json": "JSONEachRow",
-                   "jsonl": "JSONEachRow"}.get(ext, "Parquet")
-        schema = None
-        if structure is not None:
-            schema = ", ".join(
-                f"`{n}` {ch_type_to_spark(t)}"
-                for n, t in _split_cols(structure))
-        return read_format(ctx.spark, fmt, url, schema=schema)
+        return read_format(ctx.spark, fmt, url,
+                           _structure(ctx, [structure] if structure else []),
+                           ctx.settings)
     if node.name in ctx.view_asts:
         # parameterized view call: v(p = 3, q = 'x') binds the view's
         # {name:Type} query parameters and builds its stored AST
@@ -1438,6 +1397,14 @@ def _table_function(node: TableFunction, ctx: Context) -> DataFrame:
                       view_asts=ctx.view_asts, probe_memo=ctx.probe_memo)
         return _build_query(ctx.view_asts[node.name], sub)
     raise BuildError(f"unsupported table function: {node.name}")
+
+
+def _structure(ctx: Context, args: list[str]) -> str | None:
+    """A table function's optional structure argument (``args`` is
+    empty or holds it), its columns' CH types declared to ``ctx``."""
+    for n, t in parse_structure(args[0]) if args else []:
+        _declare(ctx, n, t)
+    return args[0] if args else None
 
 
 # dialect-level table functions over the beyond-reference pipeline ops
@@ -5008,25 +4975,13 @@ def _refs_lambda_param(n, ctx: Context) -> bool:
     return False
 
 
-def _enum_pairs(cht: str | None) -> list | None:
-    """('name', value) pairs of a declared Enum8/Enum16 CH type text."""
-    if not cht or not cht.strip().startswith("Enum"):
-        return None
-    m = _re_mod.match(r"Enum(?:8|16)?\s*\((.*)\)\s*$", cht.strip())
-    if not m:
-        return None
-    pairs = _re_mod.findall(r"'((?:[^'\\]|\\.)*)'\s*=\s*(-?\d+)",
-                            m.group(1))
-    return [(k.replace("\\'", "'"), int(v)) for k, v in pairs] or None
-
-
 def _declared_enum(node, ctx: Context) -> list | None:
     if isinstance(node, Alias):
         return _declared_enum(node.expr, ctx)
     if isinstance(node, Identifier):
         t = ctx.ch_types.get(node.name) \
             or ctx.ch_types.get(node.parts[-1])
-        return _enum_pairs(t)
+        return enum_pairs(t)
     return None
 
 

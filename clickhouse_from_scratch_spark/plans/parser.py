@@ -801,7 +801,8 @@ class Parser:
             out = [name]
             while True:
                 t = self.advance()
-                out.append(t.text if t.kind != T.STRING else f"'{t.text}'")
+                out.append(t.text if t.kind != T.STRING else "'" + t.text
+                           .replace("\\", "\\\\").replace("'", "\\'") + "'")
                 if t.is_op("("):
                     depth += 1
                 elif t.is_op(")"):

@@ -2,231 +2,587 @@
 
 Reference: ``src/Formats/registerFormats.cpp:10-77`` declares the format
 set (all registrations commented out there; only Native has live code —
-``NativeWriter.cpp``/``NativeReader.cpp``). Inputs: ``FORMATS`` maps a
-name to Spark's reader (the ClickHouse text formats as options on its
-CSV/JSON readers, or a dedicated lowering). Outputs: ``TEXT_FORMATS``
-maps each text format to its cells' escaping rule and its layout, the
-one table the console FORMAT suffix, INTO OUTFILE and formatRow read;
-the byte codecs and Spark's columnar writers are OUTFILE-only.
-``INTO OUTFILE ... COMPRESSION`` (``ParserQueryWithOutput.cpp:83-99``)
-maps to the writers' ``compression`` option.
+``NativeWriter.cpp``/``NativeReader.cpp``). Inputs: ``read_format`` is
+the one reader every input site calls — INSERT … FORMAT, INSERT … FROM
+INFILE and the file/url/s3/hdfs/format table functions — and
+``values_frame`` the one lowering of rows written as SQL (VALUES,
+FORMAT Values, values()). ``FORMATS`` maps each name to its reader.
+Outputs: ``TEXT_FORMATS`` maps each text format to its cells' escaping
+rule and its layout, the one table the console FORMAT suffix, INTO
+OUTFILE and formatRow read; a text format's input cells are read back
+under the same rule. The byte codecs and Spark's columnar writers are
+OUTFILE-only. ``INTO OUTFILE ... COMPRESSION``
+(``ParserQueryWithOutput.cpp:83-99``) compresses the written file.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
-from ..functions.typemap import CH_NUMERIC, column_ch_types
-
-
-def _parse_ddl_schema(spark: SparkSession, schema: str):
-    """DDL schema string → StructType (via a zero-row reader probe,
-    public API only)."""
-    from pyspark.sql.types import StructType
-    return StructType.fromDDL(schema)
+from ..functions.typemap import (CH_NUMERIC, ch_type_to_spark,
+                                 column_ch_types, parse_structure)
 
 
-# name → (spark format, read options, write options)
-FORMATS: dict[str, tuple[str, dict[str, Any], dict[str, Any]]] = {
-    "Parquet": ("parquet", {}, {}),
-    "ORC": ("orc", {}, {}),
-    "Avro": ("avro", {}, {}),
+# CH CSV/TSV both write NULL as \N; reads infer column types when no
+# structure is given. A CSV string may hold a newline inside its quotes
+# (``_scan``); TSV escapes instead and never quotes.
+_CSV = {"nullValue": "\\N", "inferSchema": "true", "escape": '"'}
+_TSV = {"sep": "\t", "nullValue": "\\N", "inferSchema": "true",
+        "quote": "\u0000"}
+
+# name → (reader kind, read options)
+FORMATS: dict[str, tuple[str, dict[str, Any]]] = {
+    "Parquet": ("parquet", {}),
+    "ORC": ("orc", {}),
+    "Avro": ("avro", {}),
     # Arrow = IPC random-access file, ArrowStream = IPC stream
-    # (registerFormats.cpp:31-34 declares both; real IPC here, shared
-    # with the Native analogue below)
-    "Arrow": ("arrow-ipc-file", {}, {}),
-    "ArrowStream": ("arrow-ipc-stream", {}, {}),
-    # CH CSV/TSV both render NULL as \N (formats docs) — make the
-    # distributed Spark readers/writers speak the same convention
-    # reads infer column types when no explicit structure is given,
-    # like CH's schema inference for file() (schema arg overrides)
-    "CSV": ("csv", {"header": "false", "nullValue": "\\N",
-                    "inferSchema": "true", "escape": '"'},
-            {"header": "false", "nullValue": "\\N"}),
-    "CSVWithNames": ("csv", {"header": "true", "nullValue": "\\N",
-                             "inferSchema": "true", "escape": '"'},
-                     {"header": "true", "nullValue": "\\N"}),
-    "TabSeparated": ("csv", {"sep": "\t", "header": "false",
-                             "nullValue": "\\N", "inferSchema": "true"},
-                     {"sep": "\t", "header": "false",
-                      "nullValue": "\\N"}),
-    "TSV": ("csv", {"sep": "\t", "header": "false", "nullValue": "\\N",
-                    "inferSchema": "true"},
-            {"sep": "\t", "header": "false", "nullValue": "\\N"}),
-    "TabSeparatedWithNames": ("csv", {"sep": "\t", "header": "true",
-                                      "nullValue": "\\N",
-                                      "inferSchema": "true"},
-                              {"sep": "\t", "header": "true",
-                               "nullValue": "\\N"}),
-    # common CH short aliases
-    "TSVWithNames": ("csv", {"sep": "\t", "header": "true",
-                             "nullValue": "\\N", "inferSchema": "true"},
-                     {"sep": "\t", "header": "true",
-                      "nullValue": "\\N"}),
-    # Native ≙ Arrow IPC stream (the reference's only live format code;
-    # see to_native/from_native below)
-    "Native": ("arrow-ipc-stream", {}, {}),
-    "JSONEachRow": ("json", {}, {}),
-    # rows are top-level ARRAYS, not objects — Spark's json reader
-    # cannot map them to named columns, so a dedicated lowering parses
-    # each line as array<string> and casts positionally (distributed)
-    "JSONCompactEachRow": ("json-compact-rows", {}, {}),
+    # (registerFormats.cpp:31-34 declares both); Native ≙ Arrow IPC
+    # stream, the open-ecosystem form of the reference's only live
+    # format code (columns serialized block-wise)
+    "Arrow": ("arrow-ipc-file", {}),
+    "ArrowStream": ("arrow-ipc-stream", {}),
+    "Native": ("arrow-ipc-stream", {}),
+    "CSV": ("csv", _CSV),
+    "CSVWithNames": ("csv", {**_CSV, "header": "true"}),
+    **dict.fromkeys(("TabSeparated", "TSV"), ("csv", _TSV)),
+    **dict.fromkeys(("TabSeparatedWithNames", "TSVWithNames"),
+                    ("csv", {**_TSV, "header": "true"})),
+    # a names row, then a row of CH types: the types give the structure
+    # when the statement gives none
+    "CSVWithNamesAndTypes": ("names-types", _CSV),
+    **dict.fromkeys(("TabSeparatedWithNamesAndTypes",
+                     "TSVWithNamesAndTypes"), ("names-types", _TSV)),
+    "JSONEachRow": ("json", {}),
+    # rows are top-level JSON arrays (or objects of JSON strings): each
+    # row parsed as array<string> / map<string,string>, JVM-side
+    **dict.fromkeys(("JSONCompactEachRow", "JSONCompactStringsEachRow"),
+                    ("json-compact-rows", {})),
+    "JSONStringsEachRow": ("json-strings-rows", {}),
+    # key=value pairs separated by tabs
+    "TSKV": ("tskv-rows", {}),
     # regex-per-line input (reference registerInputFormatRegexp;
     # settings format_regexp / format_regexp_skip_unmatched drive it)
-    "Regexp": ("regexp-rows", {}, {}),
-    "LineAsString": ("text", {}, {}),
-    "JSONAsString": ("json-as-string", {}, {}),
-    # names row + TYPES row (row 2 is the CH type list, stripped by the
-    # reader lowering)
-    "TabSeparatedWithNamesAndTypes": ("tsv-names-types",
-                                      {"sep": "\t"}, {}),
-    "TSVWithNamesAndTypes": ("tsv-names-types", {"sep": "\t"}, {}),
-    "CSVWithNamesAndTypes": ("tsv-names-types", {"sep": ","}, {}),
-    # every value carried as a JSON string, cast to the declared type
-    "JSONStringsEachRow": ("json-strings-rows", {}, {}),
-    "JSONCompactStringsEachRow": ("json-compact-rows", {}, {}),
-    # key=value pairs separated by tabs
-    "TSKV": ("tskv-rows", {}, {}),
-    "RawBLOB": ("binaryFile", {}, {}),
-    "Null": ("noop", {}, {}),
+    "Regexp": ("regexp-rows", {}),
+    "LineAsString": ("text", {}),
+    "JSONAsString": ("json-as-string", {}),
+    "Values": ("values", {}),
+    **dict.fromkeys(("RowBinary", "MsgPackEachRow", "CapnProto"),
+                    ("bytes", {})),
+    "RawBLOB": ("binaryFile", {}),
+    "Null": ("noop", {}),
 }
 
 _COMPRESSION = {"gzip": "gzip", "gz": "gzip", "zstd": "zstd", "lz4": "lz4",
                 "snappy": "snappy", "none": "none"}
 
+# file extension → format, for a statement that names none
+_EXTENSIONS = {"parquet": "Parquet", "orc": "ORC", "avro": "Avro",
+               "arrow": "Arrow", "csv": "CSV", "tsv": "TSV",
+               "json": "JSONEachRow", "jsonl": "JSONEachRow",
+               "ndjson": "JSONEachRow"}
 
-def read_format(spark: SparkSession, fmt: str, path: str,
-                schema: str | None = None, **extra) -> DataFrame:
-    """``INSERT ... FROM INFILE 'path' FORMAT fmt`` read path."""
-    name, ropts, _ = FORMATS[fmt]
-    if name == "json-as-string":
-        return read_json_as_string(spark, path)
-    if name == "regexp-rows":
-        # Regexp format: each line matched against format_regexp; group
-        # i binds column i. Distributed text scan + JVM regexp_extract;
-        # unmatched lines raise unless format_regexp_skip_unmatched=1
-        # (CH raises "Line ... doesn't match the regexp").
-        regex = extra.get("regex") or ""
+
+class Inline(str):
+    """Data written in the statement itself (``INSERT … FORMAT fmt
+    <data>``, ``format(fmt, 'data')``): a ``read_format`` source that is
+    the data, not a path to it. It reaches the JVM as a local relation,
+    so the frame reads no file and holds its rows in one partition.
+    ``build`` is the statement's builder scope: FORMAT Values data
+    evaluates its expression cells with it, so they see the session's
+    settings, UDFs, dictionaries and query parameters."""
+
+    build: Callable | None
+
+    def __new__(cls, text: str, build: Callable | None = None) -> "Inline":
+        self = super().__new__(cls, text)
+        self.build = build
+        return self
+
+
+def read_format(spark: SparkSession, fmt: str | None, source: str,
+                schema: str | None = None,
+                settings: dict | None = None) -> DataFrame:
+    """The rows of ``source`` — a path, or ``Inline`` data — in input
+    FORMAT ``fmt`` (None: guessed from the file extension, else
+    Parquet). ``schema`` is the CH structure (``'a UInt64, s String'``;
+    a Spark type name such as ``long`` reads too): the frame has exactly
+    its columns, in order, of its types. Without one, the format's own
+    names and inferred types stand, and a text format without a names
+    row names its columns c1…cN, as ClickHouse does. ``settings`` are
+    the session's (``format_regexp``, ``format_regexp_skip_unmatched``).
+
+    Text cells are read as strings and typed by one rule (``_typed``),
+    the inverse of the escaping rule the format writes under: TSV
+    unescapes, composites parse from their literal text, UInt64 keeps
+    values above 2^63 (two's complement, as stored)."""
+    # a gzip file's extension is the one before .gz
+    fmt = fmt or _EXTENSIONS.get(
+        source.removesuffix(".gz").rpartition(".")[2].lower(), "Parquet")
+    kind, opts = FORMATS.get(fmt, ("noop", {}))
+    if kind == "noop":
+        raise ValueError(f"FORMAT {fmt} cannot be read")
+    cols = parse_structure(schema) if schema else None
+    if kind == "values":
+        return values_frame(spark, parse_values(_text(source)),
+                            [n for n, _ in cols] if cols else None,
+                            [t for _, t in cols] if cols else None,
+                            source.build if isinstance(source, Inline)
+                            else None)
+    if kind in ("parquet", "orc", "avro", "arrow-ipc-file",
+                "arrow-ipc-stream", "binaryFile", "bytes"):
+        df = _read_binary(spark, fmt, kind, source, cols)
+    else:
+        df, cols = _read_text(spark, fmt, kind, opts, source, cols,
+                              settings or {})
+        rule = TEXT_FORMATS[fmt].rule if fmt in TEXT_FORMATS else "Raw"
+        if cols is not None:
+            df = df.select(*[
+                _typed(F.col(f"`{c}`"), f.dataType, t, rule).alias(f.name)
+                for c, f, (_, t) in zip(df.columns, _struct(cols).fields,
+                                        cols)])
+        else:
+            if kind == "csv" and "header" not in opts:
+                df = df.toDF(*[f"c{i + 1}" for i in range(len(df.columns))])
+            if rule == "Escaped":
+                df = df.select(*[
+                    _unescape(F.col(f"`{f.name}`")).alias(f.name)
+                    if isinstance(f.dataType, T.StringType)
+                    else F.col(f"`{f.name}`") for f in df.schema.fields])
+    return df.coalesce(1) if isinstance(source, Inline) else df
+
+
+def _spark_type(t: str) -> str:
+    """The Spark type of structure type ``t``: a CH type, or a Spark
+    type name (``long``); a name that is neither is an unknown CH
+    type."""
+    try:
+        return ch_type_to_spark(t)
+    except ValueError:
+        try:
+            _ddl_struct(f"`x` {t}")
+        except Exception:
+            raise ValueError(f"unknown type in structure: {t}") from None
+        return t
+
+
+def _struct(cols: list[tuple[str, str]], text: bool = False
+            ) -> T.StructType:
+    """The Spark schema of structure ``cols``; all strings when
+    ``text``."""
+    return _ddl_struct(", ".join(
+        f"`{n}` {'string' if text else _spark_type(t)}" for n, t in cols))
+
+
+def _text(source: str) -> str:
+    if isinstance(source, Inline):
+        return source
+    with open(source, encoding="utf-8") as fh:
+        return fh.read()
+
+
+def _read_binary(spark: SparkSession, fmt: str, kind: str, source: str,
+                 cols: list | None) -> DataFrame:
+    """A binary format: the structure selects and casts a
+    self-describing format's columns by name (by position when the
+    names differ), and decodes a byte codec's rows."""
+    st = _struct(cols) if cols else None
+    if kind == "bytes":
+        if st is None:
+            raise ValueError(f"FORMAT {fmt} requires a structure")
+        if isinstance(source, Inline):
+            data = source.encode("utf-8")
+        else:
+            with open(source, "rb") as fh:
+                data = fh.read()
+        return BYTE_DECODERS[fmt](spark, data, ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in st.fields))
+    if isinstance(source, Inline):
+        raise ValueError(f"FORMAT {fmt} reads a file, not inline data")
+    if kind.startswith("arrow-ipc"):
+        with open(source, "rb") as fh:
+            table = (pa.ipc.open_file(fh) if kind == "arrow-ipc-file"
+                     else pa.ipc.open_stream(fh)).read_all()
+        df = spark.createDataFrame(table)
+    else:
+        df = spark.read.format(kind).load(source)
+    if st is None:
+        return df
+    names = [f.name for f in st.fields]
+    src = names if set(names) <= set(df.columns) else df.columns
+    return df.select(*[F.col(f"`{c}`").cast(f.dataType).alias(f.name)
+                       for c, f in zip(src, st.fields)])
+
+
+def _read_text(spark: SparkSession, fmt: str, kind: str, opts: dict,
+               source: str, cols: list | None, settings: dict
+               ) -> tuple[DataFrame, list | None]:
+    """A text format's cells, as strings (of the structure's columns when
+    there is one) — or, with no structure, as Spark's reader infers them
+    — and the structure (a names-and-types header supplies one)."""
+    if kind == "names-types":
+        # line 1 names the columns, line 2 types them: the reader takes
+        # line 1 as its header, and the row equal to line 2 goes
+        head = _records(_head(source), kind, opts)[:2]
+        names, types = (_fields(line, opts) for line in head)
+        cols = cols or list(zip(names, types))
+        df = _scan(spark, "csv", {**opts, "header": "true"}, source,
+                   _struct(cols, text=True))
+        same = [F.col(f"`{c}`") == t for c, t in zip(df.columns, types)]
+        return df.where(~F.coalesce(
+            functools.reduce(lambda a, b: a & b, same), F.lit(False))), cols
+    if kind in ("csv", "json"):
+        return _scan(spark, kind, opts, source,
+                     cols and _struct(cols, text=True)), cols
+    if kind == "json-as-string":
+        if isinstance(source, Inline):
+            return local_frame(spark, [(r,) for r in split_json_rows(
+                source)], "json string"), cols
+        # each partition of the file's lines splits on the executors (a
+        # row must not span two partitions, as in CH's parallel parsing)
+        split = _json_row_splitter()
+        return spark.createDataFrame(spark.read.text(source).rdd
+                                     .mapPartitions(lambda part: (
+                                         (r,) for r in split(
+                                             x.value for x in part))),
+                                     "json string"), cols
+    lines = _lines(spark, source, kind, opts)
+    if kind == "text":
+        return lines, cols
+    if cols is None:
+        raise ValueError(f"FORMAT {fmt} requires a structure")
+    v = F.col("value")
+    if kind == "json-compact-rows":
+        arr = F.from_json(v, "array<string>")
+        cells = [F.element_at(arr, i + 1) for i in range(len(cols))]
+    elif kind == "json-strings-rows":
+        m = F.from_json(v, "map<string,string>")
+        cells = [F.element_at(m, n) for n, _ in cols]
+    elif kind == "tskv-rows":
+        m = F.str_to_map(v, F.lit("\t"), F.lit("="))
+        cells = [F.nullif(F.element_at(m, n), F.lit("\\N"))
+                 for n, _ in cols]
+    else:
+        # Regexp: group i binds column i; an unmatched line raises, as
+        # CH's "doesn't match the regexp", unless
+        # format_regexp_skip_unmatched = 1
+        regex = str(settings.get("format_regexp", "")).strip("'\"")
         if not regex:
             raise ValueError(
                 "FORMAT Regexp requires SET format_regexp = '...'")
-        if not schema:
-            raise ValueError("FORMAT Regexp requires a schema")
-        skip = bool(extra.get("skip_unmatched", False))
-        st = _parse_ddl_schema(spark, schema)
-        txt = spark.read.text(path).where(F.length("value") > 0)
-        matched = F.col("value").rlike(regex)
-        if skip:
-            txt = txt.where(matched)
-        else:
-            txt = txt.select(F.when(matched, F.col("value")).otherwise(
-                F.raise_error(F.concat(
-                    F.lit("Line \""), F.col("value"),
-                    F.lit("\" doesn't match the regexp "
-                          "(format_regexp_skip_unmatched=0)")))
-            ).alias("value"))
-        return txt.select(*[
-            F.regexp_extract("value", regex, i + 1).cast(f.dataType)
-             .alias(f.name)
-            for i, f in enumerate(st.fields)])
-    if name == "tsv-names-types":
-        # WithNamesAndTypes: line 1 = names, line 2 = CH types. The
-        # names row maps csv columns; the types row is identified by
-        # its literal content (read driver-side from the file head —
-        # both header lines are by definition at the top) and filtered
-        # out. A data row equal to the type row in EVERY column cannot
-        # be distinguished — documented edge, absurd in practice.
-        sep = ropts.get("sep", "\t")
-        with open(path, "r", encoding="utf-8") as fh:
-            names_line = fh.readline().rstrip("\n").rstrip("\r")
-            types_line = fh.readline().rstrip("\n").rstrip("\r")
-        names = names_line.split(sep)
-        types_vals = types_line.split(sep)
-        df = (spark.read.format("csv")
-              .options(sep=sep, header="true", nullValue="\\N",
-                       inferSchema="false")
-              .load(path))
-        cond = None
-        for n, tv in zip(names, types_vals):
-            c = (F.col(f"`{n}`") == tv)
-            cond = c if cond is None else (cond & c)
-        if cond is not None:
-            df = df.where(~F.coalesce(cond, F.lit(False)))
-        if schema:
-            st = _parse_ddl_schema(spark, schema)
-            by_name = {f.name: f.dataType for f in st.fields}
-            df = df.select(*[
-                F.col(f"`{n}`").cast(by_name[n]).alias(n)
-                if n in by_name else F.col(f"`{n}`") for n in names])
-        return df
-    if name == "json-strings-rows":
-        # JSONStringsEachRow: {"a": "1"} — values arrive as strings;
-        # parse each line as map<string,string> and cast to declared
-        if not schema:
-            raise ValueError("JSONStringsEachRow requires a schema")
-        st = _parse_ddl_schema(spark, schema)
-        txt = spark.read.text(path).where(F.length(F.trim("value")) > 0)
-        m = F.from_json(F.col("value"), "map<string,string>")
-        return txt.select(*[
-            F.element_at(m, f.name).cast(f.dataType).alias(f.name)
-            for f in st.fields])
-    if name == "tskv-rows":
-        # TSKV input: tab-separated key=value pairs per line
-        if not schema:
-            raise ValueError("TSKV requires a schema")
-        st = _parse_ddl_schema(spark, schema)
-        txt = spark.read.text(path).where(F.length(F.trim("value")) > 0)
-        m = F.str_to_map(F.col("value"), F.lit("\t"), F.lit("="))
-        return txt.select(*[
-            F.when(F.element_at(m, f.name) == "\\N", None)
-             .otherwise(F.element_at(m, f.name))
-             .cast(f.dataType).alias(f.name)
-            for f in st.fields])
-    if name == "json-compact-rows":
-        # JSONCompactEachRow: one top-level JSON array per line. Parse
-        # as array<string> (scalars and nested composites coerce to
-        # their JSON text) and cast each position to the declared type —
-        # stays a distributed text scan + JVM from_json, no driver loop.
-        if not schema:
-            raise ValueError("JSONCompactEachRow requires a schema")
-        st = _parse_ddl_schema(spark, schema)
-        txt = spark.read.text(path).where(F.length(F.trim("value")) > 0)
-        arr = F.from_json(F.col("value"), "array<string>")
-        return txt.select(*[
-            F.element_at(arr, i + 1).cast(f.dataType).alias(f.name)
-            for i, f in enumerate(st.fields)])
-    if name.startswith("arrow-ipc"):
-        import pyarrow as pa
+        skip = str(settings.get("format_regexp_skip_unmatched", 0)) \
+            .strip("'\"").lower() in ("1", "true")
+        matched = v.rlike(regex)
+        lines = lines.where(matched) if skip else lines.select(
+            F.when(matched, v).otherwise(F.raise_error(F.concat(
+                F.lit('Line "'), v, F.lit('" doesn\'t match the regexp '
+                                          '(format_regexp_skip_unmatched=0)')
+            ))).alias("value"))
+        cells = [F.regexp_extract(v, regex, i + 1)
+                 for i in range(len(cols))]
+    return lines.select(*[c.alias(n) for c, (n, _) in zip(cells, cols)]), \
+        cols
 
-        with open(path, "rb") as fh:
-            if name == "arrow-ipc-file":
-                table = pa.ipc.open_file(fh).read_all()
-            else:
-                table = pa.ipc.open_stream(fh).read_all()
-        return spark.createDataFrame(table)
-    reader = spark.read.format(name).options(**{**ropts, **extra})
-    if name == "json" and schema:
-        # CH quotes 64-bit integers in JSON output and writes predicates
-        # as 1/0: read numbers and booleans as their text, then cast
-        st = _parse_ddl_schema(spark, schema)
-        loose = [isinstance(f.dataType, (T.NumericType, T.BooleanType))
-                 for f in st.fields]
-        df = reader.schema(T.StructType([
-            T.StructField(f.name, T.StringType()) if lo else f
-            for f, lo in zip(st.fields, loose)])).load(path)
-        return df.select(*[
-            F.col(f"`{f.name}`").try_cast(f.dataType).alias(f.name) if lo
-            else F.col(f"`{f.name}`") for f, lo in zip(st.fields, loose)])
-    if schema:
+
+def _head(source: str) -> str:
+    """The first lines of ``source`` (enough for two header rows)."""
+    if isinstance(source, Inline):
+        return source
+    with open(source, encoding="utf-8") as fh:
+        return "".join(fh.readline() for _ in range(2))
+
+
+def _fields(line: str, opts: dict) -> list[str]:
+    """The cells of one header line."""
+    import csv
+    if opts.get("sep") == "\t":
+        return line.split("\t")
+    return next(csv.reader([line]))
+
+
+def _records(text: str, kind: str, opts: dict) -> list[str]:
+    """Inline text split into the records a reader parses one at a time:
+    JSON rows — several may share a line — by bracket balance, a CSV
+    record across the newlines inside its quotes, any other row by
+    line. Blank records are dropped, as a file's are (``_lines``), but
+    for LineAsString, whose every line is a row."""
+    if kind.startswith("json"):
+        return split_json_rows(text)
+    out: list[str] = []
+    quoted = kind in ("csv", "names-types") and opts.get("quote") != "\u0000"
+    for line in text.removesuffix("\n").split("\n") if text else []:
+        line = line.removesuffix("\r")
+        if out and quoted and out[-1].count('"') % 2:
+            out[-1] += "\n" + line
+        else:
+            out.append(line)
+    return out if kind == "text" else [r for r in out if r.strip()]
+
+
+def _lines(spark: SparkSession, source: str, kind: str,
+           opts: dict) -> DataFrame:
+    """One ``value`` row per record of ``source``; blank records
+    dropped but for LineAsString."""
+    if isinstance(source, Inline):
+        return local_frame(spark, [(r,) for r in _records(source, kind,
+                                                          opts)],
+                           "value string")
+    lines = spark.read.text(source)
+    return lines if kind == "text" else lines.where(
+        F.length(F.trim("value")) > 0)
+
+
+def _scan(spark: SparkSession, kind: str, opts: dict, source: str,
+          schema: T.StructType | None) -> DataFrame:
+    """Spark's csv/json reader over a file, or over the records of
+    inline data (``DataFrameReader.csv/json(Dataset[String])``)."""
+    reader = spark.read.format(kind).options(**opts)
+    if schema is not None:
         reader = reader.schema(schema)
-    return reader.load(path)
+    if not isinstance(source, Inline):
+        if kind == "csv" and opts.get("quote") != "\u0000" \
+                and _spans_lines(spark, source):
+            reader = reader.option("multiLine", "true")
+        return reader.load(source)
+    ds = getattr(_lines(spark, source, kind, opts)._jdf, "as")(
+        spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    return DataFrame(getattr(reader._jreader, kind)(ds), spark)
+
+
+def _spans_lines(spark: SparkSession, path: str) -> bool:
+    """Whether a CSV record of ``path`` spans lines: some line holds an
+    odd number of quotes. Only then is the file read with Spark's
+    multiLine, which parses each file in one task; otherwise it splits.
+    A JVM scan that stops at the first such line."""
+    v = F.col("value")
+    quotes = F.octet_length(v) - F.octet_length(F.replace(v, F.lit('"'),
+                                                          F.lit("")))
+    return not spark.read.text(path).where(quotes % 2 == 1).isEmpty()
+
+
+def _typed(c: Column, dt, ch: str, rule: str) -> Column:
+    """A text cell, written under escaping ``rule``, as a value of Spark
+    type ``dt`` (CH type ``ch``): the inverse of ``value_text``."""
+    if isinstance(dt, T.StringType):
+        return _unescape(c) if rule == "Escaped" else c
+    if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
+        # JSON formats write JSON (64-bit integers quoted); the rest
+        # write CH literals, whose 'strings' read as JSON once their
+        # quotes swap. Leaves parse as text, then cast.
+        return F.from_json(c if rule == "JSON"
+                           else F.regexp_replace(c, "'", '"'),
+                           _text_leaves(dt)).cast(dt)
+    if ch.strip() == "UInt64":
+        # stored two's complement in a Long: conv to a signed base reads
+        # 18446744073709551615 as -1
+        return F.conv(F.trim(c), 10, -10).cast("long")
+    return c.try_cast(dt)
+
+
+def _text_leaves(dt):
+    """``dt`` with every scalar leaf a string."""
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_text_leaves(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_text_leaves(dt.keyType), _text_leaves(dt.valueType))
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _text_leaves(f.dataType))
+                             for f in dt.fields])
+    return T.StringType()
+
+
+def _unescape(c: Column) -> Column:
+    """CH Escaped input (TabSeparated, TSKV): \\t, \\n, \\r, \\' and
+    \\\\ decoded; a sentinel keeps an escaped backslash from starting
+    another escape. A JVM replace chain."""
+    c = F.replace(c, F.lit("\\\\"), F.lit("\x00"))
+    for esc, real in (("\\t", "\t"), ("\\n", "\n"), ("\\r", "\r"),
+                      ("\\'", "'")):
+        c = F.replace(c, F.lit(esc), F.lit(real))
+    return F.replace(c, F.lit("\x00"), F.lit("\\"))
+
+
+def split_json_rows(text: str) -> list[str]:
+    """Concatenated JSON rows — ``{..} {..}`` objects or ``[..] [..]``
+    arrays, on any whitespace/newline layout — one per entry."""
+    return list(_json_row_splitter()(text.split("\n"))) \
+        or ([text] if text.strip() else [])
+
+
+def _json_row_splitter() -> Callable:
+    """A function from lines to the JSON rows they hold, however the
+    rows share or span lines. Depth counts both bracket kinds, so
+    ``[1, {"k": 2}]`` stays one row; string- and escape-aware. Built as
+    a closure, so Spark ships it to executors by value."""
+    def split(lines):
+        depth, in_str, esc, pending = 0, False, False, []
+        for line in lines:
+            start = 0 if depth else None
+            for i, ch in enumerate(line):
+                if in_str:
+                    if esc:
+                        esc = False
+                    elif ch == "\\":
+                        esc = True
+                    elif ch == '"':
+                        in_str = False
+                    continue
+                if ch == '"':
+                    in_str = True
+                elif ch in "{[":
+                    if depth == 0:
+                        start = i
+                    depth += 1
+                elif ch in "}]" and depth:
+                    depth -= 1
+                    if depth == 0:
+                        yield "\n".join(pending + [line[start:i + 1]])
+                        pending, start = [], None
+            if depth:
+                pending.append(line[start:])
+    return split
+
+
+@functools.lru_cache(maxsize=256)
+def _ddl_struct(schema: str) -> T.StructType:
+    return _parse_datatype_string(schema)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: str | list[str]) -> DataFrame:
+    """Driver-side rows as a LocalRelation: they reach the JVM as one
+    Arrow table, so reading the frame runs no Python worker, unlike a
+    list given to createDataFrame (a LogicalRDD). ``schema`` is a DDL
+    string, or column names to infer types from the rows. Timestamps
+    convert as the list path does, so a naive datetime reads back
+    unchanged."""
+    struct = (_ddl_struct(schema) if isinstance(schema, str)
+              else spark._inferSchemaFromList(rows, schema))
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array([f.dataType.toInternal(v) for v in col]
+                  if isinstance(f.dataType, T.TimestampType) else col,
+                  type=t)
+         for col, f, t in zip(cols, struct.fields, arrow.types)],
+        schema=arrow), struct)
+
+
+def parse_values(text: str) -> list[list]:
+    """``FORMAT Values`` data — ``(1, 'a'), (2, 'b')`` — as the row
+    expressions of an ``INSERT … VALUES``."""
+    from ..plans.statements import parse_statement
+    return parse_statement("INSERT INTO t VALUES " + text).values or []
+
+
+def values_frame(spark: SparkSession, rows: list[list],
+                 names: list[str] | None = None,
+                 types: list[str] | None = None,
+                 build: Callable | None = None) -> DataFrame:
+    """Rows written as SQL — INSERT … VALUES, FORMAT Values, values(),
+    INSERT INTO FUNCTION … VALUES — as a frame with columns ``names``
+    (c1…cN when None) of CH ``types`` (inferred from the rows when
+    None). Literal rows become one Arrow literal frame; a row holding an
+    expression (CH evaluates them) or a literal of another type than
+    its column (10 for a Float64) lowers instead to a UNION ALL of
+    FROM-less SELECTs that ``build`` (the builder over the caller's
+    scope) evaluates JVM-side. One partition: the rows are in the
+    statement, and an INSERT of them writes one part."""
+    width = max((len(r) for r in rows), default=1)
+    names = names or [f"c{i}" for i in range(1, width + 1)]
+    if types:
+        schema = ", ".join(f"`{n}` {_ingest_type(t)}"
+                           for n, t in zip(names, types))
+    else:
+        schema = names if rows else ", ".join(f"`{n}` string" for n in names)
+    try:
+        df = local_frame(spark, [tuple(literal_py(v) for v in row)
+                                 for row in rows], schema)
+        cast = [(n, t) for n, t in zip(names, types or [])
+                if _ingest_type(t) != _spark_type(t)]
+    except (ValueError, TypeError, OverflowError):
+        from ..plans.ast_nodes import Alias, SelectQuery, UnionQuery
+        if types:
+            _check_int64_literals(rows, names, types)
+        sels = [SelectQuery(select=[Alias(v, n) for v, n in zip(row, names)])
+                for row in rows]
+        ast = sels[0] if len(sels) == 1 else UnionQuery(
+            sels, ["all"] * (len(sels) - 1))
+        if build is None:
+            from ..plans.builder import build as _build
+            df = _build(spark, ast, {})
+        else:
+            df = build(ast)
+        cast = list(zip(names, types or []))
+    if cast:
+        df = df.withColumns({n: F.col(f"`{n}`").cast(_spark_type(t))
+                             for n, t in cast})
+    return df.coalesce(1)
+
+
+def _ingest_type(ch: str) -> str:
+    """The Arrow literal frame's type for a column of type ``ch``:
+    date/time literals arrive as strings and decimals as floats, and
+    the frame casts them to the column type."""
+    t = _spark_type(ch)
+    if t in ("timestamp", "date"):
+        return "string"
+    return "double" if t.startswith("decimal") else t
+
+
+def _check_int64_literals(rows, names, types) -> None:
+    """A VALUES literal that fits no 64-bit integer cannot go into an
+    integer column — the expression path's cast would store 0. In-range
+    literals keep CH's wrap-around."""
+    for row in rows:
+        for v, c, t in zip(row, names, types):
+            if _spark_type(t) not in ("tinyint", "smallint", "int", "long"):
+                continue
+            try:
+                x = literal_py(v)
+            except ValueError:
+                continue
+            if isinstance(x, int) and not isinstance(x, bool) \
+                    and not -(1 << 63) <= x < (1 << 64):
+                raise ValueError(
+                    f"INSERT VALUES: {x} does not fit a 64-bit integer "
+                    f"(column {c} {t})")
+
+
+def literal_py(node):
+    """The Python value of a VALUES literal; ValueError for an
+    expression."""
+    from ..plans.ast_nodes import (ArrayLiteral, FuncCall, Literal,
+                                   TupleLiteral)
+    if isinstance(node, Literal):
+        return node.value
+    if isinstance(node, ArrayLiteral):
+        return [literal_py(i) for i in node.items]
+    if isinstance(node, TupleLiteral):
+        return tuple(literal_py(i) for i in node.items)
+    if isinstance(node, FuncCall) and node.name == "negate":
+        return -literal_py(node.args[0])
+    if isinstance(node, FuncCall) and node.name in ("toDate", "toDateTime"):
+        return literal_py(node.args[0])
+    if isinstance(node, FuncCall) and node.name == "array":
+        return [literal_py(i) for i in node.args]
+    if isinstance(node, FuncCall) and node.name == "tuple":
+        return tuple(literal_py(i) for i in node.args)
+    if isinstance(node, FuncCall) and node.name == "map":
+        items = [literal_py(i) for i in node.args]
+        return dict(zip(items[0::2], items[1::2]))
+    raise ValueError(f"INSERT VALUES supports literals, got {node}")
+
 
 def write_format(df: DataFrame, fmt: str, path: str,
                  compression: str | None = None,
@@ -234,21 +590,16 @@ def write_format(df: DataFrame, fmt: str, path: str,
     """``SELECT ... INTO OUTFILE 'path' [COMPRESSION 'm'] FORMAT fmt``
     and ``INSERT INTO FUNCTION file(path, fmt)``: ONE file at ``path``.
     A text format writes exactly the text the console shows (plus the
-    final newline); the byte codecs and Spark's columnar writers are
-    OUTFILE-only. With COMPRESSION, the CSV/TSV/JSONEachRow family goes
-    through Spark's own csv/json writers, which compress."""
-    if fmt in TEXT_FORMATS and not compression:
-        _write_text(df, fmt, path, settings or {})
+    final newline), compressed with COMPRESSION; the byte codecs and
+    Spark's columnar writers are OUTFILE-only."""
+    if fmt in TEXT_FORMATS:
+        _write_text(df, fmt, path, settings or {}, compression)
         return
     if fmt in BYTE_CODECS:
         with open(path, "wb") as fh:
             fh.write(BYTE_CODECS[fmt](df))
         return
-    if fmt not in FORMATS:
-        raise ValueError(f"FORMAT {fmt} cannot be written"
-                         + (f" with COMPRESSION '{compression}'"
-                            if compression else ""))
-    name, _, wopts = FORMATS[fmt]
+    name = FORMATS.get(fmt, ("",))[0]
     if name == "noop":  # FORMAT Null — execute, discard rows
         df.write.format("noop").mode("overwrite").save()
         return
@@ -258,8 +609,6 @@ def write_format(df: DataFrame, fmt: str, path: str,
         # df.toArrow() matches semantics; for distributed Arrow output
         # at scale use FORMAT Parquet instead. IPC body compression is
         # buffer-level (lz4/zstd only, per the Arrow spec).
-        import pyarrow as pa
-
         opts = None
         if compression:
             codec = {"lz4": "lz4", "zstd": "zstd"}.get(compression.lower())
@@ -275,86 +624,65 @@ def write_format(df: DataFrame, fmt: str, path: str,
                 new(fh, table.schema, options=opts) as w:
             w.write_table(table)
         return
-    opts = dict(wopts)
-    if compression:
-        opts["compression"] = _COMPRESSION[compression.lower()]
-    _write_single(df, name, opts, path)
+    if name not in ("parquet", "orc", "avro"):
+        raise ValueError(f"FORMAT {fmt} cannot be written")
+    _write_single(df.coalesce(1), name, _codec(compression), path)
 
 
-def _write_text(df: DataFrame, fmt: str, path: str, settings: dict) -> None:
-    """A text FORMAT into one file. Row formats write their line column
-    from the executors (header lines first); document formats write the
-    text ``render_text`` builds — the same text either way."""
+def _write_text(df: DataFrame, fmt: str, path: str, settings: dict,
+                compression: str | None) -> None:
+    """A text FORMAT into one file through Spark's text writer, which
+    compresses. Row formats write their line column from the executors,
+    after the header lines; document formats write the text
+    ``render_text`` builds — the same text either way."""
     spec = TEXT_FORMATS[fmt]
+    spark = df.sparkSession
     if spec.doc is not None or spec.sep != "\n":
         text = render_text(df, fmt, settings)
-        with open(path, "w", encoding="utf-8") as fh:
-            fh.write(text + "\n" if text else "")
-        return
-    types = column_ch_types(df)
-    head = spec.head(df.columns, types) if spec.head else []
-    _write_single(_line_frame(df, spec, types), "text", {}, path, head)
+        lines = local_frame(spark, [(text,)] if text else [],
+                            "value string")
+    else:
+        types = column_ch_types(df)
+        lines = _line_frame(df, spec, types).coalesce(1)
+        if spec.head:
+            # the header is its own first part: parts concatenate in order
+            lines = local_frame(spark, [(h,) for h in spec.head(
+                df.columns, types)], "value string").coalesce(1) \
+                .union(lines)
+    _write_single(lines, "text", _codec(compression), path)
 
 
-def _write_single(df: DataFrame, name: str, opts: dict, path: str,
-                  head: list[str] | None = None) -> None:
+def _codec(compression: str | None) -> dict:
+    """A Spark writer's options for COMPRESSION ``compression``."""
+    return {"compression": _COMPRESSION[compression.lower()]} \
+        if compression else {}
+
+
+def _write_single(df: DataFrame, name: str, opts: dict, path: str) -> None:
     """CH INTO OUTFILE produces ONE file at the named path (ClientBase
     writes the result client-side); Spark's writer emits a directory of
-    part files, so write one part to a sibling dir and move it into
-    place, after the ``head`` lines when there are any."""
+    part files. A text writer's parts — compressed or not — concatenate
+    into it in order; a columnar writer's one part moves into place."""
     import glob
     import shutil
     tmp = path + ".spark-out"
-    df.coalesce(1).write.format(name).options(**opts).mode(
-        "overwrite").save(tmp)
-    parts = [p for p in glob.glob(os.path.join(tmp, "part-*"))
-             if not p.endswith(".crc")]
+    df.write.format(name).options(**opts).mode("overwrite").save(tmp)
+    parts = sorted(p for p in glob.glob(os.path.join(tmp, "part-*"))
+                   if not p.endswith(".crc"))
     if os.path.isdir(path):
         shutil.rmtree(path)
     elif os.path.exists(path):
         os.remove(path)
-    if head:
-        with open(path, "w", encoding="utf-8") as out:
-            out.write("".join(h + "\n" for h in head))
+    if name == "text":
+        with open(path, "wb") as out:
             for p in parts:
-                with open(p, encoding="utf-8") as part:
+                with open(p, "rb") as part:
                     shutil.copyfileobj(part, out)
     elif len(parts) == 1:
         shutil.move(parts[0], path)
-    elif name == "text":
-        open(path, "w").close()
     else:   # zero parts (empty writer quirk): keep the directory form
         shutil.move(tmp, path)
     shutil.rmtree(tmp, ignore_errors=True)
-
-
-def to_native(df: DataFrame) -> bytes:
-    """CH ``Native`` format analogue: columnar blocks over the wire.
-
-    The reference's only live format code is Native
-    (``src/Formats/NativeWriter.cpp`` / ``NativeReader.cpp``) — columns
-    serialized block-wise. Arrow IPC *is* that design in the open
-    ecosystem, and Spark speaks it natively (``df.toArrow()``), so the
-    Native surface here is an Arrow IPC stream."""
-    import io
-
-    import pyarrow as pa
-
-    table = df.toArrow()
-    sink = io.BytesIO()
-    with pa.ipc.new_stream(sink, table.schema) as w:
-        w.write_table(table)
-    return sink.getvalue()
-
-
-def from_native(spark: SparkSession, data: bytes) -> DataFrame:
-    """Read an Arrow IPC stream (Native analogue) back to a DataFrame."""
-    import io
-
-    import pyarrow as pa
-
-    table = pa.ipc.open_stream(io.BytesIO(data)).read_all()
-    return spark.createDataFrame(table)
 
 
 def _uleb128(n: int) -> bytes:
@@ -1317,7 +1645,7 @@ def to_json_compact(df: DataFrame) -> str:
     return render_text(df, "JSONCompact")
 
 
-# the byte codecs: OUTFILE-only writers, and readers for INSERT … FORMAT
+# the byte codecs: OUTFILE-only writers, and read_format's decoders
 def _to_capnproto(df: DataFrame) -> bytes:
     from .capnproto import to_capnproto
     return to_capnproto(df)
@@ -1338,89 +1666,10 @@ BYTE_DECODERS = {"RowBinary": from_row_binary, "MsgPackEachRow": from_msgpack,
 def format_table() -> list[tuple[str, int, int]]:
     """``system.formats``: (name, is_input, is_output) of every format
     with a reader or a writer."""
-    inputs = (set(FORMATS) - {"Null"}) | set(BYTE_DECODERS)
+    inputs = set(FORMATS) - {"Null"}
     outputs = (set(TEXT_FORMATS) | set(BYTE_CODECS)
-               | {n for n, (kind, _, _) in FORMATS.items()
+               | {n for n, (kind, _) in FORMATS.items()
                   if kind in ("parquet", "orc", "avro", "noop")
                   or kind.startswith("arrow-ipc")})
     return sorted((n, int(n in inputs), int(n in outputs))
                   for n in inputs | outputs)
-
-
-def tsv_unescape_columns(df: DataFrame) -> DataFrame:
-    """Decode CH TabSeparated INPUT escapes on string columns
-    (\\t, \\n, \\r, \\', \\\\) — Spark's CSV reader leaves them raw.
-    Backslash-backslash goes through a sentinel so '\\\\t' decodes to
-    backslash+t, not tab. Pure JVM replace chain."""
-    from pyspark.sql.types import StringType
-    sent = "\x00"
-    cols = []
-    for f in df.schema.fields:
-        c = F.col(f"`{f.name}`")
-        if isinstance(f.dataType, StringType):
-            c = F.replace(c, F.lit("\\\\"), F.lit(sent))
-            for esc, real in (("\\t", "\t"), ("\\n", "\n"),
-                              ("\\r", "\r"), ("\\'", "'")):
-                c = F.replace(c, F.lit(esc), F.lit(real))
-            c = F.replace(c, F.lit(sent), F.lit("\\"))
-        cols.append(c.alias(f.name))
-    return df.select(*cols)
-
-def read_regexp(spark: SparkSession, path: str, regexp: str,
-                schema: str, skip_unmatched: bool = False) -> DataFrame:
-    """``Regexp`` input format: each line parsed by a regexp whose
-    capture groups map positionally onto the schema columns. Stays
-    JVM-side (spark.read.text + regexp_extract) — scales to any input
-    size, unlike a driver-side line loop."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    st = StructType.fromDDL(schema)
-    lines = spark.read.text(path)
-    matched = lines.where(F.col("value").rlike(regexp))
-    if not skip_unmatched:
-        # CH throws on unmatched rows unless
-        # format_regexp_skip_unmatched=1; mirror with a cheap count check
-        total = lines.count()
-        ok = matched.count()
-        if ok != total:
-            raise ValueError(
-                f"Regexp: {total - ok} rows did not match (set "
-                f"skip_unmatched=True to drop them)")
-    cols = [F.regexp_extract("value", regexp, i + 1)
-            .cast(f.dataType).alias(f.name)
-            for i, f in enumerate(st.fields)]
-    return matched.select(*cols)
-
-def read_json_as_string(spark: SparkSession, path: str) -> DataFrame:
-    """``JSONAsString`` input: each top-level JSON object becomes ONE row
-    with a single ``json`` String column (raw text, not parsed) —
-    multi-line objects are re-assembled by brace balance outside string
-    literals."""
-    lines = spark.read.format("text").load(path)
-
-    def reassemble(part):
-        buf, depth, in_str, esc = [], 0, False, False
-        for r in part:
-            line = r.value
-            buf.append(line)
-            for ch in line:
-                if esc:
-                    esc = False
-                elif ch == "\\":
-                    esc = True
-                elif ch == '"':
-                    in_str = not in_str
-                elif not in_str and ch == "{":
-                    depth += 1
-                elif not in_str and ch == "}":
-                    depth -= 1
-                    if depth == 0:
-                        doc = "\n".join(buf).strip()
-                        if doc:
-                            yield (doc,)
-                        buf = []
-    # per-partition reassembly: objects must not span files/partitions
-    # (same constraint CH's parallel parsing has for this format)
-    return lines.rdd.mapPartitions(reassemble).toDF(["json"])
-

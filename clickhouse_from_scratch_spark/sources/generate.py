@@ -17,31 +17,9 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.typemap import parse_structure
+
 _EPOCH_2000 = 946684800          # 2000-01-01 unix seconds
-
-
-def _split_cols(schema: str) -> list[tuple[str, str]]:
-    """Split 'a Int64, b Decimal(18,2)' on top-level commas only."""
-    parts, depth, cur = [], 0, ""
-    for ch in schema:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append(cur)
-            cur = ""
-        else:
-            cur += ch
-    if cur.strip():
-        parts.append(cur)
-    out = []
-    for p in parts:
-        name, _, typ = p.strip().partition(" ")
-        if not typ:
-            raise ValueError(f"generateRandom: bad column spec {p!r}")
-        out.append((name, typ.strip()))
-    return out
 
 
 def _gen(typ: str, tag: str, seed: int, max_str: int,
@@ -105,7 +83,7 @@ def _gen(typ: str, tag: str, seed: int, max_str: int,
 def generate_random(spark: SparkSession, schema: str, n: int,
                     seed: int = 42, max_str: int = 10,
                     max_arr: int = 10) -> DataFrame:
-    cols = _split_cols(schema)
+    cols = parse_structure(schema)
     base = spark.range(n).withColumnRenamed("id", "number")
     return base.select(*[
         _gen(typ, f"c{i}_{name}", seed, max_str, max_arr).alias(name)

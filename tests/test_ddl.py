@@ -1136,3 +1136,22 @@ def test_show_create_renders_column_attributes(spark, tmp_path):
     assert "`b` String DEFAULT 'x'" in stmt
     assert "`m` Int32 MATERIALIZED" in stmt and "plus(a, 1)" in stmt
     assert "`e` String EPHEMERAL" in stmt
+
+
+def test_enum_element_with_an_escaped_quote(sess):
+    sess.execute("CREATE TABLE e (k Int32, x Enum8('it\\'s' = 1, 'b' = 2)) "
+                 "ENGINE = Memory")
+    sess.execute("INSERT INTO e VALUES (1, 'it\\'s'), (2, 1)")
+    assert [tuple(r) for r in sess.execute(
+        "SELECT x, CAST(x AS Int8) FROM e ORDER BY k").collect()] \
+        == [("it's", 1), ("it's", 1)]
+
+
+@pytest.mark.parametrize("source", ["", "FROM system.one", "FROM one()",
+                                    "FROM remote('h', system.one)"])
+def test_system_one_is_one_frame(sess, source):
+    assert [tuple(r) for r in sess.execute(
+        f"SELECT dummy, toTypeName(dummy) {source}").collect()] \
+        == [(0, "UInt8")]
+    assert [(r.name, r.type) for r in sess.execute(
+        f"DESCRIBE (SELECT dummy {source})").collect()] == [("dummy", "UInt8")]

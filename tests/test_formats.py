@@ -167,13 +167,13 @@ def test_format_arrow_stream_roundtrip(spark, tmp_path):
         write_format(df, "Arrow", p, compression="gzip")
 
 
-def test_native_arrow_ipc_roundtrip(spark):
-    from clickhouse_from_scratch_spark.sources import from_native, to_native
+def test_native_arrow_ipc_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a", 1.5), (2, "b", 2.5)], "id long, s string, v double")
-    blob = to_native(df)
-    assert blob[:6] != b""            # non-empty IPC stream
-    back = from_native(spark, blob)
+    p = str(tmp_path / "t.native")
+    write_format(df, "Native", p)
+    assert os.path.getsize(p) > 0     # non-empty IPC stream
+    back = read_format(spark, "Native", p)
     assert back.schema == df.schema
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
@@ -291,15 +291,16 @@ def test_template_renderer(spark):
 
 
 def test_regexp_input(spark, tmp_path):
-    from clickhouse_from_scratch_spark.sources import read_regexp
     p = str(tmp_path / "log.txt")
     with open(p, "w") as f:
         f.write("id=1 name=alpha\nid=2 name=beta\nbogus line\n")
-    df = read_regexp(spark, p, r"^id=(\d+) name=(\w+)$",
-                     "id int, name string", skip_unmatched=True)
+    regexp = {"format_regexp": r"^id=(\d+) name=(\w+)$"}
+    df = read_format(spark, "Regexp", p, "id Int32, name String",
+                     {**regexp, "format_regexp_skip_unmatched": 1})
     assert sorted(map(tuple, df.collect())) == [(1, "alpha"), (2, "beta")]
-    with pytest.raises(ValueError, match="did not match"):
-        read_regexp(spark, p, r"^id=(\d+) name=(\w+)$", "id int, name string")
+    with pytest.raises(Exception, match="doesn't match the regexp"):
+        read_format(spark, "Regexp", p, "id Int32, name String",
+                    regexp).collect()
 
 
 def test_format_suffix_dispatch(spark, tmp_path):
@@ -876,3 +877,207 @@ def test_byte_codecs_keep_every_row(chs, tmp_path):
     with open(dest, "rb") as fh:
         back = from_row_binary(chs.spark, fh.read(), "x int")
     assert back.count() == 100005
+
+
+# --- one input path: every entry point reads a format the same way ----------
+
+def _rows(sess, sql):
+    return [tuple(r) for r in sess.execute(sql).collect()]
+
+
+def _sql_string(text):
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def test_format_reads_json_rows_sharing_a_line(chs):
+    assert _rows(chs, "SELECT a, s FROM format(JSONEachRow, "
+                      "'{\"a\":1,\"s\":\"x\"} {\"a\":2,\"s\":\"y\"}') "
+                      "ORDER BY a") == [(1, "x"), (2, "y")]
+
+
+def test_file_tsv_unescapes_like_infile(chs, tmp_path):
+    p = str(tmp_path / "t.tsv")
+    chs.execute(f"SELECT 'x\\ty' AS s INTO OUTFILE '{p}' FORMAT TSV")
+    assert _rows(chs, f"SELECT s, length(s) FROM file('{p}', 'TSV', "
+                      "'s String')") == [("x\ty", 3)]
+    assert _rows(chs, f"SELECT c1 FROM file('{p}', 'TSV')") == [("x\ty",)]
+
+
+def test_format_tsv_names_columns_c1_to_cn(chs):
+    df = chs.execute("SELECT * FROM format(TSV, '1\\tx\\\\ty')")
+    assert df.columns == ["c1", "c2"]
+    assert [tuple(r) for r in df.collect()] == [(1, "x\ty")]
+
+
+def test_format_takes_a_structure(chs):
+    assert _rows(chs, "SELECT * FROM format(CSV, 'a Int64, "
+                      "arr Array(Int64)', '1,\"[1,2]\"')") == [(1, [1, 2])]
+
+
+def test_file_row_binary_and_format_values(chs, tmp_path):
+    p = str(tmp_path / "t.rb")
+    chs.execute(f"SELECT toInt64(5) AS a, 'x' AS s INTO OUTFILE '{p}' "
+                "FORMAT RowBinary")
+    assert _rows(chs, f"SELECT * FROM file('{p}', 'RowBinary', "
+                      "'a Int64, s String')") == [(5, "x")]
+    assert _rows(chs, "SELECT * FROM format(Values, 'a Int64, s String', "
+                      "'(1, \\'x\\'), (1 + 1, lower(\\'Y\\'))') ORDER BY a") \
+        == [(1, "x"), (2, "y")]
+
+
+def test_format_values_cells_see_the_session(chs):
+    chs.execute("CREATE FUNCTION dbl AS (x) -> x * 2")
+    chs.execute("CREATE TABLE t (a Int64, s String) ENGINE = Memory")
+    chs.execute("INSERT INTO t FORMAT Values (1, 'x'), (dbl(2), 'y')")
+    assert _rows(chs, "SELECT * FROM t ORDER BY a") == [(1, "x"), (4, "y")]
+    assert _rows(chs, "SELECT * FROM format(Values, 'a Int64', "
+                      "'(dbl(3))')") == [(6,)]
+
+
+def test_structure_with_an_unknown_type_names_it(chs):
+    with pytest.raises(ValueError, match="unknown type in structure: Strng"):
+        chs.execute("SELECT * FROM format(CSV, 'a Strng', '1')")
+
+
+# row formats, with a header or not, whose blank lines hold no row
+_BLANK_LINE_FORMATS = ["CSV", "CSVWithNames", "CSVWithNamesAndTypes", "TSV",
+                       "TSVWithNames", "TSVWithNamesAndTypes", "JSONEachRow",
+                       "JSONCompactEachRow", "JSONStringsEachRow",
+                       "JSONCompactStringsEachRow", "TSKV", "Values"]
+
+
+@pytest.mark.parametrize("fmt", _BLANK_LINE_FORMATS)
+def test_blank_lines_hold_no_row(chs, tmp_path, fmt):
+    p = str(tmp_path / "rows")
+    chs.execute("SELECT toInt64(number) AS a, toString(number) AS s "
+                f"FROM numbers(2) INTO OUTFILE '{p}' FORMAT {fmt}")
+    with open(p, encoding="utf-8") as fh:
+        lines = fh.read().split("\n")
+    # a blank line before the last row, and two after it
+    lines.insert(len(lines) - 2, "")
+    data = "\n".join(lines) + "\n\n"
+    with open(p, "w", encoding="utf-8") as fh:
+        fh.write(data)
+    chs.execute("CREATE TABLE t (a Int64, s String) ENGINE = Memory")
+    chs.execute(f"INSERT INTO t FROM INFILE '{p}' FORMAT {fmt}")
+    structure = "'a Int64, s String'"
+    want = [(0, "0"), (1, "1")]
+    assert _rows(chs, "SELECT * FROM t ORDER BY a") == want
+    assert _rows(chs, f"SELECT * FROM file('{p}', '{fmt}', {structure}) "
+                      "ORDER BY a") == want
+    assert _rows(chs, f"SELECT * FROM format({fmt}, {structure}, "
+                      f"{_sql_string(data)}) ORDER BY a") == want
+
+
+def test_regexp_skips_blank_lines_and_line_as_string_keeps_them(chs,
+                                                                tmp_path):
+    p, lines = str(tmp_path / "log.txt"), str(tmp_path / "lines.txt")
+    for path in (p, lines):
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write("1 x\n\n2 y\n\n")
+    chs.execute("SET format_regexp = '^(\\\\d+) (\\\\w+)$'")
+    assert _rows(chs, f"SELECT * FROM file('{p}', 'Regexp', "
+                      "'a Int64, s String') ORDER BY a") \
+        == [(1, "x"), (2, "y")]
+    want = [("1 x",), ("",), ("2 y",), ("",)]
+    assert _rows(chs, f"SELECT * FROM file('{lines}', 'LineAsString')") \
+        == want
+    assert _rows(chs, "SELECT * FROM format(LineAsString, "
+                      "'1 x\\n\\n2 y\\n\\n')") == want
+
+
+def test_format_regexp_reads_the_session_setting(chs):
+    chs.execute("SET format_regexp = '^(\\\\d+) (\\\\w+)$'")
+    assert _rows(chs, "SELECT * FROM format(Regexp, 'a Int64, s String', "
+                      "'1 x\\n2 y') ORDER BY a") == [(1, "x"), (2, "y")]
+
+
+def test_file_json_applies_the_structure(chs, tmp_path):
+    p = str(tmp_path / "t.json")
+    chs.execute(f"SELECT toUInt64(5) AS a, 'x' AS s INTO OUTFILE '{p}' "
+                "FORMAT JSONEachRow")
+    assert _rows(chs, f"SELECT a, toTypeName(a) FROM file('{p}', "
+                      "'JSONEachRow', 'a UInt64, s String')") \
+        == [(5, "UInt64")]
+
+
+def test_values_table_function_runs_no_job_to_build(chs):
+    sc = chs.spark.sparkContext
+    sc.setJobGroup("values_build", "values() build", False)
+    try:
+        df = chs.execute("SELECT * FROM values('a Int32, b String', "
+                         "(1 + 1, lower('A')), (3, 'b'), (4, 'c'))")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("values_build") == []
+    assert sorted(tuple(r) for r in df.collect()) == \
+        [(2, "a"), (3, "b"), (4, "c")]
+
+
+def test_compressed_outfile_is_the_compressed_text(chs, tmp_path):
+    import gzip
+    q = "SELECT toUInt64(-1) AS u, 1 = 1 AS p"
+    plain, packed = str(tmp_path / "o.csv"), str(tmp_path / "o.csv.gz")
+    chs.execute(f"{q} INTO OUTFILE '{plain}' FORMAT CSVWithNames")
+    chs.execute(f"{q} INTO OUTFILE '{packed}' COMPRESSION 'gzip' "
+                "FORMAT CSVWithNames")
+    with open(plain, "rb") as fh:
+        text = fh.read()
+    assert text == b'"u","p"\n18446744073709551615,1\n'
+    with gzip.open(packed, "rb") as fh:
+        assert fh.read() == text
+
+
+# One row over the types the readers branch on: a string with a tab, a
+# newline and both quotes, an array, UInt64 above 2^63, a predicate, a
+# Date and a NULL. Written with INTO OUTFILE, it reads back the same
+# through every input entry point.
+_SWEEP_SQL = ("SELECT 'a\\tb\\nc\"d\\'e\\\\f' AS s, "
+              "CAST([1, 2] AS Array(Int64)) AS arr, toUInt64(-1) AS u, "
+              "1 = 1 AS p, toDate('2024-01-02') AS d, "
+              "CAST(NULL AS Nullable(Int64)) AS n")
+_SWEEP_COLS = [("s", "String"), ("arr", "Array(Int64)"), ("u", "UInt64"),
+               ("p", "UInt8"), ("d", "Date"), ("n", "Nullable(Int64)")]
+_SWEEP_ROW = {"s": "a\tb\nc\"d'e\\f", "arr": [1, 2], "u": -1, "p": 1,
+              "n": None}
+# the byte codecs write a fixed set of scalar types
+_CARRIES = {"RowBinary": ("s", "u", "d"), "CapnProto": ("s", "u", "d"),
+            "MsgPackEachRow": ("s", "arr", "u", "d", "n")}
+
+
+def _read_write_formats():
+    from clickhouse_from_scratch_spark.sources.formats import format_table
+    return [n for n, i, o in format_table() if i and o]
+
+
+@pytest.mark.parametrize("fmt", _read_write_formats())
+def test_every_entry_point_reads_the_same_rows(chs, tmp_path, fmt):
+    from datetime import date
+
+    from clickhouse_from_scratch_spark.sources import TEXT_FORMATS
+    names = _CARRIES.get(fmt, [n for n, _ in _SWEEP_COLS])
+    cols = [(n, t) for n, t in _SWEEP_COLS if n in names]
+    structure = ", ".join(f"{n} {t}" for n, t in cols)
+    want = [tuple({**_SWEEP_ROW, "d": date(2024, 1, 2)}[n] for n in names)]
+    p = str(tmp_path / "rows")
+    try:
+        chs.execute(f"SELECT {', '.join(names)} FROM ({_SWEEP_SQL}) "
+                    f"INTO OUTFILE '{p}' FORMAT {fmt}")
+    except Exception as e:
+        if fmt == "Avro" and "avro" in str(e).lower():
+            pytest.skip("spark-avro is not on the classpath")
+        raise
+    chs.execute(f"CREATE TABLE infile ({structure}) ENGINE = Memory")
+    chs.execute(f"INSERT INTO infile FROM INFILE '{p}' FORMAT {fmt}")
+    got = {"INFILE": _rows(chs, "SELECT * FROM infile"),
+           "file()": _rows(chs, f"SELECT * FROM file('{p}', '{fmt}', "
+                                f"'{structure}')")}
+    if fmt in TEXT_FORMATS:
+        with open(p, encoding="utf-8") as fh:
+            data = fh.read()
+        got["format()"] = _rows(chs, f"SELECT * FROM format({fmt}, "
+                                     f"'{structure}', {_sql_string(data)})")
+        chs.execute(f"CREATE TABLE inline ({structure}) ENGINE = Memory")
+        chs.execute(f"INSERT INTO inline FORMAT {fmt}\n{data}")
+        got["INSERT FORMAT"] = _rows(chs, "SELECT * FROM inline")
+    assert got == dict.fromkeys(got, want)

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 import clickhouse_from_scratch_spark.functions.aggregates as _aggs  # noqa: F401
 from clickhouse_from_scratch_spark.functions.registry import (
@@ -170,3 +171,45 @@ def test_one_spark_to_ch_type_spelling():
                         for k, v in zip(node.keys, node.values)):
                     twins.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
     assert twins == [], f"Spark → CH type spellings outside typemap: {twins}"
+
+
+_INPUT_RULES = {"BYTE_DECODERS", "tsv_unescape_columns", "_unescape",
+                "_typed"}
+_TEMP_FILES = {"NamedTemporaryFile", "TemporaryFile", "SpooledTemporaryFile",
+               "mkstemp"}
+# Spark's FORMAT readers; stored parquet (table parts, detached
+# partitions, backups, datasets) is storage, not FORMAT input
+_FORMAT_READERS = {"format", "load", "csv", "json", "text", "orc"}
+
+
+def test_one_input_path():
+    """Only sources/ reads FORMAT input: no other package module calls
+    one of Spark's format readers, writes format data to a temp file, or
+    takes a per-format input rule from sources.formats."""
+    sources = os.path.join(PKG, "sources")
+    found = set()
+    for root, _, files in os.walk(PKG):
+        if root == sources or root.startswith(sources + os.sep):
+            continue
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            where = os.path.relpath(path, PKG)
+            for node in ast.walk(tree):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in _FORMAT_READERS
+                        and re.search(r"spark\w*\.read\b",
+                                      ast.unparse(node.func.value), re.I)):
+                    found.add(f"{where}:{node.lineno} spark.read")
+                elif (isinstance(node, ast.Attribute)
+                      and node.attr in _TEMP_FILES):
+                    found.add(f"{where}:{node.lineno} {node.attr}")
+                elif isinstance(node, ast.ImportFrom):
+                    found.update(f"{where}:{node.lineno} imports {a.name}"
+                                 for a in node.names
+                                 if a.name in _INPUT_RULES | _TEMP_FILES)
+    assert not found, f"input rules outside sources/: {sorted(found)}"

@@ -80,7 +80,7 @@ def test_into_outfile_csv_with_compression(sess, tmp_path):
     import gzip
     assert os.path.isfile(dest)
     with gzip.open(dest, "rt") as fh:
-        assert fh.readline().strip() == "uid,etype"
+        assert fh.readline().strip() == '"uid","etype"'
 
 
 def test_format_pretty(sess):
