@@ -25,7 +25,8 @@ import os
 import re
 import shutil
 import tempfile
-from collections import ChainMap
+import time
+from collections import ChainMap, deque
 from collections.abc import Mapping
 from dataclasses import dataclass, field
 
@@ -51,6 +52,8 @@ from .plans.ast_nodes import SelectQuery, UnionQuery
 from .plans.statements import CreateFunction
 
 _MISSING = object()    # sentinel: setting absent before per-query overlay
+# system.query_log keeps a long-lived session's most recent statements
+QUERY_LOG_ROWS = 1000
 
 
 def _disk_free(path: str) -> int:
@@ -255,8 +258,11 @@ class ChSession:
         # within it). Bounded: the oldest entry's data is purged when
         # the window exceeds 8 tables.
         self.dropped: dict[tuple[str, str], tuple[TableMeta, str | None]] = {}
-        # system.query_log rows: (query, type, elapsed_ms, event_time)
-        self.query_log: list[tuple] = []
+        # system.query_log rows: (query, type, elapsed_ms, event_time) of
+        # the last QUERY_LOG_ROWS statements; the counters count them all
+        self.query_log: deque[tuple] = deque(maxlen=QUERY_LOG_ROWS)
+        self.queries = self.failed_queries = self.executing = 0
+        self.started = time.monotonic()
         # system.mutations rows (synchronous: always done on return)
         self.mutations: list[tuple] = []
 
@@ -266,10 +272,10 @@ class ChSession:
         """Run one statement. SELECT → DataFrame; DDL/admin → DataFrame
         describing the effect (mirrors clickhouse-client output shape).
         ``params`` binds {name:Type} query parameters."""
-        import time as _time
         from datetime import datetime as _dt
-        t0 = _time.monotonic()
+        t0 = time.monotonic()
         status = "QueryFinish"
+        self.executing += 1
         try:
             node = parse_statement(sql)
             if isinstance(node, OutputClause):
@@ -284,9 +290,12 @@ class ChSession:
             # system.query_log analogue: one row per statement (build
             # time for lazy SELECTs — execution belongs to the caller's
             # action, as in any Spark program)
+            self.executing -= 1
+            self.queries += 1
+            self.failed_queries += status != "QueryFinish"
             self.query_log.append(
                 (sql.strip(), status,
-                 round((_time.monotonic() - t0) * 1000.0, 3),
+                 round((time.monotonic() - t0) * 1000.0, 3),
                  _dt.now().replace(microsecond=0)))
 
     def _dispatch_node(self, node):
@@ -2273,17 +2282,16 @@ _SYSTEM_TABLES = {
         " database string, table string, is_partial_revoke int,"
         " grant_option int"),
     "events": lambda s: (
-        [("Query", len(s.query_log), "Number of queries started"),
-         ("FailedQuery",
-          sum(1 for q in s.query_log if q[1] == "ExceptionWhileProcessing"),
-          "Number of failed queries")],
+        [("Query", s.queries, "Number of queries started"),
+         ("FailedQuery", s.failed_queries, "Number of failed queries")],
         "event string, value bigint, description string"),
     "metrics": lambda s: (
-        [("Query", 0, "Queries executing right now"),
+        [("Query", s.executing, "Queries executing right now"),
          ("TCPConnection", 0, "TCP connections")],
         "metric string, value bigint, description string"),
     "asynchronous_metrics": lambda s: (
-        [("Uptime", 0.0), ("MemoryResident", 0.0)],
+        [("Uptime", time.monotonic() - s.started),
+         ("MemoryResident", float(_resident_bytes()))],
         "metric string, value double"),
     "replicas": lambda s: (
         [], "database string, table string, is_leader int,"
@@ -2293,6 +2301,15 @@ _SYSTEM_TABLES = {
          for part in parts],
         "database string, table string, partition_id string"),
 }
+
+
+def _resident_bytes() -> int:
+    """Resident set size of the driver process (0 without procfs)."""
+    try:
+        with open("/proc/self/statm") as fh:
+            return int(fh.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
+    except OSError:
+        return 0
 
 
 def _like(pattern: str) -> re.Pattern:

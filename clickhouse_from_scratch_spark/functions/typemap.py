@@ -15,6 +15,7 @@ Source of truth: the reference's type factory registrations
 from __future__ import annotations
 
 import re
+from functools import lru_cache
 
 _SIMPLE = {
     "int8": "tinyint", "int16": "smallint", "int32": "int", "int64": "long",
@@ -180,30 +181,21 @@ CH_NUMERIC: dict[str, tuple[str, int]] = {
     "Bool": ("u", 1),   # CH Bool is UInt8 under the hood
 }
 
-# Spark result type → canonical CH numeric (the signed view: parquet and
-# Spark have no unsigned types, so a bare Spark column is assumed signed;
-# DDL-declared tables carry their true CH types through ctx instead)
-_SPARK_TO_CH_NUM = {
+# the Spark scalar types the engine stores → their CH spelling (the
+# signed view: parquet and Spark have no unsigned types, so a bare Spark
+# column reads as signed; declared tables carry their true CH types)
+_SPARK_TO_CH = {
     "tinyint": "Int8", "smallint": "Int16", "int": "Int32",
     "bigint": "Int64", "long": "Int64", "float": "Float32",
     "double": "Float64", "boolean": "Bool",
+    "string": "String", "binary": "String", "date": "Date",
+    "timestamp": "DateTime", "timestamp_ntz": "DateTime",
+    "void": "Nullable(Nothing)",
 }
 
 
 class NoCommonTypeError(ValueError):
     """CH NO_COMMON_TYPE (getLeastSupertype.cpp:459-471)."""
-
-
-def spark_type_to_ch_numeric(spark_type: str) -> str | None:
-    """Canonical CH numeric for a Spark type name (None if non-numeric)."""
-    return _SPARK_TO_CH_NUM.get(spark_type.lower())
-
-
-# the rest of the Spark scalar types the engine stores
-_SPARK_TO_CH = {**_SPARK_TO_CH_NUM,
-                "string": "String", "binary": "String", "date": "Date",
-                "timestamp": "DateTime", "timestamp_ntz": "DateTime",
-                "void": "Nullable(Nothing)"}
 
 
 def spark_to_ch(dt) -> str:
@@ -230,6 +222,75 @@ def spark_to_ch(dt) -> str:
     return _SPARK_TO_CH.get(s, s)
 
 
+# CH type names (and the SQL aliases DataTypeFactory registers) →
+# their canonical spelling, case-insensitively
+_CANONICAL = {t.lower(): t for t in (
+    *CH_NUMERIC, "String", "Date", "Date32", "DateTime", "UUID", "IPv4",
+    "IPv6", "Nothing", "JSON", "Dynamic", "Point", "Ring", "Polygon",
+    "MultiPolygon", "LineString", "MultiLineString")}
+_CANONICAL.update(tinyint="Int8", smallint="Int16", int="Int32",
+                  integer="Int32", bigint="Int64", float="Float32",
+                  real="Float32", double="Float64", boolean="Bool",
+                  char="String", varchar="String", text="String",
+                  blob="String")
+_CANONICAL["object('json')"] = "JSON"
+# parametric types whose spelling toTypeName normalizes
+_PARAMETRIC = {"nullable": "Nullable", "lowcardinality": "LowCardinality",
+               "array": "Array", "map": "Map", "tuple": "Tuple",
+               "decimal": "Decimal", "datetime64": "DateTime64"}
+
+
+@lru_cache(maxsize=1024)
+def canonical_type(ch: str) -> str:
+    """A CH type name as ``toTypeName`` spells it: canonical case for
+    the simple types and their SQL aliases (``int`` → ``Int32``),
+    ``Decimal(P, S)`` for every decimal spelling, ``Enum8('a' = 1)``,
+    nested types canonical inside; other types as written."""
+    t = ch.strip()
+    m = re.match(r"(?s)^(\w+)\s*\((.*)\)$", t)
+    if m is None or t.lower() in _CANONICAL:
+        return _CANONICAL.get(t.lower(), t)
+    head, args = m.group(1).lower(), [a.strip()
+                                      for a in _split_args(m.group(2))]
+    width = {"decimal32": "9", "decimal64": "18", "decimal128": "38",
+             "decimal256": "76"}.get(head)
+    if width:
+        head, args = "decimal", [width, *args]
+    if head in ("enum8", "enum16") and enum_pairs(t):
+        return f"Enum{head[4:]}(" + ", ".join(
+            "'" + k.replace("\\", "\\\\").replace("'", "\\'") + f"' = {v}"
+            for k, v in enum_pairs(t)) + ")"
+    if head not in _PARAMETRIC:
+        return t
+    if head in ("nullable", "lowcardinality", "array", "map", "tuple"):
+        args = [canonical_type(a) for a in args]
+    return f"{_PARAMETRIC[head]}({', '.join(args)})"
+
+
+def is_ch_type(ch: str) -> bool:
+    """Whether ``ch`` names a CH type the engine stores."""
+    try:
+        return bool(ch_type_to_spark(ch))
+    except ValueError:
+        return False
+
+
+def unwrap(ch: str) -> tuple[str, bool]:
+    """(the type inside ``LowCardinality``/``Nullable``, whether it was
+    Nullable): the type a value's number or text question is about."""
+    nullable = False
+    while m := re.match(r"^(Nullable|LowCardinality)\((.*)\)$", ch):
+        nullable, ch = nullable or m[1] == "Nullable", m[2]
+    return ch, nullable
+
+
+def dt64_scale(ch: str | None) -> int | None:
+    """The scale of a ``DateTime64(s[, tz])`` type (looking through
+    Nullable/LowCardinality); None for any other type."""
+    m = re.match(r"^DateTime64\((\d+)", unwrap(ch)[0]) if ch else None
+    return int(m.group(1)) if m else None
+
+
 def column_ch_types(df) -> list[str]:
     """CH type of each column of a result frame: the builder's type
     overlay (``_ch_type_overlay``, name → CH type) where the dialect type
@@ -245,8 +306,6 @@ def column_ch_types(df) -> list[str]:
 def ch_literal_type(value) -> str | None:
     """CH type of a bare literal (FieldToDataType: smallest fitting type;
     non-negative ints are unsigned — toTypeName(1) = UInt8)."""
-    if isinstance(value, bool):
-        return "UInt8"
     if isinstance(value, int):
         if value >= 0:
             for t, hi in (("UInt8", 1 << 8), ("UInt16", 1 << 16),
@@ -333,8 +392,16 @@ def least_supertype(types: list[str]) -> str:
     signed type one step wider (Int32 ∪ UInt32 = Int64), raising
     NO_COMMON_TYPE when that step would pass 64 bits; any float forces a
     float wide enough for every integer's digits (24/53-bit mantissas).
-    Non-numeric inputs unify only when identical.
+    Non-numeric inputs unify only when identical; ``Nullable(T)``
+    unifies through ``T`` and makes the result Nullable.
     """
+    if any(t.startswith("Nullable(") or t == "Nothing" for t in types):
+        # Nullable(T) unifies through T; Nothing (the NULL literal's
+        # type) adds only its nullability
+        inner = [unwrap(t)[0] for t in types if unwrap(t)[0] != "Nothing"]
+        st = least_supertype(inner) if inner else "Nothing"
+        return (f"Nullable({st})" if any(unwrap(t)[1] for t in types)
+                else st)
     uniq = list(dict.fromkeys(types))
     if not uniq:
         raise NoCommonTypeError("no types")

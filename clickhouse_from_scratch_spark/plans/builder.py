@@ -22,8 +22,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, LongType, MapType,
-                               ShortType, StructType)
+from pyspark.sql.types import ArrayType, BooleanType, MapType, StructType
 
 from ..functions import REGISTRY, ch
 from ..functions.aggregates import (
@@ -32,10 +31,10 @@ from ..functions.aggregates import (
 )
 from ..functions.registry import typed_array_sum
 from ..functions.typemap import (
-    CH_NUMERIC, arithmetic_result_type, ch_literal_type, ch_type_to_spark,
-    enum_pairs, least_supertype, negate_result_type, parse_structure,
-    spark_to_ch,
-    spark_type_to_ch_numeric, NoCommonTypeError,
+    CH_NUMERIC, arithmetic_result_type, canonical_type, ch_literal_type,
+    ch_type_to_spark, dt64_scale, enum_pairs, least_supertype,
+    negate_result_type, parse_structure, spark_to_ch, unwrap,
+    NoCommonTypeError,
 )
 from ..operators import (
     any_join, array_join, asof_join, final, join_with_defaults, limit_by,
@@ -721,42 +720,9 @@ def _build_select(q: SelectQuery, ctx: Context) -> DataFrame:
     return _with_overlay(df, _type_overlay(q.select, df, ctx))
 
 
-def _renders_as_ch_bool(item, ctx: Context) -> bool:
-    """True when a select item's dialect type is genuinely Bool (bool
-    literal, declared Bool column, toBool/CAST-to-Bool, or an if() whose
-    branches are Bool) — everything else boolean-typed is a predicate
-    result, which CH types UInt8 and renders as 1/0."""
-    if isinstance(item, Alias):
-        return _renders_as_ch_bool(item.expr, ctx)
-    if isinstance(item, Literal):
-        return isinstance(item.value, bool)
-    if isinstance(item, Cast):
-        t = item.type_name.strip().lower()
-        if t.startswith("nullable(") and t.endswith(")"):
-            t = t[9:-1].strip()
-        return t in ("bool", "boolean")
-    if isinstance(item, Identifier):
-        t = (ctx.ch_types.get(item.name)
-             or ctx.ch_types.get(item.parts[-1]) or "")
-        t = t.strip()
-        if t.lower().startswith("nullable(") and t.endswith(")"):
-            t = t[9:-1].strip()
-        return t.lower() in ("bool", "boolean")
-    if isinstance(item, FuncCall):
-        if item.name == "toBool":
-            return True
-        if item.name in ("toNullable", "assumeNotNull", "materialize",
-                         "identity") and len(item.args) == 1:
-            return _renders_as_ch_bool(item.args[0], ctx)
-        if item.name == "if" and len(item.args) == 3:
-            return (_renders_as_ch_bool(item.args[1], ctx)
-                    and _renders_as_ch_bool(item.args[2], ctx))
-    return False
-
-
 def _type_overlay(select_items, df: DataFrame, ctx: Context) -> dict:
-    """Output name → CH type for the columns whose dialect type differs
-    from the spelling of their Spark type. Schema-only — no job."""
+    """Output name → CH type for the columns whose CH type differs from
+    the spelling of their Spark type. Schema-only — no job."""
     fields = df.schema.fields
     if len(select_items) == 1 and isinstance(select_items[0], Star):
         select_items = select_items * len(fields)
@@ -766,31 +732,37 @@ def _type_overlay(select_items, df: DataFrame, ctx: Context) -> dict:
         return {}
     out = {}
     for item, f in zip(select_items, fields):
-        t = _item_overlay(item, f, ctx, df)
-        if t is not None:
+        node = Identifier([f.name]) if isinstance(item, Star) else item
+        t = _result_type(_ch_type(node, ctx, df), f.dataType)
+        if t != spark_to_ch(f.dataType):
             out[f.name] = t
     return out
 
 
-def _item_overlay(item, field, ctx: Context,
-                  df: DataFrame | None) -> str | None:
-    """The dialect type of one expression where it differs from the
-    spelling of its Spark type: ``UInt8`` for a boolean that is a
-    predicate result (a genuine Bool stays Bool) or a Short whose
-    dialect type is UInt8, ``UInt64`` for a Long whose dialect type is
-    UInt64 (stored two's-complement per the UInt64-as-Long policy);
-    else None. A ``*`` column keeps its declared type."""
-    dt = field.dataType
-    if not isinstance(dt, (BooleanType, LongType, ShortType)):
-        return None
-    want = "UInt64" if isinstance(dt, LongType) else "UInt8"
-    if isinstance(item, Star):
-        t = ctx.ch_types.get(field.name)
-    elif isinstance(dt, BooleanType):
-        t = None if _renders_as_ch_bool(item, ctx) else "UInt8"
-    else:
-        t = _infer_ch_type(item, ctx, df)
-    return want if t == want else None
+def _result_type(t: str | None, dt) -> str:
+    """The CH type of a result value of Spark type ``dt`` that
+    ``_ch_type`` typed ``t``: ``t`` where both agree on the kind of
+    value (number, string, date, …), else the spelling of ``dt`` — with
+    a Boolean read as a predicate's UInt8, since ``_ch_type`` knows
+    every genuine Bool (literal, declared column, toBool, CAST)."""
+    if t is not None and (t == spark_to_ch(dt) or _same_kind(t, dt)):
+        return t
+    return "UInt8" if isinstance(dt, BooleanType) else spark_to_ch(dt)
+
+
+_NUMBER_KINDS = INT_TYPES | {"long", "float", "double", "decimal"}
+
+
+def _same_kind(t: str, dt) -> bool:
+    """Whether CH type ``t`` can describe a value of Spark type ``dt``
+    (a CH type with no Spark counterpart is taken at its word)."""
+    def kind(spark: str) -> str:
+        k = _re_mod.split(r"[<(]", spark, 1)[0].replace("_ntz", "")
+        return "number" if k in _NUMBER_KINDS else k
+    try:
+        return kind(ch_type_to_spark(t)) == kind(dt.simpleString())
+    except ValueError:
+        return True
 
 
 def _extremes_block(df: DataFrame) -> DataFrame:
@@ -1044,12 +1016,10 @@ def _build_from(node, ctx: Context) -> DataFrame:
         return df
     if isinstance(node, SubqueryRef):
         df = _build_query(node.query, ctx)
-        # a subquery's columns keep the dialect types of its result: a
-        # predicate stays UInt8, a Bool stays Bool, UInt64 stays UInt64
-        overlay = getattr(df, "_ch_type_overlay", None) or {}
-        for f in df.schema.fields:
-            if isinstance(f.dataType, BooleanType) or f.name in overlay:
-                _declare(ctx, f.name, overlay.get(f.name, "Bool"))
+        # a subquery's columns keep the CH types of its result: a
+        # predicate stays UInt8, UInt64 stays UInt64, 1 stays UInt8
+        for name, t in (getattr(df, "_ch_type_overlay", None) or {}).items():
+            _declare(ctx, name, t)
         if node.alias:
             df = df.alias(node.alias)
             ctx.tables.setdefault(node.alias, df)
@@ -1159,13 +1129,14 @@ def _declare_numbers_type(ctx: Context) -> None:
 
 
 def _declare(ctx: Context, name: str, ch_type: str) -> None:
-    """Record a source column's declared CH type; a name declared with
+    """Record a source column's declared CH type (the one writer of
+    ctx.ch_types; ``_ch_type`` is its one reader); a name declared with
     two different types (ambiguous across joined sources) is marked ""
-    and drops to schema inference."""
+    and reads as unknown."""
+    ch_type = canonical_type(ch_type)
     if ctx.ch_types.get(name, ch_type) != ch_type:
-        ctx.ch_types[name] = ""
-    else:
-        ctx.ch_types[name] = ch_type
+        ch_type = ""
+    ctx.ch_types[name] = ch_type
 
 
 def _system_table(table: str, ctx: Context) -> DataFrame:
@@ -1764,9 +1735,11 @@ def _split_asof_on(on_node) -> tuple[list[str], tuple[str, str, str, bool]]:
 def _apply_array_join(df: DataFrame, aj: ArrayJoinClause,
                       ctx: Context) -> DataFrame:
     arrays: dict[str, Column] = {}
+    types: dict[str, str | None] = {}     # joined name → its array type
     for e in aj.exprs:
         if isinstance(e, Alias):
             arrays[e.alias] = _eval(e.expr, ctx, df)
+            types[e.alias] = _ch_type(e.expr, ctx, df)
         elif isinstance(e, Identifier):
             subs = [c for c in df.columns
                     if c.startswith(e.name + ".")]
@@ -1774,13 +1747,20 @@ def _apply_array_join(df: DataFrame, aj: ArrayJoinClause,
                 # ARRAY JOIN n over a Nested column: every flattened
                 # n.* array unnests in lockstep (NestedUtils semantics)
                 for c in subs:
+                    types[c] = _ch_type(Identifier([c]), ctx, df)
                     df = df.withColumnRenamed(c, f"__aj_{c}")
                     arrays[c] = F.col(f"`__aj_{c}`")
                 continue
+            types[e.name] = _ch_type(e, ctx, df)
             df = df.withColumnRenamed(e.name, f"__aj_{e.name}")
             arrays[e.name] = F.col(f"`__aj_{e.name}`")
         else:
             raise BuildError("ARRAY JOIN expression needs an alias")
+    for name, t in types.items():
+        # each joined name now holds one element of its array (a declared
+        # array column joined under its own name reads as unknown)
+        if t is not None:
+            _declare(ctx, name, _element_type(t) or "")
     out = array_join(df, arrays, left=aj.left)
     return out.drop(*[c for c in out.columns if c.startswith("__aj_")])
 
@@ -2452,7 +2432,7 @@ def _as_filter(df: DataFrame, c: Column, node=None,
                                                     (int, float)) \
                 and not isinstance(node.value, bool):
             return c != 0
-        if ctx is not None and _infer_ch_type(node, ctx, df) is not None:
+        if ctx is not None and _ch_number(node, ctx, df) is not None:
             return c != 0
     dt = df.select(c).schema[0].dataType
     if isinstance(dt, NumericType):
@@ -3354,7 +3334,7 @@ def _eval(node, ctx: Context, df: DataFrame | None,
         if (tt.startswith(("int", "uint"))
                 or tt.startswith("nullable(int")
                 or tt.startswith("nullable(uint")):
-            pairs = _declared_enum(node.expr, ctx)
+            pairs = enum_pairs(_ch_type(node.expr, ctx, df))
             if pairs:
                 # CAST(enum, IntN): the declared numeric value, not a
                 # string parse of the name
@@ -3671,12 +3651,8 @@ def _call_fn(node: FuncCall, cols: list, ctx: Context,
     # value types by bit-width maximization (signed ∪ unsigned of one
     # width → next wider signed), not Spark's coercion rules
     if name in ("if", "multiIf") and len(node.args) >= 3:
-        if name == "if":
-            val_idx = [1, 2]
-        else:
-            val_idx = list(range(1, len(node.args) - 1, 2)) + \
-                [len(node.args) - 1]
-        branch_ts = [_infer_ch_type(node.args[i], ctx, df) for i in val_idx]
+        val_idx = _branch_args(name, len(node.args))
+        branch_ts = [_ch_number(node.args[i], ctx, df) for i in val_idx]
         if all(t is not None for t in branch_ts):
             try:
                 spark_t = ch_type_to_spark(least_supertype(branch_ts))
@@ -3754,8 +3730,7 @@ def _declared_numeric(node, ctx: Context,
     """(kind, byte width) of the argument's DECLARED CH numeric type
     (DDL column, to<Type> cast, literal typing): kind 'i' signed, 'u'
     unsigned or Bool, 'f' float; None when not statically inferable."""
-    cht = _infer_ch_type(node, ctx, df)
-    return CH_NUMERIC.get(cht) if cht else None
+    return CH_NUMERIC.get(_ch_number(node, ctx, df))
 
 
 def _declared_int_width(node, ctx: Context,
@@ -3854,7 +3829,8 @@ def _lower_is_nullable(name, node, cols, ctx, df):
 def _lower_conversion(name, node, cols, ctx, df):
     if len(node.args) != 1:
         return None
-    pairs = name[2:] in CH_NUMERIC and _declared_enum(node.args[0], ctx)
+    pairs = name[2:] in CH_NUMERIC and enum_pairs(
+        _ch_type(node.args[0], ctx, df))
     if pairs:
         # toInt8(enum_col): the declared value, not a parse of the name
         return _enum_to_number(cols[0], pairs).cast(
@@ -4158,7 +4134,8 @@ def _lower_format_row(name, node, cols, ctx, df):
               for a, c in zip(args, vals)]
     return format_row(
         str(node.args[0].value), vals, [f.dataType for f in fields],
-        [_item_overlay(a, f, ctx, df) for a, f in zip(args, fields)],
+        [_result_type(_ch_type(a, ctx, df), f.dataType)
+         for a, f in zip(args, fields)],
         [_auto_name(a) for a in args], newline=name == "formatRow")
 
 
@@ -4325,21 +4302,19 @@ def _lower_to_string(name, node, cols, ctx, df):
         return F.when(F.typeof(cols[0]).isin("float", "double"),
                       stripped).otherwise(out)
     dts = dt_obj.simpleString()
-    if dts.startswith(("array", "struct", "map")):
-        # composite values render as CH literals ('[1,2]', "(1,'a')",
-        # "{'k':1}"), not Spark's cast text
-        from ..sources.formats import value_text
-        return value_text(cols[0], dt_obj)
     if dts.startswith("decimal"):
         # CH trims trailing decimal zeros by default
         # (output_format_decimal_trailing_zeros = false)
         return F.regexp_replace(
             F.regexp_replace(out, r"(\.\d*?)0+$", "$1"), r"\.$", "")
-    sc = dts.startswith("timestamp") and _dt64_scale_of(node.args[0])
-    if sc:
-        # DateTime64(s) renders EXACTLY s fraction digits
-        # ('00:00:00.500', not Spark cast's trimmed '.5')
-        return F.date_format(cols[0], f"yyyy-MM-dd HH:mm:ss.{'S' * sc}")
+    t = _ch_type(node.args[0], ctx, df)
+    if dts.startswith(("array", "struct", "map")) or (
+            dts.startswith("timestamp") and dt64_scale(t)):
+        # composite values render as CH literals ('[1,2]', "(1,'a')",
+        # "{'k':1}"), not Spark's cast text; DateTime64(s) renders
+        # EXACTLY s fraction digits ('00:00:00.500', not '.5')
+        from ..sources.formats import value_text
+        return value_text(cols[0], dt_obj, "Text", t)
     return stripped if dts in ("float", "double") else out
 
 
@@ -4365,48 +4340,15 @@ def _lower_round(name, node, cols, ctx, df):
 
 @_lowers("toTypeName", "toColumnTypeName")
 def _lower_to_type_name(name, node, cols, ctx, df):
-    # literal typing first (FieldToDataType: toTypeName(1) = 'UInt8',
-    # [1,2] → Array(UInt8)), then the resolved Spark dtype's CH name.
-    # toColumnTypeName is the same name: there is no separate column one.
+    # the inferred CH type, else the CH reading of the resolved Spark
+    # type. toColumnTypeName is the same name: there is no separate one.
     if len(node.args) != 1:
         return None
-    arg = node.args[0]
-    fn = arg.name if isinstance(arg, FuncCall) else None
-    inner = arg.args[0] if fn and len(arg.args) == 1 else None
-    if fn in ("toNullable", "toLowCardinality") and inner is not None:
-        # the wrapper survives around the INNER type (CH:
-        # Nullable(UInt8); Spark has no LowCardinality representation)
-        wrap = "Nullable" if fn == "toNullable" else "LowCardinality"
-        return F.concat(F.lit(f"{wrap}("),
-                        _eval(FuncCall("toTypeName", [inner]), ctx, df),
-                        F.lit(")"))
-    if fn == "assumeNotNull" and inner is not None:
-        # assumeNotNull strips Nullable — unwrap a direct toNullable(...)
-        if isinstance(inner, FuncCall) and inner.name == "toNullable":
-            inner = inner.args[0]
-        return _eval(FuncCall("toTypeName", [inner]), ctx, df)
-    if (fn == "toDateTime64" and len(arg.args) >= 2
-            and isinstance(arg.args[1], Literal)):
-        # the Spark timestamp carries no scale — keep the declared one
-        return F.lit(f"DateTime64({arg.args[1].value})")
-    if fn == "now64":
-        # now64([scale]) is DateTime64(scale), default scale 3
-        p = (arg.args[0].value
-             if arg.args and isinstance(arg.args[0], Literal) else 3)
-        return F.lit(f"DateTime64({p})")
-    if fn and fn.startswith("toInterval") and len(fn) > len("toInterval"):
-        # Spark renders 'interval day to second'; CH names the unit
-        return F.lit(f"Interval{fn[len('toInterval'):]}")
-    if isinstance(arg, Cast):
-        # no distinct Spark representation: keep the DECLARED name
-        t = arg.type_name.strip()
-        if t.upper() == "JSON" or t.lower().startswith("object("):
-            return F.lit("JSON")
-    t = _literal_render_type(arg) or _infer_ch_type(arg, ctx, df)
+    t = _ch_type(node.args[0], ctx, df)
     if t is None:
-        dt = _probe_dtype(arg, cols[0], ctx, df)
-        t = spark_to_ch(dt) if dt is not None else None
-    return F.lit(t or "Dynamic")
+        f = _probe_field(node.args[0], cols[0], ctx, df)
+        t = _result_type(None, f.dataType) if f is not None else "Dynamic"
+    return F.lit(t)
 
 
 @_lowers("initializeAggregation")
@@ -4575,8 +4517,8 @@ def _lower_arithmetic(name, node, cols, ctx, df):
     # UInt8+Int8 = Int16, Int32*Int32 = Int64), unlike Spark which keeps
     # the wider operand type and can overflow. Cast operands to the CH
     # result type up front so the op itself cannot overflow.
-    ta = _infer_ch_type(node.args[0], ctx, df)
-    tb = _infer_ch_type(rhs, ctx, df)
+    ta = _ch_number(node.args[0], ctx, df)
+    tb = _ch_number(rhs, ctx, df)
     if ta is not None and tb is not None:
         rt = arithmetic_result_type(name, ta, tb)
         if rt is None:
@@ -4790,170 +4732,160 @@ def _struct_as_array(arg, c: Column, ctx: Context,
     return c
 
 
-_DT64_UNIT_SCALE = {"addMilliseconds": 3, "subtractMilliseconds": 3,
-                    "addMicroseconds": 6, "subtractMicroseconds": 6,
-                    "addNanoseconds": 9, "subtractNanoseconds": 9,
-                    "fromUnixTimestamp64Milli": 3,
-                    "fromUnixTimestamp64Micro": 6,
-                    "fromUnixTimestamp64Nano": 9}
+# the toStartOf* family members that return a Date whatever the input
+_DATE_STARTS = ("toStartOfYear", "toStartOfISOYear", "toStartOfQuarter",
+                "toStartOfMonth", "toStartOfWeek")
+_CONVERSION_TYPES = {"toDate": "Date", "toDateTime": "DateTime",
+                     "now": "DateTime", "toIPv4": "IPv4", "toIPv6": "IPv6",
+                     "toUUID": "UUID"}
 
 
-def _dt64_scale_of(node) -> int | None:
-    """Declared DateTime64 scale of an expression, recursing through
-    the date-arithmetic wrappers (CH: addMilliseconds over DateTime
-    yields DateTime64(3); the Spark timestamp carries no scale)."""
+def _ch_type(node, ctx: Context, df: DataFrame | None,
+             _seen: frozenset = frozenset()) -> str | None:
+    """The CH type of an expression, inferred bottom-up from the AST —
+    the builder's one answer, read by toTypeName, the result-type
+    overlay and every lowering that depends on a CH type; None when not
+    known statically. A column reads its declared type (ctx.ch_types),
+    else its alias's expression, else the frame's resolved schema;
+    functions follow the reference's result-type rules (FieldToDataType,
+    NumberTraits, getLeastSupertype). Never analyzes a plan."""
+    def arg(i: int) -> str | None:
+        return _ch_type(node.args[i], ctx, df, _seen)
+
     if isinstance(node, Alias):
-        return _dt64_scale_of(node.expr)
-    if isinstance(node, FuncCall):
-        if node.name == "toDateTime64" and len(node.args) >= 2 \
-                and isinstance(node.args[1], Literal):
-            return int(node.args[1].value)
-        unit = _DT64_UNIT_SCALE.get(node.name)
-        if unit is not None:
-            inner = (_dt64_scale_of(node.args[0]) or 0) if node.args \
-                else 0
-            return max(unit, inner)
-        if node.name.startswith(("add", "subtract", "toStartOf",
-                                 "toTimeZone")) and node.args:
-            return _dt64_scale_of(node.args[0])
-    return None
-
-
-def _literal_render_type(node) -> str | None:
-    """CH type name of a pure literal expression for introspection
-    (FieldToDataType over Fields): NULL → Nullable(Nothing); array
-    literals take the least supertype of their element literal types
-    ([1,2] → Array(UInt8), [1,-1] → Array(Int16), [1,NULL] →
-    Array(Nullable(UInt8))); tuple literals → Tuple(...). Non-literal
-    shapes return None and defer to schema-based inference."""
+        return _ch_type(node.expr, ctx, df, _seen)
     if isinstance(node, Literal):
-        if node.value is None:
+        v = node.value
+        if v is None:
             return "Nullable(Nothing)"
-        if isinstance(node.value, str):
-            return "String"
-        return ch_literal_type(node.value)
+        if isinstance(v, bool):
+            return "Bool"
+        return "String" if isinstance(v, str) else ch_literal_type(v)
+    if isinstance(node, Cast):
+        return canonical_type(node.type_name)
     if isinstance(node, ArrayLiteral):
         if not node.items:
             return "Array(Nothing)"
-        has_null = any(isinstance(i, Literal) and i.value is None
-                       for i in node.items)
-        elems = [_literal_render_type(i) for i in node.items
-                 if not (isinstance(i, Literal) and i.value is None)]
-        if not elems:
-            return "Array(Nullable(Nothing))"
-        if any(e is None for e in elems):
-            return None
-        if len(set(elems)) == 1:
-            inner = elems[0]
-        else:
-            try:
-                inner = least_supertype(list(set(elems)))
-            except Exception:
-                return None
-        if has_null:
-            inner = f"Nullable({inner})"
-        return f"Array({inner})"
+        t = _supertype([_ch_type(i, ctx, df, _seen) for i in node.items])
+        return f"Array({t})" if t else None
     if isinstance(node, TupleLiteral):
-        elems = [_literal_render_type(i) for i in node.items]
-        if any(e is None for e in elems):
-            return None
-        return "Tuple(" + ", ".join(elems) + ")"
-    if isinstance(node, FuncCall):
-        # explicit constructors keep literal element typing — CH types
-        # tuple(1,'a') and (1,'a') identically (FieldToDataType)
-        if node.name == "tuple" and node.args:
-            elems = [_literal_render_type(i) for i in node.args]
-            if any(e is None for e in elems):
-                return None
-            return "Tuple(" + ", ".join(elems) + ")"
-        if node.name == "map" and node.args and len(node.args) % 2 == 0:
-            ks = [_literal_render_type(i) for i in node.args[0::2]]
-            vs = [_literal_render_type(i) for i in node.args[1::2]]
-            if any(e is None for e in ks + vs):
-                return None
-            try:
-                kt = ks[0] if len(set(ks)) == 1 \
-                    else least_supertype(list(set(ks)))
-                vt = vs[0] if len(set(vs)) == 1 \
-                    else least_supertype(list(set(vs)))
-            except Exception:
-                return None
-            return f"Map({kt}, {vt})"
-        # conversion constructors carry their declared CH type
-        if node.name in ("toIPv4", "toUUID", "toIPv6"):
-            return node.name[2:]
-        if node.name == "toFixedString" and len(node.args) == 2 \
-                and isinstance(node.args[1], Literal):
-            return f"FixedString({node.args[1].value})"
-        if node.name == "toDate" :
-            return "Date"
-        if node.name in ("toDateTime", "now"):
-            return "DateTime"
-    return None
-
-
-def _infer_ch_type(node, ctx: Context, df: DataFrame | None,
-                   _seen: frozenset = frozenset()) -> str | None:
-    """Best-effort CH numeric type of an expression (None = unknown).
-
-    Sources, in priority order: literal typing (the reference's
-    FieldToDataType — smallest fitting type, non-negative → unsigned),
-    declared DDL column types (the only place true unsigned-ness
-    survives; Spark stores UInt8 as smallint), the Spark schema's
-    signed view, to<Type> conversions, and recursion through arithmetic
-    via NumberTraits. Anything non-numeric or unresolvable → None, and
-    the caller leaves Spark's own coercion alone.
-    """
-    if isinstance(node, Alias):
-        return _infer_ch_type(node.expr, ctx, df, _seen)
-    if isinstance(node, Literal):
-        return ch_literal_type(node.value)
-    if isinstance(node, Cast):
-        t = node.type_name.strip()
-        if t.lower().startswith("nullable(") and t.endswith(")"):
-            t = t[9:-1].strip()
-        for k in CH_NUMERIC:
-            if k.lower() == t.lower():
-                return k
-        return None
+        return _tuple_type([_ch_type(i, ctx, df, _seen)
+                            for i in node.items])
     if isinstance(node, Identifier):
         name = node.name
         if name in ctx.lambda_params:
             return None
-        declared = ctx.ch_types.get(name,
-                                    ctx.ch_types.get(node.parts[-1]))
+        declared = ctx.ch_types.get(name, ctx.ch_types.get(node.parts[-1]))
         if declared is not None:
             # "" marks a name ambiguous across joined tables
-            return declared if declared in CH_NUMERIC else None
+            return declared or None
         if name in ctx.aliases and name not in _seen:
-            return _infer_ch_type(ctx.aliases[name], ctx, df,
-                                  _seen | {name})
-        if df is not None:
-            try:
-                dt = df.schema[node.parts[-1]].dataType.simpleString()
-            except Exception:
-                return None
-            return spark_type_to_ch_numeric(dt)
+            return _ch_type(ctx.aliases[name], ctx, df, _seen | {name})
+        if df is not None and node.parts[-1] in df.columns:
+            return spark_to_ch(df.schema[node.parts[-1]].dataType)
         return None
-    if isinstance(node, FuncCall):
-        nm = node.name
-        from ..functions.registry import CANONICAL as _can
-        if _can.get(nm, nm) in _BOOL_RESULT_FNS:
-            return "UInt8"       # predicates are UInt8 numbers in CH
-        base = nm[:-6] if nm.endswith("OrZero") else (
-            nm[:-6] if nm.endswith("OrNull") else nm)
-        if base.startswith("to") and base[2:] in CH_NUMERIC:
-            return base[2:]
-        if nm in ("plus", "minus", "multiply", "divide", "intDiv",
-                  "modulo") and len(node.args) == 2:
-            ta = _infer_ch_type(node.args[0], ctx, df, _seen)
-            tb = _infer_ch_type(node.args[1], ctx, df, _seen)
-            if ta is not None and tb is not None:
-                return arithmetic_result_type(nm, ta, tb)
-        if nm == "negate" and len(node.args) == 1:
-            ta = _infer_ch_type(node.args[0], ctx, df, _seen)
-            return negate_result_type(ta) if ta is not None else None
+    if not isinstance(node, FuncCall):
+        return None
+    from ..functions.registry import CANONICAL
+    nm, n = CANONICAL.get(node.name, node.name), len(node.args)
+    if nm in _BOOL_RESULT_FNS:
+        return "UInt8"          # predicates are UInt8 numbers in CH
+    if nm == "tuple" and n:
+        return _tuple_type([arg(i) for i in range(n)])
+    if nm == "map" and n and n % 2 == 0:
+        k = _supertype([arg(i) for i in range(0, n, 2)])
+        v = _supertype([arg(i) for i in range(1, n, 2)])
+        return f"Map({k}, {v})" if k and v else None
+    if n == 1 and nm in ("materialize", "identity", "min", "max", "any",
+                         "anyLast"):
+        return arg(0)
+    if n == 1 and nm in ("toNullable", "toLowCardinality",
+                         "assumeNotNull"):
+        t = arg(0)
+        if t is None:
+            return None
+        if nm == "assumeNotNull":
+            return t[9:-1] if t.startswith("Nullable(") else t
+        wrap = "Nullable" if nm == "toNullable" else "LowCardinality"
+        return t if t.startswith(wrap + "(") else f"{wrap}({t})"
+    if nm in ("if", "multiIf") and n >= 3:
+        return _supertype([arg(i) for i in _branch_args(nm, n)])
+    if nm in ("plus", "minus", "multiply", "divide", "intDiv", "modulo") \
+            and n == 2 or nm == "negate" and n == 1:
+        ts = [arg(i) for i in range(n)]
+        if None in ts:
+            return None
+        (a, a_null), *rest = [unwrap(t) for t in ts]
+        rt = (arithmetic_result_type(nm, a, rest[0][0]) if rest
+              else negate_result_type(a))
+        nullable = a_null or any(b_null for _, b_null in rest)
+        return f"Nullable({rt})" if rt and nullable else rt
+    base = nm[:-6] if nm.endswith(("OrZero", "OrNull")) else nm
+    t = _CONVERSION_TYPES.get(base) or (
+        base[2:] if base.startswith("to") and base[2:] in CH_NUMERIC
+        else None)
+    if t is not None:
+        return f"Nullable({t})" if nm.endswith("OrNull") else t
+    if nm == "toFixedString" and n == 2 and isinstance(node.args[1],
+                                                        Literal):
+        return f"FixedString({node.args[1].value})"
+    if nm == "toDateTime64" and n >= 2 and isinstance(node.args[1],
+                                                       Literal):
+        return f"DateTime64({node.args[1].value})"
+    if nm == "now64":
+        # now64([scale]): DateTime64(scale), default scale 3
+        scale = node.args[0].value if n and isinstance(node.args[0],
+                                                        Literal) else 3
+        return f"DateTime64({scale})"
+    if nm.startswith("toInterval") and len(nm) > len("toInterval"):
+        return "Interval" + nm[len("toInterval"):]
+    unit = _re_mod.fullmatch(r"(?:add|subtract)(Milli|Micro|Nano)seconds"
+                             r"|fromUnixTimestamp64(Milli|Micro|Nano)", nm)
+    if unit is not None:
+        # one unit's arithmetic yields DateTime64 of at least its scale
+        # (addMilliseconds over DateTime is DateTime64(3))
+        scale = {"Milli": 3, "Micro": 6, "Nano": 9}[unit[1] or unit[2]]
+        inner = dt64_scale(arg(0)) if n and unit[1] else None
+        return f"DateTime64({max(scale, inner or 0)})"
+    if n and nm.startswith(("add", "subtract", "toStartOf", "toTimeZone")) \
+            and nm not in _DATE_STARTS:
+        # the rest of the date arithmetic keeps a DateTime64's scale
+        scale = dt64_scale(arg(0))
+        return f"DateTime64({scale})" if scale is not None else None
     return None
+
+
+def _supertype(types: list) -> str | None:
+    """getLeastSupertype of known types; None when one is unknown or
+    they have none."""
+    if None in types:
+        return None
+    try:
+        return least_supertype(types)
+    except NoCommonTypeError:
+        return None
+
+
+def _element_type(t: str | None) -> str | None:
+    """The element type of an Array type; None for any other."""
+    return t[6:-1] if t and t.startswith("Array(") else None
+
+
+def _branch_args(name: str, n: int) -> list[int]:
+    """Positions of the value arguments of an if / multiIf call."""
+    return [1, 2] if name == "if" else [*range(1, n - 1, 2), n - 1]
+
+
+def _tuple_type(types: list) -> str | None:
+    return None if None in types else "Tuple(" + ", ".join(types) + ")"
+
+
+def _ch_number(node, ctx: Context, df: DataFrame | None) -> str | None:
+    """The CH number type of an expression's values (Nullable and
+    LowCardinality looked through), or None when it is not a number."""
+    t = _ch_type(node, ctx, df)
+    base = unwrap(t)[0] if t is not None else None
+    return base if base in CH_NUMERIC else None
 
 
 def _refs_lambda_param(n, ctx: Context) -> bool:
@@ -4973,16 +4905,6 @@ def _refs_lambda_param(n, ctx: Context) -> bool:
     if isinstance(n, (ArrayLiteral, TupleLiteral)):
         return any(_refs_lambda_param(a, ctx) for a in n.items)
     return False
-
-
-def _declared_enum(node, ctx: Context) -> list | None:
-    if isinstance(node, Alias):
-        return _declared_enum(node.expr, ctx)
-    if isinstance(node, Identifier):
-        t = ctx.ch_types.get(node.name) \
-            or ctx.ch_types.get(node.parts[-1])
-        return enum_pairs(t)
-    return None
 
 
 def _enum_to_number(src: Column, pairs: list) -> Column:

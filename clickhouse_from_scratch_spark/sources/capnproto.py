@@ -8,13 +8,12 @@ format reads/writes a sequence of framed messages), each message a
 single segment whose root is one struct holding the row.
 
 Because no ``.capnp`` compiler is involved, the struct layout is derived
-deterministically from the DataFrame schema: primitive fields are packed
-in declaration order at natural alignment into the data section
-(booleans as one byte — our schema derivation, documented; the wire
-format itself is spec-conformant), strings become Text fields (byte
-lists with a NUL terminator) in the pointer section in declaration
-order. Date is uint16 days since epoch, timestamps uint32 unix seconds —
-the same conventions as our RowBinary codec.
+deterministically from the columns' CH types: fixed-width fields are
+packed in declaration order at natural alignment into the data section
+at their RowBinary widths and values (``formats.WIRE_WIDTH``/``to_wire``;
+Bool as one byte — our derivation, documented; the wire format itself
+is spec-conformant), strings become Text fields (byte lists with a NUL
+terminator) in the pointer section in declaration order.
 
 Message framing (spec "serialization over a stream"):
   u32 little-endian: segment count - 1
@@ -31,69 +30,33 @@ bits 35-63 = element count.
 from __future__ import annotations
 
 import struct
-from datetime import date, datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
-_EPOCH = date(1970, 1, 1)
-
-# simpleString type → (struct size in bytes, struct pack char) for the
-# data section; strings/None go to the pointer section
-_PRIM: dict[str, tuple[int, str]] = {
-    "tinyint": (1, "b"), "smallint": (2, "h"), "int": (4, "i"),
-    "bigint": (8, "q"), "float": (4, "f"), "double": (8, "d"),
-    "boolean": (1, "B"), "date": (2, "H"), "timestamp": (4, "I"),
-    "timestamp_ntz": (4, "I"),
-}
+from ..functions.typemap import column_ch_types
+from .formats import (byte_columns, from_wire, is_text, to_wire,
+                      wire_width)
 
 
-def _layout(fields) -> tuple[list, int, int]:
+def _layout(types: list[str]) -> tuple[list, int, int]:
     """Assign data-section byte offsets (first-fit at natural alignment,
     declaration order) and pointer slots. Returns (plan, data_words,
-    ptr_count); plan entries are ("data", offset, size, packc, t) or
-    ("ptr", slot, t)."""
+    ptr_count); plan entries are ("data", offset, packc, ch) or
+    ("ptr", slot)."""
     plan, cursor, ptrs = [], 0, 0
-    for f in fields:
-        t = f.dataType.simpleString()
-        key = "timestamp" if t.startswith("timestamp") else t
-        if key in _PRIM:
-            size, packc = _PRIM[key]
+    for t in types:
+        width = wire_width(t)
+        if width is not None:
+            size, packc = width
             cursor = (cursor + size - 1) // size * size   # align
-            plan.append(("data", cursor, size, packc, key))
+            plan.append(("data", cursor, packc, t))
             cursor += size
-        elif t == "string":
-            plan.append(("ptr", ptrs, t))
+        elif is_text(t):
+            plan.append(("ptr", ptrs))
             ptrs += 1
         else:
             raise ValueError(f"CapnProto: unsupported type {t}")
     return plan, (cursor + 7) // 8, ptrs
-
-
-def _enc_value(v, key: str):
-    # Cap'n Proto has no null; CH exports NULL as the type's default
-    # (0 / false / epoch — the non-Nullable column semantics, same
-    # policy as input_format_null_as_default on the read side)
-    if v is None:
-        return 0
-    if key == "boolean":
-        return int(bool(v))
-    if key == "date":
-        return (v - _EPOCH).days
-    if key == "timestamp":
-        ts = v.replace(tzinfo=timezone.utc) if v.tzinfo is None else v
-        return int(ts.timestamp())
-    return v
-
-
-def _dec_value(v, key: str):
-    if key == "boolean":
-        return bool(v)
-    if key == "date":
-        return _EPOCH + timedelta(days=v)
-    if key == "timestamp":
-        return datetime.fromtimestamp(v, tz=timezone.utc) \
-                       .replace(tzinfo=None)
-    return v
 
 
 def _struct_ptr(offset_words: int, data_words: int, ptr_count: int) -> bytes:
@@ -109,12 +72,12 @@ def _list_ptr(offset_words: int, elem_size_code: int, count: int) -> bytes:
 def to_capnproto(df: DataFrame) -> bytes:
     """Encode every row as a sequence of framed Cap'n Proto messages
     (one message per row, CH CapnProto style)."""
-    return _encode_rows(df.schema.fields, df.collect())
+    return _encode_rows(column_ch_types(df), df.collect())
 
 
-def _encode_rows(fields, rows) -> bytes:
+def _encode_rows(types: list[str], rows) -> bytes:
     """Pure encode core (no Spark session needed — property-testable)."""
-    plan, data_words, ptr_count = _layout(fields)
+    plan, data_words, ptr_count = _layout(types)
     out = bytearray()
     for row in rows:
         data = bytearray(data_words * 8)
@@ -125,12 +88,15 @@ def _encode_rows(fields, rows) -> bytes:
         blob_word = 0
         for (kind, *rest), v in zip(plan, row):
             if kind == "data":
-                off, size, packc, key = rest
+                # Cap'n Proto has no null; CH exports NULL as the type's
+                # default (0 / false / epoch — the non-Nullable column
+                # semantics, as input_format_null_as_default reads it)
+                off, packc, t = rest
                 struct.pack_into("<" + packc, data, off,
-                                 _enc_value(v, key))
+                                 0 if v is None else to_wire(v, t))
             else:
-                slot, _t = rest
-                # NULL text → empty string (type default, see _enc_value)
+                (slot,) = rest
+                # NULL text → empty string (the type default, as above)
                 raw = ("" if v is None else v).encode("utf-8") + b"\x00"
                 words_after_ptr = (ptr_count - slot - 1) + blob_word
                 ptr_words[slot] = _list_ptr(words_after_ptr, 2, len(raw))
@@ -143,18 +109,16 @@ def _encode_rows(fields, rows) -> bytes:
 
 
 def from_capnproto(spark: SparkSession, data: bytes,
-                   schema: str) -> DataFrame:
+                   structure: str) -> DataFrame:
     """Decode a sequence of framed Cap'n Proto messages back into a
-    DataFrame, given the DDL schema the layout was derived from."""
-    from pyspark.sql.types import StructType
-
-    st = StructType.fromDDL(schema)
-    return spark.createDataFrame(_decode_rows(st, data), st)
+    DataFrame of CH ``structure`` (the layout is derived from it)."""
+    types, st = byte_columns(structure)
+    return spark.createDataFrame(_decode_rows(types, data), st)
 
 
-def _decode_rows(st, data: bytes) -> list[tuple]:
+def _decode_rows(types: list[str], data: bytes) -> list[tuple]:
     """Pure decode core (inverse of _encode_rows)."""
-    plan, _dw, _pc = _layout(st.fields)
+    plan, _dw, _pc = _layout(types)
     rows, pos = [], 0
     while pos < len(data):
         (nseg_m1, seg_words) = struct.unpack_from("<II", data, pos)
@@ -175,11 +139,11 @@ def _decode_rows(st, data: bytes) -> list[tuple]:
         row = []
         for (kind, *rest) in plan:
             if kind == "data":
-                off, size, packc, key = rest
+                off, packc, t = rest
                 (v,) = struct.unpack_from("<" + packc, seg, dstart + off)
-                row.append(_dec_value(v, key))
+                row.append(from_wire(v, t))
             else:
-                slot, _t = rest
+                (slot,) = rest
                 pword_at = pstart + slot * 8
                 (p,) = struct.unpack_from("<Q", seg, pword_at)
                 if p & 3 != 1 or ((p >> 32) & 7) != 2:

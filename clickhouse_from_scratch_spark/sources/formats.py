@@ -19,8 +19,10 @@ from __future__ import annotations
 
 import functools
 import os
+import struct
 from collections.abc import Callable
 from dataclasses import dataclass
+from datetime import date, datetime, timedelta, timezone
 from typing import Any
 
 import pyarrow as pa
@@ -30,8 +32,10 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
-from ..functions.typemap import (CH_NUMERIC, ch_type_to_spark,
-                                 column_ch_types, parse_structure)
+from ..functions.typemap import (CH_NUMERIC, canonical_type,
+                                 ch_type_to_spark, column_ch_types,
+                                 dt64_scale, is_ch_type, parse_structure,
+                                 spark_to_ch, unwrap)
 
 
 # CH CSV/TSV both write NULL as \N; reads infer column types when no
@@ -206,7 +210,7 @@ def _read_binary(spark: SparkSession, fmt: str, kind: str, source: str,
             with open(source, "rb") as fh:
                 data = fh.read()
         return BYTE_DECODERS[fmt](spark, data, ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in st.fields))
+            f"`{n}` {t}" for n, t in cols))
     if isinstance(source, Inline):
         raise ValueError(f"FORMAT {fmt} reads a file, not inline data")
     if kind.startswith("arrow-ipc"):
@@ -706,73 +710,128 @@ def _read_uleb128(data: bytes, pos: int) -> tuple[int, int]:
         shift += 7
 
 
-# Spark simpleString → struct pack letter (little-endian, CH wire widths)
-_RB_PACK = {"bigint": "q", "int": "i", "smallint": "h", "tinyint": "b",
-            "double": "d", "float": "f", "boolean": "B"}
+# --- byte codecs ------------------------------------------------------------
+# RowBinary, MsgPackEachRow and CapnProto carry a value by its CH type:
+# ``column_ch_types(df)`` on write, the structure's types on read.
+
+# fixed-width CH types → (bytes, little-endian struct char) on the wire
+WIRE_WIDTH = {"UInt8": (1, "B"), "UInt16": (2, "H"), "UInt32": (4, "I"),
+              "UInt64": (8, "Q"), "Int8": (1, "b"), "Int16": (2, "h"),
+              "Int32": (4, "i"), "Int64": (8, "q"), "Float32": (4, "f"),
+              "Float64": (8, "d"), "Bool": (1, "B"), "Date": (2, "H"),
+              "DateTime": (4, "I")}
+_EPOCH = datetime(1970, 1, 1)
+
+
+def _base(ch: str) -> str:
+    """The CH type a byte codec writes for ``ch``: canonical, with
+    Nullable/LowCardinality looked through."""
+    return unwrap(canonical_type(ch))[0]
+
+
+def wire_width(ch: str) -> tuple[int, str] | None:
+    """(bytes, struct char) of a fixed-width CH type (DateTime64 is
+    Int64 ticks); None for a variable-width type."""
+    base = _base(ch)
+    if dt64_scale(base) is not None:
+        return WIRE_WIDTH["Int64"]
+    return WIRE_WIDTH.get("DateTime" if base.startswith("DateTime(")
+                          else base)
+
+
+def is_text(ch: str) -> bool:
+    """Whether CH type ``ch`` is stored as a Spark string."""
+    return is_ch_type(ch) and ch_type_to_spark(_base(ch)) == "string"
+
+
+def to_wire(v, ch: str):
+    """A stored value as the number the byte formats carry for CH type
+    ``ch``: Date as days and DateTime as seconds since the epoch,
+    DateTime64(s) as ticks of 10^-s seconds, a boolean as 0/1, UInt64
+    as its unsigned value (stored two's-complement); other values as
+    they are."""
+    if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(timezone.utc).replace(tzinfo=None)
+        us = (v - _EPOCH) // timedelta(microseconds=1)
+        scale = dt64_scale(_base(ch))
+        return us // 10**6 if scale is None else us * 10**scale // 10**6
+    if isinstance(v, date):
+        return (v - _EPOCH.date()).days
+    if isinstance(v, bool):
+        return int(v)
+    if _base(ch) == "UInt64" and isinstance(v, int) and v < 0:
+        return v + (1 << 64)
+    return v
+
+
+def from_wire(x, ch: str):
+    """The stored value of wire value ``x`` of CH type ``ch`` (the
+    inverse of ``to_wire``)."""
+    base = _base(ch)
+    if x is None:
+        return None
+    if base == "Date":
+        return _EPOCH.date() + timedelta(days=x)
+    if base.startswith("DateTime"):
+        return _EPOCH + timedelta(
+            microseconds=x * 10**6 // 10**(dt64_scale(base) or 0))
+    if base == "Bool":
+        return bool(x)
+    if base in ("Float32", "Float64"):
+        return float(x)
+    if base == "UInt64" and x >= 1 << 63:
+        return x - (1 << 64)
+    return int(x) if base in CH_NUMERIC else x
+
+
+def byte_columns(structure: str) -> tuple[list[str], T.StructType]:
+    """Each column's CH type in a byte decoder's structure (a Spark type
+    name such as ``long`` reads too), and the decoded frame's schema."""
+    cols = parse_structure(structure)
+    st = _struct(cols)
+    return [canonical_type(t) if is_ch_type(t) else spark_to_ch(f.dataType)
+            for (_, t), f in zip(cols, st.fields)], st
+
+
+def _rb_value(v, ch: str) -> bytes:
+    width = wire_width(ch)
+    if width is not None:
+        return struct.pack("<" + width[1], to_wire(v, ch))
+    if is_text(ch):
+        raw = v.encode("utf-8")
+        return _uleb128(len(raw)) + raw
+    raise ValueError(f"RowBinary: unsupported type {ch}")
 
 
 def to_row_binary(df: DataFrame) -> bytes:
     """CH ``RowBinary``: rows of fixed-width little-endian scalars;
     String as ULEB128 length + UTF-8 bytes; Date as uint16 days since
-    epoch; DateTime as uint32 unix seconds (RowBinary wire layout per
-    the CH format docs; the reference registers the name in
-    ``registerFormats.cpp``)."""
-    import struct
-    from datetime import date, datetime, timezone
-
-    buf = bytearray()
-    for row in df.collect():
-        for field, v in zip(df.schema.fields, row):
-            t = field.dataType.simpleString()
-            if t in _RB_PACK:
-                buf += struct.pack("<" + _RB_PACK[t],
-                                   int(v) if t == "boolean" else v)
-            elif t == "string":
-                raw = v.encode("utf-8")
-                buf += _uleb128(len(raw)) + raw
-            elif t == "date":
-                buf += struct.pack("<H", (v - date(1970, 1, 1)).days)
-            elif t.startswith("timestamp"):
-                ts = v.replace(tzinfo=timezone.utc) if v.tzinfo is None else v
-                buf += struct.pack("<I", int(ts.timestamp()))
-            else:
-                raise ValueError(f"RowBinary: unsupported type {t}")
-    return bytes(buf)
+    epoch; DateTime as uint32 unix seconds; DateTime64 as int64 ticks
+    (RowBinary wire layout per the CH format docs; the reference
+    registers the name in ``registerFormats.cpp``)."""
+    types = column_ch_types(df)
+    return b"".join(_rb_value(v, t) for row in df.collect()
+                    for v, t in zip(row, types))
 
 
 def from_row_binary(spark: SparkSession, data: bytes,
-                    schema: str) -> DataFrame:
-    """Decode RowBinary bytes back into a DataFrame given a DDL schema."""
-    import struct
-    from datetime import date, datetime, timedelta, timezone
-
-    from pyspark.sql.types import StructType
-
-    st = StructType.fromDDL(schema)
+                    structure: str) -> DataFrame:
+    """Decode RowBinary bytes into a DataFrame of CH ``structure``."""
+    types, st = byte_columns(structure)
     rows, pos = [], 0
     while pos < len(data):
         row = []
-        for field in st.fields:
-            t = field.dataType.simpleString()
-            if t in _RB_PACK:
-                fmtc = _RB_PACK[t]
-                size = struct.calcsize("<" + fmtc)
-                (v,) = struct.unpack_from("<" + fmtc, data, pos)
-                pos += size
-                row.append(bool(v) if t == "boolean" else v)
-            elif t == "string":
+        for t in types:
+            width = wire_width(t)
+            if width is not None:
+                (x,) = struct.unpack_from("<" + width[1], data, pos)
+                pos += width[0]
+                row.append(from_wire(x, t))
+            elif is_text(t):
                 ln, pos = _read_uleb128(data, pos)
                 row.append(data[pos:pos + ln].decode("utf-8"))
                 pos += ln
-            elif t == "date":
-                (days,) = struct.unpack_from("<H", data, pos)
-                pos += 2
-                row.append(date(1970, 1, 1) + timedelta(days=days))
-            elif t.startswith("timestamp"):
-                (secs,) = struct.unpack_from("<I", data, pos)
-                pos += 4
-                row.append(datetime.fromtimestamp(secs, tz=timezone.utc)
-                           .replace(tzinfo=None))
             else:
                 raise ValueError(f"RowBinary: unsupported type {t}")
         rows.append(tuple(row))
@@ -784,162 +843,119 @@ def from_row_binary(spark: SparkSession, data: bytes,
 # reference declares the format (registerFormats.cpp:41-42, registration
 # commented out at :114-115). Like CH MsgPackEachRow, each row is its
 # fields' values serialized back-to-back (no per-row array header) —
-# the schema drives decoding. Date ≙ uint days since epoch, DateTime ≙
-# uint unix seconds, matching the RowBinary choices above.
+# the structure drives decoding. Numbers, Date, DateTime and DateTime64
+# carry their ``to_wire`` number, Bool a MessagePack boolean.
 
 def _mp_int(v: int) -> bytes:
-    import struct
-
-    if 0 <= v <= 0x7F:
-        return bytes([v])                       # positive fixint
-    if -32 <= v < 0:
-        return struct.pack("b", v)              # negative fixint
-    if v >= 0:
-        for fmt, code, hi in (("B", 0xCC, 1 << 8), ("H", 0xCD, 1 << 16),
-                              ("I", 0xCE, 1 << 32), ("Q", 0xCF, 1 << 64)):
-            if v < hi:
-                return bytes([code]) + struct.pack(">" + fmt, v)
-    for fmt, code, lo in (("b", 0xD0, -(1 << 7)), ("h", 0xD1, -(1 << 15)),
-                          ("i", 0xD2, -(1 << 31)), ("q", 0xD3, -(1 << 63))):
-        if v >= lo:
-            return bytes([code]) + struct.pack(">" + fmt, v)
+    """An integer in its smallest MessagePack form."""
+    if -32 <= v <= 0x7F:
+        return v.to_bytes(1, "big", signed=True)    # fixint
+    for i, width in enumerate((1, 2, 4, 8)):
+        if 0 <= v < 1 << 8 * width:
+            return bytes([0xCC + i]) + v.to_bytes(width, "big")
+        if -(1 << 8 * width - 1) <= v < 0:
+            return bytes([0xD0 + i]) + v.to_bytes(width, "big", signed=True)
     raise ValueError(f"int out of MessagePack range: {v}")
 
 
-def _mp_value(v, t: str) -> bytes:
-    import struct
-    from datetime import date, timezone
+def _mp_head(n: int, fix: int | None, fix_max: int, c8: int | None,
+             c16: int, c32: int) -> bytes:
+    """A MessagePack length header (fix form up to ``fix_max``)."""
+    if fix is not None and n <= fix_max:
+        return bytes([fix | n])
+    if c8 is not None and n < 1 << 8:
+        return bytes([c8, n])
+    if n < 1 << 16:
+        return bytes([c16]) + struct.pack(">H", n)
+    return bytes([c32]) + struct.pack(">I", n)
 
+
+def _mp_value(v, t: str) -> bytes:
+    """One value of CH type ``t`` as MessagePack."""
     if v is None:
         return b"\xc0"
-    if t == "boolean":
+    base = _base(t)
+    if base.startswith("Array("):
+        return _mp_head(len(v), 0x90, 15, None, 0xDC, 0xDD) + b"".join(
+            _mp_value(e, base[6:-1]) for e in v)
+    if base == "Bool":
         return b"\xc3" if v else b"\xc2"
-    if t in ("tinyint", "smallint", "int", "bigint"):
-        return _mp_int(int(v))
-    if t == "float":
+    if base == "Float32":
         return b"\xca" + struct.pack(">f", v)
-    if t == "double":
+    if base == "Float64":
         return b"\xcb" + struct.pack(">d", v)
-    if t == "string":
+    if isinstance(v, str):
         raw = v.encode("utf-8")
-        n = len(raw)
-        if n <= 31:
-            return bytes([0xA0 | n]) + raw
-        if n < 1 << 8:
-            return b"\xd9" + bytes([n]) + raw
-        if n < 1 << 16:
-            return b"\xda" + struct.pack(">H", n) + raw
-        return b"\xdb" + struct.pack(">I", n) + raw
-    if t == "binary":
-        n = len(v)
-        if n < 1 << 8:
-            return b"\xc4" + bytes([n]) + bytes(v)
-        if n < 1 << 16:
-            return b"\xc5" + struct.pack(">H", n) + bytes(v)
-        return b"\xc6" + struct.pack(">I", n) + bytes(v)
-    if t == "date":
-        return _mp_int((v - date(1970, 1, 1)).days)
-    if t.startswith("timestamp"):
-        ts = v.replace(tzinfo=timezone.utc) if v.tzinfo is None else v
-        return _mp_int(int(ts.timestamp()))
-    if t.startswith("array<"):
-        elem = t[6:-1]
-        n = len(v)
-        if n <= 15:
-            head = bytes([0x90 | n])
-        elif n < 1 << 16:
-            head = b"\xdc" + struct.pack(">H", n)
-        else:
-            head = b"\xdd" + struct.pack(">I", n)
-        return head + b"".join(_mp_value(e, elem) for e in v)
+        return _mp_head(len(raw), 0xA0, 31, 0xD9, 0xDA, 0xDB) + raw
+    if isinstance(v, (bytes, bytearray)):
+        return _mp_head(len(v), None, 0, 0xC4, 0xC5, 0xC6) + bytes(v)
+    x = to_wire(v, t)
+    if isinstance(x, int):
+        return _mp_int(x)
     raise ValueError(f"MsgPack: unsupported type {t}")
 
 
 def to_msgpack(df: DataFrame) -> bytes:
     """CH ``MsgPackEachRow`` output: rows of MessagePack values."""
-    buf = bytearray()
-    for row in df.collect():
-        for field, v in zip(df.schema.fields, row):
-            buf += _mp_value(v, field.dataType.simpleString())
-    return bytes(buf)
+    types = column_ch_types(df)
+    return b"".join(_mp_value(v, t) for row in df.collect()
+                    for v, t in zip(row, types))
+
+
+# length-prefixed markers → (kind, bytes of the length)
+_MP_SIZED = {0xD9: ("str", 1), 0xDA: ("str", 2), 0xDB: ("str", 4),
+             0xC4: ("bin", 1), 0xC5: ("bin", 2), 0xC6: ("bin", 4),
+             0xDC: ("array", 2), 0xDD: ("array", 4)}
 
 
 def _mp_decode(data: bytes, pos: int):
     """Decode one MessagePack value → (python value, new pos)."""
-    import struct
-
     b = data[pos]
     pos += 1
-    if b <= 0x7F:
-        return b, pos
-    if b >= 0xE0:
-        return b - 256, pos
-    if 0xA0 <= b <= 0xBF:
-        n = b & 0x1F
-        return data[pos:pos + n].decode("utf-8"), pos + n
-    if 0x90 <= b <= 0x9F:
-        out = []
-        for _ in range(b & 0x0F):
-            v, pos = _mp_decode(data, pos)
-            out.append(v)
-        return out, pos
-    simple = {0xC0: None, 0xC2: False, 0xC3: True}
-    if b in simple:
-        return simple[b], pos
-    fixed = {0xCA: (">f", 4), 0xCB: (">d", 8), 0xCC: (">B", 1),
-             0xCD: (">H", 2), 0xCE: (">I", 4), 0xCF: (">Q", 8),
-             0xD0: (">b", 1), 0xD1: (">h", 2), 0xD2: (">i", 4),
-             0xD3: (">q", 8)}
-    if b in fixed:
-        fmt, size = fixed[b]
-        (v,) = struct.unpack_from(fmt, data, pos)
-        return v, pos + size
-    if b in (0xD9, 0xDA, 0xDB, 0xC4, 0xC5, 0xC6):
-        size = {0xD9: 1, 0xC4: 1, 0xDA: 2, 0xC5: 2, 0xDB: 4, 0xC6: 4}[b]
+    if b <= 0x7F or b >= 0xE0:
+        return (b if b <= 0x7F else b - 256), pos      # fixint
+    if b in (0xC0, 0xC2, 0xC3):
+        return {0xC0: None, 0xC2: False, 0xC3: True}[b], pos
+    if 0xCA <= b <= 0xD3:
+        c = ">" + "fdBHIQbhiq"[b - 0xCA]
+        return struct.unpack_from(c, data, pos)[0], pos + struct.calcsize(c)
+    if 0x90 <= b <= 0xBF:
+        kind, n = ("str", b & 0x1F) if b >= 0xA0 else ("array", b & 0x0F)
+    elif b in _MP_SIZED:
+        kind, size = _MP_SIZED[b]
         n = int.from_bytes(data[pos:pos + size], "big")
         pos += size
-        raw = data[pos:pos + n]
-        pos += n
-        return (raw.decode("utf-8") if b in (0xD9, 0xDA, 0xDB)
-                else bytes(raw)), pos
-    if b in (0xDC, 0xDD):
-        size = 2 if b == 0xDC else 4
-        n = int.from_bytes(data[pos:pos + size], "big")
-        pos += size
+    else:
+        raise ValueError(f"MsgPack: unsupported marker 0x{b:02x}")
+    if kind == "array":
         out = []
         for _ in range(n):
             v, pos = _mp_decode(data, pos)
             out.append(v)
         return out, pos
-    raise ValueError(f"MsgPack: unsupported marker 0x{b:02x}")
+    raw = data[pos:pos + n]
+    return (raw.decode("utf-8") if kind == "str" else bytes(raw)), pos + n
 
 
-def from_msgpack(spark: SparkSession, data: bytes, schema: str) -> DataFrame:
-    """Decode MsgPackEachRow bytes back into a DataFrame given a DDL
-    schema (the value stream is self-describing; the schema maps uint
-    days/seconds back to Date/DateTime and fixes column names)."""
-    from datetime import date, datetime, timedelta, timezone
+def _from_mp(v, t: str):
+    base = _base(t)
+    if base.startswith("Array(") and v is not None:
+        return [_from_mp(e, base[6:-1]) for e in v]
+    return from_wire(v, t)
 
-    from pyspark.sql.types import StructType
 
-    st = StructType.fromDDL(schema)
+def from_msgpack(spark: SparkSession, data: bytes,
+                 structure: str) -> DataFrame:
+    """Decode MsgPackEachRow bytes into a DataFrame of CH ``structure``
+    (the value stream is self-describing; the structure's types map
+    numbers back to Date/DateTime/Bool and fix the names)."""
+    types, st = byte_columns(structure)
     rows, pos = [], 0
     while pos < len(data):
         row = []
-        for field in st.fields:
-            t = field.dataType.simpleString()
+        for t in types:
             v, pos = _mp_decode(data, pos)
-            if v is not None:
-                if t == "date":
-                    v = date(1970, 1, 1) + timedelta(days=v)
-                elif t.startswith("timestamp"):
-                    v = (datetime.fromtimestamp(v, tz=timezone.utc)
-                         .replace(tzinfo=None))
-                elif t == "boolean":
-                    v = bool(v)
-                elif t in ("float", "double"):
-                    v = float(v)
-            row.append(v)
+            row.append(_from_mp(v, t))
         rows.append(tuple(row))
     return spark.createDataFrame(rows, st)
 
@@ -1026,11 +1042,15 @@ def value_text(c: Column, dt, rule: str = "Text",
     if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
         lit = _composite(c, dt, "JSON" if rule == "JSON" else "Quoted")
         return _COMPOSITE_TEXT.get(rule, lambda s: s)(lit)
+    base = unwrap(ch)[0] if ch else None
     if isinstance(dt, T.BooleanType):
-        yes, no = ("1", "0") if ch == "UInt8" else ("true", "false")
+        yes, no = ("1", "0") if base == "UInt8" else ("true", "false")
         return F.when(c, F.lit(yes)).otherwise(F.lit(no))
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return _STRING_TEXT[rule](F.date_format(c, "yyyy-MM-dd HH:mm:ss"))
+        # DateTime64(s) writes exactly s fraction digits
+        scale = dt64_scale(base)
+        return _STRING_TEXT[rule](F.date_format(
+            c, "yyyy-MM-dd HH:mm:ss" + ("." + "S" * scale if scale else "")))
     if not isinstance(dt, T.NumericType):
         return _STRING_TEXT[rule](c.cast("string"))
     s = c.cast("string")
@@ -1048,7 +1068,7 @@ def value_text(c: Column, dt, rule: str = "Text",
         # output_format_decimal_trailing_zeros = 0: 1.50 prints 1.5
         return F.regexp_replace(
             F.regexp_replace(s, r"(\.\d*?)0+$", "$1"), r"\.$", "")
-    if ch == "UInt64":
+    if base == "UInt64":
         # UInt64 is stored two's-complement in a Long: conv reads a
         # negative as its unsigned 64-bit value (-1 → 18446744073709551615)
         s = F.when(c < 0, F.conv(s, 10, 10)).otherwise(s)
@@ -1138,6 +1158,7 @@ def _line_frame(df: DataFrame, spec: "TextFormat",
 
 def _is_numeric(ch: str) -> bool:
     """Right-aligned in the Pretty family and Markdown."""
+    ch = unwrap(ch)[0]
     return (ch in CH_NUMERIC and ch != "Bool") or ch.startswith("Decimal")
 
 
@@ -1652,9 +1673,9 @@ def _to_capnproto(df: DataFrame) -> bytes:
 
 
 def _from_capnproto(spark: SparkSession, data: bytes,
-                    schema: str) -> DataFrame:
+                    structure: str) -> DataFrame:
     from .capnproto import from_capnproto
-    return from_capnproto(spark, data, schema)
+    return from_capnproto(spark, data, structure)
 
 
 BYTE_CODECS = {"RowBinary": to_row_binary, "MsgPackEachRow": to_msgpack,

@@ -49,7 +49,7 @@ def test_msgpack_bin_roundtrip(b):
                                       max_value=(1 << 63) - 1)),
                 max_size=40))
 def test_msgpack_array_roundtrip(arr):
-    blob = _mp_value(arr, "array<bigint>")
+    blob = _mp_value(arr, "Array(Int64)")
     out, pos = _mp_decode(blob, 0)
     assert out == arr and pos == len(blob)
 
@@ -161,27 +161,13 @@ def test_parser_totality(s):
 
 # --- CapnProto (spec framing; pure encode/decode cores) ---------------------
 
-from pyspark.sql.types import (  # noqa: E402
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
 from clickhouse_from_scratch_spark.sources.capnproto import (  # noqa: E402
     _decode_rows,
     _encode_rows,
 )
 
-# built programmatically — fromDDL needs a live SparkContext, these
-# property tests are pure driver-side
-_CP_ST = StructType([
-    StructField("a", IntegerType()), StructField("b", LongType()),
-    StructField("c", DoubleType()), StructField("s", StringType()),
-    StructField("t", StringType()), StructField("f", BooleanType())])
+# the codec lays a row out by its columns' CH types
+_CP_TYPES = ["Int32", "Int64", "Float64", "String", "String", "Bool"]
 
 
 @settings(max_examples=150, deadline=None)
@@ -197,6 +183,6 @@ _CP_ST = StructType([
             max_size=9),
     st.booleans()), max_size=8))
 def test_capnproto_property_roundtrip(rows):
-    blob = _encode_rows(_CP_ST.fields, rows)
+    blob = _encode_rows(_CP_TYPES, rows)
     assert len(blob) % 8 == 0          # word-aligned framing throughout
-    assert _decode_rows(_CP_ST, blob) == rows
+    assert _decode_rows(_CP_TYPES, blob) == rows

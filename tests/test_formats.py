@@ -129,7 +129,7 @@ def test_msgpack_wire_bytes():
     assert _mp_value("ab", "string") == b"\xa2ab"       # fixstr
     assert _mp_value(None, "string") == b"\xc0"         # nil
     assert _mp_value(True, "boolean") == b"\xc3"
-    assert _mp_value([1], "array<bigint>") == b"\x91\x01"  # fixarray
+    assert _mp_value([1], "Array(Int64)") == b"\x91\x01"  # fixarray
 
 
 def test_format_arrow_ipc_file_roundtrip(spark, tmp_path):
@@ -815,8 +815,10 @@ def test_ctas_declares_composite_and_overlay_types(chs):
                 "toUInt64(5) AS u, 1 = 1 AS p")
     types = {r.name: r.type for r in
              chs.execute("DESCRIBE TABLE ct").collect()}
-    assert types == {"k": "Int32", "tp": "Tuple(Int32, String)",
-                     "m": "Map(String, Int32)", "u": "UInt64",
+    # a literal is typed as ClickHouse types it (1 is UInt8), also
+    # inside a composite, and is stored as that type
+    assert types == {"k": "UInt8", "tp": "Tuple(UInt8, String)",
+                     "m": "Map(String, UInt8)", "u": "UInt64",
                      "p": "UInt8"}
     row = chs.execute("SELECT tp, m, u, p FROM ct").collect()[0]
     assert (tuple(row.tp), row.m, row.u, row.p) == ((1, "a"), {"x": 1}, 5, 1)
@@ -826,7 +828,7 @@ def test_describe_select_spells_ch_types(chs):
     rows = chs.execute("DESCRIBE (SELECT (1, 'x') AS t, map('k', 1) AS m, "
                        "1 = 1 AS p, true AS b, [1.5] AS a)").collect()
     assert [r.type for r in rows] == [
-        "Tuple(Int32, String)", "Map(String, Int32)", "UInt8", "Bool",
+        "Tuple(UInt8, String)", "Map(String, UInt8)", "UInt8", "Bool",
         "Array(Float64)"]
 
 
@@ -1030,19 +1032,22 @@ def test_compressed_outfile_is_the_compressed_text(chs, tmp_path):
 
 # One row over the types the readers branch on: a string with a tab, a
 # newline and both quotes, an array, UInt64 above 2^63, a predicate, a
-# Date and a NULL. Written with INTO OUTFILE, it reads back the same
-# through every input entry point.
+# Date, a DateTime64(3) with milliseconds and a NULL. Written with INTO
+# OUTFILE, it reads back the same through every input entry point.
 _SWEEP_SQL = ("SELECT 'a\\tb\\nc\"d\\'e\\\\f' AS s, "
               "CAST([1, 2] AS Array(Int64)) AS arr, toUInt64(-1) AS u, "
               "1 = 1 AS p, toDate('2024-01-02') AS d, "
+              "toDateTime64('2024-01-02 03:04:05.120', 3) AS t, "
               "CAST(NULL AS Nullable(Int64)) AS n")
 _SWEEP_COLS = [("s", "String"), ("arr", "Array(Int64)"), ("u", "UInt64"),
-               ("p", "UInt8"), ("d", "Date"), ("n", "Nullable(Int64)")]
+               ("p", "UInt8"), ("d", "Date"), ("t", "DateTime64(3)"),
+               ("n", "Nullable(Int64)")]
 _SWEEP_ROW = {"s": "a\tb\nc\"d'e\\f", "arr": [1, 2], "u": -1, "p": 1,
               "n": None}
 # the byte codecs write a fixed set of scalar types
-_CARRIES = {"RowBinary": ("s", "u", "d"), "CapnProto": ("s", "u", "d"),
-            "MsgPackEachRow": ("s", "arr", "u", "d", "n")}
+_CARRIES = {"RowBinary": ("s", "u", "p", "d"),
+            "CapnProto": ("s", "u", "p", "d"),
+            "MsgPackEachRow": ("s", "arr", "u", "p", "d", "n")}
 
 
 def _read_write_formats():
@@ -1052,13 +1057,15 @@ def _read_write_formats():
 
 @pytest.mark.parametrize("fmt", _read_write_formats())
 def test_every_entry_point_reads_the_same_rows(chs, tmp_path, fmt):
-    from datetime import date
+    from datetime import date, datetime
 
     from clickhouse_from_scratch_spark.sources import TEXT_FORMATS
     names = _CARRIES.get(fmt, [n for n, _ in _SWEEP_COLS])
     cols = [(n, t) for n, t in _SWEEP_COLS if n in names]
     structure = ", ".join(f"{n} {t}" for n, t in cols)
-    want = [tuple({**_SWEEP_ROW, "d": date(2024, 1, 2)}[n] for n in names)]
+    row = {**_SWEEP_ROW, "d": date(2024, 1, 2),
+           "t": datetime(2024, 1, 2, 3, 4, 5, 120000)}
+    want = [tuple(row[n] for n in names)]
     p = str(tmp_path / "rows")
     try:
         chs.execute(f"SELECT {', '.join(names)} FROM ({_SWEEP_SQL}) "

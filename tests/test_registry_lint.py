@@ -213,3 +213,21 @@ def test_one_input_path():
                                  for a in node.names
                                  if a.name in _INPUT_RULES | _TEMP_FILES)
     assert not found, f"input rules outside sources/: {sorted(found)}"
+
+
+def test_one_ch_type_inference():
+    """In the builder only ``_ch_type`` reads a column's declared CH type
+    (``ctx.ch_types``) and only ``_declare`` writes it, so every
+    question about an expression's CH type goes through one inference."""
+    path = os.path.join(PKG, "plans", "builder.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    found = []
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        if owner in ("_ch_type", "_declare"):
+            continue
+        found += [f"{owner}:{node.lineno}" for node in ast.walk(top)
+                  if isinstance(node, ast.Attribute)
+                  and node.attr == "ch_types"]
+    assert found == [], f"ctx.ch_types read outside _ch_type: {found}"

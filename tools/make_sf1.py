@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 
 import duckdb
 
@@ -54,6 +55,16 @@ COPY_AS_IS = ["region", "nation"]
 def stride_of(con, table: str, col: str) -> int:
     return con.sql(f"SELECT MAX({col}) + 1 FROM "
                    f"'{SRC}/{table}.parquet'").fetchone()[0]
+
+
+def clear(path: str) -> str:
+    """Remove what an earlier run left at ``path`` (a split table is a
+    directory of parts, an unsplit one a file) before COPY writes it."""
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    elif os.path.exists(path):
+        os.remove(path)
+    return path
 
 
 def main() -> None:
@@ -82,7 +93,7 @@ def main() -> None:
 
     for t in COPY_AS_IS:
         con.sql(f"COPY (SELECT * FROM '{SRC}/{t}.parquet') TO "
-                f"'{args.out}/{t}.parquet' (FORMAT PARQUET)")
+                f"'{clear(f'{args.out}/{t}.parquet')}' (FORMAT PARQUET)")
         print(f"{t}: copied as-is")
 
     strides = {t: stride_of(con, t, pk) for t, (pk, _) in KEYED.items()}
@@ -106,12 +117,7 @@ def main() -> None:
             else:
                 exprs.append(c)
         opts = copy_opts(os.path.getsize(f"{SRC}/{t}.parquet"))
-        out_path = f"{args.out}/{t}.parquet"
-        if os.path.isdir(out_path):            # re-runs: clear stale parts
-            import shutil
-            shutil.rmtree(out_path)
-        elif os.path.exists(out_path):
-            os.remove(out_path)
+        out_path = clear(f"{args.out}/{t}.parquet")
         con.sql(f"""
             COPY (SELECT {', '.join(exprs)}
                   FROM '{SRC}/{t}.parquet', range({args.copies}) r(i))
